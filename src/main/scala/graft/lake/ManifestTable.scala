@@ -3,7 +3,9 @@ package graft.lake
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.{ArrayType, BinaryType, MapType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import java.util.UUID
 
 /** Versioned parquet table with a plain-text manifest log — a minimal
@@ -30,11 +32,12 @@ import java.util.UUID
   * merge rewrites only touched partitions and carries every other file
   * forward by reference.
   *
-  * Data skipping (L7): with `statsCol` set, each commit records that
-  * column's per-file min/max (one distributed job over the NEW files
-  * only; carried-forward files keep their recorded stats), and
-  * [[readRange]] prunes files whose [min,max] misses the queried range
-  * before Spark ever lists them — the Delta/Iceberg zone-map pattern
+  * Data skipping (L7): with `statsCols` set, each commit records those
+  * columns' per-file min/max (one distributed job over the NEW files
+  * only; carried-forward files keep their recorded stats), and every
+  * predicate read — `read(where = …)`, DELETE/UPDATE, the SQL scan —
+  * skips files whose zone maps, blooms or partition values exclude it
+  * ([[ManifestTable.mightMatch]]) — the Delta/Iceberg zone-map pattern
   * that turns a narrow range query on a sorted/clustered 100 TB table
   * into a few file reads.
   */
@@ -56,6 +59,15 @@ object ManifestTable {
   private val refLocksHeldByThread =
     ThreadLocal.withInitial[java.util.HashSet[String]](() =>
       new java.util.HashSet[String]())
+
+  /** Spark's order of strings — the order string zone maps were
+    * recorded in (UTF-8 bytes, not Java's UTF-16 `compareTo`). */
+  private[lake] val Utf8Order: Ordering[UTF8String] =
+    (a: UTF8String, b: UTF8String) => a.binaryCompare(b)
+
+  /** Date/time renderings order like their values only for years
+    * 0000-9999. */
+  private[lake] val FourDigitYear = "\\d{4}-.*".r
 
   /** Salt for the bloom's second hash — part of the on-disk format. */
   private[lake] val BloomSalt = "graft_bloom"
@@ -676,19 +688,26 @@ class ManifestTable(spark: SparkSession, root: String,
   def filesOf(version: Int): Seq[String] =
     entriesOf(version).map(e => new Path(root, e.rel).toString)
 
-  /** Time-travel read: latest when version is None. Deletion vectors
-    * of the version's entries are applied (merge-on-read).
+  /** Time-travel read (latest when version is None) of the rows
+    * matching `where`. Deletion vectors of the version's entries are
+    * applied (merge-on-read). A `where` scans only the files the
+    * skipping kernel keeps ([[mightMatch]]); the schema is the full
+    * read's whatever survives.
     */
-  def read(version: Option[Int] = None): DataFrame = {
-    val v = version.orElse(latestVersion)
-      .getOrElse(throw new IllegalStateException(s"no versions at $root"))
+  def read(version: Option[Int] = None, where: Column = lit(true)): DataFrame =
+    if (where == lit(true)) readAll(entriesOf(versionOrLatest(version)))
+    else readWhere(version, _ => where, sourceFilters(_, where))
+
+  /** [[read]]'s frame over a resolved entry list. */
+  private def readAll(entries: Seq[Entry],
+      mapping: Map[String, String] = columnMapping): DataFrame = {
     val ids = identityColumns
-    if (ids.isEmpty) withDeclared(readEntries(entriesOf(v)))
+    if (ids.isEmpty) withDeclared(readEntries(entries, withRowId = false, mapping))
     else
       // identity columns derive from the stable row id — ride the
       // rid-resolving read (the identity-free path pays nothing)
-      withIdentityCols(withDeclared(readEntriesRid(entriesOf(v))), ids)
-        .drop(ManifestTable.RowIdCol)
+      withIdentityCols(withDeclared(readEntries(entries, withRowId = true, mapping)),
+        ids).drop(ManifestTable.RowIdCol)
   }
 
   /** T16 row tracking: [[read]] plus the stable [[ManifestTable
@@ -700,9 +719,8 @@ class ManifestTable(spark: SparkSession, root: String,
     * OPTIMIZE/REORG to adopt ids).
     */
   def readWithRowId(version: Option[Int] = None): DataFrame = {
-    val v = version.orElse(latestVersion)
-      .getOrElse(throw new IllegalStateException(s"no versions at $root"))
-    withIdentityCols(withDeclared(readEntriesRid(entriesOf(v))),
+    val v = versionOrLatest(version)
+    withIdentityCols(withDeclared(readEntries(entriesOf(v), withRowId = true)),
       identityColumns)
   }
 
@@ -711,9 +729,8 @@ class ManifestTable(spark: SparkSession, root: String,
     * rewrite (compact/optimize/purge).
     */
   private def readRidPhys(version: Option[Int]): DataFrame = {
-    val v = version.orElse(latestVersion)
-      .getOrElse(throw new IllegalStateException(s"no versions at $root"))
-    withDeclared(readEntriesRid(entriesOf(v)))
+    val v = versionOrLatest(version)
+    withDeclared(readEntries(entriesOf(v), withRowId = true))
       .withColumnRenamed(ManifestTable.RowIdCol, ManifestTable.RidPhysCol)
   }
 
@@ -755,8 +772,8 @@ class ManifestTable(spark: SparkSession, root: String,
     *  - the snapshot has no files (SQL MIN of an empty table is NULL,
     *    which a plain empty scan already answers).
     * Values are the recorded stat strings in the column's stat domain
-    * (`kind` as in the zone maps: "N" numeric, "S" lexicographic);
-    * min/max over files folds with the same comparator pruning uses.
+    * (`kind` as in the zone maps: "N" numeric, "S" UTF-8 byte order);
+    * min/max over files folds with the same order pruning uses.
     */
   def metadataMinMax(c: String, version: Option[Int] = None,
       boundOk: String => Boolean = _ => true): Option[(String, String, String)] = {
@@ -774,18 +791,7 @@ class ManifestTable(spark: SparkSession, root: String,
     if (kinds.sizeIs != 1 || (kinds.head != "N" && kinds.head != "S"))
       return None
     val kind = kinds.head
-    def numeric(s: String): Boolean =
-      try { new java.math.BigDecimal(s); true }
-      catch { case _: NumberFormatException => false }
-    if (kind == "N" && ss.exists(s => !numeric(s.mn) || !numeric(s.mx)))
-      return None
-    // the cross-file fold below compares with String.compareTo (UTF-16
-    // code units) while the per-file stats were ordered by Spark in
-    // UTF-8 bytes; the two orders agree only on ASCII — refuse the
-    // moment any bound leaves that common domain (dates' ISO strings
-    // always pass)
-    def ascii(s: String): Boolean = s.forall(_ < 0x80)
-    if (kind == "S" && ss.exists(s => !ascii(s.mn) || !ascii(s.mx)))
+    if (kind == "N" && ss.exists(s => Seq(s.mn, s.mx).exists(tryBigDecimal(_).isEmpty)))
       return None
     // caller-supplied PER-FILE bound validation (e.g. the catalog's
     // date guard): validating only the folded extremum is too late —
@@ -793,9 +799,8 @@ class ManifestTable(spark: SparkSession, root: String,
     // whose ISO string sorts below '9999-…') corrupts the fold itself
     if (ss.exists(s => !boundOk(s.mn) || !boundOk(s.mx)))
       return None
-    val mn = ss.map(_.mn).reduce((a, b) => if (statCmp(a, b, kind) <= 0) a else b)
-    val mx = ss.map(_.mx).reduce((a, b) => if (statCmp(a, b, kind) >= 0) a else b)
-    Some((mn, mx, kind))
+    val ord = statOrdering(kind)
+    Some((ss.map(_.mn).min(ord), ss.map(_.mx).max(ord), kind))
   }
 
   /** The newest version committed at or before `tsMillis` — the
@@ -836,8 +841,7 @@ class ManifestTable(spark: SparkSession, root: String,
     }.getOrElse(throw new IllegalArgumentException(
       s"readBucketed($srcCol): no bucket(n, $srcCol) transform declared " +
         s"(partitionSpec: ${transforms.map(_.spec).mkString(", ")})"))
-    val entries = entriesOf(latestVersion.getOrElse(
-      throw new IllegalStateException(s"no versions at $root")))
+    val entries = entriesOf(versionOrLatest(None))
     require(entries.forall(e => !e.stats.contains(DvKey)),
       s"readBucketed($srcCol): snapshot has deletion vectors; " +
         "REORG PURGE before bucketed-join reads")
@@ -929,23 +933,17 @@ class ManifestTable(spark: SparkSession, root: String,
     * file (deletes add, rewrites mint new basenames), so unioning every
     * referenced sidecar is always exact. DV-free tables take this path
     * with zero overhead (no metadata columns, no join).
+    *
+    * `withRowId` adds the stable row id as [[ManifestTable.RowIdCol]]:
+    * `coalesce(the file's materialized [[ManifestTable.RidPhysCol]],
+    * entry base + parquet row index)`. NULL for rows whose file
+    * predates row tracking (no `#rid` stamp, no physical column) —
+    * callers that need total identity must check. The base lookup is
+    * one broadcast of (basename, base), O(files) rows like the manifest
+    * resolution that produced it.
     */
-  private def readEntries(entries: Seq[Entry]): DataFrame =
-    readEntriesOpt(entries, withRowId = false)
-
-  /** [[readEntries]] carrying the stable row id as
-    * [[ManifestTable.RowIdCol]]: `coalesce(the file's materialized
-    * [[ManifestTable.RidPhysCol]], entry base + parquet row index)`.
-    * NULL for rows whose file predates row tracking (no `#rid` stamp,
-    * no physical column) — callers that need total identity must
-    * check. The base lookup is one broadcast of (basename, base),
-    * O(files) rows like the manifest resolution that produced it.
-    */
-  private def readEntriesRid(entries: Seq[Entry]): DataFrame =
-    readEntriesOpt(entries, withRowId = true)
-
-  private def readEntriesOpt(entries: Seq[Entry],
-      withRowId: Boolean): DataFrame = {
+  private def readEntries(entries: Seq[Entry], withRowId: Boolean = false,
+      mapping: Map[String, String] = columnMapping): DataFrame = {
     if (entries.isEmpty) return spark.emptyDataFrame
     val files = entries.map(e => new Path(root, e.rel).toString)
     val raw = if (!withRowId) {
@@ -987,7 +985,7 @@ class ManifestTable(spark: SparkSession, root: String,
       val derived = raw.columns.filter(_.startsWith(PartitionTransform.Prefix))
       if (derived.isEmpty) raw else raw.drop(derived.toIndexedSeq: _*)
     }
-    toLogicalRename(noDerived)
+    toLogicalRename(noDerived, mapping)
   }
 
   /** Union of the deletion-vector sidecars referenced by `entries` —
@@ -1219,7 +1217,7 @@ class ManifestTable(spark: SparkSession, root: String,
     * own path IS its spec ([[PartitionTransform.fromName]]):
     *
     *  - scans union the layouts ([[readFiles]] groups by signature);
-    *  - [[readPartitionEq]]/[[readPartitionRange]] prune each file by
+    *  - file skipping ([[mightMatch]]) prunes each file by
     *    its OWN spec's transform (old daily files by `days`, new
     *    hourly files by `hours`);
     *  - [[merge]] scopes touched partitions per signature, and its
@@ -1710,9 +1708,6 @@ class ManifestTable(spark: SparkSession, root: String,
     }
   }
 
-  private def bloomMightContain(s: ColStats, value: String): Boolean =
-    bloomTestEntry(s, Seq(bloomRawHashes(value)))
-
   /** Decode the entry's bitset ONCE and probe it with every raw-hash
     * pair — the batch path: pruning F files for V values costs
     * F decodes + V hashings, never F·V of each.
@@ -1724,156 +1719,100 @@ class ManifestTable(spark: SparkSession, root: String,
     raws.exists(bloomTest(bits, m, k, _))
   }
 
-  /** Point-lookup file skipping: files of the (latest) version whose
-    * bloom filter might contain `value` (string rendering) in
-    * `bloomCol`. The companion to zone maps for the query they can't
-    * serve — an equality probe on a high-cardinality UNSORTED column
-    * ("find one doc_id among 100k files"), where every file's [min,max]
-    * spans the domain but each file's bloom rejects absent keys with
-    * ~(1-e^(-kn/m))^k false-positive rate. Files without a recorded
-    * bloom (pre-bloom commits, carried-forward legacy entries) are
-    * kept — never wrongly pruned.
-    */
-  def prunedFilesEq(c: String, value: String,
-      version: Option[Int] = None): Seq[String] =
-    prunedEntriesEq(c, value, version).map(e => new Path(root, e.rel).toString)
+  // -------------------------------------------------------------- //
+  // File skipping: one kernel ([[mightMatch]]) for every pruned     //
+  // read, DELETE/UPDATE and the SQL scan.                           //
+  // -------------------------------------------------------------- //
 
-  private def prunedEntriesEq(c: String, value: String,
-      version: Option[Int]): Seq[Entry] = {
-    val pc = toPhysical(c) // stats/bloom keys are recorded physical
-    require(bloomCol.contains(pc), s"no bloom filter for column $c")
-    val v = version.orElse(latestVersion)
-      .getOrElse(throw new IllegalStateException(s"no versions at $root"))
-    entriesOf(v)
-      .filter(e => e.stats.get(bloomKey(pc)).forall(bloomMightContain(_, value)))
+  /** A predicate literal in the domains file stats are recorded in:
+    * `str` is Spark's string rendering (what string zone maps, blooms
+    * and hive dirs hold), `num` its decimal value when it has one
+    * (what numeric zone maps compare against).
+    */
+  private final class Probe(val raw: Any, val str: String) {
+    lazy val num: Option[BigDecimal] = tryBigDecimal(str)
+    lazy val utf8: UTF8String = UTF8String.fromString(str)
+    val numeric: Boolean = raw.isInstanceOf[java.lang.Number]
+    /** A zoned timestamp renders in the session time zone, and its
+      * stats and blooms in the writer's: no string test can use it. */
+    val zoned: Boolean = raw.isInstanceOf[java.sql.Timestamp] ||
+      raw.isInstanceOf[java.time.Instant]
+    private val temporal = raw.isInstanceOf[java.util.Date] ||
+      raw.isInstanceOf[java.time.temporal.Temporal]
+    /** Whether a string-ordered bound compares with this probe in
+      * value order: numbers and zoned timestamps never do, dates only
+      * while both years have four digits.
+      */
+    def ordersWith(bound: String): Boolean =
+      !numeric && !zoned && (!temporal ||
+        ManifestTable.FourDigitYear.matches(str) &&
+        ManifestTable.FourDigitYear.matches(bound))
   }
 
-  /** Equality probe with bloom file skipping + exact residual filter
-    * (compares in the same string domain the bloom hashed). Entry-level
-    * read so surviving files' deletion vectors still apply.
+  /** A probe for a filter literal; None for NULL (it matches no row)
+    * and for values with no string rendering to order (binary).
     */
-  def readEq(c: String, value: String, version: Option[Int] = None): DataFrame = {
-    val entries = prunedEntriesEq(c, value, version)
-    if (entries.isEmpty) read(version).filter(lit(false))
-    else readEntries(entries).filter(col(c).cast("string") === lit(value))
+  private def probeOf(v: Any): Option[Probe] = v match {
+    case null | _: Array[Byte] => None
+    case _ =>
+      import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+      try Option(Cast(Literal(v), org.apache.spark.sql.types.StringType,
+          Some(spark.sessionState.conf.sessionLocalTimeZone)).eval())
+        .map(s => new Probe(v, s.toString))
+      catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** Min/max compare in the ordering the stats were recorded under
-    * (entry kind): numeric for numeric columns, lexicographic for
-    * everything else. Legacy numeric entries that fail to parse fall
-    * back to lexicographic rather than crashing the prune.
-    */
-  private def statCmp(a: String, b: String, kind: String): Int =
-    if (kind == "N")
-      try BigDecimal(a).compare(BigDecimal(b))
-      catch { case _: NumberFormatException => a.compareTo(b) }
-    else a.compareTo(b)
+  /** What one filter leaf asks of a column's values. */
+  private sealed trait Want
+  private case class AnyOf(points: Seq[Probe]) extends Want {
+    lazy val nums: Option[IndexedSeq[BigDecimal]] =
+      if (points.forall(_.num.isDefined)) Some(points.flatMap(_.num).sorted.toIndexedSeq)
+      else None
+    lazy val strs: IndexedSeq[UTF8String] =
+      points.map(_.utf8).sorted(ManifestTable.Utf8Order).toIndexedSeq
+  }
+  private case class Above(p: Probe, inclusive: Boolean) extends Want
+  private case class Below(p: Probe, inclusive: Boolean) extends Want
 
-  /** True when an entry's zone map for `c` intersects [lo, hi] — or when
-    * it has no stats for `c` (unknown files are never wrongly pruned).
+  /** Might a file whose values lie in [mn, mx], recorded in `kind`
+    * ("N" by decimal value, "S" in UTF-8 byte order, as Spark's min/max
+    * ordered them), hold a value `w` asks for? True whenever the bounds
+    * do not order against the probe (NaN, ±Infinity, years past 9999).
+    * An `IN` list is sorted once; each file does one binary search.
     */
-  private def zoneIntersects(e: Entry, c: String, lo: String, hi: String): Boolean =
-    e.stats.get(c).forall { s =>
-      statCmp(s.mx, lo, s.kind) >= 0 && statCmp(s.mn, hi, s.kind) <= 0
+  private def mayHold(w: Want, mn: String, mx: String, kind: String): Boolean = {
+    def cmp(bound: String, p: Probe): Option[Int] = kind match {
+      case "N" => for (b <- tryBigDecimal(bound); v <- p.num) yield b.compare(v)
+      case "S" if p.ordersWith(bound) =>
+        Some(UTF8String.fromString(bound).binaryCompare(p.utf8))
+      case _ => None
     }
-
-  /** L7: data-skipping file set for a range on ANY zone-mapped column —
-    * files of the (latest) version whose recorded [min, max] for `c`
-    * intersects [lo, hi]; files without stats for `c` are kept (never
-    * wrongly pruned). Exposed for pruning assertions.
-    */
-  def prunedFilesBy(c: String, lo: String, hi: String,
-      version: Option[Int] = None): Seq[String] =
-    prunedEntriesBy(c, lo, hi, version).map(e => new Path(root, e.rel).toString)
-
-  private def prunedEntriesBy(c: String, lo: String, hi: String,
-      version: Option[Int]): Seq[Entry] = {
-    val pc = toPhysical(c) // stats keys are recorded physical
-    require(allStatsCols.contains(pc), s"no zone map for column $c")
-    val v = version.orElse(latestVersion)
-      .getOrElse(throw new IllegalStateException(s"no versions at $root"))
-    entriesOf(v).filter(zoneIntersects(_, pc, lo, hi))
-  }
-
-  /** Single-column convenience over the primary statsCol. */
-  def prunedFiles(lo: String, hi: String,
-      version: Option[Int] = None): Seq[String] =
-    prunedFilesBy(statsCol.getOrElse(
-      throw new IllegalArgumentException("table has no statsCol")), lo, hi, version)
-
-  /** L7: range query with file skipping on any zone-mapped column —
-    * scans only intersecting files and applies the residual predicate
-    * (exact result regardless of stats coverage).
-    */
-  def readRangeBy(c: String, lo: String, hi: String,
-      version: Option[Int] = None): DataFrame = {
-    val entries = prunedEntriesBy(c, lo, hi, version)
-    if (entries.isEmpty) read(version).filter(lit(false))
-    else {
-      val out = readEntries(entries) // evolved-schema + clone- and DV-aware
-      // bounds cast to the COLUMN's type: a bigint-vs-string comparison
-      // would coerce both sides to double, whose exact-integer range
-      // (2^53) is narrower than the ids zone maps allow — boundary rows
-      // near extreme magnitudes would be misclassified by the residual
-      // (zone-map statCmp itself is exact via BigDecimal)
-      val dt = out.schema(c).dataType
-      out.filter(col(c) >= lit(lo).cast(dt) && col(c) <= lit(hi).cast(dt))
+    def anyWithin[T](keys: IndexedSeq[T], lo: T, hi: T)(implicit o: Ordering[T]) = {
+      val i = keys.search(lo).insertionPoint // first key >= lo
+      i < keys.length && o.lteq(keys(i), hi)
     }
-  }
-
-  def readRange(lo: String, hi: String, version: Option[Int] = None): DataFrame =
-    readRangeBy(statsCol.getOrElse(
-      throw new IllegalArgumentException("table has no statsCol")), lo, hi, version)
-
-  /** Multi-range file skipping in ONE scan: files intersecting ANY of
-    * the ranges are read once (deduped), with the OR of the range
-    * predicates as the residual. The point-lookup-set shape (an
-    * IVF-PQ query's probed lists, an IN-list over a clustered key)
-    * would otherwise need one scan branch per range.
-    */
-  def readRangesBy(c: String, ranges: Seq[(String, String)],
-      version: Option[Int] = None): DataFrame = {
-    val pc = toPhysical(c)
-    require(allStatsCols.contains(pc), s"no zone map for column $c")
-    require(ranges.nonEmpty, "readRangesBy needs at least one range")
-    val v = version.orElse(latestVersion)
-      .getOrElse(throw new IllegalStateException(s"no versions at $root"))
-    val entries = entriesOf(v).filter(e =>
-      ranges.exists { case (lo, hi) => zoneIntersects(e, pc, lo, hi) })
-    if (entries.isEmpty) read(version).filter(lit(false))
-    else {
-      val out = readEntries(entries)
-      val dt = out.schema(c).dataType // see readRangeBy: exact residual bounds
-      out.filter(ranges
-        .map { case (lo, hi) =>
-          col(c) >= lit(lo).cast(dt) && col(c) <= lit(hi).cast(dt)
+    w match {
+      case Above(p, incl) => cmp(mx, p).forall(c => c > 0 || incl && c == 0)
+      case Below(p, incl) => cmp(mn, p).forall(c => c < 0 || incl && c == 0)
+      case a: AnyOf => kind match {
+        case "N" => (a.nums, tryBigDecimal(mn), tryBigDecimal(mx)) match {
+          case (Some(keys), Some(lo), Some(hi)) => anyWithin(keys, lo, hi)
+          case _ => true
         }
-        .reduce(_ || _))
+        case "S" if a.points.forall(p => p.ordersWith(mn) && p.ordersWith(mx)) =>
+          anyWithin(a.strs, UTF8String.fromString(mn),
+            UTF8String.fromString(mx))(ManifestTable.Utf8Order)
+        case _ => true
+      }
     }
   }
 
-  // -------------------------------------------------------------- //
-  // Hidden-partition pruning: queries filter on the SOURCE column;  //
-  // the engine recomputes the transform and prunes hive dirs.       //
-  // -------------------------------------------------------------- //
-
-  private def transformFor(srcCol: String): PartitionTransform =
-    transforms.find(_.src == srcCol).getOrElse(
-      throw new IllegalArgumentException(
-        s"no partition transform on column $srcCol " +
-          s"(declared: ${transforms.map(_.spec).mkString(", ")})"))
-
-  /** Derived partition value of a literal, computed through the SAME
-    * expression writers use (a one-row local projection — never a
-    * distributed job). `dt` = the source column's type.
+  /** The order zone-map bounds of `kind` were recorded in, as
+    * [[mayHold]] compares them; numeric bounds must parse.
     */
-  private def derivedValueOf(t: PartitionTransform, value: String,
-      dt: org.apache.spark.sql.types.DataType): String = {
-    val r = spark.range(1)
-      .select(t.derive(lit(value).cast(dt), dt).cast("string").as("v"))
-      .head()
-    if (r.isNullAt(0)) null else r.getString(0)
-  }
+  private def statOrdering(kind: String): Ordering[String] =
+    if (kind == "N") Ordering.by[String, BigDecimal](BigDecimal(_))
+    else Ordering.by[String, UTF8String](UTF8String.fromString)(ManifestTable.Utf8Order)
 
   /** Hive dir value of partition column `c` in a file path, unescaped;
     * None when the path carries no such segment. */
@@ -1888,111 +1827,213 @@ class ManifestTable(spark: SparkSession, root: String,
 
   private def srcType(srcCol: String) = read().schema(srcCol).dataType
 
-  /** Multi-spec pruning kernel: each file is tested against every
-    * transform ON `srcCol` that ITS OWN path carries
-    * ([[PartitionTransform.fromName]] parses the hidden hive column
-    * back to its transform) — after a lazy [[setPartitionSpec]],
-    * old-spec files prune by THEIR transform and current files by the
-    * current one, in the same pass. A file carrying no segment on
-    * `srcCol` is kept (never wrongly skipped), so pruning degrades to
-    * a scan, never to row loss. `test(t, pathValue)` decides keep for
-    * one carried segment value (`pathValue` is null for the hive
-    * default partition).
+  /** THE file-skipping kernel: V1 source-filter conjuncts compiled to
+    * a per-entry test "might this file hold a row matching them all?".
+    * `=`/`IN` test zone maps, blooms and partition values; ranges test
+    * zone maps and monotonic transforms; `AND`/`OR` compose; the rest
+    * (`NOT`, `IS NULL`, string matches, columns `typeOf` does not know)
+    * keeps the file. The stats a file carries pick the tests, and each
+    * file is judged under its OWN partition spec (the hidden column its
+    * path carries). A deletion vector leaves stats describing a
+    * superset of the live rows, which can only under-prune. `mapping`
+    * is the physical → logical rename map.
     */
-  private def pruneBySpecs(entries: Seq[Entry], srcCol: String)(
-      test: (PartitionTransform, String) => Boolean): Seq[Entry] = {
-    val logicalOf = columnMapping // physical -> logical, loaded once
-    val parsed =
-      scala.collection.mutable.Map.empty[String, Option[PartitionTransform]]
-    def transformOf(c: String): Option[PartitionTransform] =
-      parsed.getOrElseUpdate(c, PartitionTransform.fromName(c)
-        .filter(t => logicalOf.getOrElse(t.src, t.src) == srcCol))
-    entries.filter { e =>
-      ManifestTable.layoutColsOf(e.rel).forall { c =>
-        transformOf(c) match {
-          case Some(t) => partValueOf(e.rel, c).forall(pv => test(t, pv))
-          case None => true
-        }
+  private def mightMatch(filters: Seq[sources.Filter],
+      typeOf: String => Option[org.apache.spark.sql.types.DataType],
+      mapping: Map[String, String]): Entry => Boolean = {
+    // literals' partition values under transform `t`, through the SAME
+    // expression writers use: one local projection per leaf, however
+    // many literals an IN carries (never a Spark job)
+    def derived(t: PartitionTransform, dt: org.apache.spark.sql.types.DataType,
+        ps: Seq[Probe]): Option[Seq[Probe]] =
+      if (ps.isEmpty) Some(Nil)
+      else {
+        val lits = spark.createDataFrame(java.util.List.of(
+            ps.map(p => org.apache.spark.sql.Row(p.raw)): _*),
+          StructType(Seq(org.apache.spark.sql.types.StructField("v",
+            org.apache.spark.sql.catalyst.expressions.Literal(ps.head.raw).dataType))))
+        // a literal that does not cast to the column type derives nothing
+        val ds = try lits.select(t.derive(col("v").cast(dt), dt)).collect()
+          .map(r => probeOf(r.get(0))).toSeq
+        catch { case scala.util.control.NonFatal(_) => Seq(None) }
+        if (ds.contains(None)) None else Some(ds.flatten)
       }
-    }
-  }
-
-  private def pruneEq(entries: Seq[Entry], srcCol: String,
-      value: String): Seq[Entry] = {
-    val dt = srcType(srcCol)
-    // one tiny local projection per DISTINCT transform, not per file
-    val derived = scala.collection.mutable.Map.empty[String, String]
-    def tv(t: PartitionTransform): String =
-      derived.getOrElseUpdate(t.name, derivedValueOf(t, value, dt))
-    pruneBySpecs(entries, srcCol)((t, pv) => pv == tv(t))
-  }
-
-  /** Point lookup through a partition transform: scan only the files
-    * whose derived partition matches `transform(value)` — each file
-    * under its OWN spec's transform — then apply the exact residual
-    * predicate on the source column. A `bucket(1024, user_id)` table
-    * answers a user lookup from 1/1024th of its files with zero index
-    * structures.
-    */
-  def readPartitionEq(srcCol: String, value: String): DataFrame = {
-    transformFor(srcCol) // contract: the current spec partitions on srcCol
-    val dt = srcType(srcCol)
-    val v = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no versions at $root"))
-    val entries = pruneEq(entriesOf(v), srcCol, value)
-    if (entries.isEmpty) read(Some(v)).filter(lit(false))
-    else readEntries(entries).filter(col(srcCol) === lit(value).cast(dt))
-  }
-
-  /** Range scan through a MONOTONIC partition transform (`days`,
-    * `months`, `hours`, `truncate`): scan only files whose derived
-    * partition intersects `[transform(lo), transform(hi)]` under the
-    * file's OWN spec, with the exact residual on the source column.
-    * Bucket transforms refuse as the current spec (hashing destroys
-    * ordering); an old-spec bucket segment simply cannot prune and its
-    * files are kept.
-    */
-  def readPartitionRange(srcCol: String, lo: String, hi: String): DataFrame = {
-    val cur = transformFor(srcCol)
-    require(cur.monotonic,
-      s"${cur.spec} is not ordering-preserving; range pruning would be wrong")
-    val dt = srcType(srcCol)
-    case class Bounds(lo: String, hi: String, numeric: Boolean)
-    val cache = scala.collection.mutable.Map.empty[String, Bounds]
-    def boundsOf(t: PartitionTransform): Bounds =
-      cache.getOrElseUpdate(t.name, Bounds(
-        derivedValueOf(t, lo, dt), derivedValueOf(t, hi, dt),
-        t match {
-          case PartitionTransform.TruncateOf(_, _) => dt match {
-            case org.apache.spark.sql.types.StringType => false
+    def column(a: String, w: Want): Entry => Boolean = {
+      val pc = toPhysical(a, mapping) // stats keys are recorded physical
+      val dt = typeOf(a) match {
+        case Some(t) => t
+        case None => return _ => true
+      }
+      val idKind = dt match {
+        case _: org.apache.spark.sql.types.NumericType => "N"
+        case _ => "S"
+      }
+      lazy val raws = w match {
+        case AnyOf(ps) if !ps.exists(_.zoned) => Some(ps.map(p => bloomRawHashes(p.str)))
+        case _ => None
+      }
+      val transformed = scala.collection.mutable.Map.empty[String, Option[(Want, String)]]
+      def viaTransform(t: PartitionTransform): Option[(Want, String)] =
+        transformed.getOrElseUpdate(t.name, {
+          def kindOf(p: Probe) = if (p.numeric) "N" else "S"
+          w match {
+            case AnyOf(ps) =>
+              derived(t, dt, ps).map(ds => (AnyOf(ds), ds.headOption.fold("S")(kindOf)))
+            case Above(p, _) if t.monotonic => derived(t, dt, Seq(p))
+              .map(ds => (Above(ds.head, inclusive = true), kindOf(ds.head)))
+            case Below(p, _) if t.monotonic => derived(t, dt, Seq(p))
+              .map(ds => (Below(ds.head, inclusive = true), kindOf(ds.head)))
+            case _ => None
+          }
+        })
+      def layoutOk(e: Entry): Boolean = {
+        // layout segments below the data dir (a clone's entries are
+        // absolute paths)
+        val rel = e.rel.substring(e.rel.lastIndexOf("/data/") + 1)
+        ManifestTable.layoutColsOf(rel).forall { c =>
+          // a NULL (hive default) partition value matches no comparison
+          lazy val pv = partValueOf(rel, c).orNull
+          PartitionTransform.fromName(c) match {
+            case Some(t) if mapping.getOrElse(t.src, t.src) == a =>
+              viaTransform(t).forall { case (tw, k) => pv != null && mayHold(tw, pv, pv, k) }
+            case None if mapping.getOrElse(c, c) == a =>
+              pv != null && mayHold(w, pv, pv, idKind)
             case _ => true
           }
-          case _ => false // date-shaped strings compare lexicographically
-        }))
-    def le(numeric: Boolean)(a: String, b: String): Boolean =
-      if (numeric) a.toDouble <= b.toDouble else a <= b
-    val v = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no versions at $root"))
-    val entries = pruneBySpecs(entriesOf(v), srcCol) { (t, pv) =>
-      if (!t.monotonic) true
-      else {
-        val b = boundsOf(t)
-        pv != null && le(b.numeric)(b.lo, pv) && le(b.numeric)(pv, b.hi)
+        }
       }
+      e => e.stats.get(pc).forall(s => mayHold(w, s.mn, s.mx, s.kind)) &&
+        raws.forall(r => e.stats.get(bloomKey(pc)).forall(bloomTestEntry(_, r))) &&
+        layoutOk(e)
     }
-    if (entries.isEmpty) read(Some(v)).filter(lit(false))
-    else readEntries(entries)
-      .filter(col(srcCol) >= lit(lo).cast(dt) && col(srcCol) <= lit(hi).cast(dt))
+    def leaf(a: String, v: Any)(want: Probe => Want): Entry => Boolean =
+      // no probe: a NULL literal matches no row; an unorderable one keeps
+      probeOf(v).fold[Entry => Boolean](_ => v != null)(p => column(a, want(p)))
+    def compile(f: sources.Filter): Entry => Boolean = f match {
+      case sources.And(l, r) =>
+        val (x, y) = (compile(l), compile(r)); e => x(e) && y(e)
+      case sources.Or(l, r) =>
+        val (x, y) = (compile(l), compile(r)); e => x(e) || y(e)
+      case sources.AlwaysFalse() => _ => false
+      case sources.EqualTo(a, v) => leaf(a, v)(p => AnyOf(Seq(p)))
+      case sources.EqualNullSafe(a, v) if v != null => leaf(a, v)(p => AnyOf(Seq(p)))
+      case sources.In(a, vs) =>
+        val ps = vs.toSeq.filter(_ != null).map(probeOf)
+        if (ps.contains(None)) _ => true else column(a, AnyOf(ps.flatten))
+      case sources.GreaterThan(a, v) => leaf(a, v)(Above(_, inclusive = false))
+      case sources.GreaterThanOrEqual(a, v) => leaf(a, v)(Above(_, inclusive = true))
+      case sources.LessThan(a, v) => leaf(a, v)(Below(_, inclusive = false))
+      case sources.LessThanOrEqual(a, v) => leaf(a, v)(Below(_, inclusive = true))
+      case _ => _ => true
+    }
+    val tests = filters.map(compile)
+    e => tests.forall(_(e))
   }
 
-  /** Files a [[readPartitionEq]] would scan — the pruning audit hook
-    * (what a spec asserts shrank). */
-  def prunedFilesPartitionEq(srcCol: String, value: String): Seq[String] = {
-    transformFor(srcCol)
-    val v = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no versions at $root"))
-    pruneEq(entriesOf(v), srcCol, value)
+  /** `where` as the V1 source-filter conjuncts the kernel reads:
+    * resolved against `df`, literal casts folded (so `ts >= '2024-01-02'`
+    * carries a timestamp) and widening column casts unwrapped (so
+    * `int_col = 5L` still names the column), split at top-level ANDs.
+    * A conjunct with no V1 form is dropped, which only skips less.
+    */
+  private def sourceFilters(df: DataFrame, where: Column): Seq[sources.Filter] = {
+    import org.apache.spark.sql.catalyst.expressions.{And, Expression}
+    import org.apache.spark.sql.catalyst.optimizer.{ConstantFolding, UnwrapCastInBinaryComparison}
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    UnwrapCastInBinaryComparison(ConstantFolding(
+        df.filter(where).queryExecution.analyzed)) match {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        conjuncts(f.condition).flatMap(
+          org.apache.spark.sql.graft.GraftSqlBridge.translateFilter)
+      case _ => Nil
+    }
+  }
+
+  /** The entries the kernel keeps for `filters`, and `df` (a read of
+    * all `entries`) narrowed to them: skipped files drop out of each
+    * file index in its plan, so the schema and every operator stay the
+    * full read's, and nothing is listed or resolved again.
+    */
+  private def skipFiles(df: DataFrame, entries: Seq[Entry],
+      filters: Seq[sources.Filter],
+      mapping: => Map[String, String] = columnMapping): (Seq[Entry], DataFrame) = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    if (filters.isEmpty) return (entries, df)
+    val (kept, skipped) = entries.partition(mightMatch(filters,
+      c => df.schema.find(_.name == c).map(_.dataType), mapping))
+    if (skipped.isEmpty) (kept, df)
+    else {
+      val names = skipped.map(e => new Path(e.rel).getName).toSet
+      (kept, org.apache.spark.sql.graft.GraftSqlBridge.ofRows(spark,
+        df.queryExecution.analyzed.transform {
+          case r @ LogicalRelation(h: HadoopFsRelation, _, _, _, _) =>
+            r.copy(relation = h.copy(
+              location = new SkippingFileIndex(h.location, names))(h.sparkSession))
+        }))
+    }
+  }
+
+  /** The newest version when `version` is None. */
+  private def versionOrLatest(version: Option[Int]): Int =
+    version.orElse(latestVersion)
+      .getOrElse(throw new IllegalStateException(s"no versions at $root"))
+
+  /** [[read]]'s frame, and the same frame narrowed by the kernel for
+    * given source filters — one snapshot resolution serves both (what
+    * a SQL table handle holds: its schema and its pruned scans).
+    */
+  private[graft] def prunableRead(version: Option[Int])
+      : (DataFrame, Seq[sources.Filter] => DataFrame) = {
+    val entries = entriesOf(versionOrLatest(version))
+    val mapping = columnMapping // one sidecar read for the frame and its scans
+    val all = readAll(entries, mapping)
+    (all, filters => skipFiles(all, entries, filters, mapping)._2)
+  }
+
+  /** The general pruned read: `where`'s rows from the files the kernel
+    * keeps for `filters` — both derived from the full read's frame.
+    */
+  private def readWhere(version: Option[Int], where: DataFrame => Column,
+      filters: DataFrame => Seq[sources.Filter]): DataFrame = {
+    val (all, narrow) = prunableRead(version)
+    narrow(filters(all)).filter(where(all))
+  }
+
+  /** Pruning audit hook: the files a [[read]] with `where` scans. */
+  private[graft] def filesFor(where: Column,
+      version: Option[Int] = None): Seq[String] = {
+    val entries = entriesOf(versionOrLatest(version))
+    val all = readAll(entries)
+    skipFiles(all, entries, sourceFilters(all, where))._1
       .map(e => new Path(root, e.rel).toString)
+  }
+
+  /** Equality probe in the string domain the bloom hashed: the rows
+    * whose `c` renders as `value`.
+    */
+  def readEq(c: String, value: String, version: Option[Int] = None): DataFrame =
+    readWhere(version, _ => col(c).cast("string") === lit(value),
+      _ => Seq(sources.EqualTo(c, value)))
+
+  /** Rows whose `c` lies in ANY of the closed ranges (bounds cast to the
+    * column's type — a bigint-vs-string comparison would coerce both
+    * sides to double and misplace boundary rows past 2^53), read in ONE
+    * scan: the point-lookup-set shape of an IVF-PQ query's probed lists.
+    */
+  def readRangesBy(c: String, ranges: Seq[(String, String)],
+      version: Option[Int] = None): DataFrame = {
+    require(ranges.nonEmpty, "readRangesBy needs at least one range")
+    readWhere(version, df => ranges.map { case (lo, hi) =>
+        val dt = df.schema(c).dataType
+        col(c) >= lit(lo).cast(dt) && col(c) <= lit(hi).cast(dt)
+      }.reduce(_ || _),
+      _ => Seq(ranges.map[sources.Filter] { case (lo, hi) =>
+        sources.And(sources.GreaterThanOrEqual(c, lo),
+          sources.LessThanOrEqual(c, hi))
+      }.reduce(sources.Or)))
   }
 
   /** Write a DataFrame's rows as new data files; returns their paths
@@ -2408,8 +2449,7 @@ class ManifestTable(spark: SparkSession, root: String,
     // pin the snapshot: every read below (base rows, touched scan,
     // carried entries) must see ONE version, and the commit is a delta
     // against exactly that version so concurrent disjoint writers rebase
-    val v0 = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no versions at $root"))
+    val v0 = versionOrLatest(None)
     // a merge source may omit generated columns — compute them on both
     // sides so the schema contract and the change detection line up.
     // The tombstone flag (not a table column) rides along untouched:
@@ -2557,7 +2597,7 @@ class ManifestTable(spark: SparkSession, root: String,
     // result rows through the join — silent row duplication — while a
     // duplicate key's identity is genuinely ambiguous, so those rows
     // draw fresh ids instead (honest degradation, cardinality intact)
-    val proj = withDeclared(readEntriesRid(idEntries))
+    val proj = withDeclared(readEntries(idEntries, withRowId = true))
       .groupBy(keys.map(c => col(c).as(s"__graft_idk_$c")): _*)
       .agg(min(col(ManifestTable.RowIdCol)).as("__graft_idv"),
         count(lit(1)).as("__graft_idn"))
@@ -2611,8 +2651,8 @@ class ManifestTable(spark: SparkSession, root: String,
     finally in.close()
   }
 
-  private def toPhysical(logical: String): String = {
-    val m = columnMapping
+  private def toPhysical(logical: String,
+      m: Map[String, String] = columnMapping): String = {
     // a stale (pre-rename) name must refuse loudly, not silently hit
     // its still-matching physical stats key while the scan resolves
     // nothing
@@ -2623,14 +2663,14 @@ class ManifestTable(spark: SparkSession, root: String,
     m.collectFirst { case (p, l) if l == logical => p }.getOrElse(logical)
   }
 
-  private def toLogicalRename(df: DataFrame): DataFrame = {
+  private def toLogicalRename(df: DataFrame,
+      m: Map[String, String] = columnMapping): DataFrame = {
     // dropped physical storage never surfaces — hidden BEFORE the
     // rename fold so a dropped column can never shadow a re-added
     // logical name riding a fresh physical id
     val dropped = droppedColumns
     val hit = df.columns.filter(dropped.contains)
     val d0 = if (hit.isEmpty) df else df.drop(hit.toIndexedSeq: _*)
-    val m = columnMapping
     if (m.isEmpty) d0
     else m.foldLeft(d0) { case (d, (p, l)) =>
       if (p != l && d.columns.contains(p)) d.withColumnRenamed(p, l) else d
@@ -3512,8 +3552,7 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   def filesDf(version: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val v = version.orElse(latestVersion)
-      .getOrElse(throw new IllegalStateException(s"no versions at $root"))
+    val v = versionOrLatest(version)
     entriesOf(v).map { e =>
       val len = fs.getFileStatus(new Path(root, e.rel)).getLen
       val zones = e.stats.toSeq
@@ -3569,99 +3608,30 @@ class ManifestTable(spark: SparkSession, root: String,
     * the committed version, or the current one when nothing matched.
     */
   def delete(predicate: Column): Int = {
-    val v0 = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no versions at $root"))
+    val v0 = versionOrLatest(None)
     val entries = entriesOf(v0)
-    deleteFrom(v0, entries, entries, predicate)
-  }
-
-  /** Point delete with BLOOM file skipping (L14 ∘ L15): only files
-    * whose bloom might contain the value are scanned for positions —
-    * the "erase one doc_id among 100k files" path, O(candidate files)
-    * instead of O(table). Exact: the bloom only ever over-selects.
-    */
-  def deleteEq(c: String, value: String): Int = {
-    val v0 = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no versions at $root"))
-    deleteFrom(v0, entriesOf(v0), prunedEntriesEq(c, value, Some(v0)),
-      col(c).cast("string") === lit(value))
+    if (entries.isEmpty) return v0
+    val live = liveWithPos(entries, withRid = false)
+    deleteMatching(v0, entries, live, sourceFilters(live, predicate),
+      _.filter(predicate))
   }
 
   /** Batch point delete — one commit for a SET of keys (the GDPR
     * erasure-queue shape: requests arrive in batches, each batch is
-    * one DV commit, not one per key). Bloom-prunes to the files that
-    * might contain ANY of the values when the column carries a bloom.
+    * one DV commit, not one per key). Keys match in the string domain
+    * (`c` rendered as a string); only files the kernel keeps for the
+    * key set are scanned for positions.
     */
   def deleteKeys(c: String, values: Seq[String]): Int = {
-    val v0 = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no versions at $root"))
+    val v0 = versionOrLatest(None)
     // NULL keys are dropped explicitly (they cannot equal any stored
     // value; inside an IN literal they'd vanish silently instead)
     val vals = values.filter(_ != null).distinct
-    if (vals.isEmpty) return v0
     val entries = entriesOf(v0)
-    deleteFromWith(v0, entries,
-      keyCandidates(entries, toPhysical(c), vals), keyMatcher(c, vals))
+    if (vals.isEmpty || entries.isEmpty) return v0
+    deleteMatching(v0, entries, liveWithPos(entries, withRid = false),
+      Seq(sources.In(c, vals.toArray)), keyMatcher(c, vals))
   }
-
-  /** Candidate files that may hold ANY of `vals` in physical column
-    * `pc`: bloom-pruned when the column carries a bloom (hash each
-    * value once, decode each entry's bitset once — O(files + keys)),
-    * zone-map-pruned when it carries stats (the NSW refresh's shard_id
-    * batch: O(delta shards), not O(table)), all files otherwise.
-    * Shared by [[deleteKeys]] and [[deleteKeysAndAppend]] so the
-    * single- and multi-batch key-delete paths cannot diverge.
-    */
-  private def keyCandidates(entries: Seq[Entry], pc: String,
-      vals: Seq[String]): Seq[Entry] =
-    if (bloomCol.contains(pc)) {
-      val raws = vals.map(bloomRawHashes)
-      entries.filter(e =>
-        e.stats.get(bloomKey(pc)).forall(bloomTestEntry(_, raws)))
-    } else if (allStatsCols.contains(pc)) {
-      // sort the keys once per stats kind, then each entry answers
-      // "any key inside my [min, max]?" with one binary search —
-      // O(files·log keys), not O(files × keys) BigDecimal re-parses
-      // (the same once-per-value discipline as the bloom branch).
-      // Numeric kinds sort ONLY the BigDecimal-parseable keys: folding
-      // statCmp's lexicographic fallback into one sortWith makes the
-      // comparator non-transitive ('2'<'10' numeric, '10'<'1a' lex,
-      // '1a'<'2' lex — a cycle), and binary search over the resulting
-      // inconsistently ordered array can wrongly prune a file that
-      // DOES hold a key — a silently incomplete erasure. Unparseable
-      // keys ('NaN'/'Infinity' cast-strings of doubles) or unparseable
-      // entry bounds disable numeric pruning for the affected entries:
-      // a file is only skipped when provably clean.
-      lazy val numSorted: Array[BigDecimal] =
-        vals.flatMap(tryBigDecimal).toArray.sorted
-      lazy val numKeysAllParse: Boolean = vals.forall(tryBigDecimal(_).isDefined)
-      val lexSorted = scala.collection.mutable.Map.empty[String, Array[String]]
-      entries.filter(e => e.stats.get(pc).forall { s =>
-        if (s.kind == "N") {
-          if (!numKeysAllParse) true // a NaN-ish key: cannot prove clean
-          else (tryBigDecimal(s.mn), tryBigDecimal(s.mx)) match {
-            case (Some(mn), Some(mx)) =>
-              var lo = 0
-              var hi = numSorted.length // first key >= min
-              while (lo < hi) {
-                val mid = (lo + hi) >>> 1
-                if (numSorted(mid) < mn) lo = mid + 1 else hi = mid
-              }
-              lo < numSorted.length && numSorted(lo) <= mx
-            case _ => true // legacy/odd numeric bounds: never prune
-          }
-        } else {
-          val keys = lexSorted.getOrElseUpdate(s.kind, vals.toArray.sorted)
-          var lo = 0
-          var hi = keys.length // first key >= min
-          while (lo < hi) {
-            val mid = (lo + hi) >>> 1
-            if (keys(mid).compareTo(s.mn) < 0) lo = mid + 1 else hi = mid
-          }
-          lo < keys.length && keys(lo).compareTo(s.mx) <= 0
-        }
-      })
-    } else entries
 
   private def tryBigDecimal(s: String): Option[BigDecimal] =
     try Some(BigDecimal(s)) catch { case _: NumberFormatException => None }
@@ -3682,32 +3652,15 @@ class ManifestTable(spark: SparkSession, root: String,
         col(c).cast("string") === col("_graft_erase_key"), "left_semi")
     }
 
-  /** Range delete with ZONE-MAP file skipping (L7 ∘ L15): only files
-    * whose [min,max] intersects the range are scanned — retracting a
-    * bad ingest window from a time-clustered table touches the few
-    * files holding it.
+  /** Position-mark the rows `matcher` selects from `live` (the live
+    * rows of ALL of `all`, with positions), scanning only the files the
+    * kernel keeps for `filters`; commit as a delta against the full
+    * snapshot. `matcher` is a filter for predicate deletes, a
+    * semi-join for large key sets.
     */
-  def deleteRange(c: String, lo: String, hi: String): Int = {
-    val v0 = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no versions at $root"))
-    deleteFrom(v0, entriesOf(v0), prunedEntriesBy(c, lo, hi, Some(v0)),
-      col(c) >= lit(lo) && col(c) <= lit(hi))
-  }
-
-  /** Position-mark rows of `candidates` matching `predicate`; commit
-    * as a delta against the FULL snapshot (`all`). Only candidate
-    * files are scanned — callers narrow them via bloom/zone pruning.
-    */
-  private def deleteFrom(v0: Int, all: Seq[Entry], candidates: Seq[Entry],
-      predicate: Column): Int =
-    deleteFromWith(v0, all, candidates, _.filter(predicate))
-
-  /** Generalized form: `matcher` selects the rows to mark from the
-    * live candidate scan (a filter for predicate deletes, a semi-join
-    * for large key sets).
-    */
-  private def deleteFromWith(v0: Int, all: Seq[Entry], candidates: Seq[Entry],
-      matcher: DataFrame => DataFrame): Int = {
+  private def deleteMatching(v0: Int, all: Seq[Entry], live: DataFrame,
+      filters: Seq[sources.Filter], matcher: DataFrame => DataFrame): Int = {
+    val (candidates, scan) = skipFiles(live, all, filters)
     if (candidates.isEmpty) return v0
     if (!cdcEnabled) {
       // materialize the hit set exactly once (eager checkpoint): the
@@ -3716,7 +3669,7 @@ class ManifestTable(spark: SparkSession, root: String,
       // predicate re-evaluated under cache eviction could otherwise
       // diverge the recorded counts from the written sidecar (r18
       // ADVICE; the CDC branch below already had this discipline)
-      val hits = matcher(liveWithPos(candidates, withRid = false))
+      val hits = matcher(scan)
         .select(col(DvFileCol), col(DvPosCol)).localCheckpoint(true)
       try return commitDv(v0, all, hits, Seq.empty, marksUnique = true)
       finally graft.functions.CheckpointOps.release(hits)
@@ -3725,8 +3678,7 @@ class ManifestTable(spark: SparkSession, root: String,
     // the hit set exactly once so the DV marks and the recorded
     // deletes cannot diverge under a nondeterministic predicate —
     // the same discipline updateWhere applies.
-    val hits = matcher(liveWithPos(candidates, withRid = false))
-      .localCheckpoint(true)
+    val hits = matcher(scan).localCheckpoint(true)
     try {
       val dataCols = hits.columns
         .filterNot(Set(DvFileCol, DvPosCol, ManifestTable.RowIdCol)).toSeq
@@ -3822,15 +3774,15 @@ class ManifestTable(spark: SparkSession, root: String,
     * expression (may reference the old row's columns).
     */
   def updateWhere(predicate: Column, set: Map[String, Column]): Int = {
-    val v0 = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no versions at $root"))
+    val v0 = versionOrLatest(None)
     val entries = entriesOf(v0)
     if (entries.isEmpty) return v0
     require(set.nonEmpty, "updateWhere needs at least one assignment")
     set.keys.find(identityColumns.contains).foreach(n =>
       throw new IllegalArgumentException(s"updateWhere: $n is GENERATED " +
         "ALWAYS AS IDENTITY — its values cannot be assigned"))
-    val live = liveWithPos(entries)
+    val all = liveWithPos(entries)
+    val (_, live) = skipFiles(all, entries, sourceFilters(all, predicate))
     // materialize the matched row set EXACTLY once (eager checkpoint):
     // the marks and the appended copies must come from the same rows,
     // or a nondeterministic predicate/assignment could kill one row
@@ -3913,8 +3865,7 @@ class ManifestTable(spark: SparkSession, root: String,
       matched: Seq[MergeMatchedClause] = Nil,
       notMatched: Seq[MergeInsertClause] = Nil,
       notMatchedBySource: Seq[MergeMatchedClause] = Nil): Int = {
-    val v0 = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no versions at $root"))
+    val v0 = versionOrLatest(None)
     require(matched.nonEmpty || notMatched.nonEmpty ||
       notMatchedBySource.nonEmpty, "MERGE needs at least one clause")
     val entries = entriesOf(v0)
@@ -4108,7 +4059,7 @@ class ManifestTable(spark: SparkSession, root: String,
     // agree on the mark rows. CONTRACT (r18 ADVICE): every
     // marksUnique caller passes marks derived from an eagerly
     // CHECKPOINTED hit set (updateWhere/mergeInto hits, and
-    // deleteFromWith checkpoints both branches), so even a cache
+    // deleteMatching checkpoints both branches), so even a cache
     // eviction recomputes the same rows from stored blocks — a
     // nondeterministic predicate can no longer diverge the recorded
     // totals from the written sidecar. The cache here only avoids
@@ -4240,8 +4191,9 @@ class ManifestTable(spark: SparkSession, root: String,
     * the full new state; there is no window where the deletes are
     * visible without the re-append (the two-commit form silently lost
     * the deleted rows when a replay re-derived its delta from the
-    * half-applied table). Each batch bloom-prunes its candidate files
-    * like [[deleteKeys]]; all marks ride one DV sidecar.
+    * half-applied table). Each batch scans only the files the kernel
+    * keeps for its keys, like [[deleteKeys]]; all marks ride one DV
+    * sidecar.
     *
     * `strict = true` additionally makes ANY concurrently-added file a
     * conflict (not just overlapping rewrites): single-writer
@@ -4260,8 +4212,7 @@ class ManifestTable(spark: SparkSession, root: String,
   def deleteKeysAndAppend(deletes: Seq[(String, Seq[String])],
       adds: Seq[DataFrame], strict: Boolean = false,
       version: Option[Int] = None): Int = {
-    val v0 = version.orElse(latestVersion).getOrElse(
-      throw new IllegalStateException(s"no versions at $root"))
+    val v0 = versionOrLatest(version)
     val entries = entriesOf(v0)
     val conflictsWith: Entry => Boolean = if (strict) _ => true else _ => false
     val cdcOn = cdcEnabled
@@ -4272,21 +4223,24 @@ class ManifestTable(spark: SparkSession, root: String,
     // concurrently-changing source, e.g. an index refresh delta)
     val hitCheckpoints = scala.collection.mutable.ArrayBuffer[DataFrame]()
     val addsC = if (!cdcOn) adds else adds.map(_.localCheckpoint(true))
+    // the live rows of the whole snapshot, listed once for every batch
+    lazy val live = {
+      val withPos = toLogicalRename(readFiles(
+        entries.map(e => new Path(root, e.rel).toString), withPos = true))
+      dvOf(entries).fold(withPos)(dv =>
+        withPos.join(dv, Seq(DvFileCol, DvPosCol), "left_anti"))
+    }
     try {
       val hitDfs = deletes.flatMap { case (c, values0) =>
         val vals = values0.filter(_ != null).distinct
         if (vals.isEmpty || entries.isEmpty) None
         else {
-          // the same candidate pruning + key matching as deleteKeys
-          // (one shared pipeline — the paths cannot diverge)
-          val candidates = keyCandidates(entries, toPhysical(c), vals)
+          // the same file skipping + key matching as deleteKeys
+          val (candidates, scan) =
+            skipFiles(live, entries, Seq(sources.In(c, vals.toArray)))
           if (candidates.isEmpty) None
           else {
-            val files = candidates.map(e => new Path(root, e.rel).toString)
-            val withPos = toLogicalRename(readFiles(files, withPos = true))
-            val live = dvOf(candidates).fold(withPos)(dv =>
-              withPos.join(dv, Seq(DvFileCol, DvPosCol), "left_anti"))
-            val hits = keyMatcher(c, vals)(live)
+            val hits = keyMatcher(c, vals)(scan)
             if (!cdcOn) Some(hits)
             else { val h = hits.localCheckpoint(true); hitCheckpoints += h; Some(h) }
           }
@@ -4393,12 +4347,11 @@ class ManifestTable(spark: SparkSession, root: String,
     * files only).
     */
   def compact(targetFiles: Int, scope: Column): Int = {
-    val v0 = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no versions at $root"))
+    val v0 = versionOrLatest(None)
     val entries = entriesOf(v0)
     val chosen = entriesInScope(entries, scope)
     if (chosen.isEmpty) return v0
-    val df = withDerived(readEntriesRid(chosen) // DV-applying read
+    val df = withDerived(readEntries(chosen, withRowId = true) // DV-applying read
       .withColumnRenamed(ManifestTable.RowIdCol, ManifestTable.RidPhysCol))
     val compacted =
       if (partCols.nonEmpty) df.repartition(targetFiles, partCols.map(col): _*)
@@ -4421,8 +4374,7 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   def compactSmall(minFileBytes: Long, targetFileBytes: Long = 128L << 20,
       scope: Option[Column] = None): Int = {
-    val v0 = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no versions at $root"))
+    val v0 = versionOrLatest(None)
     val entries = entriesOf(v0)
     // scope narrows the CANDIDATES; the commit delta is still against
     // the full snapshot, so out-of-scope files carry by reference
@@ -4436,7 +4388,7 @@ class ManifestTable(spark: SparkSession, root: String,
       return v0 // nothing to pack (a single small DV-free file gains nothing)
     val totalBytes = small.map(_._2).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val packed = withDerived(readEntriesRid(small.map(_._1)) // DV-applying read
+    val packed = withDerived(readEntries(small.map(_._1), withRowId = true) // DV-applying read
       .withColumnRenamed(ManifestTable.RowIdCol, ManifestTable.RidPhysCol))
     val repart =
       if (partCols.nonEmpty) packed.repartition(nOut, partCols.map(col): _*)
@@ -4461,8 +4413,7 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   def reorgPurge(minDeletedFraction: Double = 0.0,
       scope: Option[Column] = None): Int = {
-    val v0 = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no versions at $root"))
+    val v0 = versionOrLatest(None)
     val entries = entriesOf(v0)
     val dvd = scope.fold(entries)(entriesInScope(entries, _))
       .filter(_.stats.contains(DvKey))
@@ -4487,7 +4438,7 @@ class ManifestTable(spark: SparkSession, root: String,
         }
       }
     if (chosen.isEmpty) return v0
-    val purged = withDerived(readEntriesRid(chosen) // DV-applying read
+    val purged = withDerived(readEntries(chosen, withRowId = true) // DV-applying read
       .withColumnRenamed(ManifestTable.RowIdCol, ManifestTable.RidPhysCol))
     val repart =
       if (partCols.nonEmpty)
@@ -4512,8 +4463,7 @@ class ManifestTable(spark: SparkSession, root: String,
     * table is already fully tracked.
     */
   def backfillRowIds(): Int = {
-    val v0 = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no versions at $root"))
+    val v0 = versionOrLatest(None)
     val entries = entriesOf(v0)
     val unstamped = entries.filterNot(_.stats.contains(ManifestTable.RidKey))
     if (unstamped.isEmpty) return v0
@@ -4536,7 +4486,7 @@ class ManifestTable(spark: SparkSession, root: String,
   /** L5b: cluster-compact — rewrite range-partitioned by `column` so
     * each file covers a narrow value range (the single-dimension
     * OPTIMIZE ZORDER analogue). Pays one sort-shuffle to make every
-    * later [[readRange]] on that column skip most files: the write-once
+    * later range read on that column skip most files: the write-once
     * read-many trade a 100 TB table wants.
     */
   def optimizeBy(column: String, targetFiles: Int = 8): Int = {
@@ -4578,12 +4528,11 @@ class ManifestTable(spark: SparkSession, root: String,
     * table).
     */
   def optimizeByZ(cols: Seq[String], targetFiles: Int, scope: Column): Int = {
-    val v0 = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no versions at $root"))
+    val v0 = versionOrLatest(None)
     val entries = entriesOf(v0)
     val chosen = entriesInScope(entries, scope)
     if (chosen.isEmpty) return v0
-    val df = withDerived(readEntriesRid(chosen) // DV-applying read
+    val df = withDerived(readEntries(chosen, withRowId = true) // DV-applying read
       .withColumnRenamed(ManifestTable.RowIdCol, ManifestTable.RidPhysCol))
     val z = graft.operators.ZOrder.zValue(df, cols, bits = 4)
     val newFiles = newEntries(writeDataFiles(df.withColumn("_zorder", z)
@@ -4670,11 +4619,13 @@ class ManifestTable(spark: SparkSession, root: String,
     // a sort/z-order rewrite restores skipping
     allStatsCols.headOption.foreach { c =>
       val stats = entries.map(_.stats.get(c))
-      if (entries.size > 4 && stats.forall(_.isDefined)) {
-        val kind = stats.head.get.kind
-        val sorted = stats.map(_.get).sortWith((a, b) => statCmp(a.mn, b.mn, kind) < 0)
+      val kind = stats.head.fold("")(_.kind)
+      if (entries.size > 4 && stats.forall(_.exists(s => s.kind == kind &&
+          (kind != "N" || Seq(s.mn, s.mx).forall(tryBigDecimal(_).isDefined))))) {
+        val ord = statOrdering(kind)
+        val sorted = stats.map(_.get).sortBy(_.mn)(ord)
         val overlaps = sorted.sliding(2).count {
-          case Seq(a, b) => statCmp(b.mn, a.mx, kind) <= 0
+          case Seq(a, b) => ord.lteq(b.mn, a.mx)
           case _ => false
         }
         if (overlaps.toDouble / (entries.size - 1) > 0.5)
@@ -4808,8 +4759,8 @@ class ManifestTable(spark: SparkSession, root: String,
         // kernel pairs pre/post exactly. Refuses (naming every fix)
         // only when a touched file predates row tracking: NULL ids
         // under the null-safe join would cross-match unrelated rows.
-        val preR = withDeclared(readEntriesRid(preChanged))
-        val postR = withDeclared(readEntriesRid(postChanged))
+        val preR = withDeclared(readEntries(preChanged, withRowId = true))
+        val postR = withDeclared(readEntries(postChanged, withRowId = true))
         // a #rid-stamped file can never yield a NULL id (base + index
         // is total), so the probe jobs run only for files PREDATING
         // row tracking, whose physical column may or may not cover
@@ -5252,8 +5203,7 @@ class ManifestTable(spark: SparkSession, root: String,
     val dest = new ManifestTable(spark, destRoot, partitionCol,
       statsCol, statsCols, bloomCol, bloomBits, bloomHashes, partitionCols,
       partitionSpec)
-    val v = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no versions at $root"))
+    val v = versionOrLatest(None)
     // qualify: clone entries must resolve against the SOURCE root —
     // data paths AND deletion-vector sidecar refs (a root-relative DV
     // ref would resolve against the CLONE's root and resurrect the

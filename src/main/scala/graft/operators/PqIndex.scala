@@ -67,9 +67,9 @@ class PqIndex private (spark: SparkSession, val root: String,
     * semi-joins the pruned list scan BEFORE ADC scoring, so excluded
     * vectors never take shortlist slots (the post-filter recall trap).
     * At scale the allow-list is itself a pruned scan of the metadata
-    * table (label as a partition/zone-map column — `readPartitionEq`/
-    * `readEq` compose), so the filter costs its own selectivity, not a
-    * corpus pass.
+    * table (label as a partition/zone-map column — `read(where = …)`
+    * composes), so the filter costs its own selectivity, not a corpus
+    * pass.
     */
   def query(emb: DataFrame, probes0: DataFrame,
       nprobe: Int = 4, shortlist: Int = 30, topK: Int = 3,

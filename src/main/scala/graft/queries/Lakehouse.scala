@@ -695,7 +695,7 @@ object Lakehouse extends QueryModule {
         && col("o_orderdate").between("1995-04-01", "1995-04-30"))
       .withColumn("o_totalprice", col("o_totalprice") * 2),
       Seq("o_orderkey"))
-    t1.readPartitionRange("o_orderdate", "1995-03-15", "1995-05-15")
+    t1.read(where = col("o_orderdate").between("1995-03-15", "1995-05-15"))
       .groupBy(col("o_orderpriority").as("pri"))
       .agg(count(lit(1)).as("n"), Q.dsum(col("o_totalprice")).as("total"))
       .orderBy(col("pri").asc)
@@ -1142,7 +1142,7 @@ object Lakehouse extends QueryModule {
         col("user_id"), col("value"))
     val mt = new ManifestTable(spark, scratch, partitionSpec = Seq("days(ts)"))
     mt.write(events, "overwrite")
-    mt.readPartitionRange("ts", "2024-01-02 00:00:00", "2024-01-03 12:00:00")
+    mt.read(where = col("ts").between("2024-01-02 00:00:00", "2024-01-03 12:00:00"))
       .select(col("event_id"),
         col("ts").cast("timestamp_ntz").as("ts"),
         col("user_id"), col("value"))

@@ -655,7 +655,7 @@ object Similarity extends QueryModule {
     * list-serving join (post-assignment, pre-re-rank) so only
     * same-label candidates are ever scored; at 100 TB the label is a
     * partition or zone-map column and the lists prune BEFORE the scan
-    * (`readPartitionEq` composes with the persisted-index variants) —
+    * (`read(where = …)` composes with the persisted-index variants) —
     * here the candidate-side filter is the semantics, the pruning is
     * the deployment knob. Deterministic end to end (s4's seed pick,
     * fold-cosine argmax, rounded re-rank), so the DuckDB oracle

@@ -653,16 +653,25 @@ private[sql] class GraftSqlTable(ident: Identifier,
     case _ => mtable.latestVersion
   }
 
-  private[sql] lazy val df: DataFrame = (branch, version, asOfMs) match {
-    // the WAP audit view: main snapshot ∪ staged rows — what the table
-    // WILL look like after publish
-    case (Some(b), _, _) => mtable.readBranch(b)
-    // a timestamp before the first commit: raise readAsOf's standard
-    // error (snapshotVersion is None there); read(None) likewise
-    // raises the standard no-versions error for an empty root
-    case (_, _, Some(ms)) if snapshotVersion.isEmpty => mtable.readAsOf(ms)
-    case _ => mtable.read(snapshotVersion)
-  }
+  /** The snapshot's frame and its file-skipping scans, from ONE
+    * resolution of the pinned version (a published version's entry
+    * list never changes).
+    */
+  private lazy val snapshot: (DataFrame, Seq[Filter] => DataFrame) =
+    (branch, version, asOfMs) match {
+      // the WAP audit view: main snapshot ∪ staged rows — what the
+      // table WILL look like after publish; staged rows carry no
+      // stats, so its scans filter the whole frame
+      case (Some(b), _, _) => val d = mtable.readBranch(b); (d, _ => d)
+      // a timestamp before the first commit: raise readAsOf's standard
+      // error (snapshotVersion is None there); read(None) likewise
+      // raises the standard no-versions error for an empty root
+      case (_, _, Some(ms)) if snapshotVersion.isEmpty =>
+        val d = mtable.readAsOf(ms); (d, _ => d)
+      case _ => mtable.prunableRead(snapshotVersion)
+    }
+
+  private[sql] lazy val df: DataFrame = snapshot._1
 
   override def name(): String =
     (ident.namespace() :+ ident.name()).mkString(".")
@@ -806,15 +815,17 @@ private[sql] class GraftSqlTable(ident: Identifier,
 
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(df, () => metaCount, metaMinMax)
+    new GraftScanBuilder(df, snapshot._2, () => metaCount, metaMinMax)
 }
 
 /** DSv2 pruning/pushdown applied onto the inner DataFrame, compiled
-  * through a [[V1Scan]]: accepted filters and the pruned projection
-  * become part of the sub-plan, where Catalyst pushes them to the
-  * parquet scans exactly as a path-based read would.
+  * through a [[V1Scan]]: the accepted filters pick the files to scan
+  * (`skipping` — the manifest's file-skipping kernel) and, with the
+  * pruned projection, become part of the sub-plan, where Catalyst
+  * pushes them to the parquet scans exactly as a path-based read would.
   */
 private[sql] class GraftScanBuilder(df: DataFrame,
+    skipping: Seq[Filter] => DataFrame,
     metaCount: () => Option[Long] = () => None,
     metaMinMax: String => Option[(String, String, String)] = _ => None)
     extends ScanBuilder
@@ -955,7 +966,7 @@ private[sql] class GraftScanBuilder(df: DataFrame,
       new GraftV1Scan(prepared, schema)
     case None =>
       val filtered = accepted.flatMap(GraftScanBuilder.toColumn(_, topLevel))
-        .foldLeft(df)((d, c) => d.filter(c))
+        .foldLeft(skipping(accepted.toSeq))(_.filter(_))
       val pruned = filtered.select(
         required.fields.map(f => GraftScanBuilder.quoted(f.name)).toSeq: _*)
       new GraftV1Scan(pruned, required)

@@ -96,6 +96,15 @@ object GraftSqlBridge {
     (idCols.result(), specs.result())
   }
 
+  /** A resolved predicate as a V1 source filter (top-level columns
+    * only) — `DataSourceStrategy.translateFilter` is `protected[sql]`;
+    * the lake's file skipping reads predicates in this form.
+    */
+  def translateFilter(e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Option[org.apache.spark.sql.sources.Filter] =
+    org.apache.spark.sql.execution.datasources.DataSourceStrategy
+      .translateFilter(e, supportNestedPredicatePushdown = false)
+
   /** Wrap a catalyst Expression as a user-facing Column —
     * `ExpressionUtils.column` is `private[sql]`; the DML lowering rule
     * (graft.sql.GraftDmlRules) uses it to carry rebound UPDATE/MERGE

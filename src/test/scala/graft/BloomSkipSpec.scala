@@ -36,10 +36,10 @@ class BloomSkipSpec extends SparkTestBase {
     val probe = md5Hex("42")
     // zone maps are useless here: every file's md5 range spans ~the
     // whole hex domain, so the range [probe, probe] intersects ~all
-    val zoneKept = mt.prunedFilesBy("key", probe, probe).size
+    val zoneKept = mt.filesFor(col("key").between(probe, probe)).size
     assert(zoneKept >= 15, s"zone maps unexpectedly pruned: kept $zoneKept/20")
     // the bloom prunes to (nearly) just the file holding the key
-    val bloomKept = mt.prunedFilesEq("key", probe)
+    val bloomKept = mt.filesFor(col("key") === probe)
     assert(bloomKept.size <= 2, s"bloom kept ${bloomKept.size}/20 files")
     // zero false negatives: the probed row is found
     val rows = mt.readEq("key", probe).select("id").as[Long].collect()
@@ -50,7 +50,7 @@ class BloomSkipSpec extends SparkTestBase {
     val mt = new ManifestTable(spark, scratch("bloom_absent"),
       bloomCol = Some("key"))
     mt.write(docs.repartition(10), "overwrite")
-    val kept = mt.prunedFilesEq("key", "no-such-key")
+    val kept = mt.filesFor(col("key") === "no-such-key")
     assert(kept.isEmpty, s"absent key kept ${kept.size} files")
     assert(mt.readEq("key", "no-such-key").count() === 0)
   }
@@ -64,7 +64,7 @@ class BloomSkipSpec extends SparkTestBase {
     mt.write(docs.filter(col("id") >= 5000).repartition(5), "append")
     val probeOld = md5Hex("7")
     // all 5 legacy files kept (no bloom recorded) + ≤1 new file
-    val kept = mt.prunedFilesEq("key", probeOld)
+    val kept = mt.filesFor(col("key") === probeOld)
     assert(kept.size >= 5 && kept.size <= 6, s"kept ${kept.size}")
     assert(mt.readEq("key", probeOld).select("id").as[Long].collect()
       .toSeq === Seq(7L))
@@ -78,7 +78,7 @@ class BloomSkipSpec extends SparkTestBase {
     assert(mt.readEq("id", "4242").select("id").as[Long].collect()
       .toSeq === Seq(4242L))
     mt.compact(4) // rewrite recomputes blooms for the new files
-    val keptAfter = mt.prunedFilesEq("id", "4242")
+    val keptAfter = mt.filesFor(col("id") === 4242L)
     assert(keptAfter.size <= 2, s"post-compact kept ${keptAfter.size}/4")
     assert(mt.readEq("id", "4242").select("id").as[Long].collect()
       .toSeq === Seq(4242L))

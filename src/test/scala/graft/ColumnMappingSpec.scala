@@ -67,17 +67,18 @@ class ColumnMappingSpec extends SparkTestBase {
     t.renameColumn("key", "event_key")
 
     // range read through the NEW name: exact + pruned
-    val got = t.readRangeBy("event_time", "100", "150")
+    val range = col("event_time").between(100L, 150L)
+    val got = t.read(where = range)
     assert(got.count() === 51)
     assert(got.columns.contains("event_time"))
     // eq read through the new bloom name
     val eq = t.readEq("event_key", "k250")
     assert(eq.count() === 1)
-    // deleteEq through the new name
-    t.deleteEq("event_key", "k250")
+    // delete through the new name
+    t.delete(col("event_key") === "k250")
     assert(t.read().count() === 399)
     // old names now refuse
-    intercept[IllegalArgumentException] { t.readRangeBy("ts_val", "1", "2") }
+    intercept[IllegalArgumentException] { t.readRangesBy("ts_val", Seq(("1", "2"))) }
   }
 
   test("restrictions: partition columns refuse; collisions refuse") {

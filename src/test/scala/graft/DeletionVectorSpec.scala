@@ -81,7 +81,7 @@ class DeletionVectorSpec extends SparkTestBase {
       probe.getAs[Number](1).longValue)
     mt.delete(col("o_orderkey") === pk)
     // range read covering the deleted key must not resurrect it
-    val r = mt.readRangeBy("o_orderkey", (pk - 5).toString, (pk + 5).toString)
+    val r = mt.read(where = col("o_orderkey").between(pk - 5, pk + 5))
     assert(r.filter(col("o_orderkey") === pk).count() === 0)
     // bloom-pruned point lookup on another column must not either
     val eq = mt.readEq("o_custkey", pc.toString)
@@ -274,7 +274,7 @@ class DeletionVectorSpec extends SparkTestBase {
     assert(feed.filter(col("_change_type") =!= "delete").count() === 0)
   }
 
-  test("deleteRange/deleteEq mark only skipping-index candidate files") {
+  test("range and point delete(where) mark only skipping-index candidate files") {
     val dir = scratch("del_pruned")
     val mt = new ManifestTable(spark, dir,
       statsCol = Some("o_orderkey"), bloomCol = Some("o_custkey"))
@@ -283,11 +283,12 @@ class DeletionVectorSpec extends SparkTestBase {
     val keys = orders.select("o_orderkey").orderBy(col("o_orderkey").asc)
       .collect().map(_.getAs[Number](0).longValue)
     val (lo, hi) = (keys(5), keys(20)) // narrow slice of one file
-    val candidates = mt.prunedFilesBy("o_orderkey", lo.toString, hi.toString)
+    val range = col("o_orderkey").between(lo, hi)
+    val candidates = mt.filesFor(range)
     assert(candidates.size < mt.filesOf(mt.latestVersion.get).size,
       "range should prune to a subset — clustering failed?")
 
-    mt.deleteRange("o_orderkey", lo.toString, hi.toString)
+    mt.delete(range)
     // correct result through the DV read
     assert(mt.read().filter(col("o_orderkey").between(lo, hi)).count() === 0)
     assert(mt.read().count() ===
@@ -299,8 +300,8 @@ class DeletionVectorSpec extends SparkTestBase {
     // bloom point delete: one custkey, candidate files only
     val victim = orders.orderBy(col("o_orderkey").desc)
       .select("o_custkey").first().getAs[Number](0).longValue
-    val bloomCands = mt.prunedFilesEq("o_custkey", victim.toString)
-    mt.deleteEq("o_custkey", victim.toString)
+    val bloomCands = mt.filesFor(col("o_custkey") === victim)
+    mt.delete(col("o_custkey") === victim)
     assert(mt.read().filter(col("o_custkey") === victim).count() === 0)
     val d2 = mt.describeDetail().first()
     assert(d2.getAs[Long]("num_dv_files") <=

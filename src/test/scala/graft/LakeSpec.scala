@@ -205,10 +205,11 @@ class LakeSpec extends SparkTestBase {
     val total = orders10.count()
     val expected = orders10.filter(col("o_orderkey") >= 100 && col("o_orderkey") <= 500)
 
-    val pruned = mt.prunedFiles("100", "500")
+    val range = col("o_orderkey").between(100L, 500L)
+    val pruned = mt.filesFor(range)
     assert(pruned.size < all.size,
       s"no files skipped (${pruned.size} of ${all.size})")
-    val got = mt.readRange("100", "500")
+    val got = mt.read(where = range)
     assert(expected.count() > 0 && got.count() === expected.count())
     assert(got.select("o_orderkey").exceptAll(expected.select("o_orderkey")).count() === 0)
 
@@ -217,11 +218,12 @@ class LakeSpec extends SparkTestBase {
     val slice = orders10.filter(col("o_orderkey").between(1000, 1200))
     assert(slice.count() > 0, "fixture slice empty; pick an in-data range")
     mt.write(slice, "append")
-    assert(mt.prunedFiles("100", "500").size === pruned.size)
-    assert(mt.readRange("100", "500").count() === expected.count())
+    assert(mt.filesFor(range).size === pruned.size)
+    assert(mt.read(where = range).count() === expected.count())
 
     // full-range query touches everything and loses nothing
-    assert(mt.readRange("0", s"${Long.MaxValue}").count() === total + slice.count())
+    assert(mt.read(where = col("o_orderkey").between(0L, Long.MaxValue)).count() ===
+      total + slice.count())
   }
 
   test("L5b/L7: optimizeBy clusters files so range reads skip most of them") {
@@ -230,18 +232,19 @@ class LakeSpec extends SparkTestBase {
     // hash layout: every file spans ~the full key range → nothing skips
     mt.write(Q.t(spark, sf, "orders").repartition(8), "overwrite")
     val allBefore = mt.filesOf(mt.latestVersion.get).size
-    val prunedBefore = mt.prunedFiles("100", "500").size
+    val range = col("o_orderkey").between(100L, 500L)
+    val prunedBefore = mt.filesFor(range).size
     assert(prunedBefore === allBefore, "hash layout shouldn't be skippable")
 
     mt.optimizeBy("o_orderkey", targetFiles = 8)
     val allAfter = mt.filesOf(mt.latestVersion.get).size
-    val prunedAfter = mt.prunedFiles("100", "500").size
+    val prunedAfter = mt.filesFor(range).size
     assert(prunedAfter < allAfter,
       s"clustered layout skipped nothing ($prunedAfter of $allAfter)")
     // same data, same range answer
     val expected = Q.t(spark, sf, "orders")
       .filter(col("o_orderkey").between(100, 500)).count()
-    assert(mt.readRange("100", "500").count() === expected)
+    assert(mt.read(where = range).count() === expected)
   }
 
   test("L5c/L7: z-order clustering skips files on BOTH dimensions") {
@@ -252,22 +255,23 @@ class LakeSpec extends SparkTestBase {
     // hash layout: every file spans both domains → nothing skippable
     mt.write(base.repartition(16), "overwrite")
     val all0 = mt.filesOf(0).size
-    assert(mt.prunedFilesBy("o_orderkey", "100", "200").size === all0)
-    assert(mt.prunedFilesBy("o_custkey", "100", "200").size === all0)
+    def range(c: String) = col(c).between(100L, 200L)
+    assert(mt.filesFor(range("o_orderkey")).size === all0)
+    assert(mt.filesFor(range("o_custkey")).size === all0)
 
     mt.optimizeByZ("o_orderkey", "o_custkey", targetFiles = 16)
     val v = mt.latestVersion.get
     val all = mt.filesOf(v).size
-    val pk = mt.prunedFilesBy("o_orderkey", "100", "200").size
-    val pc = mt.prunedFilesBy("o_custkey", "100", "200").size
+    val pk = mt.filesFor(range("o_orderkey")).size
+    val pc = mt.filesFor(range("o_custkey")).size
     assert(pk < all, s"orderkey range skipped nothing ($pk of $all)")
     assert(pc < all, s"custkey range skipped nothing ($pc of $all)")
 
     // exactness on both dimensions (skipping must never lose rows)
     val ek = base.filter(col("o_orderkey").between(100, 200)).count()
     val ec = base.filter(col("o_custkey").between(100, 200)).count()
-    assert(mt.readRangeBy("o_orderkey", "100", "200").count() === ek)
-    assert(mt.readRangeBy("o_custkey", "100", "200").count() === ec)
+    assert(mt.read(where = range("o_orderkey")).count() === ek)
+    assert(mt.read(where = range("o_custkey")).count() === ec)
     assert(ek > 0 && ec > 0, "fixture ranges must be non-empty")
   }
 
@@ -317,14 +321,14 @@ class LakeSpec extends SparkTestBase {
     import spark.implicits._
     mt.write(Seq("9", "10").toDF("k").coalesce(1), "overwrite")
     mt.write(Seq("5", "7").toDF("k").coalesce(1), "append")
-    val got = mt.readRange("1", "2").as[String].collect().toSet
+    val got = mt.read(where = col("k").between("1", "2")).as[String].collect().toSet
     assert(got === Set("10"), s"lexicographic range ['1','2'] lost rows: $got")
     // and numeric columns still prune numerically
     val nt = new ManifestTable(spark, scratch("numstats"), statsCol = Some("k"))
     nt.write(Seq(9L, 10L).toDF("k").coalesce(1), "overwrite")
     nt.write(Seq(100L, 200L).toDF("k").coalesce(1), "append")
-    assert(nt.prunedFiles("1", "20").size === 1)
-    assert(nt.readRange("1", "20").count() === 2)
+    assert(nt.filesFor(col("k").between(1L, 20L)).size === 1)
+    assert(nt.read(where = col("k").between(1L, 20L)).count() === 2)
   }
 
   test("L1: unchanged-heavy feed rewrites only the changed partition") {
@@ -357,7 +361,7 @@ class LakeSpec extends SparkTestBase {
       .forall(f => !v0Files.contains(f)), "changed partition not rewritten")
   }
 
-  test("L7 property: readRange equals full-scan filter on arbitrary ranges") {
+  test("L7 property: a range read(where) equals full-scan filter on arbitrary ranges") {
     val root = scratch("skipprop")
     val mt = new ManifestTable(spark, root, statsCol = Some("o_orderkey"))
     val base = Q.t(spark, sf, "orders")
@@ -367,7 +371,7 @@ class LakeSpec extends SparkTestBase {
       (2000L, 3000L), (0L, Long.MaxValue))
     ranges.foreach { case (lo, hi) =>
       val expected = base.filter(col("o_orderkey").between(lo, hi))
-      val got = mt.readRange(lo.toString, hi.toString)
+      val got = mt.read(where = col("o_orderkey").between(lo, hi))
       assert(got.count() === expected.count(), s"range [$lo,$hi]")
       assert(got.exceptAll(expected).count() === 0, s"range [$lo,$hi] extras")
     }
@@ -492,11 +496,13 @@ class LakeSpec extends SparkTestBase {
       "o_totalprice" -> ("10000", "30000"))
     cols.foreach { c =>
       val (lo, hi) = ranges(c)
-      val pruned = mt.prunedFilesBy(c, lo, hi).size
+      val range = col(c).between(lit(lo).cast(base.schema(c).dataType),
+        lit(hi).cast(base.schema(c).dataType))
+      val pruned = mt.filesFor(range).size
       assert(pruned < all, s"$c skipped nothing ($pruned of $all)")
       val expected = base.filter(
         col(c) >= lit(lo).cast("double") && col(c) <= lit(hi).cast("double")).count()
-      assert(mt.readRangeBy(c, lo, hi).count() === expected, c)
+      assert(mt.read(where = range).count() === expected, c)
     }
   }
 
@@ -511,7 +517,7 @@ class LakeSpec extends SparkTestBase {
       (2000L, 3000L), (0L, Long.MaxValue))
     for (c <- Seq("o_orderkey", "o_custkey"); (lo, hi) <- ranges) {
       val expected = base.filter(col(c).between(lo, hi))
-      val got = mt.readRangeBy(c, lo.toString, hi.toString)
+      val got = mt.read(where = col(c).between(lo, hi))
       assert(got.count() === expected.count(), s"$c range [$lo,$hi]")
       assert(got.exceptAll(expected).count() === 0, s"$c range [$lo,$hi] extras")
     }

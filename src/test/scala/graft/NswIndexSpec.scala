@@ -78,7 +78,7 @@ class NswIndexSpec extends SparkTestBase {
     // pruned scan)
     val all = idx.table.filesOf(idx.table.latestVersion.get)
     assert(all.size > 1, "index must span several files for pruning to mean anything")
-    val one = idx.table.prunedFilesBy("shard_id", "0", "1023")
+    val one = idx.table.filesFor(col("shard_id").between(0, 1023))
     assert(one.size < all.size,
       s"zone maps failed to prune: ${one.size} of ${all.size} files for one list")
     // plan gate: serving is a DISTRIBUTED cogroup over that pruned

@@ -19,6 +19,8 @@ class PartitionTransformSpec extends SparkTestBase {
     dir
   }
 
+  private def ts(s: String) = lit(s).cast("timestamp")
+
   private def eventsDf = (0 until 300).map { i =>
     (i.toLong, (i % 24).toLong,
       java.sql.Timestamp.valueOf(f"2024-01-${i % 3 + 1}%02d ${i % 24}%02d:15:00"),
@@ -49,27 +51,32 @@ class PartitionTransformSpec extends SparkTestBase {
 
     // point lookup through the bucket transform: exact + actually pruned
     val want = eventsDf.filter(col("user_id") === 7L)
-    val got = t.readPartitionEq("user_id", "7")
+    val got = t.read(where = col("user_id") === 7L)
     assert(got.exceptAll(want).count() === 0)
     assert(want.exceptAll(got).count() === 0)
     val all = t.filesDf().count()
-    val pruned = t.prunedFilesPartitionEq("user_id", "7").size
+    val pruned = t.filesFor(col("user_id") === 7L).size
     assert(pruned < all, s"expected pruning: $pruned vs $all files")
 
     // range through the days transform: exact incl. boundaries
     val wantR = eventsDf.filter(
       col("ts") >= lit("2024-01-02 00:00:00").cast("timestamp")
         && col("ts") <= lit("2024-01-03 23:59:59").cast("timestamp"))
-    val gotR = t.readPartitionRange("ts", "2024-01-02 00:00:00", "2024-01-03 23:59:59")
+    val range = col("ts").between("2024-01-02 00:00:00", "2024-01-03 23:59:59")
+    val gotR = t.read(where = range)
     assert(gotR.exceptAll(wantR).count() === 0)
     assert(wantR.exceptAll(gotR).count() === 0)
+    assert(t.filesFor(range).size < all)
 
-    // bucket range refuses (hashing destroys ordering)
-    intercept[IllegalArgumentException] {
-      t.readPartitionRange("user_id", "1", "5")
-    }
-    // no transform on payload
-    intercept[IllegalArgumentException] { t.readPartitionEq("payload", "x") }
+    // a bucket range cannot prune (hashing destroys ordering), nor can
+    // a column with no transform or stats: such reads scan every file
+    // and stay exact
+    val bucketRange = col("user_id").between(1L, 5L)
+    assert(t.filesFor(bucketRange).size === all)
+    assert(t.read(where = bucketRange).count() ===
+      eventsDf.filter(bucketRange).count())
+    assert(t.filesFor(col("payload") === "v7").size === all)
+    assert(t.read(where = col("payload") === "v7").count() === 1)
   }
 
   test("merge on a days-partitioned table rewrites only the touched day") {
@@ -105,7 +112,7 @@ class PartitionTransformSpec extends SparkTestBase {
     assert(again.read().count() === 300)
     assert(again.read().exceptAll(eventsDf).count() === 0)
     // pruning still works through the reloaded instance
-    val got = again.readPartitionEq("user_id", "3")
+    val got = again.read(where = col("user_id") === 3L)
     val want = eventsDf.filter(col("user_id") === 3L)
     assert(got.exceptAll(want).count() === 0)
     assert(want.exceptAll(got).count() === 0)
@@ -117,20 +124,21 @@ class PartitionTransformSpec extends SparkTestBase {
     val df = (0 until 500).map(i => (i.toLong, s"r$i")).toDF("event_id", "x")
     t.write(df, "overwrite")
     val want = df.filter(col("event_id").between(150L, 260L))
-    val got = t.readPartitionRange("event_id", "150", "260")
+    val got = t.read(where = col("event_id").between(150L, 260L))
     assert(got.exceptAll(want).count() === 0)
     assert(want.exceptAll(got).count() === 0)
     // pruned: bins 0 and 300/400 skipped → fewer files than total
-    assert(t.prunedFilesPartitionEq("event_id", "42").size < t.filesDf().count())
+    assert(t.filesFor(col("event_id").between(150L, 260L)).size < t.filesDf().count())
+    assert(t.filesFor(col("event_id") === 42L).size < t.filesDf().count())
 
     val root2 = scratch("truncs")
     val t2 = new ManifestTable(spark, root2, partitionSpec = Seq("truncate(2,code)"))
     val df2 = Seq("aa1", "aa2", "ab1", "ba9", "bb0").zipWithIndex
       .map { case (c, i) => (i.toLong, c) }.toDF("id", "code")
     t2.write(df2, "overwrite")
-    val gotS = t2.readPartitionEq("code", "ab1")
+    val gotS = t2.read(where = col("code") === "ab1")
     assert(gotS.collect().map(_.getString(1)).toSeq === Seq("ab1"))
-    val gotR = t2.readPartitionRange("code", "aa0", "ab9")
+    val gotR = t2.read(where = col("code").between("aa0", "ab9"))
     assert(gotR.collect().map(_.getString(1)).sorted.toSeq === Seq("aa1", "aa2", "ab1"))
   }
 
@@ -150,7 +158,7 @@ class PartitionTransformSpec extends SparkTestBase {
     val want = eventsDf.filter(
       col("ts") >= lit("2024-01-02 00:00:00").cast("timestamp")
         && col("ts") <= lit("2024-01-02 23:59:59").cast("timestamp"))
-    val got = t1.readPartitionRange("ts", "2024-01-02 00:00:00", "2024-01-02 23:59:59")
+    val got = t1.read(where = col("ts").between("2024-01-02 00:00:00", "2024-01-02 23:59:59"))
     assert(got.exceptAll(want).count() === 0 && want.exceptAll(got).count() === 0)
     // time travel to the pre-evolution version still serves the old files
     assert(t1.read(Some(v0)).count() === 300)
@@ -161,7 +169,7 @@ class PartitionTransformSpec extends SparkTestBase {
 
     // second evolution: add a bucket level
     val t3 = t2.evolvePartitionSpec(Nil, Seq("days(ts)", "bucket(4,user_id)"))
-    assert(t3.readPartitionEq("user_id", "7").count() ===
+    assert(t3.read(where = col("user_id") === 7L).count() ===
       t3.read().filter(col("user_id") === 7L).count())
 
     // refusals: unknown column, renamed column
@@ -218,25 +226,25 @@ class PartitionTransformSpec extends SparkTestBase {
 
     // a day-1 lookup prunes NEW hourly files entirely (their hour can't
     // match) and old daily files down to day 1
-    val day1 = t1.prunedFilesPartitionEq("ts", "2024-01-01 06:15:00")
+    val day1 = t1.filesFor(col("ts") === ts("2024-01-01 06:15:00"))
     assert(day1.nonEmpty &&
       day1.forall(_.contains("_graft_p_days_ts=2024-01-01")),
       s"day-1 lookup scanned: ${day1.mkString(", ")}")
     // a day-3 lookup prunes old daily files entirely (days 1-2 only)
     // and hourly files down to the ONE matching hour
-    val hour = t1.prunedFilesPartitionEq("ts", "2024-01-03 08:15:00")
+    val hour = t1.filesFor(col("ts") === ts("2024-01-03 08:15:00"))
     assert(hour.nonEmpty &&
       hour.forall(_.contains("_graft_p_hours_ts=2024-01-03-08")),
       s"day-3 lookup scanned: ${hour.mkString(", ")}")
 
     // point + range reads stay exact across the spec boundary
-    val gotEq = t1.readPartitionEq("ts", "2024-01-03 08:15:00")
+    val gotEq = t1.read(where = col("ts") === ts("2024-01-03 08:15:00"))
     val wantEq = eventsDf.filter(col("ts") === lit("2024-01-03 08:15:00").cast("timestamp"))
     assert(gotEq.exceptAll(wantEq).count() === 0 && wantEq.exceptAll(gotEq).count() === 0)
     val wantR = eventsDf.filter(
       col("ts") >= lit("2024-01-02 00:00:00").cast("timestamp")
         && col("ts") <= lit("2024-01-03 05:59:59").cast("timestamp"))
-    val gotR = t1.readPartitionRange("ts", "2024-01-02 00:00:00", "2024-01-03 05:59:59")
+    val gotR = t1.read(where = col("ts").between("2024-01-02 00:00:00", "2024-01-03 05:59:59"))
     assert(gotR.exceptAll(wantR).count() === 0 && wantR.exceptAll(gotR).count() === 0)
 
     // forRoot round-trips the lazy spec
@@ -304,7 +312,7 @@ class PartitionTransformSpec extends SparkTestBase {
     assert(t1.read().count() === 300)
     assert(t1.read().exceptAll(eventsDf).count() === 0)
     // homogeneous again: hourly pruning applies to every file
-    val hour = t1.prunedFilesPartitionEq("ts", "2024-01-01 06:15:00")
+    val hour = t1.filesFor(col("ts") === ts("2024-01-01 06:15:00"))
     assert(hour.nonEmpty &&
       hour.forall(_.contains("_graft_p_hours_ts=2024-01-01-06")))
     // and the path-exact overwrite works again

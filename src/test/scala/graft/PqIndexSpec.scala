@@ -50,7 +50,7 @@ class PqIndexSpec extends SparkTestBase {
     // a single probed list must prune to a strict subset of files
     val all = idx.table.filesOf(idx.table.latestVersion.get)
     assert(all.size > 1, "index must span several files for pruning to mean anything")
-    val one = idx.table.prunedFilesBy("list_id", "0", "0")
+    val one = idx.table.filesFor(col("list_id") === 0)
     assert(one.size < all.size,
       s"zone maps failed to prune: ${one.size} of ${all.size} files for one list")
   }
