@@ -17,6 +17,9 @@ import java.util.UUID
   *   <root>/data/[<part>=<value>/]<uuid>.parquet   immutable data files
   *   <root>/_graft_log/v<NNNNN>.manifest           one line per data file:
   *     <relPath>[\t<urlenc min>\t<urlenc max>]     (stats when statsCol set)
+  *   <root>/_graft_log/m<NNNNN>.metadata           write-once table metadata
+  *     record ([[TableMetadata]]: layout, constraints, column mapping,
+  *     generated/declared/identity columns, CDC flag); highest wins
   * }}}
   *
   * A commit writes the manifest to a temp name then atomically renames it
@@ -112,7 +115,7 @@ object ManifestTable {
 
   /** Declared-schema metadata key holding a column's DEFAULT, stored
     * as an evaluated literal's SQL (Delta's materialize-at-ALTER
-    * semantics). Part of the on-disk `declared_columns` format.
+    * semantics). Part of the on-disk [[TableMetadata]] format.
     */
   private[lake] val DefaultKey = "default"
 
@@ -281,46 +284,28 @@ object ManifestTable {
   }
 
   /** Reconstruct a fully-configured instance from a root path alone,
-    * using the table_config sidecar the first commit persisted — how
-    * the SQL procedure surface addresses tables by path. Falls back to
-    * an unconfigured instance for pre-sidecar tables (reads still
-    * work; partition-scoped merge degrades to a guarded full rewrite).
+    * using the layout the first commit persisted in the metadata record
+    * — how the SQL procedure surface addresses tables by path. Falls
+    * back to an unconfigured instance for a table with no commit yet.
     */
   def forRoot(spark: SparkSession, root: String): ManifestTable = {
-    val logDir = new Path(root, "_graft_log")
-    val cfgPath = new Path(logDir, "table_config")
-    val fs = logDir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(cfgPath)) return new ManifestTable(spark, root)
-    val in = fs.open(cfgPath)
-    val cfg =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.contains('=')).map { l =>
-          val i = l.indexOf('=')
-          l.substring(0, i) -> l.substring(i + 1)
-        }.toMap
-      finally in.close()
-    def list(k: String): Seq[String] = cfg.getOrElse(k, "").split(',')
-      .filter(_.nonEmpty).map(java.net.URLDecoder.decode(_, "UTF-8")).toSeq
-    new ManifestTable(spark, root,
-      statsCols = list("stats_cols"),
-      bloomCol = cfg.get("bloom_col").filter(_.nonEmpty)
-        .map(java.net.URLDecoder.decode(_, "UTF-8")),
-      bloomBits = cfg.get("bloom_bits").map(_.toInt).getOrElse(1 << 16),
-      bloomHashes = cfg.get("bloom_hashes").map(_.toInt).getOrElse(6),
-      partitionCols = list("partition_cols"),
-      partitionSpec = list("partition_spec"))
+    val bare = new ManifestTable(spark, root)
+    bare.metadata.config.fold(bare)(c => new ManifestTable(spark, root,
+      statsCols = c.statsCols, bloomCol = c.bloomCol, bloomBits = c.bloomBits,
+      bloomHashes = c.bloomHashes, partitionCols = c.partitionCols,
+      partitionSpec = c.partitionSpec))
   }
 
   /** [[forRoot]] with a caller-supplied identity partition tuple.
-    * `None` = no opinion (the sink without `partitionBy`) — the config
-    * sidecar rules. `Some(cols)` = an EXPLICIT tuple (possibly empty):
-    * it configures a FRESH table's layout, and against an existing
+    * `None` = no opinion (the sink without `partitionBy`) — the
+    * recorded layout rules. `Some(cols)` = an EXPLICIT tuple (possibly
+    * empty): it configures a FRESH table's layout, and against an existing
     * table it must match the declared tuple — a conflict refuses
     * rather than silently writing a second hive layout into the same
     * data dir (which leaves the table unreadable under partition
     * discovery). One create-or-validate contract shared by the
     * `CALL graft.write` procedure and the streaming sink; validation
-    * is a pure config-sidecar read — no Spark job.
+    * is a pure metadata-record read — no Spark job.
     */
   def forRootWithPartitions(spark: SparkSession, root: String,
       asked: Option[Seq[String]]): ManifestTable = {
@@ -504,15 +489,14 @@ class ManifestTable(spark: SparkSession, root: String,
     * left the spec (mapped physical → logical). What per-signature
     * merge scoping evaluates after a lazy [[setPartitionSpec]].
     */
-  private def partValueExprFor(df: DataFrame, c: String): Column =
+  private def partValueExprFor(df: DataFrame, c: String,
+      mapping: Map[String, String]): Column =
     transforms.find(_.name == c).orElse(PartitionTransform.fromName(c)) match {
       case Some(t) if !df.columns.contains(c) =>
-        val src = columnMapping.getOrElse(t.src, t.src)
+        val src = mapping.getOrElse(t.src, t.src)
         t.derive(col(src), df.schema(src).dataType)
       case _ =>
-        val name = if (df.columns.contains(c)) c
-          else columnMapping.getOrElse(c, c)
-        col(name)
+        col(if (df.columns.contains(c)) c else mapping.getOrElse(c, c))
     }
 
   /** All zone-map columns: the legacy single `statsCol` plus any
@@ -569,17 +553,19 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   private def deltaPath(v: Int) = new Path(logDir, f"v$v%05d.delta")
 
-  def versions: Seq[Int] = {
-    if (!fs.exists(logDir)) return Seq.empty
-    fs.listStatus(logDir).toSeq
-      .map(_.getPath.getName)
+  /** Everything in the log dir (nothing before the first write). */
+  private def logListing: Seq[org.apache.hadoop.fs.FileStatus] =
+    try fs.listStatus(logDir).toSeq
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  def versions: Seq[Int] =
+    logListing.map(_.getPath.getName)
       .filter(n => n.startsWith("v") &&
         (n.endsWith(".manifest") || n.endsWith(".delta")))
       .map(n => n.stripPrefix("v").stripSuffix(".manifest")
         .stripSuffix(".delta").toInt)
       .distinct
       .sorted
-  }
 
   def latestVersion: Option[Int] = versions.lastOption
 
@@ -695,20 +681,26 @@ class ManifestTable(spark: SparkSession, root: String,
     * read's whatever survives.
     */
   def read(version: Option[Int] = None, where: Column = lit(true)): DataFrame =
-    if (where == lit(true)) readAll(entriesOf(versionOrLatest(version)))
+    if (where == lit(true)) readAt(version, metadata)
     else readWhere(version, _ => where, sourceFilters(_, where))
 
+  /** [[read]] without a predicate, under an already-resolved record. */
+  private def readAt(version: Option[Int], md: TableMetadata): DataFrame =
+    readAll(entriesOf(versionOrLatest(version)), md)
+
   /** [[read]]'s frame over a resolved entry list. */
-  private def readAll(entries: Seq[Entry],
-      mapping: Map[String, String] = columnMapping): DataFrame = {
-    val ids = identityColumns
-    if (ids.isEmpty) withDeclared(readEntries(entries, withRowId = false, mapping))
+  private def readAll(entries: Seq[Entry], md: TableMetadata): DataFrame =
+    if (md.identity.isEmpty) rowsOf(entries, md)
     else
       // identity columns derive from the stable row id — ride the
       // rid-resolving read (the identity-free path pays nothing)
-      withIdentityCols(withDeclared(readEntries(entries, withRowId = true, mapping)),
-        ids).drop(ManifestTable.RowIdCol)
-  }
+      withIdentityCols(rowsOf(entries, md, withRowId = true), md.identity)
+        .drop(ManifestTable.RowIdCol)
+
+  /** An entry set's rows with the declared columns a read shows. */
+  private def rowsOf(entries: Seq[Entry], md: TableMetadata,
+      withRowId: Boolean = false): DataFrame =
+    withDeclared(readEntries(entries, md, withRowId), md)
 
   /** T16 row tracking: [[read]] plus the stable [[ManifestTable
     * .RowIdCol]] — the Delta row-id surface. Ids are allotted at
@@ -719,20 +711,18 @@ class ManifestTable(spark: SparkSession, root: String,
     * OPTIMIZE/REORG to adopt ids).
     */
   def readWithRowId(version: Option[Int] = None): DataFrame = {
-    val v = versionOrLatest(version)
-    withIdentityCols(withDeclared(readEntries(entriesOf(v), withRowId = true)),
-      identityColumns)
+    val md = metadata
+    withIdentityCols(rowsOf(entriesOf(versionOrLatest(version)), md,
+      withRowId = true), md.identity)
   }
 
   /** Rewrite-side read: the snapshot with row ids under their PHYSICAL
     * column name, ready to be written back by an identity-preserving
     * rewrite (compact/optimize/purge).
     */
-  private def readRidPhys(version: Option[Int]): DataFrame = {
-    val v = versionOrLatest(version)
-    withDeclared(readEntries(entriesOf(v), withRowId = true))
+  private def readRidPhys(version: Option[Int], md: TableMetadata): DataFrame =
+    rowsOf(entriesOf(versionOrLatest(version)), md, withRowId = true)
       .withColumnRenamed(ManifestTable.RowIdCol, ManifestTable.RidPhysCol)
-  }
 
   /** Exact row count from manifest metadata alone — `Some(n)` when
     * every live file of the version carries the write-time `#n` count
@@ -777,7 +767,7 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   def metadataMinMax(c: String, version: Option[Int] = None,
       boundOk: String => Boolean = _ => true): Option[(String, String, String)] = {
-    val pc = toPhysical(c) // stats keys are recorded physical
+    val pc = toPhysical(c, metadata.columnMapping) // stats keys are recorded physical
     if (!allStatsCols.contains(pc)) return None
     val v = version.orElse(latestVersion)
     if (v.isEmpty) return None
@@ -841,11 +831,12 @@ class ManifestTable(spark: SparkSession, root: String,
     }.getOrElse(throw new IllegalArgumentException(
       s"readBucketed($srcCol): no bucket(n, $srcCol) transform declared " +
         s"(partitionSpec: ${transforms.map(_.spec).mkString(", ")})"))
+    val md = metadata
     val entries = entriesOf(versionOrLatest(None))
     require(entries.forall(e => !e.stats.contains(DvKey)),
       s"readBucketed($srcCol): snapshot has deletion vectors; " +
         "REORG PURGE before bucketed-join reads")
-    if (entries.isEmpty) return read()
+    if (entries.isEmpty) return readAll(entries, md)
 
     val marker = s"${t.name}="
     val groups = Array.fill(t.n)(Seq.newBuilder[String])
@@ -863,17 +854,17 @@ class ManifestTable(spark: SparkSession, root: String,
     // ONE schema-inference pass over the full file set; per-bucket
     // reads pin this schema (no per-bucket footer re-scan), and the
     // visible schema derives from the same frame without a second pass
-    val rawDf = readFiles(entries.map(e => new Path(root, e.rel).toString))
+    val rawDf = readFiles(entries.map(e => new Path(root, e.rel).toString), md)
     val rawSchema = rawDf.schema
     val derivedAll =
       rawSchema.fieldNames.filter(_.startsWith(PartitionTransform.Prefix))
     val schema = withDeclared(toLogicalRename(
       if (derivedAll.isEmpty) rawDf
-      else rawDf.drop(derivedAll.toIndexedSeq: _*))).schema
+      else rawDf.drop(derivedAll.toIndexedSeq: _*), md), md).schema
     val keyType = schema(srcCol).dataType
     val nb = t.n
     val build: (Seq[String], Int) => DataFrame = { (files, b) =>
-      val raw = readFiles(files, pinnedSchema = Some(rawSchema))
+      val raw = readFiles(files, md, pinnedSchema = Some(rawSchema))
       // per-row placement integrity: every row must hash into its
       // group's bucket under the SURFACED key type — catches bucket-key
       // type drift across appends (hash(5: int) != hash(5L: long)),
@@ -887,7 +878,7 @@ class ManifestTable(spark: SparkSession, root: String,
               "rewrite the table with a consistent key type"))))
       val visible = withDeclared(toLogicalRename(
         if (derivedAll.isEmpty) guarded
-        else guarded.drop(derivedAll.toIndexedSeq: _*)))
+        else guarded.drop(derivedAll.toIndexedSeq: _*), md), md)
       // the pinned rawSchema read null-fills columns a bucket's older
       // files lack and widens narrower file types, and withDeclared
       // adds declared-only columns — so every schema field is present
@@ -942,21 +933,21 @@ class ManifestTable(spark: SparkSession, root: String,
     * one broadcast of (basename, base), O(files) rows like the manifest
     * resolution that produced it.
     */
-  private def readEntries(entries: Seq[Entry], withRowId: Boolean = false,
-      mapping: Map[String, String] = columnMapping): DataFrame = {
+  private def readEntries(entries: Seq[Entry], md: TableMetadata,
+      withRowId: Boolean = false): DataFrame = {
     if (entries.isEmpty) return spark.emptyDataFrame
     val files = entries.map(e => new Path(root, e.rel).toString)
     val raw = if (!withRowId) {
       dvOf(entries) match {
-        case None => readFiles(files)
+        case None => readFiles(files, md)
         case Some(dv) =>
-          readFiles(files, withPos = true)
+          readFiles(files, md, withPos = true)
             .join(dv, Seq(DvFileCol, DvPosCol), "left_anti")
             .drop(DvFileCol, DvPosCol)
       }
     } else {
       import spark.implicits._
-      val withPos = readFiles(files, withPos = true, keepRid = true)
+      val withPos = readFiles(files, md, withPos = true, keepRid = true)
       val bases = entries.map(e => (new Path(e.rel).getName,
         e.stats.get(ManifestTable.RidKey).map(_.mn.toLong)))
         .toDF(DvFileCol, "_graft_rid_base")
@@ -985,7 +976,7 @@ class ManifestTable(spark: SparkSession, root: String,
       val derived = raw.columns.filter(_.startsWith(PartitionTransform.Prefix))
       if (derived.isEmpty) raw else raw.drop(derived.toIndexedSeq: _*)
     }
-    toLogicalRename(noDerived, mapping)
+    toLogicalRename(noDerived, md)
   }
 
   /** Union of the deletion-vector sidecars referenced by `entries` —
@@ -1010,7 +1001,8 @@ class ManifestTable(spark: SparkSession, root: String,
     * requires every path to live under its basePath; each group reads
     * under its own basePath and the groups union by name.
     */
-  private def readFiles(files: Seq[String], withPos: Boolean = false,
+  private def readFiles(files: Seq[String], md: TableMetadata,
+      withPos: Boolean = false,
       pinnedSchema: Option[org.apache.spark.sql.types.StructType] = None,
       keepRid: Boolean = false): DataFrame = {
     // group by (basePath, LAYOUT SIGNATURE): after a lazy
@@ -1030,9 +1022,7 @@ class ManifestTable(spark: SparkSession, root: String,
       (bp, ManifestTable.layoutColsOf(rel).mkString("/"))
     }
     withListingScoped {
-    // ONE declared/ mapping sidecar read per readFiles call, hoisted
-    // out of the per-group (and the bucketed path's per-bucket) loop
-    val defaults = declaredDefaults
+    val defaults = md.declaredDefaults
     groups.toSeq.sortBy(_._1).map { case ((bp, sig), paths) =>
       // a pinned schema (from one inference pass over the full file
       // set) skips the per-call mergeSchema footer scan — the
@@ -1138,80 +1128,120 @@ class ManifestTable(spark: SparkSession, root: String,
 
   /** Attempt to publish `entries` as version `v`. Returns false when a
     * concurrent writer already published that version (the caller
-    * rebases and retries). Publication stays write-tmp + atomic-rename
-    * so readers never see a partial manifest; the exists-check +
-    * rename pair is serialized through a JVM-wide per-root lock
-    * because a POSIX rename OVERWRITES an existing destination —
-    * without the lock two same-process writers could both "win" and
-    * one commit would silently vanish. Cross-process local-FS writers
-    * retain a tiny exists→rename window (the same caveat Delta's
-    * local LogStore documents; HDFS/object-store renames are atomic
-    * no-overwrite and close it).
+    * rebases and retries); see [[publishOnce]].
     */
   private def tryCommit(v: Int, entries: Seq[Entry]): Boolean =
     tryPublish(v, entries.map(_.line).mkString("\n") + "\n", asDelta = false)
 
-  /** Table configuration sidecar: the first successful commit persists
-    * this instance's partition/stats/bloom declaration in the log dir
-    * so [[ManifestTable.forRoot]] (and the SQL procedure surface) can
+  /** Write `content` to a temp file and rename it to `dest` unless any
+    * of `taken` exists — the no-overwrite publish of every numbered log
+    * file (versions, checkpoints, metadata records, branches); false
+    * when taken. The exists-check + rename pair holds a JVM-wide
+    * per-root lock because a POSIX rename OVERWRITES its destination.
+    * Cross-process local-FS writers retain a tiny exists→rename window
+    * (the caveat Delta's local LogStore documents; HDFS/object-store
+    * renames are atomic no-overwrite and close it).
+    */
+  private def publishOnce(content: String, dest: Path, taken: Path*): Boolean = {
+    fs.mkdirs(logDir)
+    val tmp = new Path(logDir, s".tmp-${UUID.randomUUID()}")
+    val out = fs.create(tmp, false)
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+    val won = ManifestTable.lockFor(fs.makeQualified(logDir).toString)
+      .synchronized { !taken.exists(fs.exists) && fs.rename(tmp, dest) }
+    if (!won) fs.delete(tmp, false)
+    won
+  }
+
+  // ---- table metadata: one write-once record ([[TableMetadata]]) ----
+
+  private def metadataPath(n: Int) = new Path(logDir, f"m$n%05d.metadata")
+
+  private val MetadataName = "m(\\d+)\\.metadata".r
+
+  /** Numbered metadata records in the log dir, ascending. */
+  private def metadataRecords: Seq[(Int, org.apache.hadoop.fs.FileStatus)] =
+    logListing.map(st => st.getPath.getName -> st)
+      .collect { case (MetadataName(n), st) => n.toInt -> st }.sortBy(_._1)
+
+  /** The current record and its number (-1 before the first one). */
+  private def latestMetadata: (Int, TableMetadata) =
+    metadataRecords.lastOption.fold((-1, TableMetadata.Empty)) { case (n, st) =>
+      try n -> TableMetadata.decode(readLogLines(st.getPath).mkString("\n"))
+      // superseded and vacuumed between the listing and the open: the
+      // newer record is in the next listing
+      catch { case _: java.io.FileNotFoundException => latestMetadata }
+    }
+
+  /** The table's current metadata record. Public operations resolve it
+    * once and pass it down. A record that carries the layout spares
+    * this instance's first commit the check for one.
+    */
+  private def metadata: TableMetadata = {
+    val md = latestMetadata._2
+    if (md.config.isDefined) configChecked = true
+    md
+  }
+
+  /** Publish `change` applied to the current record as the next
+    * numbered record. A writer that loses the number to a concurrent
+    * one re-reads the newer record and re-applies `change` — its
+    * validations included, so every check runs against the record it
+    * publishes over. A change that alters nothing publishes nothing.
+    */
+  private def updateMetadata(change: TableMetadata => TableMetadata): Unit =
+    Iterator.range(0, 100).find { _ =>
+      val (n, cur) = latestMetadata
+      val next = change(cur)
+      next == cur || publishOnce(TableMetadata.encode(next),
+        metadataPath(n + 1), metadataPath(n + 1))
+    }.getOrElse(throw new java.util.ConcurrentModificationException(
+      s"metadata update at $root kept losing to concurrent updates"))
+
+  /** This instance's layout, as the record stores it. */
+  private def config = TableMetadata.Config(identityPartCols,
+    transforms.map(_.spec), allStatsCols, bloomCol, bloomBits, bloomHashes)
+
+  /** The first successful commit records this instance's layout so
+    * [[ManifestTable.forRoot]] (and the SQL procedure surface) can
     * reconstruct a fully-configured instance from the root path alone
     * — the Delta pattern of metadata living IN the log. First writer
     * wins; an explicitly-configured constructor always overrides.
     */
-  private val configPath = new Path(logDir, "table_config")
   @volatile private var configChecked = false
 
-  private def persistConfigIfNeeded(): Unit = {
-    if (configChecked) return
+  private def persistConfigIfNeeded(): Unit = if (!configChecked) {
     configChecked = true
-    if (fs.exists(configPath)) return
-    writeConfigFile(replaceExisting = false)
-  }
-
-  private def writeConfigFile(replaceExisting: Boolean): Unit = {
-    val lines = Seq(
-      "partition_cols=" + identityPartCols.map(Entry.enc).mkString(","),
-      "partition_spec=" + transforms.map(t => Entry.enc(t.spec)).mkString(","),
-      "stats_cols=" + allStatsCols.map(Entry.enc).mkString(","),
-      "bloom_col=" + bloomCol.map(Entry.enc).getOrElse(""),
-      "bloom_bits=" + bloomBits,
-      "bloom_hashes=" + bloomHashes)
-    val tmp = new Path(logDir, s".tmp-cfg-${UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (replaceExisting && fs.exists(configPath)) fs.delete(configPath, false)
-    if (!fs.rename(tmp, configPath)) fs.delete(tmp, false): Unit
+    updateMetadata(md => if (md.config.isDefined) md else md.copy(config = Some(config)))
   }
 
   /** ALTER TABLE … PARTITIONED BY — change the partition layout
     * (identity columns and/or transforms). This REWRITES the current
     * snapshot under the new layout in one conflict-checked commit
     * (concurrent writers of any kind conflict rather than losing
-    * rows), then persists the new layout to the config sidecar — so
-    * the table is never in a mixed-layout state and every partition-
-    * scoped op (tuple merge, partition overwrite, DV scoping) stays
-    * exact. O(table) — the honest cost of a layout change here;
-    * Iceberg's lazy multi-spec variant trades it for per-file spec
-    * tracking. History is preserved: earlier versions time-travel
-    * with their old layout (readers key on paths, not config).
-    * Returns a NEW instance configured with the evolved layout; the
-    * receiving instance keeps its old view and should be discarded.
+    * rows), then records the new layout — so the table is never in a
+    * mixed-layout state and every partition-scoped op (tuple merge,
+    * partition overwrite, DV scoping) stays exact. O(table) — the
+    * honest cost of a layout change here; Iceberg's lazy multi-spec
+    * variant trades it for per-file spec tracking. History is
+    * preserved: earlier versions time-travel with their old layout
+    * (readers key on paths, not config). Returns a NEW instance
+    * configured with the evolved layout; the receiving instance keeps
+    * its old view and should be discarded.
     */
   def evolvePartitionSpec(newIdentityCols: Seq[String],
       newTransformSpecs: Seq[String] = Nil): ManifestTable = {
+    val md = metadata
     val (v0, current) = validateNewSpec("evolvePartitionSpec",
-      newIdentityCols, newTransformSpecs)
-    val evolved = new ManifestTable(spark, root, None, statsCol, statsCols,
-      bloomCol, bloomBits, bloomHashes, newIdentityCols, newTransformSpecs)
-    evolved.stampCdcNone(evolved.rewriteSnapshot(Some(v0), current))
-    evolved.writeConfigFile(replaceExisting = true)
-    evolved
+      newIdentityCols, newTransformSpecs, md)
+    val evolved = relaidOut(newIdentityCols, newTransformSpecs)
+    evolved.stampCdcNone(evolved.rewriteSnapshot(Some(v0), current, md), md)
+    evolved.recordLayout()
   }
 
   /** LAZY partition-spec evolution — the Iceberg headline: change the
     * layout of a LIVE table without touching a byte of data. The new
-    * spec is persisted to the config sidecar only; existing files keep
+    * spec is recorded in the metadata only; existing files keep
     * their old layout, every commit from here lays out by the new one,
     * and the mixed snapshot stays fully functional because each file's
     * own path IS its spec ([[PartitionTransform.fromName]]):
@@ -1238,11 +1268,20 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   def setPartitionSpec(newIdentityCols: Seq[String],
       newTransformSpecs: Seq[String] = Nil): ManifestTable = {
-    validateNewSpec("setPartitionSpec", newIdentityCols, newTransformSpecs)
-    val evolved = new ManifestTable(spark, root, None, statsCol, statsCols,
-      bloomCol, bloomBits, bloomHashes, newIdentityCols, newTransformSpecs)
-    evolved.writeConfigFile(replaceExisting = true)
-    evolved
+    validateNewSpec("setPartitionSpec", newIdentityCols, newTransformSpecs,
+      metadata)
+    relaidOut(newIdentityCols, newTransformSpecs).recordLayout()
+  }
+
+  /** A handle on this table under a new partition layout. */
+  private def relaidOut(idCols: Seq[String], specs: Seq[String]) =
+    new ManifestTable(spark, root, None, statsCol, statsCols, bloomCol,
+      bloomBits, bloomHashes, idCols, specs)
+
+  /** Record this instance's layout as the table's; returns this. */
+  private def recordLayout(): ManifestTable = {
+    updateMetadata(_.copy(config = Some(config)))
+    this
   }
 
   /** Shared validation for a new partition spec: the table must have a
@@ -1251,16 +1290,16 @@ class ManifestTable(spark: SparkSession, root: String,
     * physical names). Returns the pinned version and its frame.
     */
   private def validateNewSpec(op: String, newIdentityCols: Seq[String],
-      newTransformSpecs: Seq[String]): (Int, DataFrame) = {
+      newTransformSpecs: Seq[String], md: TableMetadata): (Int, DataFrame) = {
     val v0 = latestVersion.getOrElse(
       throw new IllegalStateException(s"$op: no versions at $root"))
     val parsed = newTransformSpecs.map(PartitionTransform.parse)
-    val current = read(Some(v0))
+    val current = readAt(Some(v0), md)
     val needed = newIdentityCols ++ parsed.map(_.src)
     val missing = needed.filterNot(current.columns.contains)
     require(missing.isEmpty,
       s"$op: column(s) not in table: ${missing.mkString(", ")}")
-    val renamed = needed.filter(c => toPhysical(c) != c)
+    val renamed = needed.filter(c => toPhysical(c, md.columnMapping) != c)
     require(renamed.isEmpty,
       s"$op: renamed column(s) cannot partition: ${renamed.mkString(", ")}")
     (v0, current)
@@ -1271,7 +1310,6 @@ class ManifestTable(spark: SparkSession, root: String,
     * both win.
     */
   private def tryPublish(v: Int, content: String, asDelta: Boolean): Boolean = {
-    fs.mkdirs(logDir)
     // in-commit timestamp header: strictly monotonic over the version
     // line (max with predecessor + 1) so versionAtOrBefore's filter is
     // a prefix even across wall-clock skew between writers. Reading the
@@ -1279,19 +1317,10 @@ class ManifestTable(spark: SparkSession, root: String,
     val ict = math.max(System.currentTimeMillis(),
       if (v <= 0) 0L
       else (try commitTimeOf(v - 1) catch { case _: Exception => 0L }) + 1)
-    val tmp = new Path(logDir, s".tmp-${UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(
-      (ManifestTable.IctPrefix + ict + "\n" + content).getBytes("UTF-8"))
-    finally out.close()
-    val dest = if (asDelta) deltaPath(v) else manifestPath(v)
-    val won = ManifestTable.lockFor(fs.makeQualified(logDir).toString)
-      .synchronized {
-        !fs.exists(manifestPath(v)) && !fs.exists(deltaPath(v)) &&
-          fs.rename(tmp, dest)
-      }
-    if (!won) fs.delete(tmp, false)
-    else persistConfigIfNeeded()
+    val won = publishOnce(ManifestTable.IctPrefix + ict + "\n" + content,
+      if (asDelta) deltaPath(v) else manifestPath(v),
+      manifestPath(v), deltaPath(v))
+    if (won) persistConfigIfNeeded()
     won
   }
 
@@ -1347,7 +1376,8 @@ class ManifestTable(spark: SparkSession, root: String,
     * cross-matching unrelated rows in the keyless change feed), so the
     * public write surfaces refuse them up front.
     */
-  private def requireNoReservedCols(df: DataFrame, what: String): Unit = {
+  private def requireNoReservedCols(df: DataFrame, what: String,
+      md: TableMetadata): Unit = {
     val hit = df.columns.find(c =>
       c == ManifestTable.RidPhysCol || c == ManifestTable.RowIdCol)
     require(hit.isEmpty, s"$what: column ${hit.getOrElse("")} is " +
@@ -1355,8 +1385,7 @@ class ManifestTable(spark: SparkSession, root: String,
     // GENERATED ALWAYS AS IDENTITY: the engine assigns values (from
     // the row-id allocator) — an explicit value can neither be honored
     // nor silently dropped
-    val ids = identityColumns
-    val idHit = df.columns.find(ids.contains)
+    val idHit = df.columns.find(md.identity.contains)
     require(idHit.isEmpty, s"$what: column ${idHit.getOrElse("")} is " +
       "GENERATED ALWAYS AS IDENTITY — drop it from the frame; the " +
       "engine assigns its values")
@@ -1373,9 +1402,7 @@ class ManifestTable(spark: SparkSession, root: String,
     * the legacy single `rid_hwm` file folds in for old tables.
     */
   private def ridHwmValues: Seq[(Path, Long)] =
-    (if (!fs.exists(logDir)) Seq.empty[Path]
-     else fs.listStatus(logDir).toSeq.map(_.getPath)
-       .filter(_.getName.startsWith("rid_hwm")))
+    logListing.map(_.getPath).filter(_.getName.startsWith("rid_hwm"))
       .flatMap { p =>
         // a concurrent GC may delete between list and read — skip
         (try readLogLines(p).headOption.flatMap(_.trim.toLongOption)
@@ -1825,8 +1852,6 @@ class ManifestTable(spark: SparkSession, root: String,
         .unescapePathName(v)
     }
 
-  private def srcType(srcCol: String) = read().schema(srcCol).dataType
-
   /** THE file-skipping kernel: V1 source-filter conjuncts compiled to
     * a per-entry test "might this file hold a row matching them all?".
     * `=`/`IN` test zone maps, blooms and partition values; ranges test
@@ -1958,12 +1983,11 @@ class ManifestTable(spark: SparkSession, root: String,
     * full read's, and nothing is listed or resolved again.
     */
   private def skipFiles(df: DataFrame, entries: Seq[Entry],
-      filters: Seq[sources.Filter],
-      mapping: => Map[String, String] = columnMapping): (Seq[Entry], DataFrame) = {
+      filters: Seq[sources.Filter], md: TableMetadata): (Seq[Entry], DataFrame) = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     if (filters.isEmpty) return (entries, df)
     val (kept, skipped) = entries.partition(mightMatch(filters,
-      c => df.schema.find(_.name == c).map(_.dataType), mapping))
+      c => df.schema.find(_.name == c).map(_.dataType), md.columnMapping))
     if (skipped.isEmpty) (kept, df)
     else {
       val names = skipped.map(e => new Path(e.rel).getName).toSet
@@ -1988,9 +2012,9 @@ class ManifestTable(spark: SparkSession, root: String,
   private[graft] def prunableRead(version: Option[Int])
       : (DataFrame, Seq[sources.Filter] => DataFrame) = {
     val entries = entriesOf(versionOrLatest(version))
-    val mapping = columnMapping // one sidecar read for the frame and its scans
-    val all = readAll(entries, mapping)
-    (all, filters => skipFiles(all, entries, filters, mapping)._2)
+    val md = metadata // one record for the frame and its scans
+    val all = readAll(entries, md)
+    (all, filters => skipFiles(all, entries, filters, md)._2)
   }
 
   /** The general pruned read: `where`'s rows from the files the kernel
@@ -2006,8 +2030,9 @@ class ManifestTable(spark: SparkSession, root: String,
   private[graft] def filesFor(where: Column,
       version: Option[Int] = None): Seq[String] = {
     val entries = entriesOf(versionOrLatest(version))
-    val all = readAll(entries)
-    skipFiles(all, entries, sourceFilters(all, where))._1
+    val md = metadata
+    val all = readAll(entries, md)
+    skipFiles(all, entries, sourceFilters(all, where), md)._1
       .map(e => new Path(root, e.rel).toString)
   }
 
@@ -2040,7 +2065,7 @@ class ManifestTable(spark: SparkSession, root: String,
     * relative to the table root. Files land under data/ preserving
     * hive-style partition dirs when the table is partitioned.
     */
-  private def writeDataFiles(df: DataFrame,
+  private def writeDataFiles(df: DataFrame, md: TableMetadata,
       fileTag: Option[String] = None): Seq[String] = {
     fileTag.foreach(t => require(t.matches("[A-Za-z0-9_\\-.]+"),
       s"bad file tag: $t"))
@@ -2061,16 +2086,15 @@ class ManifestTable(spark: SparkSession, root: String,
       // rewrite frames built from read() carry them — shed here, the
       // preserved row ids recompute the same values on every read
       // (public surfaces refuse user-supplied values up front).
-      val idCols = identityColumns.keys.toSeq.filter(df.columns.contains)
+      val idCols = md.identity.keys.toSeq.filter(df.columns.contains)
       val derived = withDerived(
-        toPhysicalRename(withGenerated(df.drop(idCols: _*)))
+        toPhysicalRename(withGenerated(df.drop(idCols: _*), md), md)
           .drop(transforms.map(_.name): _*))
       // a column landing on DROPPED physical storage would resurrect
       // the old values for every pre-drop file — refuse with the
       // re-add path named (ADD COLUMNS mints a fresh physical id)
       locally {
-        val dropped = droppedColumns
-        val hit = derived.columns.filter(dropped.contains)
+        val hit = derived.columns.filter(md.dropped.contains)
         require(hit.isEmpty, s"column(s) ${hit.mkString(", ")} collide " +
           "with dropped columns' physical storage — re-add via ALTER " +
           "TABLE ADD COLUMNS (fresh physical id) before writing values")
@@ -2186,8 +2210,9 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   private[graft] def write(df: DataFrame, mode: String,
       fileTag: Option[String]): Int = {
-    requireNoReservedCols(df, "write")
-    val newFiles = newEntries(writeDataFiles(enforced(df), fileTag))
+    val md = metadata
+    requireNoReservedCols(df, "write", md)
+    val newFiles = newEntries(writeDataFiles(enforced(df, md), md, fileTag))
     mode match {
       case "append" =>
         val base = latestVersion.map(entriesOf).getOrElse(Seq.empty)
@@ -2196,7 +2221,7 @@ class ManifestTable(spark: SparkSession, root: String,
         // T15: an overwrite's change rows ARE its file delta (fresh
         // uuid files, nothing shared) — the keyless feed derives
         // deletes/inserts from it, no sidecar needed
-        stampCdcFileDiff(commit(newFiles))
+        stampCdcFileDiff(commit(newFiles), md)
       case m => throw new IllegalArgumentException(s"mode $m")
     }
   }
@@ -2264,29 +2289,21 @@ class ManifestTable(spark: SparkSession, root: String,
     * vacuum-protected until their branch is dropped or published.
     */
   def stageBranch(name: String, df: DataFrame): Unit = {
-    requireNoReservedCols(df, "stageBranch")
+    val md = metadata
+    requireNoReservedCols(df, "stageBranch", md)
     val bp = branchFile(name)
     require(!fs.exists(bp), s"branch $name already staged at $root")
-    val entries = newEntries(writeDataFiles(enforced(df)))
-    val body = entries.map(_.line).mkString("\n") + "\n"
-    val tmp = new Path(logDir, s".tmp-branch-${UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    // the exists-check + rename must be one atomic step under the
-    // per-root JVM lock (the tryCommit/colmap pattern): a local-FS
-    // rename OVERWRITES, so two same-process stagers of one branch
-    // name could otherwise both pass the pre-check and both "win",
-    // silently orphaning the loser's staged files
-    // the shared ref lock (not a per-name one): a branch staged
-    // mid-vacuum must wait out the delete phase — its files become
-    // vacuum-protected references the instant the marker lands, and
-    // [[withRefLock]] extends that across processes
+    val entries = newEntries(writeDataFiles(enforced(df, md), md))
+    // no-overwrite publish: two same-process stagers of one branch
+    // name must not both "win", silently orphaning the loser's staged
+    // files. Under the shared ref lock (not a per-name one): a branch
+    // staged mid-vacuum must wait out the delete phase — its files
+    // become vacuum-protected references the instant the marker
+    // lands, and [[withRefLock]] extends that across processes
     withRefLock {
-      if (fs.exists(bp) || !fs.rename(tmp, bp)) {
-        fs.delete(tmp, false)
+      if (!publishOnce(entries.map(_.line).mkString("\n") + "\n", bp, bp))
         throw new IllegalStateException(
           s"branch $name was staged concurrently at $root")
-      }
     }
   }
 
@@ -2296,20 +2313,19 @@ class ManifestTable(spark: SparkSession, root: String,
 
   /** Names of currently staged branches. */
   def branches: Seq[String] =
-    if (!fs.exists(logDir)) Seq.empty
-    else fs.listStatus(logDir).map(_.getPath.getName)
-      .filter(_.startsWith("branch-")).map(_.stripPrefix("branch-"))
-      .toSeq.sorted
+    logListing.map(_.getPath.getName)
+      .filter(_.startsWith("branch-")).map(_.stripPrefix("branch-")).sorted
 
   /** The audit view: current main snapshot plus the branch's staged
     * rows — what the table WILL look like after publish (modulo
     * concurrent main commits, which an append rebases over cleanly).
     */
   def readBranch(name: String): DataFrame = {
-    val staged = withDerived(readEntries(branchEntries(name)))
+    val md = metadata
+    val staged = withDerived(readEntries(branchEntries(name), md))
     latestVersion match {
       case Some(_) =>
-        val base = read()
+        val base = readAt(None, md)
         base.unionByName(staged.select(base.columns.map(col).toSeq: _*))
       case None => staged
     }
@@ -2344,9 +2360,10 @@ class ManifestTable(spark: SparkSession, root: String,
     * appears → conflictsWith) instead of silently dropping its rows —
     * the lost-update a blind overwrite would cause.
     */
-  private def rewriteSnapshot(baseVersion: Option[Int], df: DataFrame): Int = {
+  private def rewriteSnapshot(baseVersion: Option[Int], df: DataFrame,
+      md: TableMetadata): Int = {
     val base = baseVersion.map(entriesOf).getOrElse(Seq.empty)
-    val newFiles = newEntries(writeDataFiles(df))
+    val newFiles = newEntries(writeDataFiles(df, md))
     commitDelta(base, base.map(_.rel).toSet, newFiles,
       conflictsWith = _ => true)
   }
@@ -2379,6 +2396,7 @@ class ManifestTable(spark: SparkSession, root: String,
     // transformed tables address sub-partitions by the DERIVED value
     // (e.g. '2024-01-02' for days(ts)); the slice filter derives it
     // from the source column, so user frames need no hidden columns
+    val md = metadata
     val slice = df.filter(partCols.zip(values).map { case (c, v) =>
       val pv = partValueExpr(df, c)
       if (v == null) pv.isNull else pv.cast("string") === lit(v)
@@ -2397,14 +2415,14 @@ class ManifestTable(spark: SparkSession, root: String,
         s"current partition spec (e.g. ${foreign.headOption.map(_.rel).getOrElse("")}); " +
         "compact() or evolvePartitionSpec to migrate the layout first, " +
         "or use merge/delete which scope per-spec")
-    val newFiles = newEntries(writeDataFiles(enforced(slice)))
+    val newFiles = newEntries(writeDataFiles(enforced(slice, md), md))
     def inPart(e: Entry): Boolean =
       partCols.zip(values).forall { case (c, v) => inPartition(e.rel, c, v) }
     // partition-scoped delta: concurrent commits to OTHER partitions
     // rebase cleanly; a concurrent touch of THIS partition conflicts
     stampCdcFileDiff(commitDelta(base,
       base.filter(inPart).map(_.rel).toSet,
-      newFiles, conflictsWith = inPart))
+      newFiles, conflictsWith = inPart), md)
   }
 
   /** Hive-style partition directory segment for a value — Spark escapes
@@ -2445,7 +2463,8 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   def merge(updates0: DataFrame, keys: Seq[String],
       deleteCol: Option[String] = None): Int = {
-    requireNoReservedCols(updates0, "merge")
+    val md = metadata
+    requireNoReservedCols(updates0, "merge", md)
     // pin the snapshot: every read below (base rows, touched scan,
     // carried entries) must see ONE version, and the commit is a delta
     // against exactly that version so concurrent disjoint writers rebase
@@ -2454,12 +2473,12 @@ class ManifestTable(spark: SparkSession, root: String,
     // sides so the schema contract and the change detection line up.
     // The tombstone flag (not a table column) rides along untouched:
     // generated expressions only reference table columns.
-    val updates = withGenerated(updates0)
+    val updates = withGenerated(updates0, md)
     // identity columns are DERIVED (start + step * row id) and the feed
     // can never carry them — merge over the identity-free frame; values
     // re-derive from the preserved row ids (attachRowIds) on read
-    val base = withGenerated(read(Some(v0)))
-      .drop(identityColumns.keys.toSeq: _*)
+    val base = withGenerated(readAt(Some(v0), md), md)
+      .drop(md.identity.keys.toSeq: _*)
     def resolve(b: DataFrame, u: DataFrame): DataFrame = deleteCol match {
       case Some(d) => Merge.applyCdc(b, u, keys, d)
       case None => Merge.upsert(b, u, keys)
@@ -2508,7 +2527,7 @@ class ManifestTable(spark: SparkSession, root: String,
           else {
             def tupleOf(df: DataFrame) =
               df.select(sig.map(c =>
-                partValueExprFor(df, c).cast("string")): _*)
+                partValueExprFor(df, c, md.columnMapping).cast("string")): _*)
             tupleOf(upsertDelta)
               .union(tupleOf(currentOfFed))
               .distinct()
@@ -2541,7 +2560,7 @@ class ManifestTable(spark: SparkSession, root: String,
         // base schema (updates must be merge-compatible with it anyway)
         def tuplePred(df: DataFrame, sig: Seq[String], t: Seq[String]): Column =
           sig.zip(t).map { case (c, v) =>
-            val pv = partValueExprFor(df, c)
+            val pv = partValueExprFor(df, c, md.columnMapping)
             if (v == null) pv.isNull else pv.cast("string") === lit(v)
           }.reduce(_ && _)
         def inTouchedAny(df: DataFrame): Column =
@@ -2556,7 +2575,7 @@ class ManifestTable(spark: SparkSession, root: String,
         // keeps the schema where readEntries(Nil) could not
         val touchedBase =
           if (removed.isEmpty) base.filter(lit(false))
-          else withGenerated(withDeclared(readEntries(removed)))
+          else withGenerated(rowsOf(removed, md), md)
         // tombstones bypass the partition filter: they match by KEY and
         // their own partition-column values may not reflect the base row's
         val touchedUpdates = deleteCol match {
@@ -2565,17 +2584,18 @@ class ManifestTable(spark: SparkSession, root: String,
           case None => updates.filter(inTouchedAny(updates))
         }
         val merged = attachRowIds(
-          resolve(touchedBase, touchedUpdates), removed, keys)
-        val newFiles = newEntries(writeDataFiles(enforced(merged)))
+          resolve(touchedBase, touchedUpdates), removed, keys, md)
+        val newFiles = newEntries(writeDataFiles(enforced(merged, md), md))
         // delta = rewrite of the touched partitions only: a concurrent
         // merge/append to OTHER partitions rebases and both commits
         // land; concurrent changes inside a touched partition conflict
         stampCdcFileDiff(commitDelta(baseEntries, removed.map(_.rel).toSet,
-          newFiles, conflictsWith = inTouchedPartition))
+          newFiles, conflictsWith = inTouchedPartition), md)
         } finally currentOfFed.unpersist()
     } else {
         stampCdcFileDiff(rewriteSnapshot(Some(v0), enforced(
-          attachRowIds(resolve(base, updates), entriesOf(v0), keys))))
+          attachRowIds(resolve(base, updates), entriesOf(v0), keys, md), md),
+          md), md)
     }
     } finally upsertDelta.unpersist()
   }
@@ -2589,7 +2609,7 @@ class ManifestTable(spark: SparkSession, root: String,
     * parquet prunes the projection to the key columns.
     */
   private def attachRowIds(merged: DataFrame, idEntries: Seq[Entry],
-      keys: Seq[String]): DataFrame = {
+      keys: Seq[String], md: TableMetadata): DataFrame = {
     if (idEntries.isEmpty) return merged
     // ONE id per key, and only for keys the target held EXACTLY once:
     // nothing guarantees target-key uniqueness (keptTargets tolerates
@@ -2597,7 +2617,7 @@ class ManifestTable(spark: SparkSession, root: String,
     // result rows through the join — silent row duplication — while a
     // duplicate key's identity is genuinely ambiguous, so those rows
     // draw fresh ids instead (honest degradation, cardinality intact)
-    val proj = withDeclared(readEntries(idEntries, withRowId = true))
+    val proj = rowsOf(idEntries, md, withRowId = true)
       .groupBy(keys.map(c => col(c).as(s"__graft_idk_$c")): _*)
       .agg(min(col(ManifestTable.RowIdCol)).as("__graft_idv"),
         count(lit(1)).as("__graft_idn"))
@@ -2610,49 +2630,18 @@ class ManifestTable(spark: SparkSession, root: String,
   }
 
   // ---------------------------------------------------------------- //
-  // L17: CHECK constraints — persisted table-level data-quality gates //
-  // ---------------------------------------------------------------- //
-
-  private val constraintsPath = new Path(logDir, "constraints")
-
-  /** Registry mutations and reads serialize through a per-root lock
-    * (separate from the commit lock — registry ops may run Spark jobs
-    * and must not stall manifest commits): the write is
-    * delete-then-rename, and an unserialized reader in that gap would
-    * see an EMPTY registry and let a violating commit through, while
-    * two unserialized read-modify-writes would silently drop one
-    * writer's constraint. Cross-process writers on a local FS retain
-    * the same tiny window tryCommit documents.
-    */
-  // ---------------------------------------------------------------- //
   // Column mapping — RENAME COLUMN without rewriting a byte (the      //
   // Delta column-mapping model): data files keep their original       //
-  // PHYSICAL names forever; a log-dir sidecar maps physical→logical.  //
+  // PHYSICAL names forever; the metadata record maps physical→logical.//
   // Scans rename physical→logical on the way out, writers rename      //
   // logical→physical on the way in, and stats/bloom keys (recorded    //
   // physical) translate at the API boundary.                          //
   // ---------------------------------------------------------------- //
 
-  private val columnMappingPath = new Path(logDir, "column_mapping")
-  private def mappingLock: Object =
-    ManifestTable.lockFor(fs.makeQualified(logDir).toString + "#colmap")
+  /** Current physical→logical mapping (empty = no renames ever). */
+  def columnMapping: Map[String, String] = metadata.columnMapping
 
-  /** Current physical→logical mapping (empty = no renames ever). Read
-    * fresh per use, like the constraint registry, so every instance on
-    * this root sees renames immediately. */
-  def columnMapping: Map[String, String] = mappingLock.synchronized {
-    if (!fs.exists(columnMappingPath)) return Map.empty
-    val in = fs.open(columnMappingPath)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).map { l =>
-        val i = l.indexOf('\t')
-        Entry.dec(l.substring(0, i)) -> Entry.dec(l.substring(i + 1))
-      }.toMap
-    finally in.close()
-  }
-
-  private def toPhysical(logical: String,
-      m: Map[String, String] = columnMapping): String = {
+  private def toPhysical(logical: String, m: Map[String, String]): String = {
     // a stale (pre-rename) name must refuse loudly, not silently hit
     // its still-matching physical stats key while the scan resolves
     // nothing
@@ -2663,27 +2652,60 @@ class ManifestTable(spark: SparkSession, root: String,
     m.collectFirst { case (p, l) if l == logical => p }.getOrElse(logical)
   }
 
-  private def toLogicalRename(df: DataFrame,
-      m: Map[String, String] = columnMapping): DataFrame = {
+  private def toLogicalRename(df: DataFrame, md: TableMetadata): DataFrame = {
     // dropped physical storage never surfaces — hidden BEFORE the
     // rename fold so a dropped column can never shadow a re-added
     // logical name riding a fresh physical id
-    val dropped = droppedColumns
-    val hit = df.columns.filter(dropped.contains)
+    val hit = df.columns.filter(md.dropped.contains)
     val d0 = if (hit.isEmpty) df else df.drop(hit.toIndexedSeq: _*)
-    if (m.isEmpty) d0
-    else m.foldLeft(d0) { case (d, (p, l)) =>
+    md.columnMapping.foldLeft(d0) { case (d, (p, l)) =>
       if (p != l && d.columns.contains(p)) d.withColumnRenamed(p, l) else d
     }
   }
 
-  private def toPhysicalRename(df: DataFrame): DataFrame = {
-    val m = columnMapping
-    if (m.isEmpty) df
-    else m.foldLeft(df) { case (d, (p, l)) =>
+  private def toPhysicalRename(df: DataFrame, md: TableMetadata): DataFrame =
+    md.columnMapping.foldLeft(df) { case (d, (p, l)) =>
       if (p != l && d.columns.contains(l)) d.withColumnRenamed(l, p) else d
     }
+
+  /** Refuse to `op` (rename/drop) column `name`, stored as `physical`,
+    * while something pins it: an identity or generated declaration of
+    * it, a CHECK or generated expression reading it (every later write
+    * would fail to resolve the stored SQL — the Delta restriction), or
+    * the partition layout (hive paths and derived layouts carry its
+    * name).
+    */
+  private def requireUnpinned(op: String, name: String, physical: String,
+      md: TableMetadata): Unit = {
+    require(!md.identity.contains(name), s"cannot $op identity column " +
+      s"$name — it is derived, not stored; use dropIdentityColumn")
+    require(!md.generated.contains(name),
+      s"cannot $op generated column $name — dropGeneratedColumn first")
+    for ((what, exprs) <- Seq("CHECK constraint" -> md.constraints,
+        "generated column" -> md.generated)) {
+      val refs = exprs.filter { case (_, s) =>
+        try spark.sessionState.sqlParser.parseExpression(s)
+          .collect { case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => a.name }
+          .contains(name)
+        catch { case _: Exception => s.contains(name) } // conservative
+      }
+      require(refs.isEmpty, s"cannot $op $name: referenced by $what(s) " +
+        s"${refs.keys.mkString(", ")} — drop them first")
+    }
+    require(!identityPartCols.contains(physical)
+      && !transforms.exists(_.src == physical),
+      s"cannot $op partition column $name (hive paths and derived " +
+        "layouts carry its name)")
   }
+
+  /** The schema a read shows (empty before any version). */
+  private def liveSchema(md: TableMetadata): StructType =
+    if (latestVersion.isDefined) readAt(None, md).schema else new StructType()
+
+  /** The columns a read shows, or the declared ones before any version. */
+  private def liveColumns(md: TableMetadata): Set[String] =
+    (if (latestVersion.isDefined) readAt(None, md).schema else md.declared)
+      .fieldNames.toSet
 
   /** ALTER TABLE RENAME COLUMN — metadata-only: no data file is
     * touched; the next scan surfaces the new name. Partition columns
@@ -2697,70 +2719,23 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   def renameColumn(oldName: String, newName: String): Unit = {
     require(oldName != newName, "rename to the same name")
-    require(!identityColumns.contains(oldName),
-      s"cannot rename identity column $oldName — it is derived, not " +
-        "stored; drop and re-add under the new name")
-    val referencing = constraints.filter { case (_, s) =>
-      try spark.sessionState.sqlParser.parseExpression(s)
-        .collect { case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => a.name }
-        .contains(oldName)
-      catch { case _: Exception => s.contains(oldName) } // conservative
+    updateMetadata { md =>
+      val m = md.columnMapping
+      requireUnpinned("rename", oldName, toPhysical(oldName, m), md)
+      // declared (catalog-added) columns live in the record by name —
+      // the column-mapping rename path only translates FILE columns, so
+      // a renamed declared column would silently split identities
+      require(!md.declared.fieldNames.contains(oldName),
+        s"cannot rename declared column $oldName — deprecate and re-add " +
+          "under the new name instead")
+      val logicalCols = readAt(None, md).columns.toSet
+      require(logicalCols.contains(oldName), s"no column $oldName " +
+        s"(have: ${logicalCols.toSeq.sorted.mkString(", ")})")
+      require(!logicalCols.contains(newName) && !m.keys.exists(_ == newName)
+        && toPhysical(newName, m) == newName,
+        s"column $newName already exists (logically or physically)")
+      md.copy(columnMapping = m + (toPhysical(oldName, m) -> newName))
     }
-    require(referencing.isEmpty,
-      s"cannot rename $oldName: referenced by CHECK constraint(s) " +
-        s"${referencing.keys.mkString(", ")} — drop them first")
-    // generated columns pin names on BOTH sides: renaming a column a
-    // generated expression reads breaks every later write's resolution
-    // of the stored SQL, and renaming the generated column itself
-    // would make withGenerated re-add the old name (duplicate physical
-    // column). Delta blocks both; so do we.
-    val gen = generatedColumns
-    require(!gen.contains(oldName),
-      s"cannot rename generated column $oldName — drop the generated " +
-        "column first")
-    val genReferencing = gen.filter { case (_, s) =>
-      try spark.sessionState.sqlParser.parseExpression(s)
-        .collect { case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => a.name }
-        .contains(oldName)
-      catch { case _: Exception => s.contains(oldName) } // conservative
-    }
-    require(genReferencing.isEmpty,
-      s"cannot rename $oldName: referenced by generated column(s) " +
-        s"${genReferencing.keys.mkString(", ")} — drop them first")
-    // declared (catalog-added) columns live in the sidecar by name —
-    // the column-mapping rename path only translates FILE columns, so
-    // a renamed declared column would silently split identities
-    require(!declaredColumns.fieldNames.contains(oldName),
-      s"cannot rename declared column $oldName — deprecate and re-add " +
-        "under the new name instead")
-    require(!identityPartCols.contains(toPhysical(oldName))
-      && !transforms.exists(_.src == toPhysical(oldName)),
-      s"cannot rename partition column $oldName (hive paths and derived " +
-        "layouts carry its name)")
-    val logicalCols = read().columns.toSet
-    require(logicalCols.contains(oldName), s"no column $oldName " +
-      s"(have: ${logicalCols.toSeq.sorted.mkString(", ")})")
-    val m = columnMapping
-    require(!logicalCols.contains(newName) && !m.keys.exists(_ == newName)
-      && toPhysical(newName) == newName,
-      s"column $newName already exists (logically or physically)")
-    val physical = toPhysical(oldName)
-    mappingLock.synchronized {
-      writeMapping(columnMapping + (physical -> newName))
-    }
-  }
-
-  private def writeMapping(updated: Map[String, String]): Unit = {
-    fs.mkdirs(logDir)
-    val tmp = new Path(logDir, s".tmp-colmap-${UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(updated.toSeq.sortBy(_._1).map { case (p, l) =>
-      s"${Entry.enc(p)}\t${Entry.enc(l)}"
-    }.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(columnMappingPath)) fs.delete(columnMappingPath, false)
-    if (!fs.rename(tmp, columnMappingPath))
-      throw new IllegalStateException("column_mapping update failed")
   }
 
   // ---------------------------------------------------------------- //
@@ -2774,109 +2749,42 @@ class ManifestTable(spark: SparkSession, root: String,
   // Glue-policy soft delete.                                          //
   // ---------------------------------------------------------------- //
 
-  private val droppedPath = new Path(logDir, "dropped_columns")
-
   /** Dropped PHYSICAL column names → the logical name they carried at
-    * drop time (for messages). Read fresh per use, like the mapping.
+    * drop time (for messages).
     */
-  def droppedColumns: Map[String, String] = mappingLock.synchronized {
-    if (!fs.exists(droppedPath)) return Map.empty
-    val in = fs.open(droppedPath)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).map { l =>
-        val i = l.indexOf('\t')
-        Entry.dec(l.substring(0, i)) -> Entry.dec(l.substring(i + 1))
-      }.toMap
-    finally in.close()
-  }
-
-  private def writeDropped(updated: Map[String, String]): Unit = {
-    fs.mkdirs(logDir)
-    val tmp = new Path(logDir, s".tmp-dropped-${UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(updated.toSeq.sortBy(_._1).map { case (p, l) =>
-      s"${Entry.enc(p)}\t${Entry.enc(l)}"
-    }.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(droppedPath)) fs.delete(droppedPath, false)
-    if (!fs.rename(tmp, droppedPath))
-      throw new IllegalStateException("dropped_columns update failed")
-  }
-
-  /** The physical storage name a logical column resolves to — the
-    * mapping inverse without [[toPhysical]]'s stale-name refusal.
-    */
-  private def physicalNameOf(logical: String): String =
-    columnMapping.collectFirst {
-      case (p, l) if l == logical => p
-    }.getOrElse(logical)
+  def droppedColumns: Map[String, String] = metadata.dropped
 
   /** ALTER TABLE DROP COLUMN — metadata-only via column mapping: no
-    * file is touched; the column's physical storage is recorded in the
-    * `dropped_columns` sidecar and every read surface hides it from
-    * now on (ALL versions, like renames — sidecars are table-global,
-    * readers key on paths). Refuses the same lattice as rename
-    * (partition source, CHECK-referenced, generated, configured
+    * file is touched; the column's physical storage is recorded as
+    * dropped in the metadata record and every read surface hides it
+    * from now on (ALL versions, like renames — the record is
+    * table-global, readers key on paths). Refuses the same lattice as
+    * rename (partition source, CHECK-referenced, generated, configured
     * stats/bloom columns) plus the last visible column. Like rename,
     * the drop applies to time-travel reads too, and active streams pin
-    * their pre-drop schema until restarted.
+    * their pre-drop schema until restarted. One record publish hides
+    * the storage, forgets any rename pointing at it and removes a
+    * declared entry together.
     */
   def dropColumn(name: String): Unit = {
     require(name != ManifestTable.RidPhysCol && name != ManifestTable.RowIdCol,
       s"$name is engine-reserved")
-    require(!identityColumns.contains(name),
-      s"$name is an identity column (derived, not stored) — " +
-        "dropIdentityColumn instead")
-    val referencing = constraints.filter { case (_, s) =>
-      try spark.sessionState.sqlParser.parseExpression(s)
-        .collect { case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => a.name }
-        .contains(name)
-      catch { case _: Exception => s.contains(name) } // conservative
-    }
-    require(referencing.isEmpty,
-      s"cannot drop $name: referenced by CHECK constraint(s) " +
-        s"${referencing.keys.mkString(", ")} — drop them first")
-    val gen = generatedColumns
-    require(!gen.contains(name),
-      s"cannot drop generated column $name — " +
-        "dropGeneratedColumn first")
-    val genReferencing = gen.filter { case (_, s) =>
-      try spark.sessionState.sqlParser.parseExpression(s)
-        .collect { case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => a.name }
-        .contains(name)
-      catch { case _: Exception => s.contains(name) } // conservative
-    }
-    require(genReferencing.isEmpty,
-      s"cannot drop $name: referenced by generated column(s) " +
-        s"${genReferencing.keys.mkString(", ")} — drop them first")
-    val physical = physicalNameOf(name)
-    require(!identityPartCols.contains(physical)
-      && !transforms.exists(_.src == physical),
-      s"cannot drop partition column $name (hive paths and derived " +
-        "layouts carry its name)")
-    require(!allStatsCols.contains(physical) && !bloomCol.contains(physical),
-      s"cannot drop $name: it is a configured stats/bloom column — " +
-        "maintenance jobs key on it; reconfigure the table first")
-    declaredLock.synchronized {
-      mappingLock.synchronized {
-        val declared = declaredColumns
-        val isDeclared = declared.fieldNames.contains(name)
-        val visible =
-          if (latestVersion.isDefined) read().columns.toSet
-          else declared.fieldNames.toSet
-        require(visible.contains(name) || isDeclared,
-          s"no column $name (have: ${visible.toSeq.sorted.mkString(", ")})")
-        require((visible - name).nonEmpty,
-          s"cannot drop $name: it is the table's last visible column")
-        // hide the physical storage; forget any rename pointing at it
-        writeDropped(droppedColumns + (physical -> name))
-        if (columnMapping.contains(physical))
-          writeMapping(columnMapping - physical)
-        // a declared entry (including a DEFAULT or deprecation marker)
-        // goes entirely — this is DROP, not DEPRECATE
-        if (isDeclared) writeDeclared(
-          StructType(declared.fields.filterNot(_.name == name)))
-      }
+    updateMetadata { md =>
+      val physical = md.physicalOf(name)
+      requireUnpinned("drop", name, physical, md)
+      require(!allStatsCols.contains(physical) && !bloomCol.contains(physical),
+        s"cannot drop $name: it is a configured stats/bloom column — " +
+          "maintenance jobs key on it; reconfigure the table first")
+      val visible = liveColumns(md)
+      require(visible.contains(name) || md.declared.fieldNames.contains(name),
+        s"no column $name (have: ${visible.toSeq.sorted.mkString(", ")})")
+      require((visible - name).nonEmpty,
+        s"cannot drop $name: it is the table's last visible column")
+      // a declared entry (including a DEFAULT or deprecation marker)
+      // goes entirely — this is DROP, not DEPRECATE
+      md.copy(dropped = md.dropped + (physical -> name),
+        columnMapping = md.columnMapping - physical,
+        declared = StructType(md.declared.fields.filterNot(_.name == name)))
     }
   }
 
@@ -2888,22 +2796,9 @@ class ManifestTable(spark: SparkSession, root: String,
   // column can never silently drift from its definition).             //
   // ---------------------------------------------------------------- //
 
-  private val generatedPath = new Path(logDir, "generated_columns")
-  private def generatedLock: Object =
-    ManifestTable.lockFor(fs.makeQualified(logDir).toString + "#generated")
-
   /** Registered generated columns: name → SQL expression (over the
-    * table's other columns). Read fresh per use, like constraints. */
-  def generatedColumns: Map[String, String] = generatedLock.synchronized {
-    if (!fs.exists(generatedPath)) return Map.empty
-    val in = fs.open(generatedPath)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).map { l =>
-        val i = l.indexOf('\t')
-        Entry.dec(l.substring(0, i)) -> Entry.dec(l.substring(i + 1))
-      }.toMap
-    finally in.close()
-  }
+    * table's other columns). */
+  def generatedColumns: Map[String, String] = metadata.generated
 
   /** Register `name` as GENERATED ALWAYS AS (`sqlExpr`). Old files
     * simply lack the column (mergeSchema null-fills on read); every
@@ -2911,34 +2806,18 @@ class ManifestTable(spark: SparkSession, root: String,
   def addGeneratedColumn(name: String, sqlExpr: String): Unit = {
     require(name.nonEmpty && sqlExpr.nonEmpty, "generated column needs name + expr")
     spark.sessionState.sqlParser.parseExpression(sqlExpr) // fail fast on syntax
-    generatedLock.synchronized {
-      writeGenerated(generatedColumns + (name -> sqlExpr))
-    }
+    updateMetadata(md => md.copy(generated = md.generated + (name -> sqlExpr)))
   }
 
-  def dropGeneratedColumn(name: String): Unit = generatedLock.synchronized {
-    writeGenerated(generatedColumns - name)
-  }
-
-  private def writeGenerated(m: Map[String, String]): Unit = {
-    fs.mkdirs(logDir)
-    val tmp = new Path(logDir, s".tmp-gen-${UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(m.toSeq.sortBy(_._1).map { case (n, s) =>
-      s"${Entry.enc(n)}\t${Entry.enc(s)}"
-    }.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(generatedPath)) fs.delete(generatedPath, false)
-    if (!fs.rename(tmp, generatedPath))
-      throw new IllegalStateException("generated_columns update failed")
-  }
+  def dropGeneratedColumn(name: String): Unit =
+    updateMetadata(md => md.copy(generated = md.generated - name))
 
   /** Compute absent / validate present generated columns. Validation
     * rides the write job itself (one evaluation, assert_true filter —
     * the same no-TOCTOU shape as CHECK enforcement; the guard wraps
     * the ROW, never inlines into per-column expressions). */
-  private def withGenerated(df: DataFrame): DataFrame =
-    generatedColumns.foldLeft(df) { case (d, (name, sqlExpr)) =>
+  private def withGenerated(df: DataFrame, md: TableMetadata): DataFrame =
+    md.generated.foldLeft(df) { case (d, (name, sqlExpr)) =>
       if (!d.columns.contains(name)) d.withColumn(name, expr(sqlExpr))
       else d
         // NULL backfills (pre-registration rows null-fill on rewrite;
@@ -2959,25 +2838,11 @@ class ManifestTable(spark: SparkSession, root: String,
   // DEPRECATE_IN_DATABASE: columns are never dropped, only flagged.   //
   // ---------------------------------------------------------------- //
 
-  private val declaredPath = new Path(logDir, "declared_columns")
-  private def declaredLock: Object =
-    ManifestTable.lockFor(fs.makeQualified(logDir).toString + "#declared")
-
   /** Catalog-declared columns (added via [[addColumns]]) + deprecation
-    * flags, as a StructType JSON sidecar. Field metadata key
-    * "deprecated" marks soft-deleted columns (the SchemaRegistry
-    * convention).
+    * flags. Field metadata key "deprecated" marks soft-deleted columns
+    * (the SchemaRegistry convention).
     */
-  def declaredColumns: StructType = declaredLock.synchronized {
-    if (!fs.exists(declaredPath)) new StructType()
-    else {
-      val in = fs.open(declaredPath)
-      try org.apache.spark.sql.types.DataType.fromJson(
-        scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-        .asInstanceOf[StructType]
-      finally in.close()
-    }
-  }
+  def declaredColumns: StructType = metadata.declared
 
   /** Bootstrap schema declaration — CREATE TABLE's contract that an
     * EMPTY table still reads (and accepts INSERTs) with its full
@@ -2985,22 +2850,10 @@ class ManifestTable(spark: SparkSession, root: String,
     * without a declaration the scan would surface zero columns.
     * Merges with any existing declaration (idempotent re-create).
     */
-  def declareSchema(st: StructType): Unit = {
-    val cur = declaredColumns
-    val have = cur.fieldNames.toSet
-    val merged = StructType(
-      cur.fields ++ st.fields.filterNot(f => have.contains(f.name)))
-    writeDeclared(merged)
-  }
-
-  private def writeDeclared(st: StructType): Unit = {
-    fs.mkdirs(logDir)
-    val tmp = new Path(logDir, s".tmp-declared-${UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(st.json.getBytes("UTF-8")) finally out.close()
-    if (fs.exists(declaredPath)) fs.delete(declaredPath, false)
-    if (!fs.rename(tmp, declaredPath))
-      throw new IllegalStateException("declared_columns update failed")
+  def declareSchema(st: StructType): Unit = updateMetadata { md =>
+    val have = md.declared.fieldNames.toSet
+    md.copy(declared = StructType(
+      md.declared.fields ++ st.fields.filterNot(f => have.contains(f.name))))
   }
 
   private def isDeprecatedField(f: org.apache.spark.sql.types.StructField): Boolean =
@@ -3056,18 +2909,19 @@ class ManifestTable(spark: SparkSession, root: String,
         .putString(ManifestTable.DefaultKey, litSql).build())))
   }
 
+  /** Declare `fields` in one record publish — together with the fresh
+    * physical ids a RE-ADD after DROP needs.
+    */
   private def addDeclaredFields(
       fields: Seq[org.apache.spark.sql.types.StructField]): Unit =
-    declaredLock.synchronized {
-      val cur = declaredColumns
-      val logical: Set[String] =
-        if (latestVersion.isDefined) read().columns.toSet else Set.empty
+    updateMetadata { md =>
+      val live = liveColumns(md) ++ md.declared.fieldNames
       fields.foreach { f =>
-        require(!logical.contains(f.name) && !cur.fieldNames.contains(f.name),
+        require(!live.contains(f.name),
           s"addColumns: column ${f.name} already exists")
-        require(!columnMapping.contains(f.name),
+        require(!md.columnMapping.contains(f.name),
           s"addColumns: ${f.name} is the physical name of a renamed " +
-            s"column (→ ${columnMapping(f.name)}); choose another name")
+            s"column (→ ${md.columnMapping(f.name)}); choose another name")
         require(!f.name.startsWith(PartitionTransform.Prefix),
           s"addColumns: ${f.name} collides with the hidden layout prefix")
       }
@@ -3076,14 +2930,11 @@ class ManifestTable(spark: SparkSession, root: String,
       // writes land under the new id, so old files' values can never
       // resurrect; files predating the re-add read NULL (or the
       // declared DEFAULT)
-      mappingLock.synchronized {
-        val dropped = droppedColumns
-        val mints = fields.map(_.name).filter(dropped.contains).map { n =>
-          s"${n}_${UUID.randomUUID().toString.take(8)}" -> n
-        }
-        if (mints.nonEmpty) writeMapping(columnMapping ++ mints)
+      val mints = fields.map(_.name).filter(md.dropped.contains).map { n =>
+        s"${n}_${UUID.randomUUID().toString.take(8)}" -> n
       }
-      writeDeclared(StructType(cur.fields ++ fields))
+      md.copy(columnMapping = md.columnMapping ++ mints,
+        declared = StructType(md.declared.fields ++ fields))
     }
 
   // ---------------------------------------------------------------- //
@@ -3099,23 +2950,8 @@ class ManifestTable(spark: SparkSession, root: String,
   // frames carrying the column refuse at every public write surface.  //
   // ---------------------------------------------------------------- //
 
-  private val identityPath = new Path(logDir, "identity_columns")
-  private def identityLock: Object =
-    ManifestTable.lockFor(fs.makeQualified(logDir).toString + "#identity")
-
-  /** Registered identity columns: name → (start, step). Read fresh per
-    * use, like the mapping/constraint sidecars.
-    */
-  def identityColumns: Map[String, (Long, Long)] = identityLock.synchronized {
-    if (!fs.exists(identityPath)) return Map.empty
-    val in = fs.open(identityPath)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).map { l =>
-        val Array(n, s, k) = l.split('\t')
-        Entry.dec(n) -> (s.toLong, k.toLong)
-      }.toMap
-    finally in.close()
-  }
+  /** Registered identity columns: name → (start, step). */
+  def identityColumns: Map[String, (Long, Long)] = metadata.identity
 
   /** Register `name` as GENERATED ALWAYS AS IDENTITY (START WITH
     * `start` INCREMENT BY `step`). Metadata-only: every read from now
@@ -3130,33 +2966,16 @@ class ManifestTable(spark: SparkSession, root: String,
       s"$name is engine-reserved")
     require(!name.startsWith(PartitionTransform.Prefix),
       s"$name collides with the hidden layout prefix")
-    identityLock.synchronized {
-      val visible =
-        if (latestVersion.isDefined) read().columns.toSet
-        else declaredColumns.fieldNames.toSet
-      require(!visible.contains(name) && !declaredColumns.fieldNames
-        .contains(name) && !identityColumns.contains(name),
+    updateMetadata { md =>
+      require(!(liveColumns(md) ++ md.declared.fieldNames ++
+        md.identity.keys).contains(name),
         s"addIdentityColumn: column $name already exists")
-      writeIdentity(identityColumns + (name -> (start, step)))
+      md.copy(identity = md.identity + (name -> (start, step)))
     }
   }
 
-  def dropIdentityColumn(name: String): Unit = identityLock.synchronized {
-    writeIdentity(identityColumns - name)
-  }
-
-  private def writeIdentity(m: Map[String, (Long, Long)]): Unit = {
-    fs.mkdirs(logDir)
-    val tmp = new Path(logDir, s".tmp-identity-${UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(m.toSeq.sortBy(_._1).map { case (n, (s, k)) =>
-      s"${Entry.enc(n)}\t$s\t$k"
-    }.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(identityPath)) fs.delete(identityPath, false)
-    if (!fs.rename(tmp, identityPath))
-      throw new IllegalStateException("identity_columns update failed")
-  }
+  def dropIdentityColumn(name: String): Unit =
+    updateMetadata(md => md.copy(identity = md.identity - name))
 
   /** Surface registered identity columns on a rid-carrying frame. */
   private def withIdentityCols(df: DataFrame,
@@ -3174,24 +2993,19 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   def deprecateColumns(names: Seq[String]): Unit = {
     require(names.nonEmpty, "deprecateColumns: empty column list")
-    declaredLock.synchronized {
-      val cur = declaredColumns
-      val logicalTypes: Map[String, org.apache.spark.sql.types.DataType] =
-        if (latestVersion.isDefined)
-          read().schema.fields.map(f => f.name -> f.dataType).toMap
-        else Map.empty
-      val updated = names.foldLeft(cur) { (st, n) =>
+    updateMetadata { md =>
+      val live = liveSchema(md)
+      md.copy(declared = names.foldLeft(md.declared) { (st, n) =>
         if (st.fieldNames.contains(n))
           StructType(st.fields.map(f => if (f.name == n) deprecateField(f) else f))
-        else logicalTypes.get(n) match {
-          case Some(dt) => // marker entry for a file-backed column
+        else live.find(_.name == n) match {
+          case Some(f) => // marker entry for a file-backed column
             StructType(st.fields :+ deprecateField(
-              org.apache.spark.sql.types.StructField(n, dt)))
+              org.apache.spark.sql.types.StructField(n, f.dataType)))
           case None => throw new IllegalArgumentException(
             s"deprecateColumns: no column $n")
         }
-      }
-      writeDeclared(updated)
+      })
     }
   }
 
@@ -3200,9 +3014,9 @@ class ManifestTable(spark: SparkSession, root: String,
     * declared-only columns stay hidden; deprecated FILE-backed columns
     * keep reading (data preserved — DEPRECATE, not DROP).
     */
-  private def withDeclared(df: DataFrame): DataFrame = {
+  private def withDeclared(df: DataFrame, md: TableMetadata): DataFrame = {
     val have = df.columns.toSet
-    declaredColumns.fields
+    md.declared.fields
       .filterNot(f => have.contains(f.name) || isDeprecatedField(f))
       .foldLeft(df)((d, f) => d.withColumn(f.name,
         // L40: a declared DEFAULT surfaces instead of NULL for rows
@@ -3211,22 +3025,6 @@ class ManifestTable(spark: SparkSession, root: String,
         ManifestTable.defaultOf(f)
           .map(sql => expr(sql).cast(f.dataType))
           .getOrElse(lit(null).cast(f.dataType))))
-  }
-
-  /** Declared columns carrying a DEFAULT, keyed by PHYSICAL name (the
-    * name parquet files would hold) → the stored literal SQL.
-    */
-  private def declaredDefaults: Map[String, String] = {
-    val defaulted = declaredColumns.fields
-      .filter(_.metadata.contains(ManifestTable.DefaultKey))
-    if (defaulted.isEmpty) Map.empty
-    else {
-      val m = columnMapping // ONE sidecar read, not one per field
-      def phys(l: String): String =
-        m.collectFirst { case (pn, ln) if ln == l => pn }.getOrElse(l)
-      defaulted.map(f =>
-        phys(f.name) -> f.metadata.getString(ManifestTable.DefaultKey)).toMap
-    }
   }
 
   /** Amend a read schema so columns with a declared DEFAULT carry
@@ -3254,49 +3052,39 @@ class ManifestTable(spark: SparkSession, root: String,
   }
 
   /** DESCRIBE SCHEMA — every column with its provenance and
-    * deprecation flag: `source` = "declared" for columns the catalog
-    * sidecar governs (added and/or deprecated through it), "data" for
-    * plain file-backed columns. Deprecated declared-only columns are
-    * hidden from reads but still listed here — the catalog remembers
-    * them, per the DEPRECATE policy.
+    * deprecation flag: `source` = "declared" for columns the record's
+    * declared schema governs (added and/or deprecated through it),
+    * "data" for plain file-backed columns. Deprecated declared-only
+    * columns are hidden from reads but still listed here — the catalog
+    * remembers them, per the DEPRECATE policy.
     */
   def describeSchema(): Seq[(String, String, String, Boolean)] = {
-    val declared = declaredColumns
-    val byName = declared.fields.map(f => f.name -> f).toMap
-    val scan =
-      if (latestVersion.isDefined) read().schema.fields.toSeq else Seq.empty
+    val md = metadata
+    val byName = md.declared.fields.map(f => f.name -> f).toMap
+    val scan = liveSchema(md).fields.toSeq
     val scanNames = scan.map(_.name).toSet
-    val ids = identityColumns
     scan.map { f =>
       byName.get(f.name) match {
         case Some(d) =>
           (f.name, f.dataType.simpleString, "declared", isDeprecatedField(d))
-        case None if ids.contains(f.name) =>
+        case None if md.identity.contains(f.name) =>
           (f.name, f.dataType.simpleString, "identity", false)
         case None => (f.name, f.dataType.simpleString, "data", false)
       }
-    } ++ declared.fields.toSeq.filterNot(f => scanNames.contains(f.name)).map(f =>
+    } ++ md.declared.fields.toSeq.filterNot(f => scanNames.contains(f.name)).map(f =>
       (f.name, f.dataType.simpleString, "declared", isDeprecatedField(f)))
   }
 
-  private def constraintsLock: Object =
-    ManifestTable.lockFor(
-      fs.makeQualified(logDir).toString + "#constraints")
+  // ---------------------------------------------------------------- //
+  // L17: CHECK constraints — persisted table-level data-quality gates //
+  // ---------------------------------------------------------------- //
 
   /** Registered CHECK constraints: name → SQL boolean expression.
-    * Persisted in the log dir, so EVERY writer instance on this root
-    * enforces them (the Delta `ALTER TABLE ADD CONSTRAINT` model).
+    * Persisted in the metadata record, so EVERY writer instance on
+    * this root enforces them (the Delta `ALTER TABLE ADD CONSTRAINT`
+    * model).
     */
-  def constraints: Map[String, String] = constraintsLock.synchronized {
-    if (!fs.exists(constraintsPath)) return Map.empty
-    val in = fs.open(constraintsPath)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).map { l =>
-        val i = l.indexOf('\t')
-        Entry.dec(l.substring(0, i)) -> Entry.dec(l.substring(i + 1))
-      }.toMap
-    finally in.close()
-  }
+  def constraints: Map[String, String] = metadata.constraints
 
   /** L17: ADD CONSTRAINT — registers a CHECK expression that every
     * subsequent data-adding commit (write, merge, partition overwrite,
@@ -3316,27 +3104,11 @@ class ManifestTable(spark: SparkSession, root: String,
     require(name.nonEmpty, "constraint needs a name")
     if (latestVersion.isDefined)
       checkAgainst(read(), Map(name -> sqlExpr), "existing table data")
-    constraintsLock.synchronized {
-      writeConstraints(constraints + (name -> sqlExpr))
-    }
+    updateMetadata(md => md.copy(constraints = md.constraints + (name -> sqlExpr)))
   }
 
-  def dropConstraint(name: String): Unit = constraintsLock.synchronized {
-    writeConstraints(constraints - name)
-  }
-
-  private def writeConstraints(m: Map[String, String]): Unit = {
-    fs.mkdirs(logDir)
-    val tmp = new Path(logDir, s".tmp-constraints-${UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(m.toSeq.sortBy(_._1).map { case (n, s) =>
-      s"${Entry.enc(n)}\t${Entry.enc(s)}"
-    }.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(constraintsPath, false)
-    if (!fs.rename(tmp, constraintsPath))
-      throw new IllegalStateException(s"constraint commit at $root failed")
-  }
+  def dropConstraint(name: String): Unit =
+    updateMetadata(md => md.copy(constraints = md.constraints - name))
 
   /** Wrap a to-be-written DataFrame so the write job itself enforces
     * every registered constraint per row: `assert_true` throws (with
@@ -3344,8 +3116,8 @@ class ManifestTable(spark: SparkSession, root: String,
     * evaluation of the input, no pre-check/act race on
     * nondeterministic inputs. The identity when no constraints exist.
     */
-  private def enforced(df: DataFrame): DataFrame =
-    constraints.foldLeft(df) { case (d, (n, s)) =>
+  private def enforced(df: DataFrame, md: TableMetadata): DataFrame =
+    md.constraints.foldLeft(df) { case (d, (n, s)) =>
       d.filter(assert_true(
         coalesce(expr(s).cast("boolean"), lit(true)),
         lit(s"CHECK constraint $n ($s) violated")).isNull)
@@ -3476,8 +3248,7 @@ class ManifestTable(spark: SparkSession, root: String,
   }
 
   private def statsFileLines: Option[Seq[String]] = {
-    if (!fs.exists(logDir)) return None
-    val stats = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
+    val stats = logListing.map(_.getPath.getName)
       .filter(_.startsWith("stats_v"))
       .map(n => n.stripPrefix("stats_v").toInt)
     if (stats.isEmpty) return None
@@ -3539,8 +3310,9 @@ class ManifestTable(spark: SparkSession, root: String,
             "(at-least-once on rewrites)")
     }
     val added = toEntries.filterNot(e => fromByRel.contains(e.rel))
-    if (added.isEmpty) read(Some(vTo)).filter(lit(false))
-    else readEntries(added)
+    val md = metadata
+    if (added.isEmpty) readAt(Some(vTo), md).filter(lit(false))
+    else readEntries(added, md)
   }
 
   /** Files metadata table (the Iceberg `table.files` surface): one row
@@ -3611,9 +3383,10 @@ class ManifestTable(spark: SparkSession, root: String,
     val v0 = versionOrLatest(None)
     val entries = entriesOf(v0)
     if (entries.isEmpty) return v0
-    val live = liveWithPos(entries, withRid = false)
+    val md = metadata
+    val live = liveWithPos(entries, md, withRid = false)
     deleteMatching(v0, entries, live, sourceFilters(live, predicate),
-      _.filter(predicate))
+      _.filter(predicate), md)
   }
 
   /** Batch point delete — one commit for a SET of keys (the GDPR
@@ -3629,8 +3402,9 @@ class ManifestTable(spark: SparkSession, root: String,
     val vals = values.filter(_ != null).distinct
     val entries = entriesOf(v0)
     if (vals.isEmpty || entries.isEmpty) return v0
-    deleteMatching(v0, entries, liveWithPos(entries, withRid = false),
-      Seq(sources.In(c, vals.toArray)), keyMatcher(c, vals))
+    val md = metadata
+    deleteMatching(v0, entries, liveWithPos(entries, md, withRid = false),
+      Seq(sources.In(c, vals.toArray)), keyMatcher(c, vals), md)
   }
 
   private def tryBigDecimal(s: String): Option[BigDecimal] =
@@ -3659,10 +3433,11 @@ class ManifestTable(spark: SparkSession, root: String,
     * semi-join for large key sets.
     */
   private def deleteMatching(v0: Int, all: Seq[Entry], live: DataFrame,
-      filters: Seq[sources.Filter], matcher: DataFrame => DataFrame): Int = {
-    val (candidates, scan) = skipFiles(live, all, filters)
+      filters: Seq[sources.Filter], matcher: DataFrame => DataFrame,
+      md: TableMetadata): Int = {
+    val (candidates, scan) = skipFiles(live, all, filters, md)
     if (candidates.isEmpty) return v0
-    if (!cdcEnabled) {
+    if (!md.cdcEnabled) {
       // materialize the hit set exactly once (eager checkpoint): the
       // marksUnique fast path records totals by driver arithmetic, so
       // the mark rows must be recompute-proof — a nondeterministic
@@ -3671,7 +3446,7 @@ class ManifestTable(spark: SparkSession, root: String,
       // ADVICE; the CDC branch below already had this discipline)
       val hits = matcher(scan)
         .select(col(DvFileCol), col(DvPosCol)).localCheckpoint(true)
-      try return commitDv(v0, all, hits, Seq.empty, marksUnique = true)
+      try return commitDv(v0, all, hits, Seq.empty, md, marksUnique = true)
       finally graft.functions.CheckpointOps.release(hits)
     }
     // T15: the matched rows ARE the commit's change rows. Materialize
@@ -3683,7 +3458,7 @@ class ManifestTable(spark: SparkSession, root: String,
       val dataCols = hits.columns
         .filterNot(Set(DvFileCol, DvPosCol, ManifestTable.RowIdCol)).toSeq
       commitDv(v0, all, hits.select(col(DvFileCol), col(DvPosCol)), Seq.empty,
-        cdc = Some(hits.select(dataCols.map(col): _*)
+        md, cdc = Some(hits.select(dataCols.map(col): _*)
           .withColumn(ManifestTable.ChangeTypeCol, lit("delete"))),
         marksUnique = true)
     } finally graft.functions.CheckpointOps.release(hits)
@@ -3696,7 +3471,7 @@ class ManifestTable(spark: SparkSession, root: String,
     * and updates/merges must never resurrect one. The shared preamble
     * of every row-level mutation (delete / update / merge).
     */
-  private def liveWithPos(entries: Seq[Entry],
+  private def liveWithPos(entries: Seq[Entry], md: TableMetadata,
       withRid: Boolean = true): DataFrame = {
     val files = entries.map(e => new Path(root, e.rel).toString)
     // withDeclared on the file read: row-level DML (UPDATE/MERGE/
@@ -3707,7 +3482,7 @@ class ManifestTable(spark: SparkSession, root: String,
     // accepted (the read() branch already includes it)
     val withPos =
       if (files.isEmpty) {
-        val base = read()
+        val base = readAt(None, md)
           .withColumn(DvFileCol, lit(null).cast("string"))
           .withColumn(DvPosCol, lit(null).cast("long"))
         if (withRid)
@@ -3717,7 +3492,7 @@ class ManifestTable(spark: SparkSession, root: String,
         // deletes only MARK positions — no copy is written, so the
         // row-id resolution (bases broadcast + coalesce) is pure
         // per-commit overhead there and is skipped
-        withDeclared(toLogicalRename(readFiles(files, withPos = true)))
+        withDeclared(toLogicalRename(readFiles(files, md, withPos = true), md), md)
       else {
         // stable row id rides the mutation read so update/merge COPIES
         // can materialize it ([[ManifestTable.RidPhysCol]]) — an
@@ -3726,7 +3501,7 @@ class ManifestTable(spark: SparkSession, root: String,
         val bases = entries.map(e => (new Path(e.rel).getName,
           e.stats.get(ManifestTable.RidKey).map(_.mn.toLong)))
           .toDF(DvFileCol, "_graft_rid_base")
-        val raw = readFiles(files, withPos = true, keepRid = true)
+        val raw = readFiles(files, md, withPos = true, keepRid = true)
         val phys =
           if (raw.columns.contains(ManifestTable.RidPhysCol))
             col(ManifestTable.RidPhysCol)
@@ -3735,7 +3510,7 @@ class ManifestTable(spark: SparkSession, root: String,
           .join(broadcast(bases), Seq(DvFileCol), "left")
           .withColumn(ManifestTable.RowIdCol,
             coalesce(phys, col("_graft_rid_base") + col(DvPosCol)))
-          .drop("_graft_rid_base", ManifestTable.RidPhysCol)))
+          .drop("_graft_rid_base", ManifestTable.RidPhysCol), md), md)
       }
     dvOf(entries).fold(withPos)(dv =>
       withPos.join(dv, Seq(DvFileCol, DvPosCol), "left_anti"))
@@ -3778,11 +3553,12 @@ class ManifestTable(spark: SparkSession, root: String,
     val entries = entriesOf(v0)
     if (entries.isEmpty) return v0
     require(set.nonEmpty, "updateWhere needs at least one assignment")
-    set.keys.find(identityColumns.contains).foreach(n =>
+    val md = metadata
+    set.keys.find(md.identity.contains).foreach(n =>
       throw new IllegalArgumentException(s"updateWhere: $n is GENERATED " +
         "ALWAYS AS IDENTITY — its values cannot be assigned"))
-    val all = liveWithPos(entries)
-    val (_, live) = skipFiles(all, entries, sourceFilters(all, predicate))
+    val all = liveWithPos(entries, md)
+    val (_, live) = skipFiles(all, entries, sourceFilters(all, predicate), md)
     // materialize the matched row set EXACTLY once (eager checkpoint):
     // the marks and the appended copies must come from the same rows,
     // or a nondeterministic predicate/assignment could kill one row
@@ -3815,11 +3591,11 @@ class ManifestTable(spark: SparkSession, root: String,
       // T15: with CDC on, the postimages are recorded in the sidecar
       // AND written as the appended copies — materialize them once so
       // a nondeterministic assignment cannot record one set of rows
-      // and write another. cdcEnabled snapshots ONCE (it is an
-      // fs.exists): a mid-operation enableCdc/disableCdc toggle must
+      // and write another. The CDC flag comes from the ONE record this
+      // operation resolved: a mid-operation enableCdc/disableCdc must
       // not split the checkpoint from its release or from the
       // sidecar decision.
-      val cdcOn = cdcEnabled
+      val cdcOn = md.cdcEnabled
       val updated = if (!cdcOn) updated0
         else updated0.localCheckpoint(true)
       try {
@@ -3829,7 +3605,7 @@ class ManifestTable(spark: SparkSession, root: String,
             .unionByName(updated.drop(ManifestTable.RidPhysCol).withColumn(
               ManifestTable.ChangeTypeCol, lit("update_postimage"))))
         commitDv(v0, entries, hits.select(col(DvFileCol), col(DvPosCol)),
-          Seq(enforced(updated)), cdc = cdc, marksUnique = true)
+          Seq(enforced(updated, md)), md, cdc = cdc, marksUnique = true)
       } finally if (cdcOn) graft.functions.CheckpointOps.release(updated)
     } finally graft.functions.CheckpointOps.release(hits) // RDD-level: Dataset.unpersist no-ops on checkpoints
   }
@@ -3873,7 +3649,8 @@ class ManifestTable(spark: SparkSession, root: String,
     // merge (the common CDC-apply shape) skips the resolution
     val needRid = (matched ++ notMatchedBySource)
       .exists(_.isInstanceOf[MergeUpdateClause])
-    val live = liveWithPos(entries, withRid = needRid)
+    val md = metadata
+    val live = liveWithPos(entries, md, withRid = needRid)
     val targetCols = live.columns
       .filterNot(Set(DvFileCol, DvPosCol, ManifestTable.RowIdCol)).toSeq
     val armCol = "_graft_merge_arm"
@@ -3957,7 +3734,7 @@ class ManifestTable(spark: SparkSession, root: String,
     val matchedHits = matchedHitsF.map(ManifestTable.await(_))
     val bySourceHits = bySourceHitsF.map(ManifestTable.await(_))
     val insertRows = insertRowsF.map(ManifestTable.await(_))
-    val cdcOn = cdcEnabled
+    val cdcOn = md.cdcEnabled
     // T15: update-copy frames are recorded in the CDC sidecar AND
     // written as appended files — checkpoint each once (CDC mode only)
     // so a nondeterministic SET expression cannot record one set of
@@ -4001,7 +3778,7 @@ class ManifestTable(spark: SparkSession, root: String,
       val matchedCopies = updatedCopies(matchedHits, matchedN)
       val bySourceCopies = updatedCopies(bySourceHits, bySourceN)
       val adds = (matchedCopies ++ bySourceCopies ++
-        insertRows.toSeq).map(enforced)
+        insertRows.toSeq).map(enforced(_, md))
       // T15: the commit's change rows, assembled from the SAME
       // checkpointed hit/copy/insert frames the write uses — per
       // matched arm the preimage (update) or the dead row (delete),
@@ -4032,7 +3809,7 @@ class ManifestTable(spark: SparkSession, root: String,
         .map(_.select(col(DvFileCol), col(DvPosCol)))
         .reduceOption(_ unionAll _)
         .getOrElse(live.limit(0).select(col(DvFileCol), col(DvPosCol)))
-      commitDv(v0, entries, marks, adds, appendWithoutMarks = true,
+      commitDv(v0, entries, marks, adds, md, appendWithoutMarks = true,
         cdc = cdc, marksUnique = true)
     } finally (allCheckpoints ++ copyCheckpoints)
       .foreach(graft.functions.CheckpointOps.release)
@@ -4050,7 +3827,8 @@ class ManifestTable(spark: SparkSession, root: String,
     * predicate is a version no-op.
     */
   private def commitDv(v0: Int, entries: Seq[Entry], marks: DataFrame,
-      adds: Seq[DataFrame], conflictsWith: Entry => Boolean = _ => false,
+      adds: Seq[DataFrame], md: TableMetadata,
+      conflictsWith: Entry => Boolean = _ => false,
       appendWithoutMarks: Boolean = false,
       cdc: Option[DataFrame] = None,
       marksUnique: Boolean = false): Int = {
@@ -4074,7 +3852,7 @@ class ManifestTable(spark: SparkSession, root: String,
       // per-commit fixed costs were the #1 scale-killer class.
       val cdcF = cdc.map(c => ManifestTable.async(writeCdcFile(c)))
       val addFs = adds.map(df =>
-        ManifestTable.async(newEntries(writeDataFiles(df))))
+        ManifestTable.async(newEntries(writeDataFiles(df, md))))
       // one bounded job: per-file NEW-mark counts (≤ one row per file)
       val newPerFile = cached.groupBy(col(DvFileCol)).count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -4215,7 +3993,8 @@ class ManifestTable(spark: SparkSession, root: String,
     val v0 = versionOrLatest(version)
     val entries = entriesOf(v0)
     val conflictsWith: Entry => Boolean = if (strict) _ => true else _ => false
-    val cdcOn = cdcEnabled
+    val md = metadata
+    val cdcOn = md.cdcEnabled
     // T15 (CDC mode): full hit rows are both the DV marks and the
     // recorded deletes, and the adds are both the written data files
     // and the recorded inserts — checkpoint EACH once so the sidecar
@@ -4226,7 +4005,7 @@ class ManifestTable(spark: SparkSession, root: String,
     // the live rows of the whole snapshot, listed once for every batch
     lazy val live = {
       val withPos = toLogicalRename(readFiles(
-        entries.map(e => new Path(root, e.rel).toString), withPos = true))
+        entries.map(e => new Path(root, e.rel).toString), md, withPos = true), md)
       dvOf(entries).fold(withPos)(dv =>
         withPos.join(dv, Seq(DvFileCol, DvPosCol), "left_anti"))
     }
@@ -4237,7 +4016,7 @@ class ManifestTable(spark: SparkSession, root: String,
         else {
           // the same file skipping + key matching as deleteKeys
           val (candidates, scan) =
-            skipFiles(live, entries, Seq(sources.In(c, vals.toArray)))
+            skipFiles(live, entries, Seq(sources.In(c, vals.toArray)), md)
           if (candidates.isEmpty) None
           else {
             val hits = keyMatcher(c, vals)(scan)
@@ -4258,7 +4037,7 @@ class ManifestTable(spark: SparkSession, root: String,
             .withColumn(ct, lit("delete"))) ++
           addsC.map(_.withColumn(ct, lit("insert"))))
           .reduceOption(_ unionByName _)
-      commitDv(v0, entries, marks, addsC, conflictsWith,
+      commitDv(v0, entries, marks, addsC, md, conflictsWith,
         appendWithoutMarks = true, cdc = cdc)
     } finally {
       hitCheckpoints.foreach(graft.functions.CheckpointOps.release)
@@ -4279,12 +4058,13 @@ class ManifestTable(spark: SparkSession, root: String,
     * rewriting more than asked is layout-safe, while skipping a file
     * the predicate meant would strand it forever.
     */
-  private def entriesInScope(entries: Seq[Entry], pred: Column): Seq[Entry] = {
+  private def entriesInScope(entries: Seq[Entry], pred: Column,
+      md: TableMetadata): Seq[Entry] = {
     if (entries.isEmpty) return entries
     val physCols = entries
       .flatMap(e => ManifestTable.layoutColsOf(e.rel)).distinct
-    val m = columnMapping // physical path keys surface as logical names
-    val logical = physCols.map(c => m.getOrElse(c, c))
+    // physical path keys surface as logical names
+    val logical = physCols.map(c => md.columnMapping.getOrElse(c, c))
     def tupleOf(e: Entry): Option[Seq[String]] = {
       val vs = physCols.map(c => partValueOf(e.rel, c))
       if (vs.exists(_.isEmpty)) None else Some(vs.map(_.get))
@@ -4308,8 +4088,9 @@ class ManifestTable(spark: SparkSession, root: String,
     }
     val local = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), schema)
+    lazy val tableSchema = readAt(None, md).schema
     val typed = logical.foldLeft(local)((d, c) =>
-      scala.util.Try(srcType(c)).toOption.filter(_ != StringType)
+      scala.util.Try(tableSchema(c).dataType).toOption.filter(_ != StringType)
         .fold(d)(dt => d.withColumn(c, d(c).cast(dt))))
     val kept = try {
       typed.filter(pred).select(idxCol)
@@ -4331,11 +4112,12 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   def compact(targetFiles: Int = 1): Int = {
     val v0 = latestVersion
-    val df = withDerived(readRidPhys(v0))
+    val md = metadata
+    val df = withDerived(readRidPhys(v0, md))
     val compacted =
       if (partCols.nonEmpty) df.repartition(targetFiles, partCols.map(col): _*)
       else df.repartition(targetFiles)
-    stampCdcNone(rewriteSnapshot(v0, compacted))
+    stampCdcNone(rewriteSnapshot(v0, compacted, md), md)
   }
 
   /** Partition-scoped OPTIMIZE (`OPTIMIZE ... WHERE`): rewrite ONLY
@@ -4349,15 +4131,16 @@ class ManifestTable(spark: SparkSession, root: String,
   def compact(targetFiles: Int, scope: Column): Int = {
     val v0 = versionOrLatest(None)
     val entries = entriesOf(v0)
-    val chosen = entriesInScope(entries, scope)
+    val md = metadata
+    val chosen = entriesInScope(entries, scope, md)
     if (chosen.isEmpty) return v0
-    val df = withDerived(readEntries(chosen, withRowId = true) // DV-applying read
+    val df = withDerived(readEntries(chosen, md, withRowId = true) // DV-applying read
       .withColumnRenamed(ManifestTable.RowIdCol, ManifestTable.RidPhysCol))
     val compacted =
       if (partCols.nonEmpty) df.repartition(targetFiles, partCols.map(col): _*)
       else df.repartition(targetFiles)
-    val newFiles = newEntries(writeDataFiles(compacted))
-    stampCdcNone(commitDelta(entries, chosen.map(_.rel).toSet, newFiles))
+    val newFiles = newEntries(writeDataFiles(compacted, md))
+    stampCdcNone(commitDelta(entries, chosen.map(_.rel).toSet, newFiles), md)
   }
 
   /** L5d: incremental bin-pack OPTIMIZE — the form that survives
@@ -4376,9 +4159,10 @@ class ManifestTable(spark: SparkSession, root: String,
       scope: Option[Column] = None): Int = {
     val v0 = versionOrLatest(None)
     val entries = entriesOf(v0)
+    val md = metadata
     // scope narrows the CANDIDATES; the commit delta is still against
     // the full snapshot, so out-of-scope files carry by reference
-    val sized = scope.fold(entries)(entriesInScope(entries, _)).map { e =>
+    val sized = scope.fold(entries)(entriesInScope(entries, _, md)).map { e =>
       e -> fs.getFileStatus(new Path(root, e.rel)).getLen
     }
     val (small, kept) = sized.partition { case (e, len) =>
@@ -4388,13 +4172,13 @@ class ManifestTable(spark: SparkSession, root: String,
       return v0 // nothing to pack (a single small DV-free file gains nothing)
     val totalBytes = small.map(_._2).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val packed = withDerived(readEntries(small.map(_._1), withRowId = true) // DV-applying read
+    val packed = withDerived(readEntries(small.map(_._1), md, withRowId = true) // DV-applying read
       .withColumnRenamed(ManifestTable.RowIdCol, ManifestTable.RidPhysCol))
     val repart =
       if (partCols.nonEmpty) packed.repartition(nOut, partCols.map(col): _*)
       else packed.repartition(nOut)
-    val newFiles = newEntries(writeDataFiles(repart))
-    stampCdcNone(commitDelta(entries, small.map(_._1.rel).toSet, newFiles))
+    val newFiles = newEntries(writeDataFiles(repart, md))
+    stampCdcNone(commitDelta(entries, small.map(_._1.rel).toSet, newFiles), md)
   }
 
   /** REORG PURGE — materialize soft deletes: rewrite exactly the files
@@ -4415,7 +4199,8 @@ class ManifestTable(spark: SparkSession, root: String,
       scope: Option[Column] = None): Int = {
     val v0 = versionOrLatest(None)
     val entries = entriesOf(v0)
-    val dvd = scope.fold(entries)(entriesInScope(entries, _))
+    val md = metadata
+    val dvd = scope.fold(entries)(entriesInScope(entries, _, md))
       .filter(_.stats.contains(DvKey))
     val chosen =
       if (minDeletedFraction <= 0.0) dvd
@@ -4438,16 +4223,16 @@ class ManifestTable(spark: SparkSession, root: String,
         }
       }
     if (chosen.isEmpty) return v0
-    val purged = withDerived(readEntries(chosen, withRowId = true) // DV-applying read
+    val purged = withDerived(readEntries(chosen, md, withRowId = true) // DV-applying read
       .withColumnRenamed(ManifestTable.RowIdCol, ManifestTable.RidPhysCol))
     val repart =
       if (partCols.nonEmpty)
         purged.repartition(math.max(1, chosen.size), partCols.map(col): _*)
       else purged.repartition(math.max(1, chosen.size))
-    val newFiles = newEntries(writeDataFiles(repart))
+    val newFiles = newEntries(writeDataFiles(repart, md))
     // row-preserving for the FEED: dead rows stay dead, live rows move
     // verbatim — the change feed sees nothing
-    stampCdcNone(commitDelta(entries, chosen.map(_.rel).toSet, newFiles))
+    stampCdcNone(commitDelta(entries, chosen.map(_.rel).toSet, newFiles), md)
   }
 
   /** T16 follow-up: adopt row tracking on a legacy table — one
@@ -4467,12 +4252,13 @@ class ManifestTable(spark: SparkSession, root: String,
     val entries = entriesOf(v0)
     val unstamped = entries.filterNot(_.stats.contains(ManifestTable.RidKey))
     if (unstamped.isEmpty) return v0
-    val df = withDerived(readEntries(unstamped)) // DV-applying read
+    val md = metadata
+    val df = withDerived(readEntries(unstamped, md)) // DV-applying read
     val repart =
       if (partCols.nonEmpty)
         df.repartition(math.max(1, unstamped.size), partCols.map(col): _*)
       else df.repartition(math.max(1, unstamped.size))
-    val newFiles = newEntries(writeDataFiles(repart))
+    val newFiles = newEntries(writeDataFiles(repart, md))
     val v = commitDelta(entries, unstamped.map(_.rel).toSet, newFiles)
     // stamped UNCONDITIONALLY (not the cdcEnabled-gated stampCdcNone):
     // live rows move verbatim by construction, and the usual keyless
@@ -4491,8 +4277,9 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   def optimizeBy(column: String, targetFiles: Int = 8): Int = {
     val v0 = latestVersion
+    val md = metadata
     stampCdcNone(rewriteSnapshot(v0,
-      readRidPhys(v0).repartitionByRange(targetFiles, col(column))))
+      readRidPhys(v0, md).repartitionByRange(targetFiles, col(column)), md), md)
   }
 
   /** L5c: two-dimensional OPTIMIZE ZORDER — rewrite the table clustered
@@ -4512,12 +4299,13 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   def optimizeByZ(cols: Seq[String], targetFiles: Int): Int = {
     val v0 = latestVersion
-    val df = readRidPhys(v0)
+    val md = metadata
+    val df = readRidPhys(v0, md)
     val z = graft.operators.ZOrder.zValue(df, cols, bits = 4)
     stampCdcNone(rewriteSnapshot(v0, df.withColumn("_zorder", z)
       .repartitionByRange(targetFiles, col("_zorder"))
       .sortWithinPartitions("_zorder")
-      .drop("_zorder")))
+      .drop("_zorder"), md), md)
   }
 
   /** Partition-scoped ZORDER (`OPTIMIZE ... WHERE ... ZORDER BY`):
@@ -4530,16 +4318,17 @@ class ManifestTable(spark: SparkSession, root: String,
   def optimizeByZ(cols: Seq[String], targetFiles: Int, scope: Column): Int = {
     val v0 = versionOrLatest(None)
     val entries = entriesOf(v0)
-    val chosen = entriesInScope(entries, scope)
+    val md = metadata
+    val chosen = entriesInScope(entries, scope, md)
     if (chosen.isEmpty) return v0
-    val df = withDerived(readEntries(chosen, withRowId = true) // DV-applying read
+    val df = withDerived(readEntries(chosen, md, withRowId = true) // DV-applying read
       .withColumnRenamed(ManifestTable.RowIdCol, ManifestTable.RidPhysCol))
     val z = graft.operators.ZOrder.zValue(df, cols, bits = 4)
     val newFiles = newEntries(writeDataFiles(df.withColumn("_zorder", z)
       .repartitionByRange(targetFiles, col("_zorder"))
       .sortWithinPartitions("_zorder")
-      .drop("_zorder")))
-    stampCdcNone(commitDelta(entries, chosen.map(_.rel).toSet, newFiles))
+      .drop("_zorder"), md))
+    stampCdcNone(commitDelta(entries, chosen.map(_.rel).toSet, newFiles), md)
   }
 
   /** Auto-OPTIMIZE advisor (the `CALL graft.maintenance_plan` body):
@@ -4650,8 +4439,9 @@ class ManifestTable(spark: SparkSession, root: String,
     * snapshots, read through the same file manifests as time travel.
     */
   def changesBetween(vFrom: Int, vTo: Int, keys: Seq[String]): DataFrame = {
-    val pre = read(Some(vFrom))
-    val post = read(Some(vTo))
+    val md = metadata
+    val pre = readAt(Some(vFrom), md)
+    val post = readAt(Some(vTo), md)
     require(pre.columns.sorted.sameElements(post.columns.sorted),
       "schema changed between versions; diff by key is ambiguous")
     diffByKey(pre, post, keys)
@@ -4684,10 +4474,11 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   def changesAt(v: Int, keysOpt: Option[Seq[String]]): DataFrame = {
     require(versions.contains(v), s"no version $v at $root")
+    lazy val md = metadata
     val cdcTag = versionTag(v, ManifestTable.CdcTagKey)
     cdcTag match {
       case Some(ManifestTable.CdcNoChanges) =>
-        return withDeclared(readEntries(entriesOf(v))).limit(0)
+        return rowsOf(entriesOf(v), md).limit(0)
           .withColumn("_change_type", lit("insert"))
       case Some(rel) if rel != ManifestTable.CdcFileDiff =>
         // the write-time schema memo skips the footer-inference pass;
@@ -4712,16 +4503,16 @@ class ManifestTable(spark: SparkSession, root: String,
     // an insert (resp. delete). The initial snapshot (v0) is the big
     // win — one scan, no shuffle.
     if (preChanged.isEmpty && postChanged.isEmpty)
-      return withDeclared(readEntries(postE)).limit(0)
+      return rowsOf(postE, md).limit(0)
         .withColumn("_change_type", lit("insert"))
     if (preChanged.isEmpty)
-      return withDeclared(readEntries(postChanged))
+      return rowsOf(postChanged, md)
         .withColumn("_change_type", lit("insert"))
     if (postChanged.isEmpty)
-      return withDeclared(readEntries(preChanged))
+      return rowsOf(preChanged, md)
         .withColumn("_change_type", lit("delete"))
-    val pre = withDeclared(readEntries(preChanged))
-    val post = withDeclared(readEntries(postChanged))
+    val pre = rowsOf(preChanged, md)
+    val post = rowsOf(postChanged, md)
     // a column added by this commit's files is null on the pre side
     // (same null-fill contract the streaming append path uses)
     val allCols = (pre.schema ++ post.schema.filterNot(f =>
@@ -4759,8 +4550,8 @@ class ManifestTable(spark: SparkSession, root: String,
         // kernel pairs pre/post exactly. Refuses (naming every fix)
         // only when a touched file predates row tracking: NULL ids
         // under the null-safe join would cross-match unrelated rows.
-        val preR = withDeclared(readEntries(preChanged, withRowId = true))
-        val postR = withDeclared(readEntries(postChanged, withRowId = true))
+        val preR = rowsOf(preChanged, md, withRowId = true)
+        val postR = rowsOf(postChanged, md, withRowId = true)
         // a #rid-stamped file can never yield a NULL id (base + index
         // is total), so the probe jobs run only for files PREDATING
         // row tracking, whose physical column may or may not cover
@@ -4870,12 +4661,10 @@ class ManifestTable(spark: SparkSession, root: String,
     // the stamp from v-1 itself cannot be raced.
     val prevBy = entriesOf(v - 1).map(e => e.rel -> e).toMap
     val repointed = target.filter(e => prevBy.get(e.rel).exists(_ != e))
-    if (repointed.isEmpty) stampCdcFileDiff(v) else v
+    if (repointed.isEmpty) stampCdcFileDiff(v, metadata) else v
   }
 
   // ---- T15: write-time change-data capture (the Delta `_change_data` model) ----
-
-  private val cdcMarker = new Path(logDir, "cdc-enabled")
 
   /** Enable write-time CDC: from here on, every row-level DML commit
     * (DELETE / UPDATE / MERGE INTO / index refresh) persists its exact
@@ -4896,18 +4685,12 @@ class ManifestTable(spark: SparkSession, root: String,
     * coarse for rewrites carrying rows verbatim). Only commits that
     * PREDATE enablement still need `keys` to replay.
     */
-  def enableCdc(): Unit = {
-    fs.mkdirs(logDir)
-    if (!fs.exists(cdcMarker)) {
-      val out = fs.create(cdcMarker, false)
-      try out.write("1".getBytes("UTF-8")) finally out.close()
-    }
-  }
+  def enableCdc(): Unit = updateMetadata(_.copy(cdcEnabled = true))
 
   /** Stop capturing (existing sidecars stay readable). */
-  def disableCdc(): Unit = fs.delete(cdcMarker, false): Unit
+  def disableCdc(): Unit = updateMetadata(_.copy(cdcEnabled = false))
 
-  def cdcEnabled: Boolean = fs.exists(cdcMarker)
+  def cdcEnabled: Boolean = metadata.cdcEnabled
 
   /** Persist a frame of change rows (table columns + `_change_type`)
     * as this commit's CDC sidecar; returns the sidecar's relative
@@ -4936,8 +4719,8 @@ class ManifestTable(spark: SparkSession, root: String,
     * keyless change feed replays it as empty. Only ever stamps a
     * version the caller just minted — never an existing one.
     */
-  private def stampCdcNone(v: Int): Int = {
-    if (cdcEnabled) putVersionTag(v, ManifestTable.CdcTagKey,
+  private def stampCdcNone(v: Int, md: TableMetadata): Int = {
+    if (md.cdcEnabled) putVersionTag(v, ManifestTable.CdcTagKey,
       ManifestTable.CdcNoChanges)
     v
   }
@@ -4948,8 +4731,8 @@ class ManifestTable(spark: SparkSession, root: String,
     * Valid ONLY when no shared file was re-pointed by the commit
     * (fresh-uuid rewrites guarantee it; restore checks explicitly).
     */
-  private def stampCdcFileDiff(v: Int): Int = {
-    if (cdcEnabled) putVersionTag(v, ManifestTable.CdcTagKey,
+  private def stampCdcFileDiff(v: Int, md: TableMetadata): Int = {
+    if (md.cdcEnabled) putVersionTag(v, ManifestTable.CdcTagKey,
       ManifestTable.CdcFileDiff)
     v
   }
@@ -5173,8 +4956,7 @@ class ManifestTable(spark: SparkSession, root: String,
 
   /** All tags, name → version, name-ordered. */
   def tagRefs: Seq[(String, Int)] =
-    if (!fs.exists(logDir)) Seq.empty
-    else fs.listStatus(logDir).map(_.getPath.getName).toSeq
+    logListing.map(_.getPath.getName)
       .filter(_.startsWith("ref-")).map(_.stripPrefix("ref-")).sorted
       .flatMap(n => tagRef(n).map(n -> _))
 
@@ -5548,21 +5330,11 @@ class ManifestTable(spark: SparkSession, root: String,
           // exists) so this late-written checkpoint never shifts
           // TIMESTAMP AS OF — the header form of the old min() rule
           val origIct = commitTimeOf(kept)
-          val tmp = new Path(logDir, s".tmp-ckpt-${UUID.randomUUID()}")
-          val out = fs.create(tmp, false)
-          try out.write(
-            (ManifestTable.IctPrefix + origIct + "\n" +
-              resolved.map(_.line).mkString("\n") + "\n").getBytes("UTF-8"))
-          finally out.close()
-          if (!fs.rename(tmp, manifestPath(kept))) {
-            fs.delete(tmp, false)
-            // a concurrent vacuum may have materialized the same
-            // checkpoint between our exists-check and rename — its
-            // content is identical, so losing that race IS success
-            if (!fs.exists(manifestPath(kept)))
-              throw new IllegalStateException(
-                s"checkpoint materialization for v$kept failed")
-          }
+          // losing to a concurrent vacuum that materialized the same
+          // checkpoint IS success: its content is identical
+          publishOnce(ManifestTable.IctPrefix + origIct + "\n" +
+            resolved.map(_.line).mkString("\n") + "\n",
+            manifestPath(kept), manifestPath(kept)): Unit
         }
       }
       dropped.foreach { v =>
@@ -5572,7 +5344,7 @@ class ManifestTable(spark: SparkSession, root: String,
       // version tags of vacuumed versions go with their manifests —
       // a long-lived IVM pipeline would otherwise leak one tag file
       // per vacuumed view commit forever
-      fs.listStatus(logDir).foreach { st =>
+      logListing.foreach { st =>
         val name = st.getPath.getName
         if (name.startsWith("tag-")) {
           val v = name.substring(name.lastIndexOf("-v") + 2)
@@ -5581,16 +5353,25 @@ class ManifestTable(spark: SparkSession, root: String,
         }
       }
     }
+    def sweep(st: org.apache.hadoop.fs.FileStatus): Unit = {
+      if (!dryRun) fs.delete(st.getPath, false)
+      deleted += st.getPath.toString
+    }
     // temp files stranded by a crash mid-atomic-rename (txn sidecars,
-    // branch/tag staging) — old enough that no writer can still be
-    // mid-rename; vacuum is their only cleanup path. Reported and
-    // dryRun-aware like the data/DV sweeps.
-    if (fs.exists(logDir)) fs.listStatus(logDir).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith(".tmp-") && st.getModificationTime < cutoff) {
-        if (!dryRun) fs.delete(st.getPath, false)
-        deleted += st.getPath.toString
-      }
+    // branch/tag staging, unpublished versions and metadata records) —
+    // old enough that no writer can still be mid-rename; vacuum is
+    // their only cleanup path. Reported and dryRun-aware like the
+    // data/DV sweeps.
+    logListing.foreach { st =>
+      if (st.getPath.getName.startsWith(".tmp-") &&
+        st.getModificationTime < cutoff) sweep(st)
+    }
+    // superseded metadata records: one goes once its SUCCESSOR is past
+    // the cutoff — a reader or updater that listed the log before the
+    // successor landed may still open it until then. The latest stays.
+    val records = metadataRecords.map(_._2)
+    records.zip(records.drop(1)).foreach { case (old, next) =>
+      if (next.getModificationTime < cutoff) sweep(old)
     }
   }
 }

@@ -26,8 +26,8 @@ sealed trait PartitionTransform {
   def src: String
   /** Hidden hive column carrying the derived value. */
   def name: String
-  /** Round-trippable declaration, e.g. `days(ts)` — what the
-    * table_config sidecar persists. */
+  /** Round-trippable declaration, e.g. `days(ts)` — what the table
+    * metadata record ([[TableMetadata]]) persists. */
   def spec: String
   /** Whether the transform preserves source ordering (range-prunable);
     * hash buckets are equality-only. */

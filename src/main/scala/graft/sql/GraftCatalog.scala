@@ -213,7 +213,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           Identifier.of(catalogName +: ident.namespace(), ident.name()))
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    // the empty bootstrap write persists the table_config sidecar, so
+    // the empty bootstrap write records the table's layout, so
     // every later writer (name-based INSERT, path-based forRoot) lays
     // data out by the declared partitioning; the schema declaration
     // makes the EMPTY table read (and accept INSERTs) with its full
@@ -909,11 +909,10 @@ private[sql] class GraftScanBuilder(df: DataFrame,
   /** Stat string → typed value, ONLY where the round trip is exact:
     * integral/float/decimal types from numeric-kind stats (Spark's
     * cast-to-string is the shortest round-trip form), dates from
-    * their ISO strings, ASCII-only strings (the manifest's
-    * lexicographic fold is byte order; non-ASCII UTF-16 vs UTF-8
-    * order diverges, so refuse). Everything else — timestamps
-    * (session-zone rendering), booleans from legacy stats, nested
-    * types — refuses.
+    * their ISO strings, strings as recorded (the manifest folds them
+    * in UTF-8 byte order, Spark's own string order). Everything else
+    * — timestamps (session-zone rendering), booleans from legacy
+    * stats, nested types — refuses.
     */
   private def parseStat(s: String, dt: DataType, kind: String): Option[Any] =
     try dt match {
@@ -926,7 +925,7 @@ private[sql] class GraftScanBuilder(df: DataFrame,
       case d: DecimalType if kind == "N" =>
         Some(new java.math.BigDecimal(s).setScale(d.scale))
       case DateType if kind == "S" => Some(java.sql.Date.valueOf(s))
-      case StringType if kind == "S" && s.forall(_ < 0x80) => Some(s)
+      case StringType if kind == "S" => Some(s)
       case _ => None
     } catch {
       // NumberFormatException/Date parse (IllegalArgument) and a

@@ -50,8 +50,8 @@ import org.apache.spark.sql.types._
   * SELECT/DML surface — by registered-catalog name
   * (`CALL graft.optimize('lakehouse.silver.orders', 4)`), resolved
   * through [[GraftNames.resolveRoot]]. Configuration (partition tuple,
-  * zone-map/bloom columns) comes from the table_config sidecar via
-  * [[ManifestTable.forRoot]], so a partitioned merge issued from SQL
+  * zone-map/bloom columns) comes from the table's metadata record
+  * ([[graft.lake.TableMetadata]]) via [[ManifestTable.forRoot]], so a partitioned merge issued from SQL
   * scopes to touched partitions exactly like the Scala API.
   * Statements that don't match the CALL pattern delegate verbatim to
   * the stock parser — zero interference with regular Spark SQL.
@@ -262,14 +262,14 @@ case class GraftProcedureCommand(proc: String, args: Seq[Any])
       case "write" =>
         // write(root, sourceView, mode [, partitionColsCsv]) — the
         // ingest step; the partition tuple only configures a table
-        // being CREATED. An existing table's config sidecar wins: a
+        // being CREATED. An existing table's recorded layout wins: a
         // conflicting spec must refuse, not silently write a second
         // hive layout into the same data dir (which leaves the table
         // unreadable under Spark partition discovery).
         val source = session.table(str(1))
         // a PRESENT 4th arg is an explicit tuple — even '' (meaning
         // "unpartitioned"), which must refuse against a partitioned
-        // table, not silently defer to the sidecar
+        // table, not silently defer to the recorded layout
         val mt =
           if (args.length > 3)
             ManifestTable.forRootWithPartitions(session, root0,

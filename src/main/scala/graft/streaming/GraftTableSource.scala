@@ -344,7 +344,7 @@ class GraftTableSink(spark: SparkSession, root: String,
     s"bad txnAppId '$id': use letters, digits, '_' or '-'"))
 
   /** Resolved per batch, validation included: the create-or-validate
-    * check is a pure config-sidecar read (no Spark job), and re-reading
+    * check is a pure metadata-record read (no Spark job), and re-reading
     * each batch means a mid-stream partition-layout evolution is picked
     * up (no opinion) or refused loudly (explicit partitionBy) instead
     * of silently appending the stale layout.

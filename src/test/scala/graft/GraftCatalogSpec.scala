@@ -482,10 +482,10 @@ class GraftCatalogSpec extends SparkTestBase {
     assert(afterDv.collect().toSeq.map(_.toSeq) === Seq(Seq(1L, 5L, 3L)))
     assert(afterDv.queryExecution.executedPlan.toString
       .contains("HashAggregate"), "DV snapshot must scan for extrema")
-    // non-ASCII string stats refuse (UTF-16 vs UTF-8 order diverges):
+    // non-ASCII string stats push down, folded in UTF-8 byte order:
     // U+FFFD sorts ABOVE U+10000 in UTF-16 code units (FFFD > D800)
     // but BELOW it in UTF-8 bytes (EF < F0) — two files so the
-    // cross-file fold would pick the WRONG max if the guard regressed
+    // cross-file fold would pick the WRONG max in UTF-16 order
     val u = new ManifestTable(spark, s"$lakeRoot/silver/mm_uni",
       statsCols = Seq("s"))
     u.write(Seq(("�")).toDF("s"), "overwrite")
@@ -493,9 +493,9 @@ class GraftCatalogSpec extends SparkTestBase {
     val uq = spark.sql("SELECT max(s) FROM gcat_spec.silver.mm_uni")
     assert(uq.as[String].head() === "𐀀",
       "Spark string max is UTF-8 byte order")
-    assert(!uq.queryExecution.executedPlan.toString
+    assert(uq.queryExecution.executedPlan.toString
       .contains("PushedAggregates"),
-      "non-ASCII string stats must refuse the metadata pushdown")
+      "non-ASCII string stats answer from the manifest")
   }
 
   test("metadata MIN/MAX date guard: 5-digit years refuse, 4-digit push") {

@@ -137,8 +137,9 @@ class IdentityColumnSpec extends SparkTestBase {
     assert(ids.distinct.length === 2 && ids.min === 10L)
     assert(ids.forall(u => (u - 10L) % 2L === 0L))
     // a shallow clone re-reads the SAME values for carried rows only
-    // if the identity sidecar travels — it does not (config sidecars
-    // are per-root, the rename/mapping semantics); the clone's reads
+    // if the identity declaration travels — it does not (only the
+    // layout config of the metadata record travels; the rest is
+    // per-root, the rename/mapping semantics); the clone's reads
     // simply omit the derived column until declared there
     val cloneRoot = scratch("sqlclone")
     ManifestTable.forRoot(s, root).shallowClone(cloneRoot)
