@@ -1,10 +1,11 @@
 package graft.lake
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources
-import org.apache.spark.sql.types.{ArrayType, BinaryType, MapType, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, MapType, MetadataBuilder,
+  StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import java.util.UUID
 
@@ -126,8 +127,7 @@ object ManifestTable {
     */
   private[lake] val ExistsDefaultKey = "EXISTS_DEFAULT"
 
-  private[lake] def defaultOf(
-      f: org.apache.spark.sql.types.StructField): Option[String] =
+  private[lake] def defaultOf(f: StructField): Option[String] =
     if (f.metadata.contains(DefaultKey))
       Some(f.metadata.getString(DefaultKey))
     else None
@@ -554,12 +554,14 @@ class ManifestTable(spark: SparkSession, root: String,
   private def deltaPath(v: Int) = new Path(logDir, f"v$v%05d.delta")
 
   /** Everything in the log dir (nothing before the first write). */
-  private def logListing: Seq[org.apache.hadoop.fs.FileStatus] =
+  private def logListing: Seq[FileStatus] =
     try fs.listStatus(logDir).toSeq
     catch { case _: java.io.FileNotFoundException => Seq.empty }
 
-  def versions: Seq[Int] =
-    logListing.map(_.getPath.getName)
+  def versions: Seq[Int] = versionsIn(logListing)
+
+  private def versionsIn(listing: Seq[FileStatus]): Seq[Int] =
+    listing.map(_.getPath.getName)
       .filter(n => n.startsWith("v") &&
         (n.endsWith(".manifest") || n.endsWith(".delta")))
       .map(n => n.stripPrefix("v").stripSuffix(".manifest")
@@ -681,8 +683,10 @@ class ManifestTable(spark: SparkSession, root: String,
     * read's whatever survives.
     */
   def read(version: Option[Int] = None, where: Column = lit(true)): DataFrame =
-    if (where == lit(true)) readAt(version, metadata)
-    else readWhere(version, _ => where, sourceFilters(_, where))
+    if (where == lit(true)) {
+      val (v, md) = snapshot(version)
+      readAll(entriesOf(v), md)
+    } else readWhere(version, _ => where, sourceFilters(_, where))
 
   /** [[read]] without a predicate, under an already-resolved record. */
   private def readAt(version: Option[Int], md: TableMetadata): DataFrame =
@@ -711,9 +715,8 @@ class ManifestTable(spark: SparkSession, root: String,
     * OPTIMIZE/REORG to adopt ids).
     */
   def readWithRowId(version: Option[Int] = None): DataFrame = {
-    val md = metadata
-    withIdentityCols(rowsOf(entriesOf(versionOrLatest(version)), md,
-      withRowId = true), md.identity)
+    val (v, md) = snapshot(version)
+    withIdentityCols(rowsOf(entriesOf(v), md, withRowId = true), md.identity)
   }
 
   /** Rewrite-side read: the snapshot with row ids under their PHYSICAL
@@ -831,8 +834,8 @@ class ManifestTable(spark: SparkSession, root: String,
     }.getOrElse(throw new IllegalArgumentException(
       s"readBucketed($srcCol): no bucket(n, $srcCol) transform declared " +
         s"(partitionSpec: ${transforms.map(_.spec).mkString(", ")})"))
-    val md = metadata
-    val entries = entriesOf(versionOrLatest(None))
+    val (v, md) = snapshot(None)
+    val entries = entriesOf(v)
     require(entries.forall(e => !e.stats.contains(DvKey)),
       s"readBucketed($srcCol): snapshot has deletion vectors; " +
         "REORG PURGE before bucketed-join reads")
@@ -1159,28 +1162,39 @@ class ManifestTable(spark: SparkSession, root: String,
 
   private val MetadataName = "m(\\d+)\\.metadata".r
 
-  /** Numbered metadata records in the log dir, ascending. */
-  private def metadataRecords: Seq[(Int, org.apache.hadoop.fs.FileStatus)] =
-    logListing.map(st => st.getPath.getName -> st)
+  /** Numbered metadata records in a log listing, ascending. */
+  private def metadataRecords(listing: Seq[FileStatus]): Seq[(Int, FileStatus)] =
+    listing.map(st => st.getPath.getName -> st)
       .collect { case (MetadataName(n), st) => n.toInt -> st }.sortBy(_._1)
 
   /** The current record and its number (-1 before the first one). */
-  private def latestMetadata: (Int, TableMetadata) =
-    metadataRecords.lastOption.fold((-1, TableMetadata.Empty)) { case (n, st) =>
-      try n -> TableMetadata.decode(readLogLines(st.getPath).mkString("\n"))
-      // superseded and vacuumed between the listing and the open: the
-      // newer record is in the next listing
-      catch { case _: java.io.FileNotFoundException => latestMetadata }
+  private def latestMetadata(listing: Seq[FileStatus] = logListing)
+      : (Int, TableMetadata) =
+    metadataRecords(listing).lastOption.fold((-1, TableMetadata.Empty)) {
+      case (n, st) =>
+        try n -> TableMetadata.decode(readLogLines(st.getPath).mkString("\n"))
+        // superseded and vacuumed between the listing and the open: the
+        // newer record is in the next listing
+        catch { case _: java.io.FileNotFoundException => latestMetadata() }
     }
 
   /** The table's current metadata record. Public operations resolve it
-    * once and pass it down. A record that carries the layout spares
-    * this instance's first commit the check for one.
+    * once and pass it down.
     */
-  private def metadata: TableMetadata = {
-    val md = latestMetadata._2
-    if (md.config.isDefined) configChecked = true
-    md
+  private def metadata: TableMetadata = latestMetadata()._2
+
+  /** The version an operation works on (`version`, else the latest)
+    * and the current metadata record, from ONE log listing.
+    */
+  private def snapshotOpt(version: Option[Int]): (Option[Int], TableMetadata) = {
+    val listing = logListing
+    (version.orElse(versionsIn(listing).lastOption), latestMetadata(listing)._2)
+  }
+
+  /** [[snapshotOpt]] for an operation that needs a version. */
+  private def snapshot(version: Option[Int]): (Int, TableMetadata) = {
+    val (v, md) = snapshotOpt(version)
+    (v.getOrElse(throw new IllegalStateException(s"no versions at $root")), md)
   }
 
   /** Publish `change` applied to the current record as the next
@@ -1191,7 +1205,7 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   private def updateMetadata(change: TableMetadata => TableMetadata): Unit =
     Iterator.range(0, 100).find { _ =>
-      val (n, cur) = latestMetadata
+      val (n, cur) = latestMetadata()
       val next = change(cur)
       next == cur || publishOnce(TableMetadata.encode(next),
         metadataPath(n + 1), metadataPath(n + 1))
@@ -1206,14 +1220,12 @@ class ManifestTable(spark: SparkSession, root: String,
     * [[ManifestTable.forRoot]] (and the SQL procedure surface) can
     * reconstruct a fully-configured instance from the root path alone
     * — the Delta pattern of metadata living IN the log. First writer
-    * wins; an explicitly-configured constructor always overrides.
+    * wins (a record that already holds a layout publishes nothing); an
+    * explicitly-configured constructor always overrides. Checked once
+    * per instance (again on the next commit if the check threw).
     */
-  @volatile private var configChecked = false
-
-  private def persistConfigIfNeeded(): Unit = if (!configChecked) {
-    configChecked = true
+  private lazy val configPersisted: Unit =
     updateMetadata(md => if (md.config.isDefined) md else md.copy(config = Some(config)))
-  }
 
   /** ALTER TABLE … PARTITIONED BY — change the partition layout
     * (identity columns and/or transforms). This REWRITES the current
@@ -1320,7 +1332,7 @@ class ManifestTable(spark: SparkSession, root: String,
     val won = publishOnce(ManifestTable.IctPrefix + ict + "\n" + content,
       if (asDelta) deltaPath(v) else manifestPath(v),
       manifestPath(v), deltaPath(v))
-    if (won) persistConfigIfNeeded()
+    if (won) configPersisted
     won
   }
 
@@ -2011,8 +2023,8 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   private[graft] def prunableRead(version: Option[Int])
       : (DataFrame, Seq[sources.Filter] => DataFrame) = {
-    val entries = entriesOf(versionOrLatest(version))
-    val md = metadata // one record for the frame and its scans
+    val (v, md) = snapshot(version) // one record for the frame and its scans
+    val entries = entriesOf(v)
     val all = readAll(entries, md)
     (all, filters => skipFiles(all, entries, filters, md)._2)
   }
@@ -2029,8 +2041,8 @@ class ManifestTable(spark: SparkSession, root: String,
   /** Pruning audit hook: the files a [[read]] with `where` scans. */
   private[graft] def filesFor(where: Column,
       version: Option[Int] = None): Seq[String] = {
-    val entries = entriesOf(versionOrLatest(version))
-    val md = metadata
+    val (v, md) = snapshot(version)
+    val entries = entriesOf(v)
     val all = readAll(entries, md)
     skipFiles(all, entries, sourceFilters(all, where), md)._1
       .map(e => new Path(root, e.rel).toString)
@@ -2321,11 +2333,11 @@ class ManifestTable(spark: SparkSession, root: String,
     * concurrent main commits, which an append rebases over cleanly).
     */
   def readBranch(name: String): DataFrame = {
-    val md = metadata
+    val (v, md) = snapshotOpt(None)
     val staged = withDerived(readEntries(branchEntries(name), md))
-    latestVersion match {
+    v match {
       case Some(_) =>
-        val base = readAt(None, md)
+        val base = readAt(v, md)
         base.unionByName(staged.select(base.columns.map(col).toSeq: _*))
       case None => staged
     }
@@ -2463,12 +2475,11 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   def merge(updates0: DataFrame, keys: Seq[String],
       deleteCol: Option[String] = None): Int = {
-    val md = metadata
-    requireNoReservedCols(updates0, "merge", md)
     // pin the snapshot: every read below (base rows, touched scan,
     // carried entries) must see ONE version, and the commit is a delta
     // against exactly that version so concurrent disjoint writers rebase
-    val v0 = versionOrLatest(None)
+    val (v0, md) = snapshot(None)
+    requireNoReservedCols(updates0, "merge", md)
     // a merge source may omit generated columns — compute them on both
     // sides so the schema contract and the change detection line up.
     // The tombstone flag (not a table column) rides along untouched:
@@ -2700,11 +2711,11 @@ class ManifestTable(spark: SparkSession, root: String,
 
   /** The schema a read shows (empty before any version). */
   private def liveSchema(md: TableMetadata): StructType =
-    if (latestVersion.isDefined) readAt(None, md).schema else new StructType()
+    latestVersion.fold(new StructType())(v => readAt(Some(v), md).schema)
 
   /** The columns a read shows, or the declared ones before any version. */
   private def liveColumns(md: TableMetadata): Set[String] =
-    (if (latestVersion.isDefined) readAt(None, md).schema else md.declared)
+    latestVersion.fold(md.declared)(v => readAt(Some(v), md).schema)
       .fieldNames.toSet
 
   /** ALTER TABLE RENAME COLUMN — metadata-only: no data file is
@@ -2856,12 +2867,11 @@ class ManifestTable(spark: SparkSession, root: String,
       md.declared.fields ++ st.fields.filterNot(f => have.contains(f.name))))
   }
 
-  private def isDeprecatedField(f: org.apache.spark.sql.types.StructField): Boolean =
+  private def isDeprecatedField(f: StructField): Boolean =
     f.metadata.contains("deprecated") && f.metadata.getBoolean("deprecated")
 
-  private def deprecateField(
-      f: org.apache.spark.sql.types.StructField): org.apache.spark.sql.types.StructField =
-    f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
+  private def deprecateField(f: StructField): StructField =
+    f.copy(metadata = new MetadataBuilder()
       .withMetadata(f.metadata).putBoolean("deprecated", true).build())
 
   /** ALTER TABLE ADD COLUMNS — metadata-only: `ddl` is a Spark DDL
@@ -2903,17 +2913,14 @@ class ManifestTable(spark: SparkSession, root: String,
     val v = spark.range(1).select(expr(defaultSql).cast(dt)).head().get(0)
     val litSql = org.apache.spark.sql.catalyst.expressions.Literal
       .create(v, dt).sql
-    addDeclaredFields(Seq(org.apache.spark.sql.types.StructField(
-      name, dt, nullable = true,
-      new org.apache.spark.sql.types.MetadataBuilder()
-        .putString(ManifestTable.DefaultKey, litSql).build())))
+    addDeclaredFields(Seq(StructField(name, dt, nullable = true,
+      new MetadataBuilder().putString(ManifestTable.DefaultKey, litSql).build())))
   }
 
   /** Declare `fields` in one record publish — together with the fresh
     * physical ids a RE-ADD after DROP needs.
     */
-  private def addDeclaredFields(
-      fields: Seq[org.apache.spark.sql.types.StructField]): Unit =
+  private def addDeclaredFields(fields: Seq[StructField]): Unit =
     updateMetadata { md =>
       val live = liveColumns(md) ++ md.declared.fieldNames
       fields.foreach { f =>
@@ -3000,8 +3007,7 @@ class ManifestTable(spark: SparkSession, root: String,
           StructType(st.fields.map(f => if (f.name == n) deprecateField(f) else f))
         else live.find(_.name == n) match {
           case Some(f) => // marker entry for a file-backed column
-            StructType(st.fields :+ deprecateField(
-              org.apache.spark.sql.types.StructField(n, f.dataType)))
+            StructType(st.fields :+ deprecateField(StructField(n, f.dataType)))
           case None => throw new IllegalArgumentException(
             s"deprecateColumns: no column $n")
         }
@@ -3042,7 +3048,7 @@ class ManifestTable(spark: SparkSession, root: String,
         case Some(sql)
             if !f.metadata.contains(ManifestTable.ExistsDefaultKey) =>
           changed = true
-          f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
+          f.copy(metadata = new MetadataBuilder()
             .withMetadata(f.metadata)
             .putString(ManifestTable.ExistsDefaultKey, sql).build())
         case _ => f
@@ -3380,10 +3386,9 @@ class ManifestTable(spark: SparkSession, root: String,
     * the committed version, or the current one when nothing matched.
     */
   def delete(predicate: Column): Int = {
-    val v0 = versionOrLatest(None)
+    val (v0, md) = snapshot(None)
     val entries = entriesOf(v0)
     if (entries.isEmpty) return v0
-    val md = metadata
     val live = liveWithPos(entries, md, withRid = false)
     deleteMatching(v0, entries, live, sourceFilters(live, predicate),
       _.filter(predicate), md)
@@ -3396,13 +3401,12 @@ class ManifestTable(spark: SparkSession, root: String,
     * key set are scanned for positions.
     */
   def deleteKeys(c: String, values: Seq[String]): Int = {
-    val v0 = versionOrLatest(None)
+    val (v0, md) = snapshot(None)
     // NULL keys are dropped explicitly (they cannot equal any stored
     // value; inside an IN literal they'd vanish silently instead)
     val vals = values.filter(_ != null).distinct
     val entries = entriesOf(v0)
     if (vals.isEmpty || entries.isEmpty) return v0
-    val md = metadata
     deleteMatching(v0, entries, liveWithPos(entries, md, withRid = false),
       Seq(sources.In(c, vals.toArray)), keyMatcher(c, vals), md)
   }
@@ -3549,11 +3553,10 @@ class ManifestTable(spark: SparkSession, root: String,
     * expression (may reference the old row's columns).
     */
   def updateWhere(predicate: Column, set: Map[String, Column]): Int = {
-    val v0 = versionOrLatest(None)
+    val (v0, md) = snapshot(None)
     val entries = entriesOf(v0)
     if (entries.isEmpty) return v0
     require(set.nonEmpty, "updateWhere needs at least one assignment")
-    val md = metadata
     set.keys.find(md.identity.contains).foreach(n =>
       throw new IllegalArgumentException(s"updateWhere: $n is GENERATED " +
         "ALWAYS AS IDENTITY — its values cannot be assigned"))
@@ -3641,7 +3644,7 @@ class ManifestTable(spark: SparkSession, root: String,
       matched: Seq[MergeMatchedClause] = Nil,
       notMatched: Seq[MergeInsertClause] = Nil,
       notMatchedBySource: Seq[MergeMatchedClause] = Nil): Int = {
-    val v0 = versionOrLatest(None)
+    val (v0, md) = snapshot(None)
     require(matched.nonEmpty || notMatched.nonEmpty ||
       notMatchedBySource.nonEmpty, "MERGE needs at least one clause")
     val entries = entriesOf(v0)
@@ -3649,7 +3652,6 @@ class ManifestTable(spark: SparkSession, root: String,
     // merge (the common CDC-apply shape) skips the resolution
     val needRid = (matched ++ notMatchedBySource)
       .exists(_.isInstanceOf[MergeUpdateClause])
-    val md = metadata
     val live = liveWithPos(entries, md, withRid = needRid)
     val targetCols = live.columns
       .filterNot(Set(DvFileCol, DvPosCol, ManifestTable.RowIdCol)).toSeq
@@ -3990,10 +3992,9 @@ class ManifestTable(spark: SparkSession, root: String,
   def deleteKeysAndAppend(deletes: Seq[(String, Seq[String])],
       adds: Seq[DataFrame], strict: Boolean = false,
       version: Option[Int] = None): Int = {
-    val v0 = versionOrLatest(version)
+    val (v0, md) = snapshot(version)
     val entries = entriesOf(v0)
     val conflictsWith: Entry => Boolean = if (strict) _ => true else _ => false
-    val md = metadata
     val cdcOn = md.cdcEnabled
     // T15 (CDC mode): full hit rows are both the DV marks and the
     // recorded deletes, and the adds are both the written data files
@@ -4111,8 +4112,7 @@ class ManifestTable(spark: SparkSession, root: String,
     * value lands in few files).
     */
   def compact(targetFiles: Int = 1): Int = {
-    val v0 = latestVersion
-    val md = metadata
+    val (v0, md) = snapshotOpt(None)
     val df = withDerived(readRidPhys(v0, md))
     val compacted =
       if (partCols.nonEmpty) df.repartition(targetFiles, partCols.map(col): _*)
@@ -4129,9 +4129,8 @@ class ManifestTable(spark: SparkSession, root: String,
     * files only).
     */
   def compact(targetFiles: Int, scope: Column): Int = {
-    val v0 = versionOrLatest(None)
+    val (v0, md) = snapshot(None)
     val entries = entriesOf(v0)
-    val md = metadata
     val chosen = entriesInScope(entries, scope, md)
     if (chosen.isEmpty) return v0
     val df = withDerived(readEntries(chosen, md, withRowId = true) // DV-applying read
@@ -4157,9 +4156,8 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   def compactSmall(minFileBytes: Long, targetFileBytes: Long = 128L << 20,
       scope: Option[Column] = None): Int = {
-    val v0 = versionOrLatest(None)
+    val (v0, md) = snapshot(None)
     val entries = entriesOf(v0)
-    val md = metadata
     // scope narrows the CANDIDATES; the commit delta is still against
     // the full snapshot, so out-of-scope files carry by reference
     val sized = scope.fold(entries)(entriesInScope(entries, _, md)).map { e =>
@@ -4197,9 +4195,8 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   def reorgPurge(minDeletedFraction: Double = 0.0,
       scope: Option[Column] = None): Int = {
-    val v0 = versionOrLatest(None)
+    val (v0, md) = snapshot(None)
     val entries = entriesOf(v0)
-    val md = metadata
     val dvd = scope.fold(entries)(entriesInScope(entries, _, md))
       .filter(_.stats.contains(DvKey))
     val chosen =
@@ -4248,11 +4245,10 @@ class ManifestTable(spark: SparkSession, root: String,
     * table is already fully tracked.
     */
   def backfillRowIds(): Int = {
-    val v0 = versionOrLatest(None)
+    val (v0, md) = snapshot(None)
     val entries = entriesOf(v0)
     val unstamped = entries.filterNot(_.stats.contains(ManifestTable.RidKey))
     if (unstamped.isEmpty) return v0
-    val md = metadata
     val df = withDerived(readEntries(unstamped, md)) // DV-applying read
     val repart =
       if (partCols.nonEmpty)
@@ -4276,8 +4272,7 @@ class ManifestTable(spark: SparkSession, root: String,
     * read-many trade a 100 TB table wants.
     */
   def optimizeBy(column: String, targetFiles: Int = 8): Int = {
-    val v0 = latestVersion
-    val md = metadata
+    val (v0, md) = snapshotOpt(None)
     stampCdcNone(rewriteSnapshot(v0,
       readRidPhys(v0, md).repartitionByRange(targetFiles, col(column)), md), md)
   }
@@ -4298,8 +4293,7 @@ class ManifestTable(spark: SparkSession, root: String,
     * per-dimension clustering).
     */
   def optimizeByZ(cols: Seq[String], targetFiles: Int): Int = {
-    val v0 = latestVersion
-    val md = metadata
+    val (v0, md) = snapshotOpt(None)
     val df = readRidPhys(v0, md)
     val z = graft.operators.ZOrder.zValue(df, cols, bits = 4)
     stampCdcNone(rewriteSnapshot(v0, df.withColumn("_zorder", z)
@@ -4316,9 +4310,8 @@ class ManifestTable(spark: SparkSession, root: String,
     * table).
     */
   def optimizeByZ(cols: Seq[String], targetFiles: Int, scope: Column): Int = {
-    val v0 = versionOrLatest(None)
+    val (v0, md) = snapshot(None)
     val entries = entriesOf(v0)
-    val md = metadata
     val chosen = entriesInScope(entries, scope, md)
     if (chosen.isEmpty) return v0
     val df = withDerived(readEntries(chosen, md, withRowId = true) // DV-applying read
@@ -5331,10 +5324,15 @@ class ManifestTable(spark: SparkSession, root: String,
           // TIMESTAMP AS OF — the header form of the old min() rule
           val origIct = commitTimeOf(kept)
           // losing to a concurrent vacuum that materialized the same
-          // checkpoint IS success: its content is identical
-          publishOnce(ManifestTable.IctPrefix + origIct + "\n" +
-            resolved.map(_.line).mkString("\n") + "\n",
-            manifestPath(kept), manifestPath(kept)): Unit
+          // checkpoint IS success: its content is identical. Any other
+          // failure must stop before the delete phase below removes the
+          // versions this one resolves through
+          if (!publishOnce(ManifestTable.IctPrefix + origIct + "\n" +
+                resolved.map(_.line).mkString("\n") + "\n",
+                manifestPath(kept), manifestPath(kept)) &&
+              !fs.exists(manifestPath(kept)))
+            throw new IllegalStateException(
+              s"checkpoint materialization for v$kept failed")
         }
       }
       dropped.foreach { v =>
@@ -5353,7 +5351,7 @@ class ManifestTable(spark: SparkSession, root: String,
         }
       }
     }
-    def sweep(st: org.apache.hadoop.fs.FileStatus): Unit = {
+    def sweep(st: FileStatus): Unit = {
       if (!dryRun) fs.delete(st.getPath, false)
       deleted += st.getPath.toString
     }
@@ -5362,14 +5360,15 @@ class ManifestTable(spark: SparkSession, root: String,
     // old enough that no writer can still be mid-rename; vacuum is
     // their only cleanup path. Reported and dryRun-aware like the
     // data/DV sweeps.
-    logListing.foreach { st =>
+    val listing = logListing
+    listing.foreach { st =>
       if (st.getPath.getName.startsWith(".tmp-") &&
         st.getModificationTime < cutoff) sweep(st)
     }
     // superseded metadata records: one goes once its SUCCESSOR is past
     // the cutoff — a reader or updater that listed the log before the
     // successor landed may still open it until then. The latest stays.
-    val records = metadataRecords.map(_._2)
+    val records = metadataRecords(listing).map(_._2)
     records.zip(records.drop(1)).foreach { case (old, next) =>
       if (next.getModificationTime < cutoff) sweep(old)
     }
