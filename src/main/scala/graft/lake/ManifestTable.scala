@@ -719,14 +719,6 @@ class ManifestTable(spark: SparkSession, root: String,
     withIdentityCols(rowsOf(entriesOf(v), md, withRowId = true), md.identity)
   }
 
-  /** Rewrite-side read: the snapshot with row ids under their PHYSICAL
-    * column name, ready to be written back by an identity-preserving
-    * rewrite (compact/optimize/purge).
-    */
-  private def readRidPhys(version: Option[Int], md: TableMetadata): DataFrame =
-    rowsOf(entriesOf(versionOrLatest(version)), md, withRowId = true)
-      .withColumnRenamed(ManifestTable.RowIdCol, ManifestTable.RidPhysCol)
-
   /** Exact row count from manifest metadata alone — `Some(n)` when
     * every live file of the version carries the write-time `#n` count
     * stat; `None` (caller falls back to scanning) when any file
@@ -1228,26 +1220,29 @@ class ManifestTable(spark: SparkSession, root: String,
     updateMetadata(md => if (md.config.isDefined) md else md.copy(config = Some(config)))
 
   /** ALTER TABLE … PARTITIONED BY — change the partition layout
-    * (identity columns and/or transforms). This REWRITES the current
-    * snapshot under the new layout in one conflict-checked commit
-    * (concurrent writers of any kind conflict rather than losing
-    * rows), then records the new layout — so the table is never in a
-    * mixed-layout state and every partition-scoped op (tuple merge,
-    * partition overwrite, DV scoping) stays exact. O(table) — the
-    * honest cost of a layout change here; Iceberg's lazy multi-spec
-    * variant trades it for per-file spec tracking. History is
-    * preserved: earlier versions time-travel with their old layout
-    * (readers key on paths, not config). Returns a NEW instance
+    * (identity columns and/or transforms). This REWRITES every live
+    * file under the new layout through the maintenance rewrite
+    * ([[rewriteFiles]]: deletion vectors applied, row ids and so
+    * identity values kept, no change rows) in one commit that any
+    * concurrent commit conflicts with rather than losing rows, then
+    * records the new layout — so the table is never in a mixed-layout
+    * state and every partition-scoped op (tuple merge, partition
+    * overwrite, DV scoping) stays exact. O(table) — the honest cost of
+    * a layout change here; [[setPartitionSpec]] is the lazy variant.
+    * History is preserved: earlier versions time-travel with their old
+    * layout (readers key on paths, not config). Returns a NEW instance
     * configured with the evolved layout; the receiving instance keeps
     * its old view and should be discarded.
     */
   def evolvePartitionSpec(newIdentityCols: Seq[String],
       newTransformSpecs: Seq[String] = Nil): ManifestTable = {
     val md = metadata
-    val (v0, current) = validateNewSpec("evolvePartitionSpec",
+    val v0 = validateNewSpec("evolvePartitionSpec",
       newIdentityCols, newTransformSpecs, md)
     val evolved = relaidOut(newIdentityCols, newTransformSpecs)
-    evolved.stampCdcNone(evolved.rewriteSnapshot(Some(v0), current, md), md)
+    val entries = evolved.entriesOf(v0)
+    evolved.rewriteFiles(v0, entries, entries, md, entries.size,
+      conflictsWith = _ => true)
     evolved.recordLayout()
   }
 
@@ -1263,17 +1258,18 @@ class ManifestTable(spark: SparkSession, root: String,
     *    its OWN spec's transform (old daily files by `days`, new
     *    hourly files by `hours`);
     *  - [[merge]] scopes touched partitions per signature, and its
-    *    rewrites land under the new spec — as do [[compact]]/
-    *    [[compactSmall]]/[[reorgPurge]] — so the table migrates
+    *    rewrites land under the new spec — as does every maintenance
+    *    rewrite ([[compact]], [[compactSmall]], [[reorgPurge]],
+    *    [[optimizeByZ]], [[backfillRowIds]]) — so the table migrates
     *    progressively, paying O(touched) per op, never O(table);
     *  - path-exact ops that cannot scope a foreign layout
     *    ([[overwritePartitionValues]], [[readBucketed]]) refuse the
     *    mixed state with migration guidance instead of guessing.
     *
     * [[evolvePartitionSpec]] is the eager alternative (one O(table)
-    * rewrite, never a mixed state); this is the form that survives a
-    * 100 TB table, at the cost of mixed-layout snapshots until
-    * compaction or churn migrates the tail. Returns a NEW instance
+    * maintenance rewrite, never a mixed state); this is the form that
+    * survives a 100 TB table, at the cost of mixed-layout snapshots
+    * until compaction or churn migrates the tail. Returns a NEW instance
     * configured with the new layout; the receiver keeps its old view
     * and should be discarded. Time travel is unaffected (readers key
     * on paths, not config).
@@ -1299,10 +1295,10 @@ class ManifestTable(spark: SparkSession, root: String,
   /** Shared validation for a new partition spec: the table must have a
     * version (the spec change is observable), every referenced column
     * must exist, and none may sit behind a rename (hive paths bake
-    * physical names). Returns the pinned version and its frame.
+    * physical names). Returns the pinned version.
     */
   private def validateNewSpec(op: String, newIdentityCols: Seq[String],
-      newTransformSpecs: Seq[String], md: TableMetadata): (Int, DataFrame) = {
+      newTransformSpecs: Seq[String], md: TableMetadata): Int = {
     val v0 = latestVersion.getOrElse(
       throw new IllegalStateException(s"$op: no versions at $root"))
     val parsed = newTransformSpecs.map(PartitionTransform.parse)
@@ -1314,7 +1310,7 @@ class ManifestTable(spark: SparkSession, root: String,
     val renamed = needed.filter(c => toPhysical(c, md.columnMapping) != c)
     require(renamed.isEmpty,
       s"$op: renamed column(s) cannot partition: ${renamed.mkString(", ")}")
-    (v0, current)
+    v0
   }
 
   /** A version is taken if EITHER file form exists — a checkpoint
@@ -2365,21 +2361,6 @@ class ManifestTable(spark: SparkSession, root: String,
     fs.delete(branchFile(name), false): Unit
   }
 
-  /** Guarded full rewrite for read-modify-replace ops (compact,
-    * optimize, unpartitioned merge): the commit removes exactly the
-    * files of the snapshot that was read, so a concurrent commit of
-    * ANY kind is detected (rewritten files gone, or a new file
-    * appears → conflictsWith) instead of silently dropping its rows —
-    * the lost-update a blind overwrite would cause.
-    */
-  private def rewriteSnapshot(baseVersion: Option[Int], df: DataFrame,
-      md: TableMetadata): Int = {
-    val base = baseVersion.map(entriesOf).getOrElse(Seq.empty)
-    val newFiles = newEntries(writeDataFiles(df, md))
-    commitDelta(base, base.map(_.rel).toSet, newFiles,
-      conflictsWith = _ => true)
-  }
-
   /** L2: replace exactly one partition (dynamic partition overwrite).
     * `value = null` replaces the hive default (null) partition — the
     * filter must be null-aware or zero new files would be written
@@ -2604,9 +2585,16 @@ class ManifestTable(spark: SparkSession, root: String,
           newFiles, conflictsWith = inTouchedPartition), md)
         } finally currentOfFed.unpersist()
     } else {
-        stampCdcFileDiff(rewriteSnapshot(Some(v0), enforced(
-          attachRowIds(resolve(base, updates), entriesOf(v0), keys, md), md),
-          md), md)
+        // guarded full rewrite: the commit removes exactly the files
+        // that were read, and conflicts with ANY concurrent commit
+        // (rewritten files gone, or a new file appears) instead of
+        // silently dropping its rows — the lost update a blind
+        // overwrite would cause
+        val baseEntries = entriesOf(v0)
+        val newFiles = newEntries(writeDataFiles(enforced(
+          attachRowIds(resolve(base, updates), baseEntries, keys, md), md), md))
+        stampCdcFileDiff(commitDelta(baseEntries, baseEntries.map(_.rel).toSet,
+          newFiles, conflictsWith = _ => true), md)
     }
     } finally upsertDelta.unpersist()
   }
@@ -4004,12 +3992,7 @@ class ManifestTable(spark: SparkSession, root: String,
     val hitCheckpoints = scala.collection.mutable.ArrayBuffer[DataFrame]()
     val addsC = if (!cdcOn) adds else adds.map(_.localCheckpoint(true))
     // the live rows of the whole snapshot, listed once for every batch
-    lazy val live = {
-      val withPos = toLogicalRename(readFiles(
-        entries.map(e => new Path(root, e.rel).toString), md, withPos = true), md)
-      dvOf(entries).fold(withPos)(dv =>
-        withPos.join(dv, Seq(DvFileCol, DvPosCol), "left_anti"))
-    }
+    lazy val live = liveWithPos(entries, md, withRid = false)
     try {
       val hitDfs = deletes.flatMap { case (c, values0) =>
         val vals = values0.filter(_ != null).distinct
@@ -4036,7 +4019,7 @@ class ManifestTable(spark: SparkSession, root: String,
         (hitDfs.map(h => h.select(h.columns
             .filterNot(Set(DvFileCol, DvPosCol)).toSeq.map(col): _*)
             .withColumn(ct, lit("delete"))) ++
-          addsC.map(_.withColumn(ct, lit("insert"))))
+          addsC.map(a => withDeclared(a, md).withColumn(ct, lit("insert"))))
           .reduceOption(_ unionByName _)
       commitDv(v0, entries, marks, addsC, md, conflictsWith,
         appendWithoutMarks = true, cdc = cdc)
@@ -4106,40 +4089,63 @@ class ManifestTable(spark: SparkSession, root: String,
     entries.filter(e => tupleOf(e).forall(kept.contains))
   }
 
-  /** L5: OPTIMIZE — small-file compaction after many appends: rewrite
-    * the latest version through `targetFiles` shuffle partitions
-    * (hash-by-partition-column when partitioned, so each partition
-    * value lands in few files).
+  /** The one row-preserving rewrite behind every maintenance op
+    * (compaction, purge, clustering, row-id backfill, eager spec
+    * evolution — Iceberg's rewrite-data-files action): read `chosen`
+    * with deletion vectors applied and row ids kept physically, lay
+    * the rows out, write them, commit a delta against `entries` that
+    * removes exactly `chosen`, and stamp the version as changing
+    * nothing for the feed. Only an unpartitioned write takes a layout
+    * here — `targetFiles` hash-spread with no `clusterBy`, range
+    * clustering on one column, Morton clustering on several; a
+    * partitioned write lands one file per tuple through
+    * [[writeDataFiles]]'s own shuffle, which a layout step here would
+    * only precede as a wasted exchange. Concurrent appends rebase
+    * unless `conflictsWith` claims them. Returns `v0` when nothing is
+    * chosen.
     */
-  def compact(targetFiles: Int = 1): Int = {
-    val (v0, md) = snapshotOpt(None)
-    val df = withDerived(readRidPhys(v0, md))
-    val compacted =
-      if (partCols.nonEmpty) df.repartition(targetFiles, partCols.map(col): _*)
-      else df.repartition(targetFiles)
-    stampCdcNone(rewriteSnapshot(v0, compacted, md), md)
+  private def rewriteFiles(v0: Int, entries: Seq[Entry], chosen: Seq[Entry],
+      md: TableMetadata, targetFiles: Int, clusterBy: Seq[String] = Nil,
+      conflictsWith: Entry => Boolean = _ => false): Int = {
+    if (chosen.isEmpty) return v0
+    val rows = readEntries(chosen, md, withRowId = true)
+      .withColumnRenamed(ManifestTable.RowIdCol, ManifestTable.RidPhysCol)
+    val n = math.max(1, targetFiles)
+    val laidOut =
+      if (partCols.nonEmpty) rows
+      else clusterBy match {
+        case Seq() => rows.repartition(n)
+        case Seq(c) => rows.repartitionByRange(n, col(c))
+        case cs =>
+          rows.withColumn("_zorder", graft.operators.ZOrder.zValue(rows, cs, bits = 4))
+            .repartitionByRange(n, col("_zorder"))
+            .sortWithinPartitions("_zorder")
+            .drop("_zorder")
+      }
+    val newFiles = newEntries(writeDataFiles(laidOut, md))
+    stampCdcNone(commitDelta(entries, chosen.map(_.rel).toSet, newFiles,
+      conflictsWith), md)
   }
 
-  /** Partition-scoped OPTIMIZE (`OPTIMIZE ... WHERE`): rewrite ONLY
-    * the files whose partition tuple satisfies `scope` into
-    * `targetFiles` outputs; every out-of-scope file carries forward by
-    * reference. At 100 TB one compacts yesterday's partition, never
-    * the table — cost is O(scope), and concurrent writers to other
-    * partitions rebase cleanly (the commit is a delta on the scoped
-    * files only).
-    */
-  def compact(targetFiles: Int, scope: Column): Int = {
+  /** The latest version, its entries, and those of them in `scope`. */
+  private def scoped(scope: Option[Column])
+      : (Int, TableMetadata, Seq[Entry], Seq[Entry]) = {
     val (v0, md) = snapshot(None)
     val entries = entriesOf(v0)
-    val chosen = entriesInScope(entries, scope, md)
-    if (chosen.isEmpty) return v0
-    val df = withDerived(readEntries(chosen, md, withRowId = true) // DV-applying read
-      .withColumnRenamed(ManifestTable.RowIdCol, ManifestTable.RidPhysCol))
-    val compacted =
-      if (partCols.nonEmpty) df.repartition(targetFiles, partCols.map(col): _*)
-      else df.repartition(targetFiles)
-    val newFiles = newEntries(writeDataFiles(compacted, md))
-    stampCdcNone(commitDelta(entries, chosen.map(_.rel).toSet, newFiles), md)
+    (v0, md, entries, scope.fold(entries)(entriesInScope(entries, _, md)))
+  }
+
+  /** L5: OPTIMIZE — small-file compaction after many appends: rewrite
+    * the latest version into `targetFiles` files (one per partition
+    * tuple when partitioned). A `scope` (`OPTIMIZE ... WHERE`)
+    * rewrites ONLY the files whose partition tuple satisfies it; every
+    * out-of-scope file carries forward by reference. At 100 TB one
+    * compacts yesterday's partition, never the table — cost is
+    * O(scope), and concurrent appends rebase.
+    */
+  def compact(targetFiles: Int = 1, scope: Option[Column] = None): Int = {
+    val (v0, md, entries, chosen) = scoped(scope)
+    rewriteFiles(v0, entries, chosen, md, targetFiles)
   }
 
   /** L5d: incremental bin-pack OPTIMIZE — the form that survives
@@ -4156,27 +4162,17 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   def compactSmall(minFileBytes: Long, targetFileBytes: Long = 128L << 20,
       scope: Option[Column] = None): Int = {
-    val (v0, md) = snapshot(None)
-    val entries = entriesOf(v0)
     // scope narrows the CANDIDATES; the commit delta is still against
     // the full snapshot, so out-of-scope files carry by reference
-    val sized = scope.fold(entries)(entriesInScope(entries, _, md)).map { e =>
+    val (v0, md, entries, inScope) = scoped(scope)
+    val small = inScope.map { e =>
       e -> fs.getFileStatus(new Path(root, e.rel)).getLen
-    }
-    val (small, kept) = sized.partition { case (e, len) =>
-      len < minFileBytes || e.stats.contains(DvKey)
-    }
+    }.filter { case (e, len) => len < minFileBytes || e.stats.contains(DvKey) }
     if (small.isEmpty || (small.size == 1 && !small.head._1.stats.contains(DvKey)))
       return v0 // nothing to pack (a single small DV-free file gains nothing)
     val totalBytes = small.map(_._2).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val packed = withDerived(readEntries(small.map(_._1), md, withRowId = true) // DV-applying read
-      .withColumnRenamed(ManifestTable.RowIdCol, ManifestTable.RidPhysCol))
-    val repart =
-      if (partCols.nonEmpty) packed.repartition(nOut, partCols.map(col): _*)
-      else packed.repartition(nOut)
-    val newFiles = newEntries(writeDataFiles(repart, md))
-    stampCdcNone(commitDelta(entries, small.map(_._1.rel).toSet, newFiles), md)
+    val nOut = math.ceil(totalBytes.toDouble / targetFileBytes).toInt
+    rewriteFiles(v0, entries, small.map(_._1), md, nOut)
   }
 
   /** REORG PURGE — materialize soft deletes: rewrite exactly the files
@@ -4191,16 +4187,15 @@ class ManifestTable(spark: SparkSession, root: String,
     * Cost is O(DV'd files): candidate row counts come from parquet
     * footers only (no data scan), the rewrite reads just the chosen
     * files DV-applied, and the commit is an O(delta) entry. Untouched
-    * files carry forward by reference.
+    * files carry forward by reference; dead rows stay dead and live
+    * rows move verbatim, so the change feed sees nothing.
     */
   def reorgPurge(minDeletedFraction: Double = 0.0,
       scope: Option[Column] = None): Int = {
-    val (v0, md) = snapshot(None)
-    val entries = entriesOf(v0)
-    val dvd = scope.fold(entries)(entriesInScope(entries, _, md))
-      .filter(_.stats.contains(DvKey))
+    val (v0, md, entries, inScope) = scoped(scope)
+    val dvd = inScope.filter(_.stats.contains(DvKey))
     val chosen =
-      if (minDeletedFraction <= 0.0) dvd
+      if (minDeletedFraction <= 0.0 || dvd.isEmpty) dvd
       else {
         // per-file row counts in ONE job, grouped by input_file_name
         // and keyed by basename (uuid-named files — the newEntries
@@ -4219,17 +4214,7 @@ class ManifestTable(spark: SparkSession, root: String,
           rows > 0 && marks.toDouble / rows >= minDeletedFraction
         }
       }
-    if (chosen.isEmpty) return v0
-    val purged = withDerived(readEntries(chosen, md, withRowId = true) // DV-applying read
-      .withColumnRenamed(ManifestTable.RowIdCol, ManifestTable.RidPhysCol))
-    val repart =
-      if (partCols.nonEmpty)
-        purged.repartition(math.max(1, chosen.size), partCols.map(col): _*)
-      else purged.repartition(math.max(1, chosen.size))
-    val newFiles = newEntries(writeDataFiles(repart, md))
-    // row-preserving for the FEED: dead rows stay dead, live rows move
-    // verbatim — the change feed sees nothing
-    stampCdcNone(commitDelta(entries, chosen.map(_.rel).toSet, newFiles), md)
+    rewriteFiles(v0, entries, chosen, md, chosen.size)
   }
 
   /** T16 follow-up: adopt row tracking on a legacy table — one
@@ -4245,83 +4230,38 @@ class ManifestTable(spark: SparkSession, root: String,
     * table is already fully tracked.
     */
   def backfillRowIds(): Int = {
-    val (v0, md) = snapshot(None)
-    val entries = entriesOf(v0)
+    val (v0, md, entries, _) = scoped(None)
     val unstamped = entries.filterNot(_.stats.contains(ManifestTable.RidKey))
     if (unstamped.isEmpty) return v0
-    val df = withDerived(readEntries(unstamped, md)) // DV-applying read
-    val repart =
-      if (partCols.nonEmpty)
-        df.repartition(math.max(1, unstamped.size), partCols.map(col): _*)
-      else df.repartition(math.max(1, unstamped.size))
-    val newFiles = newEntries(writeDataFiles(repart, md))
-    val v = commitDelta(entries, unstamped.map(_.rel).toSet, newFiles)
-    // stamped UNCONDITIONALLY (not the cdcEnabled-gated stampCdcNone):
+    val v = rewriteFiles(v0, entries, unstamped, md, unstamped.size)
+    // stamped even without CDC (the rewrite stamps only CDC tables):
     // live rows move verbatim by construction, and the usual keyless
     // fallback (row-id diff) is exactly what a pre-tracking file
     // cannot serve — without the stamp the adoption commit itself
     // would be the last refusing version
-    putVersionTag(v, ManifestTable.CdcTagKey, ManifestTable.CdcNoChanges)
+    if (!md.cdcEnabled)
+      putVersionTag(v, ManifestTable.CdcTagKey, ManifestTable.CdcNoChanges)
     v
   }
 
-  /** L5b: cluster-compact — rewrite range-partitioned by `column` so
-    * each file covers a narrow value range (the single-dimension
-    * OPTIMIZE ZORDER analogue). Pays one sort-shuffle to make every
-    * later range read on that column skip most files: the write-once
-    * read-many trade a 100 TB table wants.
+  /** L5b/L5c: cluster-compact — rewrite so each file covers a narrow
+    * range of `cols`: range-partitioned on one column, Morton-curve
+    * clustered (OPTIMIZE ZORDER) on several, so range reads on ANY of
+    * them skip most files (a single-column sort only ever helps one).
+    * Pair with `statsCols = cols` so every zone map is recorded; 2–4
+    * columns is the practical range, each added dimension diluting
+    * per-dimension clustering. One quantile-sketch pass + one
+    * range-shuffle write, paid per OPTIMIZE, never per query — the
+    * write-once read-many trade a 100 TB table wants. A partitioned
+    * table lays out one file per tuple instead, which zone maps
+    * already separate; a `scope` rewrites only the tuples it selects
+    * (`OPTIMIZE ... WHERE ... ZORDER BY`).
     */
-  def optimizeBy(column: String, targetFiles: Int = 8): Int = {
-    val (v0, md) = snapshotOpt(None)
-    stampCdcNone(rewriteSnapshot(v0,
-      readRidPhys(v0, md).repartitionByRange(targetFiles, col(column)), md), md)
-  }
-
-  /** L5c: two-dimensional OPTIMIZE ZORDER — rewrite the table clustered
-    * along the Morton curve of (c1, c2) so range reads on EITHER column
-    * skip most files (a single-column sort only ever helps one of
-    * them). Pair with `statsCols = Seq(c1, c2)` so both zone maps are
-    * recorded. One quantile-sketch pass + one range-shuffle write; the
-    * same write-once/read-many trade as [[optimizeBy]], paid per
-    * OPTIMIZE, never per query.
-    */
-  def optimizeByZ(c1: String, c2: String, targetFiles: Int = 8): Int =
-    optimizeByZ(Seq(c1, c2), targetFiles)
-
-  /** N-column form — same Morton rewrite over every listed dimension
-    * (2–4 columns is the practical range; each added dimension dilutes
-    * per-dimension clustering).
-    */
-  def optimizeByZ(cols: Seq[String], targetFiles: Int): Int = {
-    val (v0, md) = snapshotOpt(None)
-    val df = readRidPhys(v0, md)
-    val z = graft.operators.ZOrder.zValue(df, cols, bits = 4)
-    stampCdcNone(rewriteSnapshot(v0, df.withColumn("_zorder", z)
-      .repartitionByRange(targetFiles, col("_zorder"))
-      .sortWithinPartitions("_zorder")
-      .drop("_zorder"), md), md)
-  }
-
-  /** Partition-scoped ZORDER (`OPTIMIZE ... WHERE ... ZORDER BY`):
-    * Morton-cluster ONLY the files whose partition tuple satisfies
-    * `scope`; the rest of the table carries forward untouched.
-    * Clustering quality is per-scope — exactly the Delta semantics,
-    * and the only affordable form at 100 TB (z-order one day, not the
-    * table).
-    */
-  def optimizeByZ(cols: Seq[String], targetFiles: Int, scope: Column): Int = {
-    val (v0, md) = snapshot(None)
-    val entries = entriesOf(v0)
-    val chosen = entriesInScope(entries, scope, md)
-    if (chosen.isEmpty) return v0
-    val df = withDerived(readEntries(chosen, md, withRowId = true) // DV-applying read
-      .withColumnRenamed(ManifestTable.RowIdCol, ManifestTable.RidPhysCol))
-    val z = graft.operators.ZOrder.zValue(df, cols, bits = 4)
-    val newFiles = newEntries(writeDataFiles(df.withColumn("_zorder", z)
-      .repartitionByRange(targetFiles, col("_zorder"))
-      .sortWithinPartitions("_zorder")
-      .drop("_zorder"), md))
-    stampCdcNone(commitDelta(entries, chosen.map(_.rel).toSet, newFiles), md)
+  def optimizeByZ(cols: Seq[String], targetFiles: Int = 8,
+      scope: Option[Column] = None): Int = {
+    require(cols.nonEmpty, "optimizeByZ needs at least one column")
+    val (v0, md, entries, chosen) = scoped(scope)
+    rewriteFiles(v0, entries, chosen, md, targetFiles, clusterBy = cols)
   }
 
   /** Auto-OPTIMIZE advisor (the `CALL graft.maintenance_plan` body):
@@ -4504,16 +4444,18 @@ class ManifestTable(spark: SparkSession, root: String,
     if (postChanged.isEmpty)
       return rowsOf(preChanged, md)
         .withColumn("_change_type", lit("delete"))
-    val pre = rowsOf(preChanged, md)
-    val post = rowsOf(postChanged, md)
     // a column added by this commit's files is null on the pre side
     // (same null-fill contract the streaming append path uses)
-    val allCols = (pre.schema ++ post.schema.filterNot(f =>
-      pre.columns.contains(f.name))).toSeq
-    def pad(df: DataFrame) = allCols.foldLeft(df) { (d, f) =>
-      if (d.columns.contains(f.name)) d
-      else d.withColumn(f.name, lit(null).cast(f.dataType))
+    def padded(pre: DataFrame, post: DataFrame): (DataFrame, DataFrame) = {
+      val allCols = pre.schema ++ post.schema.filterNot(f =>
+        pre.columns.contains(f.name))
+      def pad(df: DataFrame) = allCols.foldLeft(df) { (d, f) =>
+        if (d.columns.contains(f.name)) d
+        else d.withColumn(f.name, lit(null).cast(f.dataType))
+      }
+      (pad(pre), pad(post))
     }
+    val (pre, post) = padded(rowsOf(preChanged, md), rowsOf(postChanged, md))
     // T15: a whole-file-replacement stamp — removed files' live rows
     // are the deletes, added files' rows the inserts, keylessly and
     // at O(changed files). Defensive invariant: the stamp is only
@@ -4525,8 +4467,8 @@ class ManifestTable(spark: SparkSession, root: String,
       val shared = preChanged.map(_.rel).toSet
         .intersect(postChanged.map(_.rel).toSet)
       if (shared.isEmpty)
-        return pad(pre).withColumn("_change_type", lit("delete"))
-          .unionByName(pad(post).withColumn("_change_type", lit("insert")))
+        return pre.withColumn("_change_type", lit("delete"))
+          .unionByName(post.withColumn("_change_type", lit("insert")))
       if (keysOpt.isEmpty) throw new IllegalArgumentException(
         s"version $v carries a file-diff CDC stamp but re-points " +
           s"${shared.size} file(s) — invalid stamp; pass keys for a " +
@@ -4534,7 +4476,7 @@ class ManifestTable(spark: SparkSession, root: String,
       // else: fall through to the keyed diff, which ignores the stamp
     }
     keysOpt match {
-      case Some(keys) => diffByKey(pad(pre), pad(post), keys)
+      case Some(keys) => diffByKey(pre, post, keys)
       case None =>
         // T16 row tracking: an in-place commit with no sidecar diffs
         // by the STABLE ROW ID — re-pointed files resolve the same
@@ -4543,8 +4485,8 @@ class ManifestTable(spark: SparkSession, root: String,
         // kernel pairs pre/post exactly. Refuses (naming every fix)
         // only when a touched file predates row tracking: NULL ids
         // under the null-safe join would cross-match unrelated rows.
-        val preR = rowsOf(preChanged, md, withRowId = true)
-        val postR = rowsOf(postChanged, md, withRowId = true)
+        val (preR, postR) = padded(rowsOf(preChanged, md, withRowId = true),
+          rowsOf(postChanged, md, withRowId = true))
         // a #rid-stamped file can never yield a NULL id (base + index
         // is total), so the probe jobs run only for files PREDATING
         // row tracking, whose physical column may or may not cover
@@ -4561,13 +4503,7 @@ class ManifestTable(spark: SparkSession, root: String,
               "(no row-id stamp) — pass keys for a keyed diff, " +
               "enableCdc() before such commits, or rewrite the file " +
               "(compactSmall/reorgPurge) to materialize row ids")
-        val allColsR = (preR.schema ++ postR.schema.filterNot(f =>
-          preR.columns.contains(f.name))).toSeq
-        def padR(df: DataFrame) = allColsR.foldLeft(df) { (d, f) =>
-          if (d.columns.contains(f.name)) d
-          else d.withColumn(f.name, lit(null).cast(f.dataType))
-        }
-        diffByKey(padR(preR), padR(postR), Seq(ManifestTable.RowIdCol))
+        diffByKey(preR, postR, Seq(ManifestTable.RowIdCol))
           .drop(ManifestTable.RowIdCol)
     }
   }
@@ -5035,23 +4971,6 @@ class ManifestTable(spark: SparkSession, root: String,
     vacuumImpl(retain, dryRun, minAgeMs) { (_, dataCount, other) =>
       dataCount + other.size
     }
-
-  /** [[vacuumCount]] that additionally persists the deleted (or, with
-    * `dryRun`, would-be-deleted) path list as a single-column parquet
-    * table at `outPath` — the audit-trail form for big tables, written
-    * executor-to-disk without driver materialization.
-    */
-  def vacuumReport(outPath: String, retain: Int = 1,
-      dryRun: Boolean = false,
-      minAgeMs: Long = ManifestTable.DefaultVacuumMinAgeMs): Long = {
-    import spark.implicits._
-    vacuumImpl(retain, dryRun, minAgeMs) { (data, dataCount, other) =>
-      data.toDF("path")
-        .unionByName(other.toDF("path"))
-        .write.mode("overwrite").parquet(outPath)
-      dataCount + other.size
-    }
-  }
 
   /** The vacuum engine behind [[vacuum]]/[[vacuumCount]]. `finish`
     * receives (persisted Dataset of deleted data-file paths, its

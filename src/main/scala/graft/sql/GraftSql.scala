@@ -1,7 +1,7 @@
 package graft.sql
 
 import graft.lake.ManifestTable
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
@@ -251,6 +251,8 @@ case class GraftProcedureCommand(proc: String, args: Seq[Any])
   }
   private def optNum(i: Int, dflt: Long): Long =
     if (args.length > i) num(i) else dflt
+  private def optExpr(i: Int): Option[Column] =
+    if (args.length > i) Some(expr(str(i))) else None
 
   override def run(session: SparkSession): Seq[Row] = {
     // every procedure's table argument takes a path OR a catalog name
@@ -293,17 +295,13 @@ case class GraftProcedureCommand(proc: String, args: Seq[Any])
       case "optimize" =>
         // optimize(root [, targetFiles [, partition_predicate]]) —
         // with a predicate only the matching partitions' files rewrite
-        if (args.length > 2)
-          versionRow(table.compact(num(1).toInt, expr(str(2))))
-        else versionRow(table.compact(optNum(1, 1).toInt))
+        versionRow(table.compact(optNum(1, 1).toInt, optExpr(2)))
       case "optimize_small" =>
-        versionRow(table.compactSmall(num(1), optNum(2, 128L << 20),
-          if (args.length > 3) Some(expr(str(3))) else None))
+        versionRow(table.compactSmall(num(1), optNum(2, 128L << 20), optExpr(3)))
       case "reorg" =>
         // reorg(root [, min_deleted_fraction [, partition_predicate]])
         versionRow(table.reorgPurge(
-          if (args.length > 1) str(1).toDouble else 0.0,
-          if (args.length > 2) Some(expr(str(2))) else None))
+          if (args.length > 1) str(1).toDouble else 0.0, optExpr(2)))
       case "wap_stage" =>
         // wap_stage(root, sourceView, branch)
         table.stageBranch(str(2), session.table(str(1)))
@@ -318,13 +316,7 @@ case class GraftProcedureCommand(proc: String, args: Seq[Any])
       case "zorder" =>
         // zorder(root, colsCsv [, targetFiles [, partition_predicate]])
         val cols = str(1).split(',').map(_.trim).filter(_.nonEmpty).toSeq
-        require(cols.nonEmpty, "graft.zorder: empty column list")
-        versionRow(
-          if (args.length > 3)
-            table.optimizeByZ(cols, num(2).toInt, expr(str(3)))
-          else if (cols.size == 1)
-            table.optimizeBy(cols.head, optNum(2, 8).toInt)
-          else table.optimizeByZ(cols, optNum(2, 8).toInt))
+        versionRow(table.optimizeByZ(cols, optNum(2, 8).toInt, optExpr(3)))
       case "clone" =>
         // clone(root, destRoot) — shallow clone: dest gets its own log
         // referencing the source's data files (zero data movement)

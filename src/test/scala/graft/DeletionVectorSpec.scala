@@ -279,7 +279,7 @@ class DeletionVectorSpec extends SparkTestBase {
     val mt = new ManifestTable(spark, dir,
       statsCol = Some("o_orderkey"), bloomCol = Some("o_custkey"))
     mt.write(orders, "overwrite")
-    mt.optimizeBy("o_orderkey", targetFiles = 6) // cluster → zones prune
+    mt.optimizeByZ(Seq("o_orderkey"), targetFiles = 6) // cluster → zones prune
     val keys = orders.select("o_orderkey").orderBy(col("o_orderkey").asc)
       .collect().map(_.getAs[Number](0).longValue)
     val (lo, hi) = (keys(5), keys(20)) // narrow slice of one file
@@ -363,6 +363,7 @@ class DeletionVectorSpec extends SparkTestBase {
     assert(dvFileCount(mt) === 0)
     // idempotent: nothing left to purge → same version back, no commit
     assert(mt.reorgPurge() === vPurged)
+    assert(mt.reorgPurge(minDeletedFraction = 0.5) === vPurged)
     assert(mt.latestVersion.get === vPurged)
 
     // ~33% deleted per file < 90% threshold → files spared, DVs stay
@@ -469,6 +470,22 @@ class DeletionVectorSpec extends SparkTestBase {
       "overlapping batches must dedup to the union of their hits")
     // the read path agrees with the recorded bookkeeping end to end
     assert(mt.read().count() === live.count() - unionHits)
+  }
+
+  test("deleteKeysAndAppend change rows carry declared columns, like " +
+      "every other DML's") {
+    val mt = new ManifestTable(spark, scratch("del_keys_declared"))
+    mt.write(spark.range(10).select(col("id"), concat(lit("v"), col("id")).as("s")),
+      "overwrite")
+    mt.enableCdc()
+    mt.addColumns("note STRING")
+    val v = mt.deleteKeysAndAppend(Seq("id" -> Seq("3")),
+      Seq(spark.range(3, 4).select(col("id"), lit("new").as("s"))))
+    val changes = mt.changesAt(v, None)
+    assert(changes.columns.contains("note"))
+    assert(changes.groupBy("_change_type").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap ===
+      Map("delete" -> 1L, "insert" -> 1L))
   }
 
   test("shallow clone of a DV-carrying table reads the source's live rows") {

@@ -70,6 +70,10 @@ class IdentityColumnSpec extends SparkTestBase {
       .collect().toMap
     assert(restored === before)
     assert(t.latestVersion.get > v)
+    // an eager layout change rewrites every file and keeps every value
+    val evolved = t.evolvePartitionSpec(Nil, Seq("bucket(2,k)"))
+    assert(evolved.read().select("k", "uid").as[(Long, Long)]
+      .collect().toMap === before)
   }
 
   test("identity: GENERATED ALWAYS — explicit values refuse on write, " +

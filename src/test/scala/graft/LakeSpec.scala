@@ -236,7 +236,7 @@ class LakeSpec extends SparkTestBase {
     val prunedBefore = mt.filesFor(range).size
     assert(prunedBefore === allBefore, "hash layout shouldn't be skippable")
 
-    mt.optimizeBy("o_orderkey", targetFiles = 8)
+    mt.optimizeByZ(Seq("o_orderkey"), targetFiles = 8)
     val allAfter = mt.filesOf(mt.latestVersion.get).size
     val prunedAfter = mt.filesFor(range).size
     assert(prunedAfter < allAfter,
@@ -259,7 +259,7 @@ class LakeSpec extends SparkTestBase {
     assert(mt.filesFor(range("o_orderkey")).size === all0)
     assert(mt.filesFor(range("o_custkey")).size === all0)
 
-    mt.optimizeByZ("o_orderkey", "o_custkey", targetFiles = 16)
+    mt.optimizeByZ(Seq("o_orderkey", "o_custkey"), targetFiles = 16)
     val v = mt.latestVersion.get
     val all = mt.filesOf(v).size
     val pk = mt.filesFor(range("o_orderkey")).size
@@ -512,7 +512,7 @@ class LakeSpec extends SparkTestBase {
       statsCols = Seq("o_orderkey", "o_custkey"))
     val base = Q.t(spark, sf, "orders")
     mt.write(base.repartition(8), "overwrite")
-    mt.optimizeByZ("o_orderkey", "o_custkey", targetFiles = 16)
+    mt.optimizeByZ(Seq("o_orderkey", "o_custkey"), targetFiles = 16)
     val ranges = Seq((0L, 10L), (700L, 701L), (1499L, 1600L), (5L, 1400L),
       (2000L, 3000L), (0L, Long.MaxValue))
     for (c <- Seq("o_orderkey", "o_custkey"); (lo, hi) <- ranges) {

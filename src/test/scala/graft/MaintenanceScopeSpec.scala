@@ -43,7 +43,7 @@ class MaintenanceScopeSpec extends SparkTestBase {
     val beforeData = t.read().collect().toSet
     val k1 = before.filter(_.contains("k=1"))
     assert(k1.size > 1, "fixture must hold multiple k=1 files")
-    t.compact(1, col("k") === 1)
+    t.compact(1, Some(col("k") === 1))
     val after = files(t)
     // untouched partitions carry forward by reference
     assert((before -- k1).subsetOf(after), "out-of-scope files must carry")
@@ -104,7 +104,7 @@ class MaintenanceScopeSpec extends SparkTestBase {
     val inScope = before.filter(f => f.contains("k=0/") || f.contains("k=1/"))
     val offScope = before -- inScope
     assert(before.exists(_.contains("k=10")), "fixture needs 2-digit keys")
-    t.optimizeByZ(Seq("a", "b"), 2, col("k") < 2)
+    t.optimizeByZ(Seq("a", "b"), 2, Some(col("k") < 2))
     val after = files(t)
     assert(offScope.subsetOf(after), "k>=2 files (incl. k=10) must carry")
     assert((after -- offScope)
@@ -112,18 +112,30 @@ class MaintenanceScopeSpec extends SparkTestBase {
     assert(t.read().collect().toSet === beforeData)
   }
 
+  test("full and scoped compaction keep declared-only columns out of " +
+      "the files, so deprecateColumns still hides them") {
+    Seq(None, Some(col("k") >= 0)).foreach { scope =>
+      val (t, _) = freshTable(s"declared_${scope.isDefined}")
+      t.addColumns("note STRING")
+      t.compact(1, scope)
+      t.deprecateColumns(Seq("note"))
+      assert(t.read().columns.toSeq.sorted === Seq("id", "k", "s"),
+        s"scope = $scope")
+    }
+  }
+
   test("scope predicates off the partition layout refuse; empty scope " +
       "is a no-op commit-wise") {
     val (t, _) = freshTable("refuse")
-    val e = intercept[IllegalArgumentException](t.compact(1, col("s") === "v1"))
+    val e = intercept[IllegalArgumentException](t.compact(1, Some(col("s") === "v1")))
     assert(e.getMessage.contains("partition columns only"))
     val unpart = new ManifestTable(spark, scratch("unpart"))
     unpart.write(spark.range(10).toDF("id"), "overwrite")
     val e2 = intercept[IllegalArgumentException](
-      unpart.compact(1, col("id") === 1))
+      unpart.compact(1, Some(col("id") === 1)))
     assert(e2.getMessage.contains("partition columns only"))
     val v = t.latestVersion.get
-    assert(t.compact(1, col("k") === 99) === v, "empty scope: no commit")
+    assert(t.compact(1, Some(col("k") === 99)) === v, "empty scope: no commit")
   }
 
   test("maintenance advisor recommends SCOPED commands when the need " +

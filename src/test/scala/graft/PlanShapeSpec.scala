@@ -336,4 +336,57 @@ class PlanShapeSpec extends SparkTestBase {
     assert(windowLines.forall(_.contains("day_total")),
       s"window must aggregate day totals, not raw rows:\n${windowLines.mkString("\n")}")
   }
+
+  /** Shuffle-exchange counts of the data-file writes `op` runs under
+    * `root`, one per write, from the executed plans a
+    * QueryExecutionListener sees.
+    */
+  private def writeShuffles(root: String)(op: => Unit): Seq[Int] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (helper.find(qe.executedPlan) {
+          case DataWritingCommandExec(w: InsertIntoHadoopFsRelationCommand, _) =>
+            w.outputPath.toString.contains(root)
+          case _ => false
+        }.isDefined) writes.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      op
+      org.apache.spark.graft.ListenerDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    writes.asScala.toSeq.map(p =>
+      helper.collect(p) { case s: ShuffleExchangeExec => s }.size)
+  }
+
+  test("maintenance rewrites on partitioned tables plan one shuffle: " +
+      "the write's own tuple hash") {
+    import graft.lake.ManifestTable
+    val base = s"${sys.props("java.io.tmpdir")}/graft_plan_rewrite_${System.nanoTime()}"
+    val rows = spark.range(200).select(col("id"), (col("id") % 3).as("k"),
+      (col("id") * 7 % 50).as("a"), (col("id") * 13 % 50).as("b"))
+    // a transform puts a projection between a layout step and the
+    // write's shuffle, so a layout step there would plan its own
+    val bucketed = new ManifestTable(spark, s"$base/bucketed",
+      partitionSpec = Seq("bucket(4,id)"))
+    bucketed.write(rows, "overwrite")
+    bucketed.write(rows.withColumn("id", col("id") + 200), "append")
+    assert(writeShuffles(s"$base/bucketed")(bucketed.compact(2)) === Seq(1))
+    // Morton clustering would add a range exchange before the write's
+    val byK = new ManifestTable(spark, s"$base/identity", partitionCol = Some("k"))
+    byK.write(rows, "overwrite")
+    val before = byK.read().collect().toSet
+    assert(writeShuffles(s"$base/identity")(
+      byK.optimizeByZ(Seq("a", "b"), 4)) === Seq(1))
+    assert(byK.read().collect().toSet === before)
+  }
 }

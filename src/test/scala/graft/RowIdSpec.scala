@@ -110,6 +110,8 @@ class RowIdSpec extends SparkTestBase {
     assert(ids(mt) === before, "bin-pack moved ids")
     mt.compact(targetFiles = 1)
     assert(ids(mt) === before, "full compaction moved ids")
+    val evolved = mt.evolvePartitionSpec(Seq("k"))
+    assert(ids(evolved) === before, "eager spec evolution moved ids")
   }
 
   test("restore and clone-then-append keep ids collision-free") {
