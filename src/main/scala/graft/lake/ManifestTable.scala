@@ -32,9 +32,9 @@ import java.util.UUID
   * untouched-partition writer) and throws
   * ConcurrentModificationException when they overlap — never a silent
   * lost update. See [[commitDelta]]. Scale: the manifest lists FILES,
-  * not rows — commit cost is O(files), never O(data). Partition-aware
-  * merge rewrites only touched partitions and carries every other file
-  * forward by reference.
+  * not rows — commit cost is O(files), never O(data). MERGE, UPDATE and
+  * DELETE mark dead rows in deletion vectors and append the new copies,
+  * so every file they do not mark carries forward by reference.
   *
   * Data skipping (L7): with `statsCols` set, each commit records those
   * columns' per-file min/max (one distributed job over the NEW files
@@ -350,7 +350,7 @@ object ManifestTable {
   private[lake] val CdcNoChanges = "none"
 
   /** Tag value for a whole-file replacement commit (overwrite,
-    * restore, legacy partition-rewrite merge): the change feed derives
+    * partition overwrite, restore): the change feed derives
     * the commit's changes keylessly FROM THE FILE DELTA — removed
     * files' live rows as deletes, added files' rows as inserts (the
     * Delta INSERT-OVERWRITE CDF representation). Exact in effect
@@ -473,30 +473,14 @@ class ManifestTable(spark: SparkSession, root: String,
     }
 
   /** Partition-tuple value expression over a frame that carries SOURCE
-    * columns (derived columns may be absent — merge feeds raw user
-    * frames here).
+    * columns (derived columns may be absent — partition overwrite
+    * takes raw user frames).
     */
   private def partValueExpr(df: DataFrame, c: String): Column =
     transforms.find(_.name == c) match {
       case Some(t) if !df.columns.contains(c) =>
         t.derive(col(t.src), df.schema(t.src).dataType)
       case _ => col(c)
-    }
-
-  /** [[partValueExpr]] generalized to ANY layout signature column —
-    * including hidden columns of a PREVIOUS partition spec (parsed
-    * back from their names) and identity columns renamed after they
-    * left the spec (mapped physical → logical). What per-signature
-    * merge scoping evaluates after a lazy [[setPartitionSpec]].
-    */
-  private def partValueExprFor(df: DataFrame, c: String,
-      mapping: Map[String, String]): Column =
-    transforms.find(_.name == c).orElse(PartitionTransform.fromName(c)) match {
-      case Some(t) if !df.columns.contains(c) =>
-        val src = mapping.getOrElse(t.src, t.src)
-        t.derive(col(src), df.schema(src).dataType)
-      case _ =>
-        col(if (df.columns.contains(c)) c else mapping.getOrElse(c, c))
     }
 
   /** All zone-map columns: the legacy single `statsCol` plus any
@@ -1257,10 +1241,10 @@ class ManifestTable(spark: SparkSession, root: String,
     *  - file skipping ([[mightMatch]]) prunes each file by
     *    its OWN spec's transform (old daily files by `days`, new
     *    hourly files by `hours`);
-    *  - [[merge]] scopes touched partitions per signature, and its
-    *    rewrites land under the new spec — as does every maintenance
-    *    rewrite ([[compact]], [[compactSmall]], [[reorgPurge]],
-    *    [[optimizeByZ]], [[backfillRowIds]]) — so the table migrates
+    *  - the copies [[merge]] and [[updateWhere]] append land under
+    *    the new spec, as does every maintenance rewrite ([[compact]],
+    *    [[compactSmall]], [[reorgPurge]], [[optimizeByZ]],
+    *    [[backfillRowIds]]) — so the table migrates
     *    progressively, paying O(touched) per op, never O(table);
     *  - path-exact ops that cannot scope a foreign layout
     *    ([[overwritePartitionValues]], [[readBucketed]]) refuse the
@@ -1480,10 +1464,10 @@ class ManifestTable(spark: SparkSession, root: String,
     *    concurrently-deleted rows → both are real conflicts);
     *  - no concurrently-added entry may satisfy `conflictsWith` (the
     *    caller's semantic overlap test, e.g. "lands in a partition my
-    *    merge rewrote" — rows added there concurrently would be
-    *    dropped or double-merged by a blind rebase).
+    *    rewrite replaced" — rows added there concurrently would be
+    *    dropped or double-counted by a blind rebase).
     *
-    * Disjoint writers (append+append, merges of different partitions,
+    * Disjoint writers (append+append, merges of different files,
     * stream sink + compaction of untouched partitions) all commit;
     * overlapping writers get a ConcurrentModificationException and
     * re-run on the new snapshot. Retry budget bounds livelock under a
@@ -2442,190 +2426,58 @@ class ManifestTable(spark: SparkSession, root: String,
   private def inPartition(f: String, c: String, value: String): Boolean =
     f.split("/").contains(partSegment(c, value))
 
-  /** L1: MERGE INTO — keyed upsert, source-wins, idempotent, with
-    * optional delete tombstones (`deleteCol`: boolean column present in
-    * `updates` but not the table; matched keys with it true are
-    * removed). When the table is partitioned only touched partitions
-    * are rewritten; all other files carry forward by reference (no data
-    * movement). A partition is touched if the feed changes rows in it
-    * OR holds the current row of any fed key — so an update that moves
-    * a key to a new partition value rewrites BOTH partitions and leaves
-    * no stale copy behind. Returns the new version, or the current one
-    * when the merge is a no-op (re-applying an already-applied feed
-    * commits nothing).
+  /** L1: keyed MERGE — upsert, source wins, idempotent, with optional
+    * delete tombstones (`deleteCol`: a boolean column present in
+    * `updates` but not the table; NULL reads as false). `updates`
+    * carries exactly the table's columns plus `deleteCol`; it may omit
+    * generated columns (computed here) and may never carry identity
+    * columns. One [[mergeInto]] call, keys matched null-safely:
+    *
+    *   WHEN MATCHED AND s.deleteCol         THEN DELETE
+    *   WHEN MATCHED AND <any column differs> THEN UPDATE SET *
+    *   WHEN NOT MATCHED AND NOT s.deleteCol THEN INSERT *
+    *
+    * so only changed rows are marked and re-appended, and re-applying
+    * an applied feed commits nothing (returns the current version). A
+    * feed with several applying rows for one table row is a
+    * cardinality violation and throws — compact it first
+    * ([[Merge.latestPerKey]]); every table row holding a fed key is
+    * updated, duplicates included. A merge that inserts a key conflicts
+    * with any concurrent commit that adds files ([[mergeInto]]).
     */
   def merge(updates0: DataFrame, keys: Seq[String],
       deleteCol: Option[String] = None): Int = {
-    // pin the snapshot: every read below (base rows, touched scan,
-    // carried entries) must see ONE version, and the commit is a delta
-    // against exactly that version so concurrent disjoint writers rebase
     val (v0, md) = snapshot(None)
     requireNoReservedCols(updates0, "merge", md)
-    // a merge source may omit generated columns — compute them on both
-    // sides so the schema contract and the change detection line up.
-    // The tombstone flag (not a table column) rides along untouched:
-    // generated expressions only reference table columns.
     val updates = withGenerated(updates0, md)
-    // identity columns are DERIVED (start + step * row id) and the feed
-    // can never carry them — merge over the identity-free frame; values
-    // re-derive from the preserved row ids (attachRowIds) on read
-    val base = withGenerated(readAt(Some(v0), md), md)
-      .drop(md.identity.keys.toSeq: _*)
-    def resolve(b: DataFrame, u: DataFrame): DataFrame = deleteCol match {
-      case Some(d) => Merge.applyCdc(b, u, keys, d)
-      case None => Merge.upsert(b, u, keys)
-    }
-    val upserts = deleteCol.fold(updates)(d =>
-      updates.filter(!coalesce(col(d), lit(false))).drop(d))
-    val deletes = deleteCol.map(d => updates.filter(coalesce(col(d), lit(false))))
-    // cache: the exceptAll against the full base is the merge's most
-    // expensive shuffle, and it feeds the no-op check, changedKeys, AND
-    // the touched-partition scan — uncached it would run three times
-    val upsertDelta = Merge.effectiveChanges(base, upserts).cache()
-    try {
-    val deleteHits = deletes.map(_.select(keys.map(col): _*).distinct()
-      .join(base, keys, "left_semi"))
-    val noop = upsertDelta.isEmpty && deleteHits.forall(_.isEmpty)
-    if (noop) return latestVersion.get
-    if (partCols.nonEmpty) {
-        // touched = partition TUPLES the changed rows land in ∪ tuples
-        // currently holding any CHANGED key (covers deletes + partition
-        // moves). Keys come from upsertDelta + tombstones, NOT the raw
-        // feed: a largely no-op incremental feed must not rewrite every
-        // partition that merely contains a fed-but-unchanged key.
-        val changedKeys = {
-          val uk = upsertDelta.select(keys.map(col): _*)
-          deletes.fold(uk)(d => uk.union(d.select(keys.map(col): _*))).distinct()
-        }
-        // cached: tuplesFor runs one tuple-projection job PER layout
-        // signature (two right after a lazy spec evolution), and each
-        // would otherwise recompute this base-wide semi-join
-        val currentOfFed = base.join(changedKeys, keys, "left_semi").cache()
-        try {
-        val baseEntries = entriesOf(v0)
-        // PER LAYOUT SIGNATURE: after a lazy setPartitionSpec the
-        // snapshot mixes files from different specs, and each file must
-        // be scoped by the tuple ITS OWN path carries — touched tuples
-        // are computed under every signature present (usually one, two
-        // right after an evolution), and a file is removed iff its own
-        // signature's tuple is touched. All rows of a hive-partitioned
-        // file share its dir tuple, so rewriting EXACTLY the removed
-        // files' rows (readEntries below) both carries every untouched
-        // row and migrates rewritten rows to the current layout.
-        val signatures = (baseEntries.map(e =>
-          ManifestTable.layoutColsOf(e.rel)).toSet + partCols).toSeq
-        def tuplesFor(sig: Seq[String]): Set[Seq[String]] =
-          if (sig.isEmpty) Set(Seq.empty) // legacy unpartitioned files
-          else {
-            def tupleOf(df: DataFrame) =
-              df.select(sig.map(c =>
-                partValueExprFor(df, c, md.columnMapping).cast("string")): _*)
-            tupleOf(upsertDelta)
-              .union(tupleOf(currentOfFed))
-              .distinct()
-              .collect() // bounded: distinct touched partition tuples
-              .map(r => sig.indices.map(i =>
-                if (r.isNullAt(i)) null else r.getString(i)): Seq[String])
-              .toSet
-          }
-        // per-signature tuple projections are independent bounded jobs
-        // over the two cached frames — overlapped on the commit pool
-        // (§2.6; two signatures right after a lazy spec evolution
-        // otherwise serialize two cluster-idle job tails)
-        val touchedBySig = scala.collection.mutable.Map(
-          signatures.map(s => s -> ManifestTable.async(tuplesFor(s)))
-            .map { case (s, f) => s -> ManifestTable.await(f) }: _*)
-        def inTouchedPartition(e: Entry): Boolean = {
-          val sig = ManifestTable.layoutColsOf(e.rel)
-          // getOrElseUpdate: a concurrent writer's new files can carry
-          // a signature the base snapshot didn't (it evolved the spec
-          // mid-flight); computed once, before upsertDelta unpersists
-          touchedBySig.getOrElseUpdate(sig, tuplesFor(sig)).exists(t =>
-            sig.zip(t).forall { case (c, v) => inPartition(e.rel, c, v) })
-        }
-        val removed = baseEntries.filter(inTouchedPartition)
-        // NULL is a legal partition value on any level (hive default
-        // partition): each tuple predicate tests it explicitly — an
-        // equality/isin would never match and rows landing in / moving
-        // out of the null partition would be silently dropped
-        // derived-value comparisons resolve source types against the
-        // base schema (updates must be merge-compatible with it anyway)
-        def tuplePred(df: DataFrame, sig: Seq[String], t: Seq[String]): Column =
-          sig.zip(t).map { case (c, v) =>
-            val pv = partValueExprFor(df, c, md.columnMapping)
-            if (v == null) pv.isNull else pv.cast("string") === lit(v)
-          }.reduce(_ && _)
-        def inTouchedAny(df: DataFrame): Column =
-          touchedBySig.toSeq.flatMap { case (sig, ts) =>
-            if (sig.isEmpty) Nil else ts.toSeq.map(tuplePred(df, sig, _))
-          }.reduceOption(_ || _).getOrElse(lit(false))
-        // the rewrite set = exactly the removed files' rows (their
-        // untouched-under-the-current-spec rows must be carried too —
-        // an old coarser partition rewrites whole); resolve() keeps
-        // base rows whose keys the feed doesn't change. An insert-only
-        // merge into fresh partitions removes nothing — filter(false)
-        // keeps the schema where readEntries(Nil) could not
-        val touchedBase =
-          if (removed.isEmpty) base.filter(lit(false))
-          else withGenerated(rowsOf(removed, md), md)
-        // tombstones bypass the partition filter: they match by KEY and
-        // their own partition-column values may not reflect the base row's
-        val touchedUpdates = deleteCol match {
-          case Some(d) =>
-            updates.filter(coalesce(col(d), lit(false)) || inTouchedAny(updates))
-          case None => updates.filter(inTouchedAny(updates))
-        }
-        val merged = attachRowIds(
-          resolve(touchedBase, touchedUpdates), removed, keys, md)
-        val newFiles = newEntries(writeDataFiles(enforced(merged, md), md))
-        // delta = rewrite of the touched partitions only: a concurrent
-        // merge/append to OTHER partitions rebases and both commits
-        // land; concurrent changes inside a touched partition conflict
-        stampCdcFileDiff(commitDelta(baseEntries, removed.map(_.rel).toSet,
-          newFiles, conflictsWith = inTouchedPartition), md)
-        } finally currentOfFed.unpersist()
-    } else {
-        // guarded full rewrite: the commit removes exactly the files
-        // that were read, and conflicts with ANY concurrent commit
-        // (rewritten files gone, or a new file appears) instead of
-        // silently dropping its rows — the lost update a blind
-        // overwrite would cause
-        val baseEntries = entriesOf(v0)
-        val newFiles = newEntries(writeDataFiles(enforced(
-          attachRowIds(resolve(base, updates), baseEntries, keys, md), md), md))
-        stampCdcFileDiff(commitDelta(baseEntries, baseEntries.map(_.rel).toSet,
-          newFiles, conflictsWith = _ => true), md)
-    }
-    } finally upsertDelta.unpersist()
-  }
-
-  /** T16: re-attach stable row ids to a merge's rewritten rows — each
-    * result row inherits the id of the base row holding its key (the
-    * Delta row-tracking MERGE contract: an upsert changes values, not
-    * identity); fresh keys read NULL here and draw new ids from the
-    * written file's base allotment. One keyed null-safe left join
-    * against a (keys, id) projection of just the rewritten files —
-    * parquet prunes the projection to the key columns.
-    */
-  private def attachRowIds(merged: DataFrame, idEntries: Seq[Entry],
-      keys: Seq[String], md: TableMetadata): DataFrame = {
-    if (idEntries.isEmpty) return merged
-    // ONE id per key, and only for keys the target held EXACTLY once:
-    // nothing guarantees target-key uniqueness (keptTargets tolerates
-    // duplicates), and an un-deduplicated projection would MULTIPLY
-    // result rows through the join — silent row duplication — while a
-    // duplicate key's identity is genuinely ambiguous, so those rows
-    // draw fresh ids instead (honest degradation, cardinality intact)
-    val proj = rowsOf(idEntries, md, withRowId = true)
-      .groupBy(keys.map(c => col(c).as(s"__graft_idk_$c")): _*)
-      .agg(min(col(ManifestTable.RowIdCol)).as("__graft_idv"),
-        count(lit(1)).as("__graft_idn"))
-      .select(keys.map(c => col(s"__graft_idk_$c")) :+
-        when(col("__graft_idn") === 1, col("__graft_idv"))
-          .as(ManifestTable.RidPhysCol): _*)
-    val cond = keys.map(k => col(k) <=> col(s"__graft_idk_$k")).reduce(_ && _)
-    merged.join(proj, cond, "left")
-      .drop(keys.map("__graft_idk_" + _): _*)
+    def src(c: String): Column = col(Merge.SourcePrefix + c)
+    // generated values follow from the other columns: the engine
+    // recomputes them on every copy and insert, and leaving them out
+    // of the "changed" test keeps rows that predate a generated column
+    // equal to their feed row
+    val cols = updates.columns.toSeq
+      .filterNot(c => deleteCol.contains(c) || md.generated.contains(c))
+    val star = cols.map(c => c -> src(c)).toMap
+    val tombstone = deleteCol.map(d => coalesce(src(d), lit(false)))
+    val differs = !cols.map(c => src(c) <=> col(c)).reduce(_ && _)
+    mergeAt(v0, md,
+      updates.toDF(updates.columns.map(Merge.SourcePrefix + _): _*),
+      keys.map(k => src(k) <=> col(k)).reduce(_ && _),
+      matched = tombstone.map(t => MergeDeleteClause(Some(t))).toSeq :+
+        MergeUpdateClause(Some(differs), star),
+      notMatched = Seq(MergeInsertClause(tombstone.map(!_), star)),
+      notMatchedBySource = Nil,
+      requireTarget = { targetCols =>
+        // the mutation read carries derived partition values; a feed
+        // never does (the writer derives them)
+        val table = (targetCols.filterNot(
+          _.startsWith(PartitionTransform.Prefix)) ++ md.generated.keys)
+          .toSet -- md.identity.keys
+        require(updates.columns.toSet == table ++ deleteCol,
+          s"merge: updates must be the table's columns" +
+            s"${deleteCol.fold("")(" + " + _)}: ${table.toSeq.sorted} vs " +
+            s"${updates.columns.toSeq}")
+      })
   }
 
   // ---------------------------------------------------------------- //
@@ -3572,33 +3424,43 @@ class ManifestTable(spark: SparkSession, root: String,
       val setN = resolveSetKeys("UPDATE", cols, set).map { case (k, v) =>
         k -> v.cast(hits.schema(k).dataType)
       }
-      // the copy materializes the row's stable id (T16 row tracking):
-      // an UPDATE changes values, not identity — the appended file
-      // carries the id physically so reads and the keyless change feed
-      // keep pairing old and new
-      val updated0 = hits.select(
-        cols.map(c => setN.getOrElse(c, col(c)).as(c)) :+
-          col(ManifestTable.RowIdCol).as(ManifestTable.RidPhysCol): _*)
-      // T15: with CDC on, the postimages are recorded in the sidecar
-      // AND written as the appended copies — materialize them once so
-      // a nondeterministic assignment cannot record one set of rows
-      // and write another. The CDC flag comes from the ONE record this
-      // operation resolved: a mid-operation enableCdc/disableCdc must
-      // not split the checkpoint from its release or from the
-      // sidecar decision.
+      // The CDC flag comes from the ONE record this operation
+      // resolved: a mid-operation enableCdc/disableCdc must not split
+      // the checkpoint from its release or from the sidecar decision.
       val cdcOn = md.cdcEnabled
-      val updated = if (!cdcOn) updated0
-        else updated0.localCheckpoint(true)
+      val updated = updateCopies(hits, cols, setN, md)
       try {
         val cdc = if (!cdcOn) None else Some(
           hits.select(cols.map(col): _*)
             .withColumn(ManifestTable.ChangeTypeCol, lit("update_preimage"))
             .unionByName(updated.drop(ManifestTable.RidPhysCol).withColumn(
-              ManifestTable.ChangeTypeCol, lit("update_postimage"))))
+              ManifestTable.ChangeTypeCol, lit("update_postimage")),
+              allowMissingColumns = true))
         commitDv(v0, entries, hits.select(col(DvFileCol), col(DvPosCol)),
           Seq(enforced(updated, md)), md, cdc = cdc, marksUnique = true)
       } finally if (cdcOn) graft.functions.CheckpointOps.release(updated)
     } finally graft.functions.CheckpointOps.release(hits) // RDD-level: Dataset.unpersist no-ops on checkpoints
+  }
+
+  /** The appended copies of updated rows `hits`: each of `cols` from
+    * `set` (expressions over the OLD row) or kept, plus the row's
+    * stable id (T16 row tracking: an UPDATE changes values, not
+    * identity — the copy carries the id physically so reads and the
+    * keyless change feed keep pairing old and new). A generated
+    * column the SET leaves alone recomputes from the new values;
+    * carried over, it would fail the generated-column check. T15:
+    * with CDC on, the copies are recorded as postimages AND written —
+    * checkpointed once so a nondeterministic assignment cannot record
+    * one set of rows and write another; the caller releases it.
+    */
+  private def updateCopies(hits: DataFrame, cols: Seq[String],
+      set: Map[String, Column], md: TableMetadata): DataFrame = {
+    def value(c: String): Column = set.getOrElse(c,
+      if (md.generated.contains(c)) lit(null).cast(hits.schema(c).dataType)
+      else col(c))
+    val copies = withGenerated(hits.select(cols.map(c => value(c).as(c)) :+
+      col(ManifestTable.RowIdCol).as(ManifestTable.RidPhysCol): _*), md)
+    if (md.cdcEnabled) copies.localCheckpoint(true) else copies
   }
 
   /** General `MERGE INTO` via deletion vectors (merge-on-read): ONE
@@ -3606,7 +3468,7 @@ class ManifestTable(spark: SparkSession, root: String,
     * updates or deletes and appends the updated copies plus the
     * not-matched inserts — cost O(matched + inserted rows) and one
     * manifest delta, never a table rewrite (the Delta/Iceberg
-    * copy-on-read MERGE shape; at 100 TB a CDC batch touches the
+    * merge-on-read MERGE shape; at 100 TB a CDC batch touches the
     * files holding matched rows' entries, not partitions). Supports
     * the full three-sided statement with arbitrary (non-equi) join
     * conditions and conditional clauses, first-match-wins:
@@ -3623,16 +3485,29 @@ class ManifestTable(spark: SparkSession, root: String,
     * one APPLYING matched source row is the standard MERGE cardinality
     * violation and throws — compact the feed first
     * ([[Merge.latestPerKey]]). A merge where nothing matches and
-    * nothing inserts is a version no-op. Keyed equality upserts with a
-    * unique feed can also use [[Merge.upsert]] + [[write]] (full
-    * rewrite — better when MOST rows change; this path wins when a
-    * small fraction does).
+    * nothing inserts is a version no-op. This is the table's one MERGE
+    * engine: the keyed upsert / CDC-apply form [[merge]] is one call
+    * of it. Generated columns an update or insert leaves unassigned
+    * recompute from the new row. A merge that inserts rows conflicts
+    * with every concurrently added file (it may hold an inserted key);
+    * one that only updates or deletes rebases over concurrent appends.
     */
   def mergeInto(source: DataFrame, on: Column,
       matched: Seq[MergeMatchedClause] = Nil,
       notMatched: Seq[MergeInsertClause] = Nil,
       notMatchedBySource: Seq[MergeMatchedClause] = Nil): Int = {
     val (v0, md) = snapshot(None)
+    mergeAt(v0, md, source, on, matched, notMatched, notMatchedBySource,
+      requireTarget = _ => ())
+  }
+
+  /** [[mergeInto]] against snapshot `v0`/`md`; `requireTarget` checks
+    * the target's logical columns before any job runs. */
+  private def mergeAt(v0: Int, md: TableMetadata, source: DataFrame,
+      on: Column, matched: Seq[MergeMatchedClause],
+      notMatched: Seq[MergeInsertClause],
+      notMatchedBySource: Seq[MergeMatchedClause],
+      requireTarget: Seq[String] => Unit): Int = {
     require(matched.nonEmpty || notMatched.nonEmpty ||
       notMatchedBySource.nonEmpty, "MERGE needs at least one clause")
     val entries = entriesOf(v0)
@@ -3643,6 +3518,7 @@ class ManifestTable(spark: SparkSession, root: String,
     val live = liveWithPos(entries, md, withRid = needRid)
     val targetCols = live.columns
       .filterNot(Set(DvFileCol, DvPosCol, ManifestTable.RowIdCol)).toSeq
+    requireTarget(targetCols)
     val armCol = "_graft_merge_arm"
     val overlap = source.columns.toSet
       .intersect(targetCols.toSet + DvFileCol + DvPosCol +
@@ -3714,21 +3590,18 @@ class ManifestTable(spark: SparkSession, root: String,
       else Some(ManifestTable.async {
         val unmatched = tagged(src.join(live, on, "left_anti"),
           notMatchedN.map(_.condition))
-        notMatchedN.zipWithIndex.map { case (c, i) =>
+        withGenerated(notMatchedN.zipWithIndex.map { case (c, i) =>
           unmatched.filter(col(armCol) === i).select(targetCols.map { t =>
             c.values.get(t).map(_.as(t)).getOrElse(
               lit(null).cast(live.schema(t).dataType).as(t))
           }: _*)
-        }.reduce(_ unionAll _).localCheckpoint(true)
+        }.reduce(_ unionAll _), md).localCheckpoint(true)
       })
     val matchedHits = matchedHitsF.map(ManifestTable.await(_))
     val bySourceHits = bySourceHitsF.map(ManifestTable.await(_))
     val insertRows = insertRowsF.map(ManifestTable.await(_))
     val cdcOn = md.cdcEnabled
-    // T15: update-copy frames are recorded in the CDC sidecar AND
-    // written as appended files — checkpoint each once (CDC mode only)
-    // so a nondeterministic SET expression cannot record one set of
-    // postimages and write another
+    // CDC mode checkpoints every update-copy frame ([[updateCopies]])
     val copyCheckpoints = scala.collection.mutable.ArrayBuffer[DataFrame]()
     val allCheckpoints = Seq(src) ++
       matchedHits.toSeq ++ bySourceHits.toSeq ++ insertRows.toSeq
@@ -3755,14 +3628,10 @@ class ManifestTable(spark: SparkSession, root: String,
         hitsOpt.toSeq.flatMap { h =>
           clauses.zipWithIndex.collect {
             case (MergeUpdateClause(_, set), i) =>
-              // copies materialize the row's stable id (T16): an
-              // UPDATE arm changes values, not identity
-              val c = h.filter(col(armCol) === i).select(
-                targetCols.map(t => set.getOrElse(t, col(t)).as(t)) :+
-                  col(ManifestTable.RowIdCol)
-                    .as(ManifestTable.RidPhysCol): _*)
-              if (!cdcOn) c
-              else { val cc = c.localCheckpoint(true); copyCheckpoints += cc; cc }
+              val c = updateCopies(h.filter(col(armCol) === i),
+                targetCols, set, md)
+              if (cdcOn) copyCheckpoints += c
+              c
           }
         }
       val matchedCopies = updatedCopies(matchedHits, matchedN)
@@ -3793,14 +3662,18 @@ class ManifestTable(spark: SparkSession, root: String,
             .map(_.drop(ManifestTable.RidPhysCol)
               .withColumn(ct, lit("update_postimage"))) ++
           insertRows.toSeq.map(_.withColumn(ct, lit("insert"))))
-          .reduceOption(_ unionByName _)
+          // a generated column no file holds yet is computed on the
+          // new rows only
+          .reduceOption(_.unionByName(_, allowMissingColumns = true))
       }
       val marks = (matchedHits.toSeq ++ bySourceHits.toSeq)
         .map(_.select(col(DvFileCol), col(DvPosCol)))
         .reduceOption(_ unionAll _)
         .getOrElse(live.limit(0).select(col(DvFileCol), col(DvPosCol)))
-      commitDv(v0, entries, marks, adds, md, appendWithoutMarks = true,
-        cdc = cdc, marksUnique = true)
+      // inserts were decided against v0 alone (the Delta MERGE rule)
+      commitDv(v0, entries, marks, adds, md,
+        conflictsWith = if (haveInserts) _ => true else _ => false,
+        appendWithoutMarks = true, cdc = cdc, marksUnique = true)
     } finally (allCheckpoints ++ copyCheckpoints)
       .foreach(graft.functions.CheckpointOps.release)
   }
@@ -4606,8 +4479,8 @@ class ManifestTable(spark: SparkSession, root: String,
     * sidecar (added files ARE the inserts). The cost: DML materializes
     * its matched rows once more to write them — O(changed rows), the
     * price Delta pays for its change files. Whole-file-replacement
-    * commits (`write(_, "overwrite")`, `restore`, the legacy
-    * partition-rewrite `merge`) don't write a sidecar: they stamp
+    * commits (`write(_, "overwrite")`, partition overwrite,
+    * `restore`) don't write a sidecar: they stamp
     * [[ManifestTable.CdcFileDiff]] and the feed derives their changes
     * from the file delta (removed rows → delete, added rows → insert
     * — the Delta INSERT-OVERWRITE representation; exact in effect,
@@ -4655,7 +4528,7 @@ class ManifestTable(spark: SparkSession, root: String,
   }
 
   /** Stamp a freshly committed whole-file-replacement version
-    * (overwrite / restore / legacy merge rewrite) as keylessly
+    * (overwrite / partition overwrite / restore) as keylessly
     * derivable from its file delta — see [[ManifestTable.CdcFileDiff]].
     * Valid ONLY when no shared file was re-pointed by the commit
     * (fresh-uuid rewrites guarantee it; restore checks explicitly).

@@ -4,8 +4,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Pure MERGE resolution logic (L1, SURVEY.md §2.9) — shared by
-  * ManifestTable.merge and the streaming foreachBatch sink (T5).
+/** Pure keyed-MERGE resolution over DataFrames (L1, SURVEY.md §2.9) —
+  * for frames that are not manifest tables (the l1/l1b queries), plus
+  * the feed compaction the streaming foreachBatch sinks (T5) run
+  * before merging ([[latestPerKey]]). A manifest table merges through
+  * its one engine, [[ManifestTable.mergeInto]] ([[ManifestTable.merge]]
+  * is the keyed form of it).
   *
   * Semantics (matched by the reference's CDC feed,
   * `/root/reference/datasets/orders_2024-06-06-Updated.csv`): keyed
@@ -21,14 +25,10 @@ import org.apache.spark.sql.functions._
   * downstream can reuse it). The equivalent
   * `source ∪ (target ANTI source-keys)` form lets Catalyst broadcast
   * the source KEY SET when the feed is small — the overwhelmingly
-  * common CDC case — so the 100 TB target side is NEVER shuffled:
-  * the merge collapses to one broadcast probe per target row plus an
-  * append. A huge feed degrades gracefully to the same shuffled
-  * hash/sort-merge anti join the full-outer paid anyway. Downstream,
-  * ManifestTable's partitioned write repartitions by the partition
-  * tuple — with the old full-outer that made the rewrite DOUBLE
-  * shuffle (join hash + write layout); with the anti form the write
-  * shuffle is the only wide exchange in the whole merge.
+  * common CDC case — so the target side is never shuffled: the merge
+  * collapses to one broadcast probe per target row plus an append. A
+  * huge feed degrades gracefully to the same shuffled hash/sort-merge
+  * anti join the full-outer paid anyway.
   */
 object Merge {
 
@@ -73,6 +73,12 @@ object Merge {
   /** Default tombstone column name for [[applyCdc]] feeds. */
   val DeleteCol = "_deleted"
 
+  /** Reserved prefix a MERGE source's columns are renamed under, so the
+    * join condition and clauses name both sides by plain column name
+    * ([[ManifestTable.merge]], [[graft.sql.GraftDmlRules]]).
+    */
+  private[graft] val SourcePrefix = "__graft_src_"
+
   /** CDC MERGE with delete tombstones — the Delta/Iceberg three-clause
     * form:
     *
@@ -113,37 +119,6 @@ object Merge {
     val cond = keys.map(k => col(s"t.$k") <=> col(s"s.$k")).reduce(_ && _)
     base.as("t")
       .join(s0.select(keys.map(col): _*).distinct().as("s"), cond, "left_anti")
-  }
-
-  /** Rows of `updates` that would actually change the table: new keys
-    * plus rows differing in any column from their base counterpart.
-    * Drives the merge no-op fast path (idempotent re-apply) and
-    * touched-partition pruning.
-    *
-    * NOT `updates.exceptAll(base)`: exceptAll plans as a full hash
-    * shuffle of BOTH sides on every column — the one place the merge
-    * still shuffled the 100 TB target. The equivalent two-step form
-    * (`matched` = base rows identical to some feed row, then feed ANTI
-    * `matched`) keeps the FEED on the build side of both joins, so the
-    * planner broadcasts it and the base is scanned once, shuffled
-    * never — the same shape [[keptTargets]] already has. Equivalence:
-    * the feed carries at most one row per key (the merge contract), so
-    * the multiset difference exceptAll computes degenerates to the set
-    * difference the anti join computes; `<=>` per column is exactly
-    * exceptAll's null-safe row equality. A contract-violating feed
-    * (duplicate identical rows) changes only the duplicate's
-    * multiplicity here, and the merge's own semantics are undefined
-    * there anyway.
-    */
-  def effectiveChanges(base: DataFrame, updates: DataFrame): DataFrame = {
-    val cols = updates.columns.toSeq
-    def eq(l: String, r: String) =
-      cols.map(c => col(s"$l.$c") <=> col(s"$r.$c")).reduce(_ && _)
-    val matched = base.select(cols.map(col): _*).as("b")
-      .join(updates.select(cols.map(col): _*).as("u"), eq("b", "u"),
-        "left_semi")
-    updates.as("x")
-      .join(matched.as("m"), eq("x", "m"), "left_anti")
   }
 
   /** CDC feed compaction: keep only the newest row per key, ordered

@@ -806,10 +806,10 @@ object Lakehouse extends QueryModule {
   /** L36: named immutable tags ([[ManifestTable.createTag]], the
     * Iceberg `CREATE TAG` surface) with VACUUM retention, end to end:
     * v0 is tagged `baseline` through `CALL graft.tag`, the table then
-    * takes a MERGE (which rewrites the touched files) and a DV delete,
-    * and `vacuum(retain = 1)` runs — WITHOUT tag retention the rewrite
-    * victims' v0 files are unreferenced by the latest version and die,
-    * and the tag read below would lose exactly their rows. The read
+    * takes a MERGE and a DV delete (both mark v0's files), a compaction
+    * rewrites every file, and `vacuum(retain = 1)` runs — WITHOUT tag
+    * retention v0's files are unreferenced by the latest version and
+    * die, and the tag read below would lose their rows. The read
     * goes through the batch reader's `tagAsOf` pin and must equal the
     * raw orders, byte for byte.
     */
@@ -823,8 +823,9 @@ object Lakehouse extends QueryModule {
     s.sql(s"CALL graft.tag('$root', 'baseline')")
     mt.merge(orders.filter(col("o_orderkey") % 97 === 0)
       .withColumn("o_totalprice", col("o_totalprice") + 1000.0),
-      Seq("o_orderkey")) // v1: rewrites the touched v0 files
+      Seq("o_orderkey")) // v1: marks the touched v0 files
     mt.delete(col("o_orderkey") % 15 === 0) // v2
+    mt.compact() // v3: v0's files leave the latest version
     mt.vacuum(retain = 1, minAgeMs = 0)
     s.read.format(classOf[graft.streaming.GraftTableSourceProvider].getName)
       .option("root", root)
@@ -1085,7 +1086,7 @@ object Lakehouse extends QueryModule {
       |ORDER BY o_orderkey ASC NULLS FIRST""".stripMargin
 
   /** L18: multi-column partitioning end-to-end — a (status, bucket)-
-    * partitioned table takes a keyed merge (touched tuples only) and a
+    * partitioned table takes a keyed merge (DV marks + copies) and a
     * DV delete scoped inside ONE sub-partition, then reads back
     * through the partition-restoring scan. The oracle is the
     * equivalent row-level SQL; tuple-scoping/carry-forward mechanics
@@ -1104,7 +1105,7 @@ object Lakehouse extends QueryModule {
     mt.write(orders, "overwrite") // v0: two-level hive layout
     val corrections = orders.filter(col("o_orderkey") % 97 === 0)
       .withColumn("o_totalprice", col("o_totalprice") + 1000.0)
-    mt.merge(corrections, Seq("o_orderkey")) // v1: touched tuples only
+    mt.merge(corrections, Seq("o_orderkey")) // v1: marks + copies
     mt.delete(col("o_orderstatus") === "F" && col("pbucket") === "1"
       && col("o_orderkey") % 5 === 0) // v2: DV inside one sub-partition
     mt.read()

@@ -2,7 +2,7 @@ package graft.sql
 
 import scala.annotation.tailrec
 
-import graft.lake.{ManifestTable, MergeDeleteClause, MergeInsertClause, MergeMatchedClause, MergeUpdateClause}
+import graft.lake.{ManifestTable, Merge, MergeDeleteClause, MergeInsertClause, MergeMatchedClause, MergeUpdateClause}
 import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, ExprId, PlanExpression}
@@ -67,9 +67,6 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
 }
 
 object GraftDmlRules {
-
-  /** Positional rename prefix for source columns in a lowered MERGE. */
-  private[sql] val SrcPrefix = "__graft_src_"
 
   /** The graft table behind a DML target, seen through any aliases. */
   private[sql] def graftTarget(
@@ -158,17 +155,17 @@ object GraftDmlRules {
       rel: DataSourceV2Relation, m: MergeIntoTable): LogicalPlan = {
     requireWritable(tbl, "MERGE INTO")
     val ctx = s"MERGE INTO ${tbl.name()}"
-    val clash = rel.output.map(_.name).filter(_.startsWith(SrcPrefix))
+    val clash = rel.output.map(_.name).filter(_.startsWith(Merge.SourcePrefix))
     if (clash.nonEmpty) throw new IllegalArgumentException(
       s"$ctx: target columns ${clash.mkString(", ")} collide with the " +
         "lowering's reserved source-rename prefix")
     val targetNames = rel.output.map(a => a.exprId -> a.name).toMap
     val srcOut = m.sourceTable.output
     val srcNames = srcOut.zipWithIndex
-      .map { case (a, i) => a.exprId -> s"$SrcPrefix$i" }.toMap
+      .map { case (a, i) => a.exprId -> s"${Merge.SourcePrefix}$i" }.toMap
     val bothNames = targetNames ++ srcNames
     val source = GraftSqlBridge.ofRows(session, m.sourceTable)
-      .toDF(srcOut.indices.map(i => s"$SrcPrefix$i"): _*)
+      .toDF(srcOut.indices.map(i => s"${Merge.SourcePrefix}$i"): _*)
     val on = rebind(m.mergeCondition, bothNames, s"$ctx ON")
     val matched = m.matchedActions.map {
       case UpdateAction(cond, assigns, _) => MergeUpdateClause(

@@ -51,8 +51,8 @@ import org.apache.spark.sql.types._
   * (`CALL graft.optimize('lakehouse.silver.orders', 4)`), resolved
   * through [[GraftNames.resolveRoot]]. Configuration (partition tuple,
   * zone-map/bloom columns) comes from the table's metadata record
-  * ([[graft.lake.TableMetadata]]) via [[ManifestTable.forRoot]], so a partitioned merge issued from SQL
-  * scopes to touched partitions exactly like the Scala API.
+  * ([[graft.lake.TableMetadata]]) via [[ManifestTable.forRoot]], so a
+  * merge issued from SQL behaves exactly like the Scala API.
   * Statements that don't match the CALL pattern delegate verbatim to
   * the stock parser — zero interference with regular Spark SQL.
   */

@@ -78,8 +78,9 @@ object Streams {
       .dropDuplicatesWithinWatermark(idCol)
 
   /** T5: continuous CDC — apply each micro-batch as a keyed MERGE into
-    * a manifest table (streaming L1). The merge itself is the
-    * partition-aware batch merge; checkpointing makes the sink
+    * a manifest table (streaming L1). The merge itself is the batch
+    * [[ManifestTable.merge]], which marks only the changed rows dead
+    * and appends their new copies; checkpointing makes the sink
     * effectively exactly-once (a replayed batch is a no-op merge).
     */
   def mergeSink(stream: DataFrame, table: ManifestTable, keys: Seq[String],

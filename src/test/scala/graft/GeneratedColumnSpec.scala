@@ -1,6 +1,6 @@
 package graft
 
-import graft.lake.ManifestTable
+import graft.lake.{ManifestTable, MergeInsertClause, MergeUpdateClause}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -92,5 +92,47 @@ class GeneratedColumnSpec extends SparkTestBase {
     val got = mt.read().filter(col("id").isin(4, 9))
       .select(col("id"), col("amt_x2")).as[(Long, Double)].collect().toMap
     assert(got === Map(4L -> 100.0, 9L -> 180.0))
+  }
+
+  test("merge right after registering a generated column no file holds yet") {
+    val mt = new ManifestTable(spark, scratch("merge_fresh"))
+    mt.write(base, "overwrite")
+    mt.addGeneratedColumn("amt_x2", "amt * 2")
+    val feed = Seq((2L, 21.0, "b"), (9L, 90.0, "z")).toDF("id", "amt", "tag")
+    val v = mt.merge(feed, Seq("id"))
+    val got = mt.read().filter(col("id").isin(2, 9))
+      .select(col("id"), col("amt_x2")).as[(Long, Double)].collect().toMap
+    assert(got === Map(2L -> 42.0, 9L -> 180.0))
+    assert(mt.read().count() === 4)
+    // a feed carrying the (agreeing) generated column is the same feed
+    assert(mt.merge(feed.withColumn("amt_x2", col("amt") * 2), Seq("id")) === v,
+      "re-applying the feed must commit nothing")
+  }
+
+  test("DV updates recompute generated columns the SET leaves alone") {
+    val mt = new ManifestTable(spark, scratch("dvupdate"))
+    mt.write(base, "overwrite")
+    mt.addGeneratedColumn("amt_x2", "amt * 2")
+    mt.write(base, "overwrite") // every row carries amt_x2
+    mt.enableCdc()
+    def x2(v: Int): Map[(Long, String), Double] = mt.changesAt(v, None)
+      .select(col("id"), col("_change_type"), col("amt_x2"))
+      .as[(Long, String, Double)].collect()
+      .map { case (id, t, x) => (id, t) -> x }.toMap
+    val v2 = mt.updateWhere(col("id") === 3L, Map("amt" -> lit(31.0)))
+    val v3 = mt.mergeInto(
+      Seq((2L, 21.0), (7L, 70.0)).toDF("s_id", "s_amt"),
+      col("s_id") === col("id"),
+      matched = Seq(MergeUpdateClause(None, Map("amt" -> col("s_amt")))),
+      notMatched = Seq(MergeInsertClause(None,
+        Map("id" -> col("s_id"), "amt" -> col("s_amt"), "tag" -> lit("n")))))
+    val got = mt.read().select(col("id"), col("amt_x2"))
+      .as[(Long, Double)].collect().toMap
+    assert(got === Map(1L -> 20.0, 2L -> 42.0, 3L -> 62.0, 7L -> 140.0))
+    // the recorded change rows agree with the written rows
+    assert(x2(v2) === Map((3L, "update_preimage") -> 60.0,
+      (3L, "update_postimage") -> 62.0))
+    assert(x2(v3) === Map((2L, "update_preimage") -> 40.0,
+      (2L, "update_postimage") -> 42.0, (7L, "insert") -> 140.0))
   }
 }

@@ -117,6 +117,49 @@ class LakeConcurrencySpec extends SparkTestBase {
     assert(mt.versions.size === 1 + applied.size)
   }
 
+  test("merge racing an append of other keys into the same partition") {
+    val mt = new ManifestTable(spark, scratch("conc_merge_append"),
+      partitionCol = Some("part"))
+    mt.write(baseDf, "overwrite") // v0
+    val outcomes = race(Seq(
+      () => { mt.merge(Seq((1, "p1", 11.0)).toDF("id", "part", "amt"),
+        Seq("id")); () },
+      () => { mt.write(Seq((5, "p1", 50.0)).toDF("id", "part", "amt"),
+        "append"); () }))
+    // the append always commits; the merge rebases over it or fails
+    // loudly
+    assert(outcomes(1).isEmpty, s"append failed: ${outcomes(1)}")
+    outcomes(0).foreach(e =>
+      assert(e.isInstanceOf[ConcurrentModificationException],
+        s"unexpected failure type: $e"))
+    // no row lost or duplicated
+    val rows = mt.read().select("id", "amt").as[(Int, Double)].collect()
+    val amt1 = if (outcomes(0).isEmpty) 11.0 else 10.0
+    assert(rows.sorted.toSeq === Seq((1, amt1), (2, 20.0), (3, 30.0),
+      (4, 40.0), (5, 50.0)), s"wrong final state: ${rows.toSeq}")
+    assert(mt.versions.size === 2 + (if (outcomes(0).isEmpty) 1 else 0))
+  }
+
+  test("two merges inserting the same new key never both commit") {
+    val mt = new ManifestTable(spark, scratch("conc_merge_insert"),
+      partitionCol = Some("part"))
+    mt.write(baseDf, "overwrite") // v0
+    def upsert7(): Unit = {
+      mt.merge(Seq((7, "p1", 70.0)).toDF("id", "part", "amt"), Seq("id"))
+      ()
+    }
+    val outcomes = race(Seq(() => upsert7(), () => upsert7()))
+    // racing, the loser throws; serialized, the second finds key 7
+    // already applied and commits nothing — one version either way
+    outcomes.flatten.foreach(e =>
+      assert(e.isInstanceOf[ConcurrentModificationException],
+        s"unexpected failure type: $e"))
+    assert(outcomes.exists(_.isEmpty), "both merges failed")
+    assert(mt.versions === Seq(0, 1), s"versions: ${mt.versions}")
+    val ids = mt.read().select("id").as[Int].collect().sorted.toSeq
+    assert(ids === Seq(1, 2, 3, 4, 7), s"key 7 duplicated or lost: $ids")
+  }
+
   test("append racing a compact either rebases or conflicts, never loses rows") {
     val mt = new ManifestTable(spark, scratch("conc_compact"))
     mt.write(baseDf, "overwrite") // v0

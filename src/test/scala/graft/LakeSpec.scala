@@ -28,7 +28,7 @@ class LakeSpec extends SparkTestBase {
 
   test("L1: CDC feed has exactly 8 effective changes of 47 rows") {
     assert(updated.count() === 47)
-    assert(Merge.effectiveChanges(orders, updated).count() === 8)
+    assert(updated.exceptAll(orders).count() === 8)
   }
 
   test("L1: merge applies 8 updates, inserts 0, preserves the rest") {
@@ -61,7 +61,6 @@ class LakeSpec extends SparkTestBase {
     val once = Merge.upsert(orders, updated, Seq("order_id"))
     val twice = Merge.upsert(once, updated, Seq("order_id"))
     assert(twice.exceptAll(once).count() === 0)
-    assert(Merge.effectiveChanges(once, updated).count() === 0)
   }
 
   test("L1/L3: manifest merge commits a version; re-apply commits nothing") {
@@ -83,15 +82,34 @@ class LakeSpec extends SparkTestBase {
     val mt = new ManifestTable(spark, root, partitionCol = Some("date"))
     val twoDays = RawIngest.readCsvInferred(spark, s"$fixtures/orders_2024-06-0[67].csv")
     mt.write(twoDays, "overwrite")
-    val v0Files = mt.filesOf(0)
+    val v0Files = mt.filesDf(Some(0)).collect().map(_.getString(0))
     mt.merge(updated, Seq("order_id")) // updates touch only 2024-06-06
-    val v1Files = mt.filesOf(1)
-    val untouched06_07 = v0Files.filter(_.contains("date=2024-06-07"))
-    // 06-07 files carried forward by reference, 06-06 files replaced
-    assert(untouched06_07.forall(v1Files.contains))
-    assert(v0Files.filter(_.contains("date=2024-06-06"))
-      .forall(f => !v1Files.contains(f)))
+    val dvs = mt.filesDf(Some(1)).collect()
+      .map(r => r.getString(0) -> Option(r.getString(3))).toMap
+    // only the files holding one of the 8 changed keys gain a deletion
+    // vector; every other v0 file is still referenced without one
+    val changedKeys = updated.exceptAll(orders).select("order_id")
+    val (hit, rest) = v0Files.partition(f =>
+      !spark.read.parquet(s"$root/$f").join(changedKeys, "order_id").isEmpty)
+    assert(hit.nonEmpty && hit.forall(_.contains("date=2024-06-06")))
+    assert(hit.forall(f => dvs(f).isDefined))
+    assert(rest.exists(_.contains("date=2024-06-07")))
+    assert(rest.forall(f => dvs.get(f).contains(None)))
     assert(mt.read().count() === twoDays.count())
+  }
+
+  test("L1: manifest merge refuses two feed rows for one existing key") {
+    import spark.implicits._
+    val mt = new ManifestTable(spark, scratch("mergedup"))
+    mt.write(Seq((1, 10.0), (2, 20.0)).toDF("id", "amt"), "overwrite")
+    val e = intercept[IllegalArgumentException] {
+      mt.merge(Seq((2, 1.0), (2, 2.0)).toDF("id", "amt"), Seq("id"))
+    }
+    assert(e.getMessage.contains("cardinality violation"))
+    // nothing committed
+    assert(mt.versions === Seq(0))
+    assert(mt.read().as[(Int, Double)].collect().sorted.toSeq ===
+      Seq((1, 10.0), (2, 20.0)))
   }
 
   test("L2: partition overwrite replaces one day atomically") {
@@ -357,8 +375,17 @@ class LakeSpec extends SparkTestBase {
     val v1Files = mt2.filesOf(1)
     assert(otherDay.forall(v1Files.contains),
       "untouched partition was rewritten by a no-op-heavy feed")
-    assert(v1Files.filter(_.contains("date=2024-06-06"))
-      .forall(f => !v0Files.contains(f)), "changed partition not rewritten")
+    val dvs = mt2.filesDf(Some(1)).collect()
+      .map(r => r.getString(0) -> Option(r.getString(3))).toMap
+    val v0Rels = mt2.filesDf(Some(0)).collect().map(_.getString(0))
+    assert(v0Rels.filter(_.contains("date=2024-06-07"))
+      .forall(f => dvs.get(f).contains(None)),
+      "untouched partition was marked by a no-op-heavy feed")
+    assert(v0Rels.filter(_.contains("date=2024-06-06"))
+      .forall(f => dvs(f).isDefined), "changed partition not marked")
+    // exactly the one changed row is dead; the no-op rows are untouched
+    assert(mt2.history().filter(col("version") === 1)
+      .select("dv_deleted_rows").head().getLong(0) === 1L)
   }
 
   test("L7 property: a range read(where) equals full-scan filter on arbitrary ranges") {

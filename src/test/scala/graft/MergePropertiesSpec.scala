@@ -1,6 +1,6 @@
 package graft
 
-import graft.lake.Merge
+import graft.lake.{ManifestTable, Merge}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -188,13 +188,23 @@ class MergePropertiesSpec extends SparkTestBase {
     }
   }
 
-  test("effectiveChanges is empty iff the feed is already applied") {
+  test("merge commits nothing iff the feed is already applied") {
+    import org.apache.spark.sql.functions.col
     (1 to 5).foreach { i =>
       val b = sample(i + 700)
-      assert(Merge.effectiveChanges(df(b), df(b)).count() === 0)
+      val dir = s"${sys.props("java.io.tmpdir")}/graft_test_mprop_applied_$i"
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+      val mt = new ManifestTable(spark, dir)
+      mt.write(df(b), "overwrite") // v0
+      mt.enableCdc()
+      assert(mt.merge(df(b), Seq("k")) === 0, s"seed $i: re-apply committed")
       val bumped = b.map { case (k, v, s) => (k, v + 1, s) }
-      if (b.nonEmpty)
-        assert(Merge.effectiveChanges(df(b), df(bumped)).count() === b.size)
+      assert(mt.merge(df(bumped), Seq("k")) === 1, s"seed $i")
+      assert(mt.versions === Seq(0, 1), s"seed $i")
+      assert(mt.changesAt(1, None)
+        .filter(col("_change_type") === "update_postimage")
+        .count() === b.size, s"seed $i")
     }
   }
 }

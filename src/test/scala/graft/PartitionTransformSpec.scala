@@ -90,12 +90,16 @@ class PartitionTransformSpec extends SparkTestBase {
       .withColumn("payload", lit("UPDATED"))
     t.merge(upd, Seq("event_id"))
 
-    val after = t.filesDf().collect().map(_.getString(0)).toSet
+    val dvs = t.filesDf().collect()
+      .map(r => r.getString(0) -> Option(r.getString(3))).toMap
     val day2 = "_graft_p_days_ts=2024-01-02"
-    // every file outside day 2 carried forward by reference
-    assert(before.filterNot(_.contains(day2)).subsetOf(after))
-    // day 2 was rewritten (old day-2 files gone)
-    assert(before.filter(_.contains(day2)).intersect(after).isEmpty)
+    // every file outside day 2 is still referenced, with no deletion
+    // vector
+    assert(before.filterNot(_.contains(day2))
+      .forall(f => dvs.get(f).contains(None)))
+    // the one day-2 file (it holds event 100) gained a deletion vector
+    val day2Files = before.filter(_.contains(day2))
+    assert(day2Files.size === 1 && dvs(day2Files.head).isDefined)
     // content correct
     val want = eventsDf.withColumn("payload",
       when(col("event_id") === 100L, "UPDATED").otherwise(col("payload")))
@@ -263,25 +267,28 @@ class PartitionTransformSpec extends SparkTestBase {
     val before = t1.filesDf().collect().map(_.getString(0)).toSet
 
     // event 0 lives on day 1 (old daily file); event 2 on day 3 hour 2
-    // (new hourly file) — the merge must rewrite exactly the day-1
-    // daily file and the hour-2 hourly file
+    // (new hourly file) — the merge must mark exactly the day-1 daily
+    // file and the hour-2 hourly file
     val upd = eventsDf.filter(col("event_id").isin(0L, 2L))
       .withColumn("payload", lit("UPDATED"))
     t1.merge(upd, Seq("event_id"))
-    val after = t1.filesDf().collect().map(_.getString(0)).toSet
+    val dvs = t1.filesDf().collect()
+      .map(r => r.getString(0) -> Option(r.getString(3))).toMap
+    val after = dvs.keySet
 
     val day1Seg = "_graft_p_days_ts=2024-01-01"
     val hourSeg = "_graft_p_hours_ts=2024-01-03-02"
-    assert(before.filter(_.contains(day1Seg)).intersect(after).isEmpty,
-      "touched old-spec day partition rewritten")
-    assert(before.filter(_.contains(hourSeg)).intersect(after).isEmpty,
-      "touched new-spec hour partition rewritten")
-    assert(before.filterNot(f => f.contains(day1Seg) || f.contains(hourSeg))
-      .subsetOf(after), "every other file carried by reference")
-    // rewrites land under the CURRENT spec — progressive migration
+    val touched = before.filter(f => f.contains(day1Seg) || f.contains(hourSeg))
+    assert(touched.size === 2 && touched.forall(f => dvs(f).isDefined),
+      "the old-spec day-1 file and the new-spec hour-2 file gain a " +
+        s"deletion vector: $touched")
+    assert(before.diff(touched).forall(f => dvs.get(f).contains(None)),
+      "every other file is still referenced without a deletion vector")
+    // the updated copies land under the CURRENT spec — progressive
+    // migration
     assert(after.diff(before).nonEmpty &&
       after.diff(before).forall(_.contains("_graft_p_hours_ts=")),
-      s"rewrites not migrated: ${after.diff(before).mkString(", ")}")
+      s"copies not migrated: ${after.diff(before).mkString(", ")}")
 
     val want = eventsDf.withColumn("payload",
       when(col("event_id").isin(0L, 2L), "UPDATED").otherwise(col("payload")))

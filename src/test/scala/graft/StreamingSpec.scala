@@ -1219,7 +1219,7 @@ class StreamingSpec extends SparkTestBase {
       "dropped versions' CDC sidecars are vacuumed")
   }
 
-  test("T15b: overwrite/restore/legacy-merge replay keylessly from their file delta") {
+  test("T15b: overwrite/restore replay from their file delta, merge from change rows") {
     val root = scratch("t15b_table")
     val orders = Q.t(spark, sf, "orders")
       .select("o_orderkey", "o_totalprice")
@@ -1233,16 +1233,16 @@ class StreamingSpec extends SparkTestBase {
     assert(c1.filter(col("_change_type") === "delete").count() === a.count())
     assert(c1.filter(col("_change_type") === "insert").count() === b.count())
 
-    // applying a file-diff feed reproduces the post state exactly:
-    // pre ∖ deletes ∪ inserts ≡ post (multiset), for the legacy keyed
-    // merge's coarse rewrite representation too
+    // applying a keyless feed reproduces the post state exactly:
+    // pre ∖ (deletes, preimages) ∪ (inserts, postimages) ≡ post
+    // (multiset), for a file-diff stamp and for a merge's change rows
     def effectHolds(v: Int): Unit = {
       val pre = mt.read(Some(v - 1))
       val post = mt.read(Some(v))
       val ch = mt.changesAt(v, None)
-      val dels = ch.filter(col("_change_type") === "delete")
+      val dels = ch.filter(col("_change_type").isin("delete", "update_preimage"))
         .select(pre.columns.map(col): _*)
-      val ins = ch.filter(col("_change_type") === "insert")
+      val ins = ch.filter(col("_change_type").isin("insert", "update_postimage"))
         .select(pre.columns.map(col): _*)
       val applied = pre.exceptAll(dels).unionAll(ins)
       assert(applied.exceptAll(post).count() === 0, s"v$v over-applies")
@@ -1250,9 +1250,10 @@ class StreamingSpec extends SparkTestBase {
     }
     mt.merge(b.limit(50)
       .withColumn("o_totalprice", col("o_totalprice") + 1.0),
-      Seq("o_orderkey")) // v2: legacy merge → snapshot rewrite
+      Seq("o_orderkey")) // v2: DV marks + copies, exact change rows
     effectHolds(2)
-    mt.restore(1) // v3: DV-free restore → file-diff stamp
+    // v1's file now carries v2's deletion vector; v0's never did
+    mt.restore(0) // v3: DV-free restore → file-diff stamp
     effectHolds(3)
 
     // a restore straddling a DV re-point can NOT be derived at file
