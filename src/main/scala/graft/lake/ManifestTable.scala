@@ -372,16 +372,6 @@ object ManifestTable {
     rel.split("/").dropRight(1).toSeq
       .filter(_.contains('=')).map(_.takeWhile(_ != '='))
 
-  /** The salt's own xxhash64 — the seed of every value's second bloom
-    * hash. Constant per process; computed once.
-    */
-  private[lake] lazy val bloomSaltSeed: Long = {
-    import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-    import org.apache.spark.sql.types.StringType
-    import org.apache.spark.unsafe.types.UTF8String
-    XxHash64Function.hash(UTF8String.fromString(BloomSalt), StringType, 42L)
-  }
-
   /** Rebuild a Hadoop Configuration from its serialized entries —
     * executor-side FS access for distributed vacuum (Configuration is
     * a Writable, not Serializable, so tasks get a plain Map).
@@ -393,36 +383,6 @@ object ManifestTable {
     c
   }
 
-  /** Mergeable bitset aggregate for write-time bloom collection: OR
-    * bit positions into the packed little-endian m/8-byte array
-    * engine-side and emit base64 (the ':'-free alphabet keeps the
-    * manifest framing intact; ~8 KB at the default m=65536). NULL
-    * positions (files with no bloom-column values) leave an all-zero
-    * bitset — identical to the previous empty-set encoding.
-    */
-  private[lake] class BloomBitsAgg(bits: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[
-        java.lang.Integer, Array[Byte], String] {
-    override def zero: Array[Byte] = new Array[Byte]((bits + 7) / 8)
-    override def reduce(b: Array[Byte], p: java.lang.Integer): Array[Byte] = {
-      if (p != null) {
-        val i = p.intValue
-        b(i >> 3) = (b(i >> 3) | (1 << (i & 7))).toByte
-      }
-      b
-    }
-    override def merge(x: Array[Byte], y: Array[Byte]): Array[Byte] = {
-      var i = 0
-      while (i < x.length) { x(i) = (x(i) | y(i)).toByte; i += 1 }
-      x
-    }
-    override def finish(b: Array[Byte]): String =
-      java.util.Base64.getEncoder.encodeToString(b)
-    override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-      org.apache.spark.sql.Encoders.BINARY
-    override def outputEncoder: org.apache.spark.sql.Encoder[String] =
-      org.apache.spark.sql.Encoders.STRING
-  }
 }
 
 class ManifestTable(spark: SparkSession, root: String,
@@ -1225,7 +1185,8 @@ class ManifestTable(spark: SparkSession, root: String,
       newIdentityCols, newTransformSpecs, md)
     val evolved = relaidOut(newIdentityCols, newTransformSpecs)
     val entries = evolved.entriesOf(v0)
-    evolved.rewriteFiles(v0, entries, entries, md, entries.size,
+    evolved.rewriteFiles("evolvePartitionSpec", v0, entries, entries, md,
+      entries.size,
       conflictsWith = _ => true)
     evolved.recordLayout()
   }
@@ -1528,204 +1489,7 @@ class ManifestTable(spark: SparkSession, root: String,
       s"commit at $root kept losing version races after $maxRetries retries")
   }
 
-  /** Entries for freshly written files: per-file min/max of EVERY stats
-    * column via ONE distributed job over just the new files
-    * (input_file_name grouping) — write-time stats collection, O(new
-    * data) once, never re-scanned. Files are uuid-named so basename
-    * lookup is exact.
-    */
-  private def newEntries(relFiles: Seq[String]): Seq[Entry] = {
-    if ((allStatsCols.isEmpty && bloomCol.isEmpty) || relFiles.isEmpty)
-      return withFooterCounts(relFiles.map(Entry(_, Map.empty)))
-    val abs = relFiles.map(r => new Path(root, r).toString)
-    val sdf = withListingScoped(
-      spark.read.option("basePath", dataDir.toString).parquet(abs: _*))
-    val present = allStatsCols.filter(sdf.columns.contains)
-    val bloom = bloomCol.filter(sdf.columns.contains)
-    if (present.isEmpty && bloom.isEmpty)
-      return withFooterCounts(relFiles.map(Entry(_, Map.empty)))
-    val kinds = present.map(c => c -> statKindOf(sdf.schema(c).dataType)).toMap
-    // Bloom positions ride the SAME per-file stats job: each row
-    // explodes into its k bit positions (min/max are duplication-proof,
-    // collect_set is bounded by bloomBits) — one distributed pass over
-    // the new files collects zone maps AND blooms.
-    val withFile = sdf.withColumn("_f", input_file_name())
-    // posexplode (not explode) so the row COUNT can ride the same
-    // pass: position 0 marks each original row exactly once despite
-    // the k-fold bloom fan-out (null position = the explode_outer
-    // degenerate row, also one per original row)
-    val rows = bloom match {
-      case Some(b) =>
-        withFile
-          .select(col("*"),
-            posexplode_outer(bloomPositions(col(b))).as(Seq("_bi", "_bp")))
-      case None => withFile
-        .withColumn("_bi", lit(0))
-        .withColumn("_bp", lit(null).cast("int"))
-    }
-    // the bitset packs ENGINE-SIDE (mergeable OR-aggregator): the
-    // driver receives one ~8 KB base64 string per file — a collect_set
-    // of positions would ship up to bloomBits boxed ints per file and
-    // OOM the driver on a wide compaction
-    val packBits = udaf(new ManifestTable.BloomBitsAgg(bloomBits),
-      org.apache.spark.sql.Encoders.INT)
-    val aggs = present.flatMap(c => Seq(
-      min(col(c)).cast("string").as(s"mn_$c"),
-      max(col(c)).cast("string").as(s"mx_$c"))) ++
-      Seq(count(when(col("_bi").isNull || col("_bi") === 0, 1))
-        .as("_cnt")) ++
-      bloom.map(_ => packBits(col("_bp")).as("_bloom"))
-    val byName = rows
-      .groupBy(col("_f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect() // bounded: one row per new file
-      .map { r =>
-        val stats = present.flatMap { c =>
-          (Option(r.getAs[String](s"mn_$c")), Option(r.getAs[String](s"mx_$c"))) match {
-            case (Some(mn), Some(mx)) => Some(c -> ColStats(mn, mx, kinds(c)))
-            case _ => None // all-null column in this file: never pruned on it
-          }
-        }.toMap
-        val n = r.getAs[Long]("_cnt")
-        val cntStats = Map(ManifestTable.CountKey ->
-          ColStats(n.toString, n.toString, "C"))
-        val bloomStats = bloom.map { b =>
-          bloomKey(b) -> ColStats(
-            r.getAs[String]("_bloom"),
-            s"$bloomBits,$bloomHashes", "B")
-        }
-        new Path(r.getString(0)).getName -> (stats ++ cntStats ++ bloomStats)
-      }
-      .toMap
-    // zero-row files never appear in the scan's groups; only THOSE
-    // stragglers (normally none) still pay a driver footer read
-    val missing = relFiles.filterNot(rel =>
-      byName.contains(new Path(rel).getName))
-    val footered = withFooterCounts(missing.map(Entry(_, Map.empty)))
-      .map(e => e.rel -> e).toMap
-    relFiles.map(rel => footered.getOrElse(rel,
-      Entry(rel, byName(new Path(rel).getName))))
-  }
-
-  /** Attach each NEW file's exact row count (the parquet footer's
-    * record count — authoritative metadata, no data pages read) as the
-    * `#n` stats entry, paid once at write time so COUNT(*) never has
-    * to touch data again ([[metadataRowCount]]). This is the FALLBACK
-    * path: tables with stats columns or blooms get `#n` from the
-    * distributed write-time stats job in [[newEntries]] (one
-    * `count(pos==0)` leg on the same single pass — executor-side, so a
-    * wide initial load never serializes footer IO through the driver);
-    * the footer pool serves only stats-less tables and zero-row
-    * stragglers. One ranged footer read per file, fanned out over a
-    * bounded driver pool, and BEST-EFFORT: a read failure or a pool
-    * that outlives the deadline (a stalled remote filesystem must not
-    * hang the commit forever) logs a warning and omits `#n` for the
-    * affected files — [[metadataRowCount]] already degrades to a scan
-    * when any entry lacks the stat.
-    */
-  private def withFooterCounts(entries: Seq[Entry]): Seq[Entry] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration._
-    if (entries.isEmpty) return entries
-    val conf = spark.sessionState.newHadoopConf()
-    // a BOUNDED dedicated pool, not ExecutionContext.global: the
-    // global fork-join pool either caps blocking IO at #cores (and
-    // starves its other users) or — under blocking{} — spawns up to
-    // 256 compensating threads, enough to exhaust an object-store
-    // client's connection pool on a wide commit. 32 concurrent footer
-    // reads is a safe ceiling below default S3A connection limits.
-    val par = math.min(32, math.max(8,
-      Runtime.getRuntime.availableProcessors()))
-    // DAEMON threads + shutdownNow: a read wedged on a stalled remote
-    // filesystem must neither survive as a non-daemon thread blocking
-    // JVM exit nor keep running after the commit gave up on it
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(par,
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-footer-count")
-        t.setDaemon(true)
-        t
-      })
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    // generous but finite: 30 s of budget per batch-of-`par` plus a
-    // 5 min floor — far above healthy footer latency, small enough
-    // that one wedged read surfaces as a log line, not a hung commit
-    val deadline = math.max(300L, 30L * ((entries.size + par - 1) / par)).seconds
-    val futures = entries.map { e =>
-      Future {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new Path(root, e.rel), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        val n = try r.getRecordCount finally r.close()
-        e.copy(stats = e.stats + (ManifestTable.CountKey ->
-          ColStats(n.toString, n.toString, "C")))
-      }.recover { case ex: Exception =>
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"footer row-count read failed for ${e.rel} " +
-            s"(#n omitted; COUNT(*) will scan): $ex")
-        e
-      }
-    }
-    // harvest per future against ONE shared deadline: counts that
-    // completed are kept even when a straggler times out — only the
-    // wedged file loses its #n (an all-or-nothing Await would discard
-    // every completed read on one timeout)
-    val deadlineAt = System.nanoTime() + deadline.toNanos
-    try futures.zip(entries).map { case (f, e) =>
-      val left = math.max(0L, deadlineAt - System.nanoTime()).nanos
-      try Await.result(f, left)
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"footer row-count read for ${e.rel} exceeded the $deadline " +
-              "commit budget; committing it without #n (COUNT(*) will scan)")
-          e
-      }
-    } finally pool.shutdownNow()
-  }
-
-  /** Bloom bit positions of a value (engine side): double hashing
-    * pos_i = (h1 + i·h2) mod m over the value's STRING rendering, both
-    * hashes xxhash64 so the driver-side probe can replay them exactly.
-    */
-  private def bloomPositions(c: Column): Column = {
-    val s = c.cast("string")
-    val m = lit(bloomBits.toLong)
-    // reduce each hash mod m BEFORE combining: (h1 + i·h2) mod m ==
-    // ((h1 mod m) + i·(h2 mod m)) mod m, and the reduced form can't
-    // overflow a long (ANSI mode would reject the wrapping multiply)
-    val h1 = pmod(xxhash64(s), m)
-    val h2 = pmod(xxhash64(lit(ManifestTable.BloomSalt), s), m)
-    transform(sequence(lit(0), lit(bloomHashes - 1)),
-      i => pmod(h1 + i.cast("long") * h2, m).cast("int"))
-  }
-
   private def bloomKey(c: String): String = s"$c#bloom"
-
-  /** Driver-side replica of [[bloomPositions]]'s double hash for a
-    * probe value — the RAW (pre-mod) hash pair, computed ONCE per
-    * value: Spark's xxhash64 chains XXH64 over the UTF8 bytes from
-    * seed 42, and xxhash64(salt, v) uses the salt's hash as v's seed.
-    */
-  private def bloomRawHashes(value: String): (Long, Long) = {
-    import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-    import org.apache.spark.sql.types.StringType
-    import org.apache.spark.unsafe.types.UTF8String
-    val v = UTF8String.fromString(value)
-    (XxHash64Function.hash(v, StringType, 42L),
-      XxHash64Function.hash(v, StringType, ManifestTable.bloomSaltSeed))
-  }
-
-  /** Probe a decoded bitset with a precomputed raw-hash pair. */
-  private def bloomTest(bits: Array[Byte], m: Long, k: Int,
-      raw: (Long, Long)): Boolean = {
-    val h1 = java.lang.Math.floorMod(raw._1, m)
-    val h2 = java.lang.Math.floorMod(raw._2, m)
-    (0 until k).forall { i =>
-      val pos = ((h1 + i.toLong * h2) % m).toInt
-      (bits(pos >> 3) & (1 << (pos & 7))) != 0
-    }
-  }
 
   /** Decode the entry's bitset ONCE and probe it with every raw-hash
     * pair — the batch path: pruning F files for V values costs
@@ -1734,8 +1498,7 @@ class ManifestTable(spark: SparkSession, root: String,
   private def bloomTestEntry(s: ColStats, raws: Seq[(Long, Long)]): Boolean = {
     val bits = java.util.Base64.getDecoder.decode(s.mn)
     val mk = s.mx.split(',')
-    val (m, k) = (mk(0).toLong, mk(1).toInt)
-    raws.exists(bloomTest(bits, m, k, _))
+    raws.exists(FileStatsTracker.mightContain(bits, mk(0).toInt, mk(1).toInt, _))
   }
 
   // -------------------------------------------------------------- //
@@ -1886,7 +1649,8 @@ class ManifestTable(spark: SparkSession, root: String,
         case _ => "S"
       }
       lazy val raws = w match {
-        case AnyOf(ps) if !ps.exists(_.zoned) => Some(ps.map(p => bloomRawHashes(p.str)))
+        case AnyOf(ps) if !ps.exists(_.zoned) =>
+          Some(ps.map(p => FileStatsTracker.rawHashes(p.utf8)))
         case _ => None
       }
       val transformed = scala.collection.mutable.Map.empty[String, Option[(Want, String)]]
@@ -2053,12 +1817,31 @@ class ManifestTable(spark: SparkSession, root: String,
       }.reduce(sources.Or)))
   }
 
-  /** Write a DataFrame's rows as new data files; returns their paths
-    * relative to the table root. Files land under data/ preserving
-    * hive-style partition dirs when the table is partitioned.
+  /** A written file's manifest stats: `#n` always; zone maps (kind
+    * from the column's written type) and the bloom when it holds rows.
     */
-  private def writeDataFiles(df: DataFrame, md: TableMetadata,
-      fileTag: Option[String] = None): Seq[String] = {
+  private def entryStats(f: FileStatsTracker.FileStats,
+      schema: StructType): Map[String, ColStats] = {
+    val n = f.rows.toString
+    val count = Map(ManifestTable.CountKey -> ColStats(n, n, "C"))
+    if (f.rows == 0) count
+    else count ++ f.bounds.map { case (c, (mn, mx)) =>
+      c -> ColStats(mn, mx, statKindOf(schema(c).dataType))
+    } ++ f.bloom.map(b => bloomKey(bloomCol.get) -> ColStats(
+      java.util.Base64.getEncoder.encodeToString(b),
+      s"$bloomBits,$bloomHashes", "B"))
+  }
+
+  /** Write a DataFrame's rows as new data files and return their
+    * entries. Files land under data/, in hive-style partition dirs when
+    * the table is partitioned. Each entry carries the stats its write
+    * task collected ([[FileStatsTracker]]: the `#n` row count, zone
+    * maps of the stats columns, the bloom); no file is read back. The
+    * write is one SQL execution, its name and its jobs' description
+    * `graft <op> <table root>`, in whichever thread calls this.
+    */
+  private def writeDataFiles(df: DataFrame, md: TableMetadata, op: String,
+      fileTag: Option[String] = None): Seq[Entry] = {
     fileTag.foreach(t => require(t.matches("[A-Za-z0-9_\\-.]+"),
       s"bad file tag: $t"))
     val stage = new Path(root, s".stage-${UUID.randomUUID()}")
@@ -2106,7 +1889,10 @@ class ManifestTable(spark: SparkSession, root: String,
           // → one file per tuple per commit either way.
           val n = math.max(spark.sparkContext.defaultParallelism,
             spark.sessionState.conf.numShufflePartitions)
+          // sorted by the tuple within each task, as a planned write
+          // sorts, so each task holds one open file at a time
           derived.repartition(n, partCols.map(col): _*)
+            .sortWithinPartitions(partCols.map(col): _*)
         }
       // the stage dir is PRIVATE (uuid-named, walked and deleted by
       // this method alone), so Spark's two-phase output commit buys
@@ -2117,10 +1903,16 @@ class ManifestTable(spark: SparkSession, root: String,
       // commit, never from the stage layout (measured: the committer
       // dance was the single largest driver-side cost of every DML
       // commit at bench scale)
-      val writer = toWrite.write.mode("overwrite")
-        .options(ManifestTable.InternalWriteOptions)
-      (if (partCols.isEmpty) writer else writer.partitionBy(partCols: _*))
-        .parquet(stage.toString)
+      val dataSchema = StructType(
+        toWrite.schema.filterNot(f => partCols.contains(f.name)))
+      val tracker = new FileStatsTracker(dataSchema,
+        StructType(partCols.map(toWrite.schema(_))),
+        allStatsCols.filter(toWrite.columns.contains),
+        bloomCol.filter(toWrite.columns.contains), bloomBits, bloomHashes,
+        spark.sessionState.conf.sessionLocalTimeZone)
+      org.apache.spark.sql.graft.GraftSqlBridge.writeParquet(toWrite,
+        stage.toString, partCols, ManifestTable.InternalWriteOptions, tracker,
+        s"graft $op $root")
       // collect the staged files first, then promote them with
       // CONCURRENT renames (bounded by the commit pool): the promotion
       // is one metadata op per file, and a wide partitioned commit
@@ -2137,7 +1929,7 @@ class ManifestTable(spark: SparkSession, root: String,
       // entries (`_`/`.` prefixes, e.g. a `_temporary` dir a broken
       // committer could leave) instead of promoting EVERY parquet it
       // finds.
-      val staged = scala.collection.mutable.ArrayBuffer[(Path, String)]()
+      val staged = scala.collection.mutable.ArrayBuffer[(Path, String, String)]()
       def walk(dir: Path, relPrefix: String): Unit =
         fs.listStatus(dir).foreach { st =>
           val name = st.getPath.getName
@@ -2146,21 +1938,21 @@ class ManifestTable(spark: SparkSession, root: String,
             !name.contains("=")) ()
           else if (st.isDirectory) walk(st.getPath, s"$relPrefix$name/")
           else if (name.endsWith(".parquet")) {
-            staged += st.getPath ->
-              s"data/$relPrefix${fileTag.getOrElse("")}${UUID.randomUUID()}.parquet"
+            staged += ((st.getPath, relPrefix + name,
+              s"data/$relPrefix${fileTag.getOrElse("")}${UUID.randomUUID()}.parquet"))
           }
         }
       walk(stage, "")
-      // ≤16 rename workers: bounded like the footer pool, so a wide
-      // commit can never exhaust an object-store client's connections
+      // ≤16 rename workers: a wide commit can never exhaust an
+      // object-store client's connections
       val slices = staged.grouped(math.max(1, (staged.size + 15) / 16)).toSeq
       val moved = slices.map(slice => ManifestTable.async {
-        slice.map { case (src, rel) =>
+        slice.map { case (src, key, rel) =>
           val dest = new Path(root, rel)
           fs.mkdirs(dest.getParent)
           if (!fs.rename(src, dest))
             throw new IllegalStateException(s"move to $dest failed")
-          rel
+          key -> rel
         }
       }).flatMap(ManifestTable.await(_))
       fs.delete(stage, true)
@@ -2168,18 +1960,17 @@ class ManifestTable(spark: SparkSession, root: String,
       // write's FILE schema is the frame schema minus the hive
       // partition columns (parquet round-trips every type the engine
       // writes, and file sources normalize read-schema nullability
-      // anyway), so the old read-back footer open per commit was pure
-      // overhead. Unpartitioned reads consume the memo as their full
+      // anyway). Unpartitioned reads consume the memo as their full
       // read schema; partitioned reads use memo AGREEMENT to skip the
       // per-read mergeSchema footer sweep (dir discovery stays
       // Spark's).
-      if (moved.nonEmpty) {
-        val st = org.apache.spark.sql.types.StructType(
-          toWrite.schema.filterNot(f => partCols.contains(f.name)))
-        moved.foreach(r => ManifestTable.rememberFileSchema(
-          new Path(root, r).toString, st))
+      val statsOf = tracker.files.map(f => f.key -> f).toMap
+      moved.map { case (key, rel) =>
+        ManifestTable.rememberFileSchema(new Path(root, rel).toString, dataSchema)
+        val stats = statsOf.getOrElse(key,
+          throw new IllegalStateException(s"no write stats for staged file $key"))
+        Entry(rel, entryStats(stats, toWrite.schema))
       }
-      moved.toSeq
     } catch {
       // a failed write (e.g. a CHECK constraint thrown mid-job) must
       // not leak its staging dir into the table root
@@ -2204,7 +1995,7 @@ class ManifestTable(spark: SparkSession, root: String,
       fileTag: Option[String]): Int = {
     val md = metadata
     requireNoReservedCols(df, "write", md)
-    val newFiles = newEntries(writeDataFiles(enforced(df, md), md, fileTag))
+    val newFiles = writeDataFiles(enforced(df, md), md, mode, fileTag)
     mode match {
       case "append" =>
         val base = latestVersion.map(entriesOf).getOrElse(Seq.empty)
@@ -2237,24 +2028,30 @@ class ManifestTable(spark: SparkSession, root: String,
     else readLogLines(p).headOption.flatMap(_.trim.toLongOption)
   }
 
-  /** Record `batchId` as committed for `queryId`. Rename-FIRST (a
-    * local-FS rename overwrites atomically); only when the filesystem
-    * refuses a rename onto an existing destination (HDFS semantics)
-    * does the delete-then-rename fallback run — so the no-sidecar
-    * window is not a normal-path step but a crash inside the fallback,
+  /** Record `batchId` as committed for `queryId` ([[replaceLogFile]]:
+    * a crash inside its delete-then-rename fallback loses the sidecar,
     * and even then the commit-atomic file-tag layer still answers
-    * replays. Failed attempts never leak their temp file.
+    * replays).
     */
-  private[graft] def recordStreamTxn(queryId: String, batchId: Long): Unit = {
-    val tmp = new Path(logDir, s".tmp-txn-${UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(s"$batchId\n".getBytes("UTF-8")) finally out.close()
-    val dest = streamTxnPath(queryId)
+  private[graft] def recordStreamTxn(queryId: String, batchId: Long): Unit =
+    replaceLogFile(streamTxnPath(queryId), s"$batchId\n")
+
+  /** Write `content` to the log-dir file `dest`, replacing any file
+    * there. Rename-FIRST from a temp file (a local-FS rename
+    * overwrites atomically); only when the filesystem refuses a rename
+    * onto an existing destination (HDFS semantics) does the
+    * delete-then-rename fallback run, and a failure there throws. The
+    * temp file never outlives the call.
+    */
+  private def replaceLogFile(dest: Path, content: String): Unit = {
+    val tmp = new Path(logDir, s".tmp-${dest.getName}-${UUID.randomUUID()}")
     try {
+      val out = fs.create(tmp, false)
+      try out.write(content.getBytes("UTF-8")) finally out.close()
       if (!fs.rename(tmp, dest)) {
         fs.delete(dest, false)
         if (!fs.rename(tmp, dest))
-          throw new IllegalStateException(s"stream txn write failed at $dest")
+          throw new IllegalStateException(s"could not write $dest")
       }
     } finally fs.delete(tmp, false): Unit
   }
@@ -2285,7 +2082,7 @@ class ManifestTable(spark: SparkSession, root: String,
     requireNoReservedCols(df, "stageBranch", md)
     val bp = branchFile(name)
     require(!fs.exists(bp), s"branch $name already staged at $root")
-    val entries = newEntries(writeDataFiles(enforced(df, md), md))
+    val entries = writeDataFiles(enforced(df, md), md, "stageBranch")
     // no-overwrite publish: two same-process stagers of one branch
     // name must not both "win", silently orphaning the loser's staged
     // files. Under the shared ref lock (not a per-name one): a branch
@@ -2392,7 +2189,7 @@ class ManifestTable(spark: SparkSession, root: String,
         s"current partition spec (e.g. ${foreign.headOption.map(_.rel).getOrElse("")}); " +
         "compact() or evolvePartitionSpec to migrate the layout first, " +
         "or use merge/delete which scope per-spec")
-    val newFiles = newEntries(writeDataFiles(enforced(slice, md), md))
+    val newFiles = writeDataFiles(enforced(slice, md), md, "overwritePartition")
     def inPart(e: Entry): Boolean =
       partCols.zip(values).forall { case (c, v) => inPartition(e.rel, c, v) }
     // partition-scoped delta: concurrent commits to OTHER partitions
@@ -2439,8 +2236,9 @@ class ManifestTable(spark: SparkSession, root: String,
     *
     * so only changed rows are marked and re-appended, and re-applying
     * an applied feed commits nothing (returns the current version). A
-    * feed with several applying rows for one table row is a
-    * cardinality violation and throws — compact it first
+    * feed with several applying rows for one table row, or with several
+    * inserting rows for one key the table lacks, is a cardinality
+    * violation and throws, committing nothing — compact it first
     * ([[Merge.latestPerKey]]); every table row holding a fed key is
     * updated, duplicates included. A merge that inserts a key conflicts
     * with any concurrent commit that adds files ([[mergeInto]]).
@@ -2460,7 +2258,7 @@ class ManifestTable(spark: SparkSession, root: String,
     val star = cols.map(c => c -> src(c)).toMap
     val tombstone = deleteCol.map(d => coalesce(src(d), lit(false)))
     val differs = !cols.map(c => src(c) <=> col(c)).reduce(_ && _)
-    mergeAt(v0, md,
+    mergeAt("merge", v0, md,
       updates.toDF(updates.columns.map(Merge.SourcePrefix + _): _*),
       keys.map(k => src(k) <=> col(k)).reduce(_ && _),
       matched = tombstone.map(t => MergeDeleteClause(Some(t))).toSeq :+
@@ -2477,7 +2275,8 @@ class ManifestTable(spark: SparkSession, root: String,
           s"merge: updates must be the table's columns" +
             s"${deleteCol.fold("")(" + " + _)}: ${table.toSeq.sorted} vs " +
             s"${updates.columns.toSeq}")
-      })
+      },
+      insertKeys = keys)
   }
 
   // ---------------------------------------------------------------- //
@@ -3055,14 +2854,9 @@ class ManifestTable(spark: SparkSession, root: String,
       val mx = if (row.isNullAt(base + 3)) "" else enc(row.getString(base + 3))
       s"col=${enc(c)},${row.getLong(base)},${row.getLong(base + 1)},$mn,$mx"
     }
-    val content = (Seq(s"version=$v", s"rows=$rows", s"bytes=$bytes")
-      ++ colLines).mkString("\n") + "\n"
-    val tmp = new Path(logDir, s".tmp-stats-${UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    val dest = new Path(logDir, s"stats_v$v")
-    if (fs.exists(dest)) fs.delete(dest, false)
-    if (!fs.rename(tmp, dest)) { fs.delete(tmp, false); }
+    replaceLogFile(new Path(logDir, s"stats_v$v"),
+      (Seq(s"version=$v", s"rows=$rows", s"bytes=$bytes") ++ colLines)
+        .mkString("\n") + "\n")
     v
   }
 
@@ -3290,7 +3084,8 @@ class ManifestTable(spark: SparkSession, root: String,
       // ADVICE; the CDC branch below already had this discipline)
       val hits = matcher(scan)
         .select(col(DvFileCol), col(DvPosCol)).localCheckpoint(true)
-      try return commitDv(v0, all, hits, Seq.empty, md, marksUnique = true)
+      try return commitDv("delete", v0, all, hits, Seq.empty, md,
+        marksUnique = true)
       finally graft.functions.CheckpointOps.release(hits)
     }
     // T15: the matched rows ARE the commit's change rows. Materialize
@@ -3301,7 +3096,8 @@ class ManifestTable(spark: SparkSession, root: String,
     try {
       val dataCols = hits.columns
         .filterNot(Set(DvFileCol, DvPosCol, ManifestTable.RowIdCol)).toSeq
-      commitDv(v0, all, hits.select(col(DvFileCol), col(DvPosCol)), Seq.empty,
+      commitDv("delete", v0, all, hits.select(col(DvFileCol), col(DvPosCol)),
+        Seq.empty,
         md, cdc = Some(hits.select(dataCols.map(col): _*)
           .withColumn(ManifestTable.ChangeTypeCol, lit("delete"))),
         marksUnique = true)
@@ -3436,8 +3232,9 @@ class ManifestTable(spark: SparkSession, root: String,
             .unionByName(updated.drop(ManifestTable.RidPhysCol).withColumn(
               ManifestTable.ChangeTypeCol, lit("update_postimage")),
               allowMissingColumns = true))
-        commitDv(v0, entries, hits.select(col(DvFileCol), col(DvPosCol)),
-          Seq(enforced(updated, md)), md, cdc = cdc, marksUnique = true)
+        commitDv("updateWhere", v0, entries,
+          hits.select(col(DvFileCol), col(DvPosCol)), Seq(enforced(updated, md)),
+          md, cdc = cdc, marksUnique = true)
       } finally if (cdcOn) graft.functions.CheckpointOps.release(updated)
     } finally graft.functions.CheckpointOps.release(hits) // RDD-level: Dataset.unpersist no-ops on checkpoints
   }
@@ -3497,17 +3294,19 @@ class ManifestTable(spark: SparkSession, root: String,
       notMatched: Seq[MergeInsertClause] = Nil,
       notMatchedBySource: Seq[MergeMatchedClause] = Nil): Int = {
     val (v0, md) = snapshot(None)
-    mergeAt(v0, md, source, on, matched, notMatched, notMatchedBySource,
-      requireTarget = _ => ())
+    mergeAt("mergeInto", v0, md, source, on, matched, notMatched,
+      notMatchedBySource, requireTarget = _ => (), insertKeys = Nil)
   }
 
   /** [[mergeInto]] against snapshot `v0`/`md`; `requireTarget` checks
-    * the target's logical columns before any job runs. */
-  private def mergeAt(v0: Int, md: TableMetadata, source: DataFrame,
-      on: Column, matched: Seq[MergeMatchedClause],
+    * the target's logical columns before any job runs, and no two
+    * inserted rows may share a value of `insertKeys` (compared
+    * null-safely; empty = unchecked, as SQL MERGE INTO leaves it). */
+  private def mergeAt(op: String, v0: Int, md: TableMetadata,
+      source: DataFrame, on: Column, matched: Seq[MergeMatchedClause],
       notMatched: Seq[MergeInsertClause],
       notMatchedBySource: Seq[MergeMatchedClause],
-      requireTarget: Seq[String] => Unit): Int = {
+      requireTarget: Seq[String] => Unit, insertKeys: Seq[String]): Int = {
     require(matched.nonEmpty || notMatched.nonEmpty ||
       notMatchedBySource.nonEmpty, "MERGE needs at least one clause")
     val entries = entriesOf(v0)
@@ -3623,6 +3422,16 @@ class ManifestTable(spark: SparkSession, root: String,
         (matchedHits.toSeq ++ bySourceHits.toSeq).exists(!_.isEmpty)
       val haveInserts = insertRows.exists(!_.isEmpty)
       if (!haveMarks && !haveInserts) return v0
+      if (haveInserts && insertKeys.nonEmpty) insertRows.foreach { r =>
+        val dup = r.groupBy(insertKeys.map(col): _*)
+          .agg(count(lit(1)).as("_graft_n")).filter(col("_graft_n") > 1)
+          .limit(1).collect()
+        if (dup.nonEmpty) throw new IllegalArgumentException(
+          "MERGE cardinality violation: the source holds several rows " +
+            s"for key (${insertKeys.zip(dup.head.toSeq).map { case (k, v) =>
+              s"$k=$v" }.mkString(", ")}), which the table lacks; " +
+            "deduplicate the source (e.g. Merge.latestPerKey)")
+      }
       def updatedCopies(hitsOpt: Option[DataFrame],
           clauses: Seq[MergeMatchedClause]): Seq[DataFrame] =
         hitsOpt.toSeq.flatMap { h =>
@@ -3671,7 +3480,7 @@ class ManifestTable(spark: SparkSession, root: String,
         .reduceOption(_ unionAll _)
         .getOrElse(live.limit(0).select(col(DvFileCol), col(DvPosCol)))
       // inserts were decided against v0 alone (the Delta MERGE rule)
-      commitDv(v0, entries, marks, adds, md,
+      commitDv(op, v0, entries, marks, adds, md,
         conflictsWith = if (haveInserts) _ => true else _ => false,
         appendWithoutMarks = true, cdc = cdc, marksUnique = true)
     } finally (allCheckpoints ++ copyCheckpoints)
@@ -3689,8 +3498,8 @@ class ManifestTable(spark: SparkSession, root: String,
     * the default preserves the delete/update contract that a no-match
     * predicate is a version no-op.
     */
-  private def commitDv(v0: Int, entries: Seq[Entry], marks: DataFrame,
-      adds: Seq[DataFrame], md: TableMetadata,
+  private def commitDv(op: String, v0: Int, entries: Seq[Entry],
+      marks: DataFrame, adds: Seq[DataFrame], md: TableMetadata,
       conflictsWith: Entry => Boolean = _ => false,
       appendWithoutMarks: Boolean = false,
       cdc: Option[DataFrame] = None,
@@ -3715,7 +3524,7 @@ class ManifestTable(spark: SparkSession, root: String,
       // per-commit fixed costs were the #1 scale-killer class.
       val cdcF = cdc.map(c => ManifestTable.async(writeCdcFile(c)))
       val addFs = adds.map(df =>
-        ManifestTable.async(newEntries(writeDataFiles(df, md))))
+        ManifestTable.async(writeDataFiles(df, md, op)))
       // one bounded job: per-file NEW-mark counts (≤ one row per file)
       val newPerFile = cached.groupBy(col(DvFileCol)).count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -3894,7 +3703,8 @@ class ManifestTable(spark: SparkSession, root: String,
             .withColumn(ct, lit("delete"))) ++
           addsC.map(a => withDeclared(a, md).withColumn(ct, lit("insert"))))
           .reduceOption(_ unionByName _)
-      commitDv(v0, entries, marks, addsC, md, conflictsWith,
+      commitDv("deleteKeysAndAppend", v0, entries, marks, addsC, md,
+        conflictsWith,
         appendWithoutMarks = true, cdc = cdc)
     } finally {
       hitCheckpoints.foreach(graft.functions.CheckpointOps.release)
@@ -3977,8 +3787,9 @@ class ManifestTable(spark: SparkSession, root: String,
     * unless `conflictsWith` claims them. Returns `v0` when nothing is
     * chosen.
     */
-  private def rewriteFiles(v0: Int, entries: Seq[Entry], chosen: Seq[Entry],
-      md: TableMetadata, targetFiles: Int, clusterBy: Seq[String] = Nil,
+  private def rewriteFiles(op: String, v0: Int, entries: Seq[Entry],
+      chosen: Seq[Entry], md: TableMetadata, targetFiles: Int,
+      clusterBy: Seq[String] = Nil,
       conflictsWith: Entry => Boolean = _ => false): Int = {
     if (chosen.isEmpty) return v0
     val rows = readEntries(chosen, md, withRowId = true)
@@ -3995,7 +3806,7 @@ class ManifestTable(spark: SparkSession, root: String,
             .sortWithinPartitions("_zorder")
             .drop("_zorder")
       }
-    val newFiles = newEntries(writeDataFiles(laidOut, md))
+    val newFiles = writeDataFiles(laidOut, md, op)
     stampCdcNone(commitDelta(entries, chosen.map(_.rel).toSet, newFiles,
       conflictsWith), md)
   }
@@ -4018,7 +3829,7 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   def compact(targetFiles: Int = 1, scope: Option[Column] = None): Int = {
     val (v0, md, entries, chosen) = scoped(scope)
-    rewriteFiles(v0, entries, chosen, md, targetFiles)
+    rewriteFiles("compact", v0, entries, chosen, md, targetFiles)
   }
 
   /** L5d: incremental bin-pack OPTIMIZE — the form that survives
@@ -4045,7 +3856,7 @@ class ManifestTable(spark: SparkSession, root: String,
       return v0 // nothing to pack (a single small DV-free file gains nothing)
     val totalBytes = small.map(_._2).sum
     val nOut = math.ceil(totalBytes.toDouble / targetFileBytes).toInt
-    rewriteFiles(v0, entries, small.map(_._1), md, nOut)
+    rewriteFiles("compactSmall", v0, entries, small.map(_._1), md, nOut)
   }
 
   /** REORG PURGE — materialize soft deletes: rewrite exactly the files
@@ -4071,9 +3882,9 @@ class ManifestTable(spark: SparkSession, root: String,
       if (minDeletedFraction <= 0.0 || dvd.isEmpty) dvd
       else {
         // per-file row counts in ONE job, grouped by input_file_name
-        // and keyed by basename (uuid-named files — the newEntries
-        // pattern): a count() per candidate file in a driver loop
-        // would be O(DV'd files) sequential Spark jobs
+        // and keyed by basename (uuid-named files): a count() per
+        // candidate file in a driver loop would be O(DV'd files)
+        // sequential Spark jobs
         val counts = spark.read
           .parquet(dvd.map(e => new Path(root, e.rel).toString): _*)
           .groupBy(input_file_name().as("_f"))
@@ -4087,7 +3898,7 @@ class ManifestTable(spark: SparkSession, root: String,
           rows > 0 && marks.toDouble / rows >= minDeletedFraction
         }
       }
-    rewriteFiles(v0, entries, chosen, md, chosen.size)
+    rewriteFiles("reorgPurge", v0, entries, chosen, md, chosen.size)
   }
 
   /** T16 follow-up: adopt row tracking on a legacy table — one
@@ -4106,7 +3917,8 @@ class ManifestTable(spark: SparkSession, root: String,
     val (v0, md, entries, _) = scoped(None)
     val unstamped = entries.filterNot(_.stats.contains(ManifestTable.RidKey))
     if (unstamped.isEmpty) return v0
-    val v = rewriteFiles(v0, entries, unstamped, md, unstamped.size)
+    val v = rewriteFiles("backfillRowIds", v0, entries, unstamped, md,
+      unstamped.size)
     // stamped even without CDC (the rewrite stamps only CDC tables):
     // live rows move verbatim by construction, and the usual keyless
     // fallback (row-id diff) is exactly what a pre-tracking file
@@ -4134,7 +3946,8 @@ class ManifestTable(spark: SparkSession, root: String,
       scope: Option[Column] = None): Int = {
     require(cols.nonEmpty, "optimizeByZ needs at least one column")
     val (v0, md, entries, chosen) = scoped(scope)
-    rewriteFiles(v0, entries, chosen, md, targetFiles, clusterBy = cols)
+    rewriteFiles("optimizeByZ", v0, entries, chosen, md, targetFiles,
+      clusterBy = cols)
   }
 
   /** Auto-OPTIMIZE advisor (the `CALL graft.maintenance_plan` body):
@@ -4423,13 +4236,7 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   def putVersionTag(version: Int, key: String, value: String): Unit = {
     fs.mkdirs(logDir)
-    val p = new Path(logDir, f"tag-$key-v$version%05d")
-    val tmp = new Path(logDir, s".tmp-tag-${UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(value.getBytes("UTF-8")) finally out.close()
-    fs.delete(p, false) // retry after a crash overwrites the orphan
-    if (!fs.rename(tmp, p))
-      throw new IllegalStateException(s"tag commit $key@v$version failed")
+    replaceLogFile(new Path(logDir, f"tag-$key-v$version%05d"), value)
   }
 
   def versionTag(version: Int, key: String): Option[String] = {

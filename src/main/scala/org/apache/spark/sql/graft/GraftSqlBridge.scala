@@ -29,6 +29,43 @@ object GraftSqlBridge {
       .internalCreateDataFrame(data.queryExecution.toRdd, data.schema,
         isStreaming = false)
 
+  /** Write `df` as parquet under `dir` (hive dirs for `partitionCols`)
+    * through Spark's own file writer, with `tracker` beside Spark's
+    * basic stats tracker in every write task — the hook a
+    * `DataFrameWriter` does not offer (Delta's transactional write
+    * calls the same writer for the same reason). The write is one SQL
+    * execution named `name`, and `name` describes its jobs in the
+    * calling thread (the caller's description is restored after).
+    * `options` go to the Hadoop job and the parquet writer.
+    */
+  def writeParquet(df: DataFrame, dir: String, partitionCols: Seq[String],
+      options: Map[String, String],
+      tracker: org.apache.spark.sql.execution.datasources.WriteJobStatsTracker,
+      name: String): Unit = {
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter}
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val spark = ds.sparkSession
+    val sc = spark.sparkContext
+    val prior = sc.getLocalProperty(org.apache.spark.SparkContext.SPARK_JOB_DESCRIPTION)
+    sc.setJobDescription(name)
+    try SQLExecution.withNewExecutionId(ds.queryExecution, Some(name)) {
+      val plan = ds.queryExecution.executedPlan
+      val conf = spark.sessionState.newHadoopConfWithOptions(options)
+      val basic = new BasicWriteJobStatsTracker(
+        new org.apache.spark.util.SerializableConfiguration(conf),
+        BasicWriteJobStatsTracker.metrics)
+      FileFormatWriter.write(spark, plan,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+        org.apache.spark.internal.io.FileCommitProtocol.instantiate(
+          spark.sessionState.conf.fileCommitProtocolClass,
+          java.util.UUID.randomUUID().toString, dir),
+        FileFormatWriter.OutputSpec(dir, Map.empty, plan.output), conf,
+        partitionCols.map(c => plan.output.find(_.name == c).get),
+        bucketSpec = None, statsTrackers = Seq(basic, tracker), options = options): Unit
+    } finally sc.setJobDescription(prior)
+  }
+
   /** The local property key StreamExecution sets on the driver for the
     * duration of a streaming query — the stable per-checkpoint query id
     * the sink uses as its transaction app id.

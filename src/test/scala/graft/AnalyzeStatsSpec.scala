@@ -21,6 +21,47 @@ class AnalyzeStatsSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     dir
   }
 
+  /** Names of the temp files left in a table's log dir. */
+  private def logTemps(root: String): Seq[String] = {
+    val log = new org.apache.hadoop.fs.Path(root, "_graft_log")
+    log.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(log)
+      .map(_.getPath.getName).filter(_.startsWith(".tmp-")).toSeq
+  }
+
+  test("re-analyzing and re-tagging one version replace in place, no temp file left") {
+    import spark.implicits._
+    val root = scratch("reanalyze")
+    val t = new ManifestTable(spark, root)
+    t.write((1 to 10).map(i => (i.toLong, s"n$i")).toDF("id", "name"), "overwrite")
+    val v = t.analyze(Seq("id"))
+    assert(t.columnStats().collect().map(_.getString(0)).toSeq === Seq("id"))
+    assert(t.analyze(Seq("id", "name")) === v)
+    assert(t.columnStats().collect().map(_.getString(0)).toSet === Set("id", "name"))
+    t.putVersionTag(v, "k", "first")
+    t.putVersionTag(v, "k", "second")
+    assert(t.versionTag(v, "k") === Some("second"))
+    assert(logTemps(root).isEmpty, logTemps(root))
+  }
+
+  test("stats and tags replace where rename never overwrites; a failed rename throws") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration.set("fs.refusing.impl",
+      classOf[RefusingLocalFs].getName)
+    val root = "refusing://" + scratch("refusing")
+    val t = new ManifestTable(spark, root)
+    t.write((1 to 10).map(i => (i.toLong, s"n$i")).toDF("id", "name"), "overwrite")
+    val v = t.analyze(Seq("id"))
+    assert(t.analyze(Seq("id", "name")) === v)
+    assert(t.columnStats().collect().map(_.getString(0)).toSet === Set("id", "name"))
+    t.putVersionTag(v, "k", "first")
+    t.putVersionTag(v, "k", "second")
+    assert(t.versionTag(v, "k") === Some("second"))
+    RefusingLocalFs.refused = Some("stats_v")
+    try intercept[IllegalStateException](t.analyze())
+    finally RefusingLocalFs.refused = None
+    assert(logTemps(root).isEmpty, logTemps(root))
+  }
+
   test("analyze: exact rows/non-null/min-max, NDV within tolerance, version pinning, DV-awareness") {
     import spark.implicits._
     val root = scratch("basic")
@@ -117,4 +158,20 @@ class AnalyzeStatsSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     sqlSpark.sql(s"CALL graft.analyze('$root', 'id')")
     assert(sqlSpark.sql(s"CALL graft.describe_stats('$root')").count() === 1)
   }
+}
+
+/** The local file system under the `refusing` scheme, with HDFS's
+  * rename: it never replaces an existing file. While `refused` holds a
+  * name prefix, every rename onto a file of that name fails too.
+  */
+class RefusingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("refusing:///")
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    if (exists(dst) || RefusingLocalFs.refused.exists(dst.getName.startsWith)) false
+    else super.rename(src, dst)
+}
+
+object RefusingLocalFs {
+  @volatile var refused: Option[String] = None
 }

@@ -207,4 +207,28 @@ class MergePropertiesSpec extends SparkTestBase {
         .count() === b.size, s"seed $i")
     }
   }
+
+  test("merge refuses a feed with two rows for a key the table lacks") {
+    val dir = s"${sys.props("java.io.tmpdir")}/graft_test_mprop_dup_insert"
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    val mt = new ManifestTable(spark, dir)
+    mt.write(Seq((1L, 10, "a")).toDF("k", "v", "s"), "overwrite") // v0
+    val feed = Seq((5L, 1, "b"), (5L, 2, "c"), (1L, 11, "a")).toDF("k", "v", "s")
+    val e = intercept[IllegalArgumentException](mt.merge(feed, Seq("k")))
+    assert(e.getMessage.contains("MERGE cardinality violation") &&
+      e.getMessage.contains("k=5"), e.getMessage)
+    assert(mt.versions === Seq(0), "a refused merge commits nothing")
+    assert(mt.read().as[(Long, Int, String)].collect().toSeq === Seq((1L, 10, "a")))
+    // NULL keys compare null-safely, as the merge's join does
+    val nulls = Seq((None: Option[Long], 1, "b"), (None: Option[Long], 2, "c"))
+      .toDF("k", "v", "s")
+    intercept[IllegalArgumentException](mt.merge(nulls, Seq("k")))
+    // one row per new key still inserts; a tombstone never inserts
+    val ok = Seq((5L, 1, "b", false), (6L, 2, "c", false), (6L, 3, "d", true))
+      .toDF("k", "v", "s", "_del")
+    assert(mt.merge(ok, Seq("k"), Some("_del")) === 1)
+    assert(mt.read().as[(Long, Int, String)].collect().sortBy(_._1).toSeq ===
+      Seq((1L, 10, "a"), (5L, 1, "b"), (6L, 2, "c")))
+  }
 }

@@ -339,23 +339,18 @@ class PlanShapeSpec extends SparkTestBase {
 
   /** Shuffle-exchange counts of the data-file writes `op` runs under
     * `root`, one per write, from the executed plans a
-    * QueryExecutionListener sees.
+    * QueryExecutionListener sees. A table's data write is one SQL
+    * execution named `graft <operation> <table root>`.
     */
   private def writeShuffles(root: String)(op: => Unit): Seq[Int] = {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.command.DataWritingCommandExec
-    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val helper = new AdaptiveSparkPlanHelper {}
     val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (helper.find(qe.executedPlan) {
-          case DataWritingCommandExec(w: InsertIntoHadoopFsRelationCommand, _) =>
-            w.outputPath.toString.contains(root)
-          case _ => false
-        }.isDefined) writes.add(qe.executedPlan)
+        if (f.startsWith("graft ") && f.endsWith(root)) writes.add(qe.executedPlan)
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
