@@ -1,17 +1,21 @@
 package graft.lake
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, JoinedRow, Literal, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.{ArrayData, TypeUtils}
 import org.apache.spark.sql.execution.datasources.{WriteJobStatsTracker, WriteTaskStats, WriteTaskStatsTracker}
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** Write-time file stats, collected inside the write tasks (the hook
   * Spark's `BasicWriteJobStatsTracker` and Delta's statistics tracker
-  * use): per file, the row count, the min/max of every tracked column
-  * and the bloom bitset of the bloom column — one pass over the rows
-  * the task writes anyway, nothing read back.
+  * use): per file, the row count, the byte length, the min/max of
+  * every tracked column and the bloom bitset of the bloom column — one
+  * pass over the rows the task writes anyway, nothing read back. The
+  * length is the closed file's own (one stat in the task, as Spark's
+  * basic tracker takes it): readers seek to the footer with it.
   *
   * Min/max compare under Spark's ordering for the type (the one the
   * `min`/`max` aggregates use: NaN is the largest double, a tie keeps
@@ -23,11 +27,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * @param dataSchema      the columns of each row a task writes
   * @param partitionSchema the hive partition columns, outermost first
+  * @param hadoopConf      the write's Hadoop configuration, to stat
+  *                        each closed file with
   */
 private[lake] class FileStatsTracker(dataSchema: StructType,
     partitionSchema: StructType, statsCols: Seq[String],
     bloomCol: Option[String], bloomBits: Int, bloomHashes: Int,
-    timeZoneId: String) extends WriteJobStatsTracker {
+    timeZoneId: String, hadoopConf: SerializableConfiguration)
+    extends WriteJobStatsTracker {
   import FileStatsTracker._
 
   @transient private lazy val collected =
@@ -95,14 +102,14 @@ private[lake] class FileStatsTracker(dataSchema: StructType,
           rawHashes(bloomStr.get.eval(joined).asInstanceOf[UTF8String])))
       }
 
-      def finish(key: String): FileStats = {
+      def finish(key: String, bytes: Long): FileStats = {
         def render(v: Any, dt: DataType): String =
           Cast(Literal(v, dt), StringType, Some(timeZoneId)).eval().toString
         val bounds = statsCols.indices.collect {
           case i if mins(i) != null => statsCols(i) ->
             (render(mins(i), cols(i).dataType), render(maxs(i), cols(i).dataType))
         }.toMap
-        FileStats(key, rows, bounds, bits)
+        FileStats(key, rows, bytes, bounds, bits)
       }
     }
 
@@ -113,7 +120,11 @@ private[lake] class FileStatsTracker(dataSchema: StructType,
     override def newRow(path: String, row: InternalRow): Unit =
       open(path).add(row)
     override def closeFile(path: String): Unit =
-      open.remove(path).foreach(f => done += f.finish(keyOf(path)))
+      open.remove(path).foreach { f =>
+        val p = new Path(path)
+        done += f.finish(keyOf(path),
+          p.getFileSystem(hadoopConf.value).getFileStatus(p).getLen)
+      }
     // Spark closes every file before it asks for the final stats
     override def getFinalStats(taskCommitTime: Long): WriteTaskStats =
       TaskStats(done.toSeq)
@@ -129,10 +140,11 @@ private[lake] class FileStatsTracker(dataSchema: StructType,
 
 private[lake] object FileStatsTracker {
   /** One written file: its path under the output dir, its row count,
-    * (min, max) per tracked column holding a non-null value, and the
-    * bloom bitset when a bloom column is tracked.
+    * its length in bytes, (min, max) per tracked column holding a
+    * non-null value, and the bloom bitset when a bloom column is
+    * tracked.
     */
-  case class FileStats(key: String, rows: Long,
+  case class FileStats(key: String, rows: Long, bytes: Long,
       bounds: Map[String, (String, String)], bloom: Option[Array[Byte]])
 
   private case class TaskStats(files: Seq[FileStats]) extends WriteTaskStats

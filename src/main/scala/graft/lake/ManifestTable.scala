@@ -92,6 +92,15 @@ object ManifestTable {
     */
   private[lake] val CountKey = "#n"
 
+  /** Stats key for a file's length in bytes (min = max = length, kind
+    * = "L"), taken when the write task closes the file. Scans list
+    * files with it (the parquet reader seeks to the footer by it), and
+    * every size report sums it, so no data file is stat'ed. Entries
+    * written before the key existed are stat'ed instead
+    * ([[ManifestTable.sizeOf]]). Part of the on-disk format.
+    */
+  private[lake] val SizeKey = "#b"
+
   /** Stats key for a file's ROW-ID BASE (min = max = base, kind =
     * "R"): the Delta row-tracking design. A row's stable id is
     * `base + its parquet row index`; bases are allotted at commit
@@ -372,6 +381,34 @@ object ManifestTable {
     rel.split("/").dropRight(1).toSeq
       .filter(_.contains('=')).map(_.takeWhile(_ != '='))
 
+  /** Write the file `dest`, replacing any file there: the content goes
+    * to a temp sibling, which is renamed over `dest` FIRST (a local-FS
+    * rename replaces atomically). Only when the file system refuses
+    * that rename (HDFS never renames onto an existing file) is the old
+    * file moved aside — the delete of a delete-then-rename, but undone
+    * when the second rename fails too, which then throws: a failed
+    * replace keeps the old content. The temp file never outlives the
+    * call. Shared by every single-file replace: log-dir sidecars,
+    * catalog views, registered schemas.
+    */
+  private[graft] def replaceFile(fs: FileSystem, dest: Path)(
+      write: java.io.OutputStream => Unit): Unit = {
+    val tmp = new Path(dest.getParent, s".tmp-${dest.getName}-${UUID.randomUUID()}")
+    try {
+      val out = fs.create(tmp, false)
+      try write(out) finally out.close()
+      if (!fs.rename(tmp, dest)) {
+        val old = new Path(dest.getParent, s".old-${dest.getName}-${UUID.randomUUID()}")
+        val aside = fs.rename(dest, old)
+        if (!fs.rename(tmp, dest)) {
+          if (aside) fs.rename(old, dest)
+          throw new IllegalStateException(s"could not write $dest")
+        }
+        if (aside) fs.delete(old, false)
+      }
+    } finally fs.delete(tmp, false): Unit
+  }
+
   /** Rebuild a Hadoop Configuration from its serialized entries —
     * executor-side FS access for distributed vacuum (Configuration is
     * a Writable, not Serializable, so tasks get a plain Map).
@@ -458,24 +495,22 @@ class ManifestTable(spark: SparkSession, root: String,
   private val DvKey = ManifestTable.DvKey
   private val DvFileCol = ManifestTable.DvFileCol
   private val DvPosCol = ManifestTable.DvPosCol
-  private def fs: FileSystem =
+  // resolved once: every resolution copies the whole Hadoop and SQL conf
+  private lazy val fs: FileSystem =
     logDir.getFileSystem(spark.sessionState.newHadoopConf())
 
-  // Every read here hands Spark an EXPLICIT leaf-file list resolved
-  // from the manifest — there are no directories to discover — yet at
-  // the default parallelPartitionDiscovery threshold (32) any read of
-  // >32 files launches a whole Spark job just to re-stat those known
-  // paths (measured: one such job per read across every DML
-  // lifecycle). Up to 8192 the driver's listing pool handles it in
-  // microseconds per path; genuinely huge file sets keep the
-  // distributed listing, which is what the threshold is for. SCOPED
-  // per engine read (file listing happens eagerly at DataFrame
-  // construction): the flip is saved/restored around each internal
-  // reader build instead of mutating the session conf for every read
-  // in the session (r18 ADVICE), and a value the user tuned away from
-  // the default is respected untouched. A concurrent commit-pool read
-  // racing the restore can at worst see the default back early and
-  // pay the distributed re-stat — a perf blip, never a wrong result.
+  // Deletion-vector sidecars are directories read by path, so Spark
+  // lists them; at the default parallelPartitionDiscovery threshold
+  // (32) a read of >32 sidecars launches a whole Spark job just to
+  // list them. Up to 8192 the driver's listing pool handles it in
+  // microseconds per path. SCOPED per sidecar read (listing happens
+  // eagerly at DataFrame construction): the flip is saved/restored
+  // around each reader build instead of mutating the session conf, and
+  // a value the user tuned away from the default is respected
+  // untouched. A concurrent commit-pool read racing the restore can at
+  // worst see the default back early and pay the distributed listing —
+  // a perf blip, never a wrong result. Data files need none of this:
+  // [[ManifestFileIndex]] lists them from the manifest.
   private def withListingScoped[T](body: => T): T = {
     val k = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     if (spark.conf.get(k, "32") != "32") body // user-tuned: respect it
@@ -622,15 +657,15 @@ class ManifestTable(spark: SparkSession, root: String,
 
   /** Time-travel read (latest when version is None) of the rows
     * matching `where`. Deletion vectors of the version's entries are
-    * applied (merge-on-read). A `where` scans only the files the
-    * skipping kernel keeps ([[mightMatch]]); the schema is the full
-    * read's whatever survives.
+    * applied (merge-on-read). Any filter on the frame — `where` or a
+    * caller's own — that Catalyst pushes into the scan skips files
+    * ([[ManifestFileIndex]] runs the kernel, [[mightMatch]]).
     */
-  def read(version: Option[Int] = None, where: Column = lit(true)): DataFrame =
-    if (where == lit(true)) {
-      val (v, md) = snapshot(version)
-      readAll(entriesOf(v), md)
-    } else readWhere(version, _ => where, sourceFilters(_, where))
+  def read(version: Option[Int] = None, where: Column = lit(true)): DataFrame = {
+    val (v, md) = snapshot(version)
+    val all = readAll(entriesOf(v), md)
+    if (where == lit(true)) all else all.filter(where)
+  }
 
   /** [[read]] without a predicate, under an already-resolved record. */
   private def readAt(version: Option[Int], md: TableMetadata): DataFrame =
@@ -778,6 +813,7 @@ class ManifestTable(spark: SparkSession, root: String,
     if (entries.isEmpty) return readAll(entries, md)
 
     val marker = s"${t.name}="
+    val byFile = entries.map(e => new Path(root, e.rel).toString -> e).toMap
     val groups = Array.fill(t.n)(Seq.newBuilder[String])
     entries.foreach { e =>
       val b = e.rel.split('/').collectFirst {
@@ -793,7 +829,7 @@ class ManifestTable(spark: SparkSession, root: String,
     // ONE schema-inference pass over the full file set; per-bucket
     // reads pin this schema (no per-bucket footer re-scan), and the
     // visible schema derives from the same frame without a second pass
-    val rawDf = readFiles(entries.map(e => new Path(root, e.rel).toString), md)
+    val rawDf = readFiles(entries, md)
     val rawSchema = rawDf.schema
     val derivedAll =
       rawSchema.fieldNames.filter(_.startsWith(PartitionTransform.Prefix))
@@ -803,7 +839,7 @@ class ManifestTable(spark: SparkSession, root: String,
     val keyType = schema(srcCol).dataType
     val nb = t.n
     val build: (Seq[String], Int) => DataFrame = { (files, b) =>
-      val raw = readFiles(files, md, pinnedSchema = Some(rawSchema))
+      val raw = readFiles(files.map(byFile), md, pinnedSchema = Some(rawSchema))
       // per-row placement integrity: every row must hash into its
       // group's bucket under the SURFACED key type — catches bucket-key
       // type drift across appends (hash(5: int) != hash(5L: long)),
@@ -832,23 +868,8 @@ class ManifestTable(spark: SparkSession, root: String,
     val attrs = schema.fields.map(f =>
       org.apache.spark.sql.catalyst.expressions.AttributeReference(
         f.name, f.dataType, nullable = true)()).toIndexedSeq
-    // honest size stats for join selection: one listStatus per bucket
-    // DIRECTORY (O(buckets) driver RPCs — the same cost class as the
-    // manifest listing), never one getFileStatus per file, which on an
-    // object store would be thousands of serial HEAD requests before
-    // the query even plans. A file missing from its directory listing
-    // (corrupt layout) falls back to a direct stat so the read fails
-    // with the real error rather than a silent size of zero.
-    val bytes = entries.groupBy(e => new Path(root, e.rel).getParent)
-      .iterator.map { case (dir, es) =>
-        val lens = fs.listStatus(dir).iterator
-          .map(st => st.getPath.getName -> st.getLen).toMap
-        es.iterator.map { e =>
-          val name = new Path(e.rel).getName
-          BigInt(lens.getOrElse(name,
-            fs.getFileStatus(new Path(root, e.rel)).getLen))
-        }.sum
-      }.sum
+    // honest size stats for join selection, from the manifest
+    val bytes = entries.iterator.map(e => BigInt(sizeOf(e))).sum
     graft.plans.BucketedScanStrategy.ensureRegistered(spark)
     org.apache.spark.sql.graft.GraftSqlBridge.ofRows(spark,
       graft.plans.BucketedTableScan(attrs, srcCol, t.n,
@@ -856,66 +877,50 @@ class ManifestTable(spark: SparkSession, root: String,
   }
 
   /** Entry-level read: scan the entries' files and anti-join out any
-    * deletion-vector positions they reference. The (file-basename,
-    * row_index) pair is a permanent row id — data files are immutable
-    * and uuid-named, so a position recorded by any committed DV can
-    * never misapply to a different row; positions only ever GROW per
-    * file (deletes add, rewrites mint new basenames), so unioning every
-    * referenced sidecar is always exact. DV-free tables take this path
-    * with zero overhead (no metadata columns, no join).
-    *
-    * `withRowId` adds the stable row id as [[ManifestTable.RowIdCol]]:
-    * `coalesce(the file's materialized [[ManifestTable.RidPhysCol]],
-    * entry base + parquet row index)`. NULL for rows whose file
-    * predates row tracking (no `#rid` stamp, no physical column) —
-    * callers that need total identity must check. The base lookup is
-    * one broadcast of (basename, base), O(files) rows like the manifest
-    * resolution that produced it.
+    * deletion-vector positions they reference ([[liveRows]]); derived
+    * partition columns are hidden.
     */
   private def readEntries(entries: Seq[Entry], md: TableMetadata,
       withRowId: Boolean = false): DataFrame = {
     if (entries.isEmpty) return spark.emptyDataFrame
-    val files = entries.map(e => new Path(root, e.rel).toString)
-    val raw = if (!withRowId) {
-      dvOf(entries) match {
-        case None => readFiles(files, md)
-        case Some(dv) =>
-          readFiles(files, md, withPos = true)
-            .join(dv, Seq(DvFileCol, DvPosCol), "left_anti")
-            .drop(DvFileCol, DvPosCol)
-      }
-    } else {
-      import spark.implicits._
-      val withPos = readFiles(files, md, withPos = true, keepRid = true)
-      val bases = entries.map(e => (new Path(e.rel).getName,
-        e.stats.get(ManifestTable.RidKey).map(_.mn.toLong)))
-        .toDF(DvFileCol, "_graft_rid_base")
-      val phys =
-        if (withPos.columns.contains(ManifestTable.RidPhysCol))
-          col(ManifestTable.RidPhysCol)
-        else lit(null).cast("long")
-      val withId = withPos
-        .join(broadcast(bases), Seq(DvFileCol), "left")
-        .withColumn(ManifestTable.RowIdCol,
-          coalesce(phys, col("_graft_rid_base") + col(DvPosCol)))
-        .drop("_graft_rid_base", ManifestTable.RidPhysCol)
-      dvOf(entries)
-        .fold(withId)(dv =>
-          withId.join(dv, Seq(DvFileCol, DvPosCol), "left_anti"))
-        .drop(DvFileCol, DvPosCol)
-    }
+    val raw = liveRows(entries, md, withPos = false, withRid = withRowId)
     // hidden partitioning: derived layout columns never surface in a
-    // scan (writers re-derive them from their sources); renamed
-    // columns surface under their LOGICAL name. Drop by the derived
-    // NAME PREFIX, not the current partitionSpec's transform list —
-    // after evolvePartitionSpec, time-travel reads of pre-evolution
-    // versions still carry the OLD spec's hidden hive columns, which
-    // must stay hidden too
-    val noDerived = {
-      val derived = raw.columns.filter(_.startsWith(PartitionTransform.Prefix))
-      if (derived.isEmpty) raw else raw.drop(derived.toIndexedSeq: _*)
-    }
-    toLogicalRename(noDerived, md)
+    // scan (writers re-derive them from their sources). Drop by the
+    // derived NAME PREFIX, not the current partitionSpec's transform
+    // list — after evolvePartitionSpec, time-travel reads of
+    // pre-evolution versions still carry the OLD spec's hidden hive
+    // columns, which must stay hidden too
+    val derived = raw.columns.filter(_.startsWith(PartitionTransform.Prefix))
+    if (derived.isEmpty) raw else raw.drop(derived.toIndexedSeq: _*)
+  }
+
+  /** The LIVE rows of non-empty `entries`, under logical column names:
+    * every row-level read — [[read]], the DML scans, the maintenance
+    * rewrite — is this one scan. Deletion-vector positions anti-join
+    * out by (file name, row index), a permanent row id: data files are
+    * immutable and uuid-named, so a position recorded by any committed
+    * DV can never misapply to another row, and positions only ever
+    * grow per file, so unioning every referenced sidecar is exact.
+    * DV-free entries pay no join.
+    *
+    * Both halves of a row's identity are per-file scan constants of
+    * the manifest's file index, never joins:
+    *  - `withPos` keeps the DV key as [[ManifestTable.DvFileCol]]
+    *    (`_metadata.file_name`) and [[ManifestTable.DvPosCol]]
+    *    (`_metadata.row_index`);
+    *  - `withRid` adds the stable row id as [[ManifestTable.RowIdCol]]:
+    *    `coalesce(the file's materialized [[ManifestTable.RidPhysCol]],
+    *    its entry's `#rid` base + row index)`. NULL for rows whose file
+    *    predates row tracking — callers that need total identity must
+    *    check.
+    */
+  private def liveRows(entries: Seq[Entry], md: TableMetadata,
+      withPos: Boolean, withRid: Boolean): DataFrame = {
+    val dv = dvOf(entries)
+    val raw = toLogicalRename(
+      readFiles(entries, md, withPos = withPos || dv.isDefined, withRid = withRid), md)
+    val live = dv.fold(raw)(d => raw.join(d, Seq(DvFileCol, DvPosCol), "left_anti"))
+    if (withPos || dv.isEmpty) live else live.drop(DvFileCol, DvPosCol)
   }
 
   /** Union of the deletion-vector sidecars referenced by `entries` —
@@ -930,93 +935,114 @@ class ManifestTable(spark: SparkSession, root: String,
       .select(col(DvFileCol), col(DvPosCol)))
   }
 
-  /** Read a manifest file set. basePath restores partition columns from
-    * directory structure; mergeSchema unions file schemas so a column
-    * added by a later append surfaces (null-filled for pre-evolution
-    * files) instead of silently depending on which file seeds the
-    * schema. Files are grouped by their `<root>/data/` prefix because a
-    * SHALLOW CLONE references the source's files by absolute path — a
-    * clone that later appends its own files spans two roots, and Spark
-    * requires every path to live under its basePath; each group reads
-    * under its own basePath and the groups union by name.
+  /** A data file's qualified path (a shallow clone's entries name
+    * another root's files absolutely). */
+  private def dataPath(e: Entry): Path =
+    new Path(root, e.rel).makeQualified(fs.getUri, fs.getWorkingDirectory)
+
+  /** A data file's length: its `#b` stat, or, for an entry written
+    * before the stat existed, one stat of the file — the only place a
+    * data file's size is read from the file system.
     */
-  private def readFiles(files: Seq[String], md: TableMetadata,
-      withPos: Boolean = false,
-      pinnedSchema: Option[org.apache.spark.sql.types.StructType] = None,
-      keepRid: Boolean = false): DataFrame = {
-    // group by (basePath, LAYOUT SIGNATURE): after a lazy
-    // setPartitionSpec a snapshot mixes files laid out under different
-    // partition specs, and Spark's partition discovery refuses a file
-    // set whose hive directory schemas conflict — so each layout reads
-    // under its own discovery pass and the groups union by name (a
-    // partition column one group recovers from dirs lives in the other
-    // group's files as ordinary data, so no column is ever null-filled
-    // wrongly)
-    val groups = files.groupBy { f =>
-      val i = f.lastIndexOf("/data/")
-      val bp = if (i >= 0) f.substring(0, i + "/data".length) else dataDir.toString
-      val rel =
-        if (f.startsWith(bp)) f.substring(math.min(bp.length + 1, f.length))
-        else new Path(f).getName
-      (bp, ManifestTable.layoutColsOf(rel).mkString("/"))
+  private def sizeOf(e: Entry): Long =
+    e.stats.get(ManifestTable.SizeKey).flatMap(_.mn.toLongOption)
+      .getOrElse(fs.getFileStatus(new Path(root, e.rel)).getLen)
+
+  /** Scan a manifest file set, raw: physical column names, partition
+    * columns from directory structure, files with no FS call
+    * ([[ManifestFileIndex]]). Files group by (`data/` dir, LAYOUT
+    * SIGNATURE), one index each, and the groups union by name: a
+    * SHALLOW CLONE references the source's files by absolute path, so
+    * a clone that later appends spans two roots, and after a lazy
+    * setPartitionSpec a snapshot mixes files laid out under different
+    * partition specs, whose hive directory schemas conflict (a
+    * partition column one group recovers from dirs lives in the other
+    * group's files as ordinary data, so no column is ever null-filled
+    * wrongly). `withPos` adds the DV key columns and `withRid` the
+    * stable row id ([[liveRows]]); the physical row-id column is
+    * dropped either way.
+    *
+    * A group's schema: `pinnedSchema` when given, else the union of its
+    * files' remembered write-time schemas, else parquet's mergeSchema
+    * inference over its listed files — so a column added by a later
+    * append surfaces (null-filled for pre-evolution files) instead of
+    * depending on which file seeds the schema.
+    */
+  private def readFiles(entries: Seq[Entry], md: TableMetadata,
+      withPos: Boolean = false, withRid: Boolean = false,
+      pinnedSchema: Option[StructType] = None): DataFrame = {
+    val groups = entries.map(e => dataPath(e) -> e).groupBy { case (p, _) =>
+      val f = p.toString
+      val bp = f.substring(0, f.lastIndexOf("/data/") + "/data".length)
+      (bp, ManifestTable.layoutColsOf(f.substring(bp.length + 1)).mkString("/"))
     }
-    withListingScoped {
     val defaults = md.declaredDefaults
-    groups.toSeq.sortBy(_._1).map { case ((bp, sig), paths) =>
-      // a pinned schema (from one inference pass over the full file
-      // set) skips the per-call mergeSchema footer scan — the
-      // bucketed read path calls this once PER BUCKET. The same skip
-      // applies when every file of the group carries a remembered
-      // write-time schema: the memos ARE the footer schemas (the
-      // r18-established round-trip equivalence), so their driver-side
-      // merge equals what the distributed mergeSchema sweep — a whole
-      // Spark job over every referenced file per read — would infer.
-      // PARTITIONED groups take the same path: a user data schema
-      // omitting the hive columns still gets them inferred from dirs
-      // and appended with Spark's own types (verified empirically), so
-      // dir-type inference stays Spark's. Only sets with a memo miss
-      // or a cross-file TYPE conflict (which the engine never writes;
-      // evolution only adds columns) keep the real mergeSchema pass.
-      val memos = paths.map(ManifestTable.recalledFileSchema)
-      val remembered: Option[org.apache.spark.sql.types.StructType] =
+    groups.toSeq.sortBy(_._1).map { case ((bp, _), files) =>
+      // a pinned schema (from one inference over the full file set)
+      // skips the per-call mergeSchema footer scan — the bucketed read
+      // path calls this once PER BUCKET. The same skip applies when
+      // every file of the group carries a remembered write-time schema:
+      // the memos ARE the footer schemas, so their driver-side merge
+      // equals what the distributed mergeSchema sweep — a whole Spark
+      // job over every referenced file per read — would infer. A memo
+      // omits the hive columns, whose types the index still infers from
+      // dirs. Only sets with a memo miss or a cross-file TYPE conflict
+      // (which the engine never writes; evolution only adds columns)
+      // keep the real mergeSchema pass.
+      val memos = files.map { case (_, e) =>
+        ManifestTable.recalledFileSchema(new Path(root, e.rel).toString) }
+      val remembered: Option[StructType] =
         if (memos.contains(None)) None
-        else memos.flatten.foldLeft(
-          Option(org.apache.spark.sql.types.StructType(Nil))) {
+        else memos.flatten.foldLeft(Option(StructType(Nil))) {
           (acc, s) => acc.flatMap(ManifestTable.mergeFlat(_, s))
         }
-      val df = pinnedSchema.orElse(remembered) match {
-        case Some(s) => spark.read.option("basePath", bp)
-          .schema(withExistenceDefaults(s, defaults).getOrElse(s))
-          .parquet(paths: _*)
-        case None =>
-          val inferred = spark.read.option("basePath", bp)
-            .option("mergeSchema", "true")
-            .parquet(paths: _*)
-          withExistenceDefaults(inferred.schema, defaults) match {
-            case None => inferred
-            // L40: re-read under the default-carrying schema so files
-            // PREDATING a defaulted column fill it with the default
-            // (only when a default is declared AND surfaced — the
-            // common no-default read never pays the second open)
-            case Some(amended) => spark.read.option("basePath", bp)
-              .schema(amended).parquet(paths: _*)
-          }
+      val known = pinnedSchema.orElse(remembered)
+        .map(s => withExistenceDefaults(s, defaults).getOrElse(s))
+      val index = new ManifestFileIndex(spark, new Path(bp),
+        files.map { case (p, e) => ManifestFileIndex.file(p, sizeOf(e),
+          e.stats.get(ManifestTable.RidKey).flatMap(_.mn.toLongOption)) },
+        known, skipping(files))
+      val dataSchema = known.getOrElse {
+        val inferred = new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetFileFormat().inferSchema(spark, Map("mergeSchema" -> "true"),
+            index.allFiles())
+          .getOrElse(throw new IllegalStateException(s"no parquet schema under $bp"))
+        // L40: files PREDATING a defaulted column fill it with the default
+        withExistenceDefaults(inferred, defaults).getOrElse(inferred)
       }
-      // (basename, row_index) is the engine's permanent row id for
-      // deletion vectors: basenames are uuid-minted so they never
-      // collide across partitions, clones, or rewrites
-      // materialized row ids ([[ManifestTable.RidPhysCol]], written by
-      // update copies / compaction) are engine-internal: hidden from
-      // every read unless the caller resolves row identity itself
-      val noRid =
-        if (keepRid || !df.columns.contains(ManifestTable.RidPhysCol)) df
-        else df.drop(ManifestTable.RidPhysCol)
-      if (withPos) noRid
-        .withColumn(DvFileCol,
-          element_at(split(col("_metadata.file_path"), "/"), -1))
-        .withColumn(DvPosCol, col("_metadata.row_index"))
-      else noRid
+      val df = org.apache.spark.sql.graft.GraftSqlBridge.fileFrame(spark, index,
+        dataSchema, new ManifestParquetFormat)
+      val phys =
+        if (df.columns.contains(ManifestTable.RidPhysCol)) col(ManifestTable.RidPhysCol)
+        else lit(null).cast("long")
+      val constants =
+        (if (withRid) Seq(coalesce(phys,
+          col(s"_metadata.${ManifestFileIndex.RidBase}") + col("_metadata.row_index"))
+          .as(ManifestTable.RowIdCol)) else Nil) ++
+        (if (withPos) Seq(col("_metadata.file_name").as(DvFileCol),
+          col("_metadata.row_index").as(DvPosCol)) else Nil)
+      val scan = if (constants.isEmpty) df else df.select(col("*") +: constants: _*)
+      // materialized row ids are engine-internal: hidden from every read
+      scan.drop(ManifestTable.RidPhysCol)
     }.reduce(_.unionByName(_, allowMissingColumns = true))
+  }
+
+  /** The file-skipping test a [[ManifestFileIndex]] over `files` runs
+    * on the data filters Catalyst pushes into its scan: the kernel
+    * ([[mightMatch]]) over the filters' V1 forms, typed by the columns
+    * they reference. Scan filters name physical columns.
+    */
+  private def skipping(files: Seq[(Path, Entry)])
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] => Path => Boolean = {
+    lazy val byPath = files.toMap
+    filters => {
+      val v1 = filters.flatMap(org.apache.spark.sql.graft.GraftSqlBridge.translateFilter)
+      if (v1.isEmpty) _ => true
+      else {
+        val types = filters.flatMap(_.references).map(a => a.name -> a.dataType).toMap
+        val test = mightMatch(v1, types.get, Map.empty)
+        p => test(byPath(p))
+      }
     }
   }
 
@@ -1711,93 +1737,45 @@ class ManifestTable(spark: SparkSession, root: String,
     e => tests.forall(_(e))
   }
 
-  /** `where` as the V1 source-filter conjuncts the kernel reads:
-    * resolved against `df`, literal casts folded (so `ts >= '2024-01-02'`
-    * carries a timestamp) and widening column casts unwrapped (so
-    * `int_col = 5L` still names the column), split at top-level ANDs.
-    * A conjunct with no V1 form is dropped, which only skips less.
-    */
-  private def sourceFilters(df: DataFrame, where: Column): Seq[sources.Filter] = {
-    import org.apache.spark.sql.catalyst.expressions.{And, Expression}
-    import org.apache.spark.sql.catalyst.optimizer.{ConstantFolding, UnwrapCastInBinaryComparison}
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
-    UnwrapCastInBinaryComparison(ConstantFolding(
-        df.filter(where).queryExecution.analyzed)) match {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        conjuncts(f.condition).flatMap(
-          org.apache.spark.sql.graft.GraftSqlBridge.translateFilter)
-      case _ => Nil
-    }
-  }
-
-  /** The entries the kernel keeps for `filters`, and `df` (a read of
-    * all `entries`) narrowed to them: skipped files drop out of each
-    * file index in its plan, so the schema and every operator stay the
-    * full read's, and nothing is listed or resolved again.
-    */
-  private def skipFiles(df: DataFrame, entries: Seq[Entry],
-      filters: Seq[sources.Filter], md: TableMetadata): (Seq[Entry], DataFrame) = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    if (filters.isEmpty) return (entries, df)
-    val (kept, skipped) = entries.partition(mightMatch(filters,
-      c => df.schema.find(_.name == c).map(_.dataType), md.columnMapping))
-    if (skipped.isEmpty) (kept, df)
-    else {
-      val names = skipped.map(e => new Path(e.rel).getName).toSet
-      (kept, org.apache.spark.sql.graft.GraftSqlBridge.ofRows(spark,
-        df.queryExecution.analyzed.transform {
-          case r @ LogicalRelation(h: HadoopFsRelation, _, _, _, _) =>
-            r.copy(relation = h.copy(
-              location = new SkippingFileIndex(h.location, names))(h.sparkSession))
-        }))
-    }
-  }
-
   /** The newest version when `version` is None. */
   private def versionOrLatest(version: Option[Int]): Int =
     version.orElse(latestVersion)
       .getOrElse(throw new IllegalStateException(s"no versions at $root"))
 
-  /** [[read]]'s frame, and the same frame narrowed by the kernel for
-    * given source filters — one snapshot resolution serves both (what
-    * a SQL table handle holds: its schema and its pruned scans).
-    */
-  private[graft] def prunableRead(version: Option[Int])
-      : (DataFrame, Seq[sources.Filter] => DataFrame) = {
-    val (v, md) = snapshot(version) // one record for the frame and its scans
-    val entries = entriesOf(v)
-    val all = readAll(entries, md)
-    (all, filters => skipFiles(all, entries, filters, md)._2)
-  }
-
-  /** The general pruned read: `where`'s rows from the files the kernel
-    * keeps for `filters` — both derived from the full read's frame.
-    */
-  private def readWhere(version: Option[Int], where: DataFrame => Column,
-      filters: DataFrame => Seq[sources.Filter]): DataFrame = {
-    val (all, narrow) = prunableRead(version)
-    narrow(filters(all)).filter(where(all))
-  }
-
-  /** Pruning audit hook: the files a [[read]] with `where` scans. */
+  /** Pruning audit hook: the files a [[read]] with `where` scans, as
+    * its planned scans select them. */
   private[graft] def filesFor(where: Column,
       version: Option[Int] = None): Seq[String] = {
     val (v, md) = snapshot(version)
     val entries = entriesOf(v)
-    val all = readAll(entries, md)
-    skipFiles(all, entries, sourceFilters(all, where), md)._1
-      .map(e => new Path(root, e.rel).toString)
+    val named = entries.map(e => dataPath(e).toString -> new Path(root, e.rel).toString).toMap
+    scannedFiles(readAll(entries, md).filter(where)).map(named)
   }
 
+  /** The data files the planned scans of `df` select, qualified. */
+  private def scannedFiles(df: DataFrame): Seq[String] =
+    df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.relation.location.isInstanceOf[ManifestFileIndex] =>
+        s.selectedPartitions.filePartitionIterator.flatMap(_.files)
+          .map(_.getPath.toString).toSeq
+    }.flatten.distinct
+
   /** Equality probe in the string domain the bloom hashed: the rows
-    * whose `c` renders as `value`.
+    * whose `c` renders as `value`. The typed equality, where a value
+    * renders back to itself, is what skips files; the string one keeps
+    * the rendering semantics.
     */
-  def readEq(c: String, value: String, version: Option[Int] = None): DataFrame =
-    readWhere(version, _ => col(c).cast("string") === lit(value),
-      _ => Seq(sources.EqualTo(c, value)))
+  def readEq(c: String, value: String, version: Option[Int] = None): DataFrame = {
+    val df = read(version)
+    val rendered = col(c).cast("string") === lit(value)
+    df.schema(c).dataType match {
+      case dt if dt != BinaryType && org.apache.spark.sql.catalyst.expressions.Cast
+          .canCast(org.apache.spark.sql.types.StringType, dt) =>
+        df.filter(col(c) === lit(value).try_cast(dt) && rendered)
+      case _ => df.filter(rendered)
+    }
+  }
 
   /** Rows whose `c` lies in ANY of the closed ranges (bounds cast to the
     * column's type — a bigint-vs-string comparison would coerce both
@@ -1807,23 +1785,21 @@ class ManifestTable(spark: SparkSession, root: String,
   def readRangesBy(c: String, ranges: Seq[(String, String)],
       version: Option[Int] = None): DataFrame = {
     require(ranges.nonEmpty, "readRangesBy needs at least one range")
-    readWhere(version, df => ranges.map { case (lo, hi) =>
-        val dt = df.schema(c).dataType
-        col(c) >= lit(lo).cast(dt) && col(c) <= lit(hi).cast(dt)
-      }.reduce(_ || _),
-      _ => Seq(ranges.map[sources.Filter] { case (lo, hi) =>
-        sources.And(sources.GreaterThanOrEqual(c, lo),
-          sources.LessThanOrEqual(c, hi))
-      }.reduce(sources.Or)))
+    val df = read(version)
+    val dt = df.schema(c).dataType
+    df.filter(ranges.map { case (lo, hi) =>
+      col(c) >= lit(lo).cast(dt) && col(c) <= lit(hi).cast(dt) }.reduce(_ || _))
   }
 
-  /** A written file's manifest stats: `#n` always; zone maps (kind
-    * from the column's written type) and the bloom when it holds rows.
+  /** A written file's manifest stats: `#n` and `#b` always; zone maps
+    * (kind from the column's written type) and the bloom when it holds
+    * rows.
     */
   private def entryStats(f: FileStatsTracker.FileStats,
       schema: StructType): Map[String, ColStats] = {
-    val n = f.rows.toString
-    val count = Map(ManifestTable.CountKey -> ColStats(n, n, "C"))
+    val (n, b) = (f.rows.toString, f.bytes.toString)
+    val count = Map(ManifestTable.CountKey -> ColStats(n, n, "C"),
+      ManifestTable.SizeKey -> ColStats(b, b, "L"))
     if (f.rows == 0) count
     else count ++ f.bounds.map { case (c, (mn, mx)) =>
       c -> ColStats(mn, mx, statKindOf(schema(c).dataType))
@@ -1905,13 +1881,12 @@ class ManifestTable(spark: SparkSession, root: String,
       // commit at bench scale)
       val dataSchema = StructType(
         toWrite.schema.filterNot(f => partCols.contains(f.name)))
-      val tracker = new FileStatsTracker(dataSchema,
-        StructType(partCols.map(toWrite.schema(_))),
-        allStatsCols.filter(toWrite.columns.contains),
-        bloomCol.filter(toWrite.columns.contains), bloomBits, bloomHashes,
-        spark.sessionState.conf.sessionLocalTimeZone)
-      org.apache.spark.sql.graft.GraftSqlBridge.writeParquet(toWrite,
-        stage.toString, partCols, ManifestTable.InternalWriteOptions, tracker,
+      val tracker = org.apache.spark.sql.graft.GraftSqlBridge.writeParquet(toWrite,
+        stage.toString, partCols, ManifestTable.InternalWriteOptions,
+        new FileStatsTracker(dataSchema, StructType(partCols.map(toWrite.schema(_))),
+          allStatsCols.filter(toWrite.columns.contains),
+          bloomCol.filter(toWrite.columns.contains), bloomBits, bloomHashes,
+          spark.sessionState.conf.sessionLocalTimeZone, _),
         s"graft $op $root")
       // collect the staged files first, then promote them with
       // CONCURRENT renames (bounded by the commit pool): the promotion
@@ -2029,7 +2004,7 @@ class ManifestTable(spark: SparkSession, root: String,
   }
 
   /** Record `batchId` as committed for `queryId` ([[replaceLogFile]]:
-    * a crash inside its delete-then-rename fallback loses the sidecar,
+    * a crash inside its move-aside fallback leaves the sidecar aside,
     * and even then the commit-atomic file-tag layer still answers
     * replays).
     */
@@ -2037,24 +2012,10 @@ class ManifestTable(spark: SparkSession, root: String,
     replaceLogFile(streamTxnPath(queryId), s"$batchId\n")
 
   /** Write `content` to the log-dir file `dest`, replacing any file
-    * there. Rename-FIRST from a temp file (a local-FS rename
-    * overwrites atomically); only when the filesystem refuses a rename
-    * onto an existing destination (HDFS semantics) does the
-    * delete-then-rename fallback run, and a failure there throws. The
-    * temp file never outlives the call.
+    * there ([[ManifestTable.replaceFile]]: rename first).
     */
-  private def replaceLogFile(dest: Path, content: String): Unit = {
-    val tmp = new Path(logDir, s".tmp-${dest.getName}-${UUID.randomUUID()}")
-    try {
-      val out = fs.create(tmp, false)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-      if (!fs.rename(tmp, dest)) {
-        fs.delete(dest, false)
-        if (!fs.rename(tmp, dest))
-          throw new IllegalStateException(s"could not write $dest")
-      }
-    } finally fs.delete(tmp, false): Unit
-  }
+  private def replaceLogFile(dest: Path, content: String): Unit =
+    ManifestTable.replaceFile(fs, dest)(_.write(content.getBytes("UTF-8")))
 
   private def streamTxnPath(queryId: String): Path = {
     require(queryId.matches("[A-Za-z0-9_\\-]+"), s"bad query id: $queryId")
@@ -2794,8 +2755,7 @@ class ManifestTable(spark: SparkSession, root: String,
     import spark.implicits._
     val v = latestVersion
     val entries = v.map(entriesOf).getOrElse(Seq.empty)
-    val bytes = entries.map(e =>
-      fs.getFileStatus(new Path(root, e.rel)).getLen).sum
+    val bytes = entries.map(sizeOf).sum
     Seq((root, "graft-manifest", v.getOrElse(-1),
       entries.size.toLong, bytes,
       partCols, allStatsCols, bloomCol.toSeq,
@@ -2845,8 +2805,7 @@ class ManifestTable(spark: SparkSession, root: String,
     }
     val row = df.agg(aggs.head, aggs.tail: _*).first()
     val rows = row.getLong(0)
-    val bytes = entriesOf(v).map(e =>
-      fs.getFileStatus(new Path(root, e.rel)).getLen).sum
+    val bytes = entriesOf(v).map(sizeOf).sum
     val enc = (s: String) => Entry.enc(s)
     val colLines = cols.zipWithIndex.map { case (c, i) =>
       val base = 1 + i * 4
@@ -2914,7 +2873,7 @@ class ManifestTable(spark: SparkSession, root: String,
       val it = entriesOf(v).iterator
       var under = true
       while (it.hasNext && under) {
-        total += fs.getFileStatus(new Path(root, it.next().rel)).getLen
+        total += sizeOf(it.next())
         under = total <= broadcastThreshold
       }
       under
@@ -2966,9 +2925,9 @@ class ManifestTable(spark: SparkSession, root: String,
     import spark.implicits._
     val v = versionOrLatest(version)
     entriesOf(v).map { e =>
-      val len = fs.getFileStatus(new Path(root, e.rel)).getLen
+      val len = sizeOf(e)
       val zones = e.stats.toSeq
-        // engine keys ('#dv', '#n', '#rid') and bloom bitsets are not
+        // engine keys ('#dv', '#n', '#rid', '#b') and bloom bitsets are not
         // zone maps
         .filter { case (c, s) => !c.startsWith("#") && s.kind != "B" }
         .sortBy(_._1)
@@ -3010,7 +2969,7 @@ class ManifestTable(spark: SparkSession, root: String,
     * O(matching rows + one manifest commit) — at 100 TB a point delete
     * (GDPR erasure, bad-batch retraction) touches a handful of files'
     * entries instead of rewriting partitions. Readers anti-join the
-    * positions out ([[readEntries]]); the next compaction/merge of a
+    * positions out ([[liveRows]]); the next compaction/merge of a
     * file materializes its deletes and drops the DV. A new sidecar for
     * a file absorbs the file's previous positions, so each entry
     * references exactly ONE sidecar (bounded read fan-in), while stale
@@ -3023,9 +2982,8 @@ class ManifestTable(spark: SparkSession, root: String,
     val (v0, md) = snapshot(None)
     val entries = entriesOf(v0)
     if (entries.isEmpty) return v0
-    val live = liveWithPos(entries, md, withRid = false)
-    deleteMatching(v0, entries, live, sourceFilters(live, predicate),
-      _.filter(predicate), md)
+    deleteMatching(v0, entries,
+      liveWithPos(entries, md, withRid = false).filter(predicate), md)
   }
 
   /** Batch point delete — one commit for a SET of keys (the GDPR
@@ -3041,8 +2999,21 @@ class ManifestTable(spark: SparkSession, root: String,
     val vals = values.filter(_ != null).distinct
     val entries = entriesOf(v0)
     if (vals.isEmpty || entries.isEmpty) return v0
-    deleteMatching(v0, entries, liveWithPos(entries, md, withRid = false),
-      Seq(sources.In(c, vals.toArray)), keyMatcher(c, vals), md)
+    keyHits(entries, liveWithPos(entries, md, withRid = false).schema, md, c, vals)
+      .fold(v0)(deleteMatching(v0, entries, _, md))
+  }
+
+  /** The live rows, with positions, whose `c` renders as one of `vals`
+    * (a string-domain match no scan filter carries), scanning only the
+    * entries the kernel keeps for the key set, typed by the table's
+    * `schema`; None when it keeps none.
+    */
+  private def keyHits(entries: Seq[Entry], schema: StructType,
+      md: TableMetadata, c: String, vals: Seq[String]): Option[DataFrame] = {
+    val kept = entries.filter(mightMatch(Seq(sources.In(c, vals.toArray)),
+      a => schema.find(_.name == a).map(_.dataType), md.columnMapping))
+    if (kept.isEmpty) None
+    else Some(keyMatcher(c, vals)(liveWithPos(kept, md, withRid = false)))
   }
 
   private def tryBigDecimal(s: String): Option[BigDecimal] =
@@ -3064,17 +3035,13 @@ class ManifestTable(spark: SparkSession, root: String,
         col(c).cast("string") === col("_graft_erase_key"), "left_semi")
     }
 
-  /** Position-mark the rows `matcher` selects from `live` (the live
-    * rows of ALL of `all`, with positions), scanning only the files the
-    * kernel keeps for `filters`; commit as a delta against the full
-    * snapshot. `matcher` is a filter for predicate deletes, a
-    * semi-join for large key sets.
+  /** Position-mark `matches` (live rows of `all`, with positions: a
+    * filter for predicate deletes, a semi-join for large key sets) and
+    * commit as a delta against the full snapshot. Returns `v0` with no
+    * job run when its planned scans select no data file.
     */
-  private def deleteMatching(v0: Int, all: Seq[Entry], live: DataFrame,
-      filters: Seq[sources.Filter], matcher: DataFrame => DataFrame,
+  private def deleteMatching(v0: Int, all: Seq[Entry], matches: DataFrame,
       md: TableMetadata): Int = {
-    val (candidates, scan) = skipFiles(live, all, filters, md)
-    if (candidates.isEmpty) return v0
     if (!md.cdcEnabled) {
       // materialize the hit set exactly once (eager checkpoint): the
       // marksUnique fast path records totals by driver arithmetic, so
@@ -3082,8 +3049,9 @@ class ManifestTable(spark: SparkSession, root: String,
       // predicate re-evaluated under cache eviction could otherwise
       // diverge the recorded counts from the written sidecar (r18
       // ADVICE; the CDC branch below already had this discipline)
-      val hits = matcher(scan)
-        .select(col(DvFileCol), col(DvPosCol)).localCheckpoint(true)
+      val marks = matches.select(col(DvFileCol), col(DvPosCol))
+      if (scannedFiles(marks).isEmpty) return v0
+      val hits = marks.localCheckpoint(true)
       try return commitDv("delete", v0, all, hits, Seq.empty, md,
         marksUnique = true)
       finally graft.functions.CheckpointOps.release(hits)
@@ -3092,7 +3060,8 @@ class ManifestTable(spark: SparkSession, root: String,
     // the hit set exactly once so the DV marks and the recorded
     // deletes cannot diverge under a nondeterministic predicate —
     // the same discipline updateWhere applies.
-    val hits = matcher(scan).localCheckpoint(true)
+    if (scannedFiles(matches).isEmpty) return v0
+    val hits = matches.localCheckpoint(true)
     try {
       val dataCols = hits.columns
         .filterNot(Set(DvFileCol, DvPosCol, ManifestTable.RowIdCol)).toSeq
@@ -3105,55 +3074,29 @@ class ManifestTable(spark: SparkSession, root: String,
   }
 
   /** The LIVE rows of `entries` with their permanent (file, pos) row
-    * ids: logical column names for caller predicates (DV marker
-    * columns are reserved and never mapped) and already-deleted rows
-    * anti-joined out — re-deleting a dead row must not inflate counts,
-    * and updates/merges must never resurrect one. The shared preamble
-    * of every row-level mutation (delete / update / merge).
+    * ids ([[liveRows]]) and, `withRid`, their stable row ids, under
+    * the LOGICAL schema a read shows: row-level DML (UPDATE/MERGE/
+    * DELETE) matches and assigns against it, so a declared-only column
+    * from ALTER TABLE ADD COLUMNS resolves here as it does in read().
+    * Already-deleted rows are out — re-deleting a dead row must not
+    * inflate counts, and updates/merges must never resurrect one. The
+    * shared preamble of every row-level mutation.
     */
   private def liveWithPos(entries: Seq[Entry], md: TableMetadata,
-      withRid: Boolean = true): DataFrame = {
-    val files = entries.map(e => new Path(root, e.rel).toString)
-    // withDeclared on the file read: row-level DML (UPDATE/MERGE/
-    // DELETE) matches and assigns against the LOGICAL schema — a
-    // declared-only column from ALTER TABLE ADD COLUMNS resolves at
-    // analysis (read() carries it), so the mutation path must carry
-    // it too or `SET note = 'x'` dies here on a column the analyzer
-    // accepted (the read() branch already includes it)
-    val withPos =
-      if (files.isEmpty) {
-        val base = readAt(None, md)
-          .withColumn(DvFileCol, lit(null).cast("string"))
-          .withColumn(DvPosCol, lit(null).cast("long"))
-        if (withRid)
-          base.withColumn(ManifestTable.RowIdCol, lit(null).cast("long"))
-        else base
-      } else if (!withRid)
-        // deletes only MARK positions — no copy is written, so the
-        // row-id resolution (bases broadcast + coalesce) is pure
-        // per-commit overhead there and is skipped
-        withDeclared(toLogicalRename(readFiles(files, md, withPos = true), md), md)
-      else {
-        // stable row id rides the mutation read so update/merge COPIES
-        // can materialize it ([[ManifestTable.RidPhysCol]]) — an
-        // updated row keeps its identity across the DV-mark + append
-        import spark.implicits._
-        val bases = entries.map(e => (new Path(e.rel).getName,
-          e.stats.get(ManifestTable.RidKey).map(_.mn.toLong)))
-          .toDF(DvFileCol, "_graft_rid_base")
-        val raw = readFiles(files, md, withPos = true, keepRid = true)
-        val phys =
-          if (raw.columns.contains(ManifestTable.RidPhysCol))
-            col(ManifestTable.RidPhysCol)
-          else lit(null).cast("long")
-        withDeclared(toLogicalRename(raw
-          .join(broadcast(bases), Seq(DvFileCol), "left")
-          .withColumn(ManifestTable.RowIdCol,
-            coalesce(phys, col("_graft_rid_base") + col(DvPosCol)))
-          .drop("_graft_rid_base", ManifestTable.RidPhysCol), md), md)
-      }
-    dvOf(entries).fold(withPos)(dv =>
-      withPos.join(dv, Seq(DvFileCol, DvPosCol), "left_anti"))
+      withRid: Boolean = true): DataFrame =
+    if (entries.isEmpty) {
+      val base = readAt(None, md)
+        .withColumn(DvFileCol, lit(null).cast("string"))
+        .withColumn(DvPosCol, lit(null).cast("long"))
+      if (withRid) base.withColumn(ManifestTable.RowIdCol, lit(null).cast("long"))
+      else base
+    } else withDeclared(liveRows(entries, md, withPos = true, withRid = withRid), md)
+
+  /** Scan audit hook: the row-level DML scan of a version — its live
+    * rows with their DV keys and row ids ([[liveWithPos]]). */
+  private[graft] def scanWithPositions(version: Option[Int] = None): DataFrame = {
+    val (v, md) = snapshot(version)
+    liveWithPos(entriesOf(v), md)
   }
 
   /** Resolve assignment-map keys against `cols` with the session
@@ -3196,8 +3139,7 @@ class ManifestTable(spark: SparkSession, root: String,
     set.keys.find(md.identity.contains).foreach(n =>
       throw new IllegalArgumentException(s"updateWhere: $n is GENERATED " +
         "ALWAYS AS IDENTITY — its values cannot be assigned"))
-    val all = liveWithPos(entries, md)
-    val (_, live) = skipFiles(all, entries, sourceFilters(all, predicate), md)
+    val live = liveWithPos(entries, md)
     // materialize the matched row set EXACTLY once (eager checkpoint):
     // the marks and the appended copies must come from the same rows,
     // or a nondeterministic predicate/assignment could kill one row
@@ -3673,22 +3615,16 @@ class ManifestTable(spark: SparkSession, root: String,
     // concurrently-changing source, e.g. an index refresh delta)
     val hitCheckpoints = scala.collection.mutable.ArrayBuffer[DataFrame]()
     val addsC = if (!cdcOn) adds else adds.map(_.localCheckpoint(true))
-    // the live rows of the whole snapshot, listed once for every batch
-    lazy val live = liveWithPos(entries, md, withRid = false)
+    // the snapshot's schema types every batch's file skipping
+    lazy val schema = liveWithPos(entries, md, withRid = false).schema
     try {
       val hitDfs = deletes.flatMap { case (c, values0) =>
         val vals = values0.filter(_ != null).distinct
+        // the same file skipping + key matching as deleteKeys
         if (vals.isEmpty || entries.isEmpty) None
-        else {
-          // the same file skipping + key matching as deleteKeys
-          val (candidates, scan) =
-            skipFiles(live, entries, Seq(sources.In(c, vals.toArray)), md)
-          if (candidates.isEmpty) None
-          else {
-            val hits = keyMatcher(c, vals)(scan)
-            if (!cdcOn) Some(hits)
-            else { val h = hits.localCheckpoint(true); hitCheckpoints += h; Some(h) }
-          }
+        else keyHits(entries, schema, md, c, vals).map { hits =>
+          if (!cdcOn) hits
+          else { val h = hits.localCheckpoint(true); hitCheckpoints += h; h }
         }
       }
       val marks = hitDfs.map(_.select(col(DvFileCol), col(DvPosCol)))
@@ -3849,9 +3785,9 @@ class ManifestTable(spark: SparkSession, root: String,
     // scope narrows the CANDIDATES; the commit delta is still against
     // the full snapshot, so out-of-scope files carry by reference
     val (v0, md, entries, inScope) = scoped(scope)
-    val small = inScope.map { e =>
-      e -> fs.getFileStatus(new Path(root, e.rel)).getLen
-    }.filter { case (e, len) => len < minFileBytes || e.stats.contains(DvKey) }
+    val small = inScope.map(e => e -> sizeOf(e)).filter { case (e, len) =>
+      len < minFileBytes || e.stats.contains(DvKey)
+    }
     if (small.isEmpty || (small.size == 1 && !small.head._1.stats.contains(DvKey)))
       return v0 // nothing to pack (a single small DV-free file gains nothing)
     val totalBytes = small.map(_._2).sum
@@ -3994,8 +3930,7 @@ class ManifestTable(spark: SparkSession, root: String,
         case _ => ""
       }
     }
-    val sized = entries.map(e =>
-      e -> fs.getFileStatus(new Path(root, e.rel)).getLen)
+    val sized = entries.map(e => e -> sizeOf(e))
     val small = sized.filter(_._2 < smallFileBytes)
     if (small.size >= 2)
       out += ((1, "compact_small",

@@ -26,7 +26,8 @@ class SchemaRegistry(spark: SparkSession, dir: String) {
     def isNoop: Boolean = added.isEmpty && deprecated.isEmpty && retyped.isEmpty
   }
 
-  private def fs: FileSystem =
+  // resolved once: every resolution copies the whole Hadoop and SQL conf
+  private lazy val fs: FileSystem =
     new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
   private def pathOf(table: String) = new Path(dir, s"$table.schema.json")
 
@@ -48,14 +49,12 @@ class SchemaRegistry(spark: SparkSession, dir: String) {
     f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
       .putBoolean("deprecated", true).build())
 
+  /** Replace the table's schema file rename-first
+    * ([[graft.lake.ManifestTable.replaceFile]]). */
   private def save(table: String, schema: StructType): Unit = {
     fs.mkdirs(new Path(dir))
-    val tmp = new Path(dir, s".tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(schema.json.getBytes("UTF-8")) finally out.close()
-    fs.delete(pathOf(table), false)
-    if (!fs.rename(tmp, pathOf(table)))
-      throw new IllegalStateException(s"schema commit for $table failed")
+    graft.lake.ManifestTable.replaceFile(fs, pathOf(table))(
+      _.write(schema.json.getBytes("UTF-8")))
   }
 
   /** Register a freshly inferred schema, applying the evolution policy

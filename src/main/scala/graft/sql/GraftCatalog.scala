@@ -67,7 +67,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private var root: String = _
 
   private def spark: SparkSession = SparkSession.active
-  private def fs =
+  // resolved once: every resolution copies the whole Hadoop and SQL conf
+  private lazy val fs =
     new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
 
   override def initialize(name: String,
@@ -501,20 +502,16 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         s"rename view ${from.name()} -> ${to.name()} failed")
   }
 
-  /** Atomic single-file publish: write a temp sibling, rename over. */
+  /** Publish a view's file, replacing any old one rename-first
+    * ([[ManifestTable.replaceFile]]). */
   private def writeView(ident: Identifier,
       props: java.util.Properties): Unit = {
-    val dir = viewsDir(ident.namespace())
-    fs.mkdirs(dir)
-    val tmp = new Path(dir, s".tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try props.store(new java.io.OutputStreamWriter(out, "UTF-8"),
-      s"graft view ${ident.name()}")
-    finally out.close()
-    val dest = viewPath(ident)
-    fs.delete(dest, false)
-    if (!fs.rename(tmp, dest))
-      throw new IllegalStateException(s"view publish $dest failed")
+    fs.mkdirs(viewsDir(ident.namespace()))
+    ManifestTable.replaceFile(fs, viewPath(ident)) { out =>
+      val w = new java.io.OutputStreamWriter(out, "UTF-8")
+      props.store(w, s"graft view ${ident.name()}")
+      w.flush()
+    }
   }
 }
 
@@ -653,25 +650,21 @@ private[sql] class GraftSqlTable(ident: Identifier,
     case _ => mtable.latestVersion
   }
 
-  /** The snapshot's frame and its file-skipping scans, from ONE
-    * resolution of the pinned version (a published version's entry
-    * list never changes).
+  /** The snapshot's frame, from ONE resolution of the pinned version
+    * (a published version's entry list never changes). Filters a scan
+    * applies to it skip files inside the frame's own scans.
     */
-  private lazy val snapshot: (DataFrame, Seq[Filter] => DataFrame) =
+  private[sql] lazy val df: DataFrame =
     (branch, version, asOfMs) match {
       // the WAP audit view: main snapshot ∪ staged rows — what the
-      // table WILL look like after publish; staged rows carry no
-      // stats, so its scans filter the whole frame
-      case (Some(b), _, _) => val d = mtable.readBranch(b); (d, _ => d)
+      // table WILL look like after publish
+      case (Some(b), _, _) => mtable.readBranch(b)
       // a timestamp before the first commit: raise readAsOf's standard
       // error (snapshotVersion is None there); read(None) likewise
       // raises the standard no-versions error for an empty root
-      case (_, _, Some(ms)) if snapshotVersion.isEmpty =>
-        val d = mtable.readAsOf(ms); (d, _ => d)
-      case _ => mtable.prunableRead(snapshotVersion)
+      case (_, _, Some(ms)) if snapshotVersion.isEmpty => mtable.readAsOf(ms)
+      case _ => mtable.read(snapshotVersion)
     }
-
-  private[sql] lazy val df: DataFrame = snapshot._1
 
   override def name(): String =
     (ident.namespace() :+ ident.name()).mkString(".")
@@ -815,17 +808,16 @@ private[sql] class GraftSqlTable(ident: Identifier,
 
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(df, snapshot._2, () => metaCount, metaMinMax)
+    new GraftScanBuilder(df, () => metaCount, metaMinMax)
 }
 
 /** DSv2 pruning/pushdown applied onto the inner DataFrame, compiled
-  * through a [[V1Scan]]: the accepted filters pick the files to scan
-  * (`skipping` — the manifest's file-skipping kernel) and, with the
-  * pruned projection, become part of the sub-plan, where Catalyst
-  * pushes them to the parquet scans exactly as a path-based read would.
+  * through a [[V1Scan]]: the accepted filters and the pruned projection
+  * become part of the sub-plan, where Catalyst pushes them into the
+  * manifest scans — whose file index skips files by them — exactly as
+  * on `read().filter(...)`.
   */
 private[sql] class GraftScanBuilder(df: DataFrame,
-    skipping: Seq[Filter] => DataFrame,
     metaCount: () => Option[Long] = () => None,
     metaMinMax: String => Option[(String, String, String)] = _ => None)
     extends ScanBuilder
@@ -965,7 +957,7 @@ private[sql] class GraftScanBuilder(df: DataFrame,
       new GraftV1Scan(prepared, schema)
     case None =>
       val filtered = accepted.flatMap(GraftScanBuilder.toColumn(_, topLevel))
-        .foldLeft(skipping(accepted.toSeq))(_.filter(_))
+        .foldLeft(df)(_.filter(_))
       val pruned = filtered.select(
         required.fields.map(f => GraftScanBuilder.quoted(f.name)).toSeq: _*)
       new GraftV1Scan(pruned, required)

@@ -30,18 +30,20 @@ object GraftSqlBridge {
         isStreaming = false)
 
   /** Write `df` as parquet under `dir` (hive dirs for `partitionCols`)
-    * through Spark's own file writer, with `tracker` beside Spark's
-    * basic stats tracker in every write task — the hook a
-    * `DataFrameWriter` does not offer (Delta's transactional write
-    * calls the same writer for the same reason). The write is one SQL
-    * execution named `name`, and `name` describes its jobs in the
-    * calling thread (the caller's description is restored after).
-    * `options` go to the Hadoop job and the parquet writer.
+    * through Spark's own file writer, with the tracker `newTracker`
+    * builds over the write's Hadoop configuration beside Spark's basic
+    * stats tracker in every write task — the hook a `DataFrameWriter`
+    * does not offer (Delta's transactional write calls the same writer
+    * for the same reason). The write is one SQL execution named
+    * `name`, and `name` describes its jobs in the calling thread (the
+    * caller's description is restored after). `options` go to the
+    * Hadoop job and the parquet writer. Returns the tracker.
     */
-  def writeParquet(df: DataFrame, dir: String, partitionCols: Seq[String],
+  def writeParquet[T <: org.apache.spark.sql.execution.datasources.WriteJobStatsTracker](
+      df: DataFrame, dir: String, partitionCols: Seq[String],
       options: Map[String, String],
-      tracker: org.apache.spark.sql.execution.datasources.WriteJobStatsTracker,
-      name: String): Unit = {
+      newTracker: org.apache.spark.util.SerializableConfiguration => T,
+      name: String): T = {
     import org.apache.spark.sql.execution.SQLExecution
     import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter}
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
@@ -52,9 +54,10 @@ object GraftSqlBridge {
     try SQLExecution.withNewExecutionId(ds.queryExecution, Some(name)) {
       val plan = ds.queryExecution.executedPlan
       val conf = spark.sessionState.newHadoopConfWithOptions(options)
-      val basic = new BasicWriteJobStatsTracker(
-        new org.apache.spark.util.SerializableConfiguration(conf),
+      val serializable = new org.apache.spark.util.SerializableConfiguration(conf)
+      val basic = new BasicWriteJobStatsTracker(serializable,
         BasicWriteJobStatsTracker.metrics)
+      val tracker = newTracker(serializable)
       FileFormatWriter.write(spark, plan,
         new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
         org.apache.spark.internal.io.FileCommitProtocol.instantiate(
@@ -62,7 +65,8 @@ object GraftSqlBridge {
           java.util.UUID.randomUUID().toString, dir),
         FileFormatWriter.OutputSpec(dir, Map.empty, plan.output), conf,
         partitionCols.map(c => plan.output.find(_.name == c).get),
-        bucketSpec = None, statsTrackers = Seq(basic, tracker), options = options): Unit
+        bucketSpec = None, statsTrackers = Seq(basic, tracker), options = options)
+      tracker
     } finally sc.setJobDescription(prior)
   }
 
@@ -81,6 +85,23 @@ object GraftSqlBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A scan over `index` as a DataFrame, built the way a path-based
+    * read builds its relation: `dataSchema` nullable, columns `index`
+    * parses from partition dirs overriding same-named data columns.
+    */
+  def fileFrame(spark: SparkSession,
+      index: org.apache.spark.sql.execution.datasources.FileIndex,
+      dataSchema: StructType,
+      format: org.apache.spark.sql.execution.datasources.FileFormat): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val resolver = spark.sessionState.conf.resolver
+    val partitions = index.partitionSchema
+    val data = StructType(dataSchema.filterNot(f =>
+      partitions.exists(p => resolver(p.name, f.name))))
+    ofRows(spark, LogicalRelation(HadoopFsRelation(index, partitions,
+      data.asNullable, None, format, Map.empty)(spark)))
+  }
 
   /** DSv2 `PARTITIONED BY` transforms → (identity columns, graft
     * transform specs). The transform case classes (IdentityTransform,

@@ -62,6 +62,49 @@ class AnalyzeStatsSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(logTemps(root).isEmpty, logTemps(root))
   }
 
+  test("views and schemas replace rename-first; a refused publish throws and keeps the old file") {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    spark.sparkContext.hadoopConfiguration.set("fs.refusing.impl",
+      classOf[RefusingLocalFs].getName)
+    val base = "refusing://" + scratch("replace")
+    def temps(dir: String): Seq[String] = {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(p)
+        .map(_.getPath.getName).filter(_.startsWith(".")).toSeq
+    }
+
+    val reg = new graft.meta.SchemaRegistry(spark, s"$base/registry")
+    val one = StructType(Seq(StructField("id", LongType)))
+    val two = one.add(StructField("name", StringType))
+    reg.register("t", one)
+    reg.register("t", two) // replaces where rename never overwrites
+    assert(reg.schemaOf("t") === Some(two))
+    assert(temps(s"$base/registry").isEmpty, temps(s"$base/registry"))
+
+    val s = extensionsSession("graft-replace-views")
+    s.conf.set("spark.sql.catalog.rview", "graft.sql.GraftCatalog")
+    s.conf.set("spark.sql.catalog.rview.root", s"$base/lake")
+    s.sql("CREATE NAMESPACE rview.ns")
+    s.sql("CREATE VIEW rview.ns.v AS SELECT 1 AS x")
+    s.sql("CREATE OR REPLACE VIEW rview.ns.v AS SELECT 2 AS x")
+    assert(s.sql("SELECT x FROM rview.ns.v").head().getInt(0) === 2)
+    val views = s"$base/lake/ns/_graft_views"
+    assert(temps(views).isEmpty, temps(views))
+
+    // the new file cannot be renamed in at all: each replace throws,
+    // and the old view and schema stay readable as they were
+    RefusingLocalFs.refusedFrom = Some(".tmp-")
+    try {
+      intercept[IllegalStateException](
+        reg.register("t", two.add(StructField("extra", LongType))))
+      intercept[Exception](s.sql("CREATE OR REPLACE VIEW rview.ns.v AS SELECT 3 AS x"))
+    } finally RefusingLocalFs.refusedFrom = None
+    assert(reg.schemaOf("t") === Some(two))
+    assert(s.sql("SELECT x FROM rview.ns.v").head().getInt(0) === 2)
+    assert(temps(s"$base/registry").isEmpty, temps(s"$base/registry"))
+    assert(temps(views).isEmpty, temps(views))
+  }
+
   test("analyze: exact rows/non-null/min-max, NDV within tolerance, version pinning, DV-awareness") {
     import spark.implicits._
     val root = scratch("basic")
@@ -162,16 +205,19 @@ class AnalyzeStatsSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
 /** The local file system under the `refusing` scheme, with HDFS's
   * rename: it never replaces an existing file. While `refused` holds a
-  * name prefix, every rename onto a file of that name fails too.
+  * name prefix, every rename onto a file of that name fails too; while
+  * `refusedFrom` holds one, every rename of a file of that name fails.
   */
 class RefusingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("refusing:///")
   override def rename(src: org.apache.hadoop.fs.Path,
       dst: org.apache.hadoop.fs.Path): Boolean =
-    if (exists(dst) || RefusingLocalFs.refused.exists(dst.getName.startsWith)) false
+    if (exists(dst) || RefusingLocalFs.refused.exists(dst.getName.startsWith) ||
+      RefusingLocalFs.refusedFrom.exists(src.getName.startsWith)) false
     else super.rename(src, dst)
 }
 
 object RefusingLocalFs {
   @volatile var refused: Option[String] = None
+  @volatile var refusedFrom: Option[String] = None
 }

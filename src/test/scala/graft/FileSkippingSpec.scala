@@ -10,7 +10,9 @@ import org.scalacheck.rng.Seed
 /** The one predicate-to-file-skipping path: skip counts for `=`,
   * ranges, `IN` and `IS NULL` through SQL over a catalog name and the
   * Scala API, stats edge cases that must never skip a matching file,
-  * and a property that a pruned read always equals the unpruned one.
+  * a property that every surface's pruned read equals the unpruned
+  * one, and driver file-system calls per read that do not grow with
+  * the file count.
   */
 class FileSkippingSpec extends SparkTestBase {
   quiet()
@@ -66,6 +68,10 @@ class FileSkippingSpec extends SparkTestBase {
     reads.foreach { case (what, d) => assert(d.schema === full.schema, what) }
     assert(sorted(mt.readEq("k", "1").collect()) ===
       sorted(full.filter(col("k") === 1L).collect()))
+    // a column no string casts to still matches by its rendering
+    val arrays = new ManifestTable(spark, scratch("schema_arrays"))
+    arrays.write(Seq((1L, Seq(1, 2)), (2L, Seq(3))).toDF("k", "a"), "overwrite")
+    assert(arrays.readEq("a", "[1, 2]").select("k").as[Long].collect().toSeq === Seq(1L))
   }
 
   // ---- skip counts: `=`, range, IN, IS NULL ------------------------ //
@@ -139,8 +145,10 @@ class FileSkippingSpec extends SparkTestBase {
     * on s, a truncate(50, k) partition transform, non-ASCII strings,
     * NaN/±Infinity doubles, NULLs, and deletion vectors.
     */
+  private val propRoot = scratch("prop")
+
   private lazy val mixed: ManifestTable = {
-    val mt = new ManifestTable(spark, scratch("prop"), statsCols = Seq("k", "s", "x"),
+    val mt = new ManifestTable(spark, s"$propRoot/ns/t", statsCols = Seq("k", "s", "x"),
       bloomCol = Some("s"), partitionSpec = Seq("truncate(50,k)"))
     def batch(lo: Int, hi: Int) = (lo until hi).map { i =>
       val x: java.lang.Double = i % 17 match {
@@ -186,16 +194,76 @@ class FileSkippingSpec extends SparkTestBase {
   }
 
   test("property: a pruned read equals the unpruned read for random predicates") {
+    spark.conf.set("spark.sql.catalog.propcat", "graft.sql.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.propcat.root", propRoot)
     val full = mixed.read()
+    // the live rows as a local relation: its filter can skip nothing
+    val unpruned = spark.createDataFrame(java.util.List.of(full.collect(): _*), full.schema)
     val all = mixed.filesOf(mixed.latestVersion.get).size
     var pruned = 0
     (1 to 30).foreach { i =>
       val p = predGen.pureApply(Gen.Parameters.default, Seed(i.toLong))
-      assert(sorted(mixed.read(where = p).collect()) === sorted(full.filter(p).collect()),
-        s"seed $i: $p")
+      val want = sorted(unpruned.filter(p).collect())
+      assert(sorted(mixed.read(where = p).collect()) === want, s"seed $i, read(where): $p")
+      assert(sorted(mixed.read().filter(p).collect()) === want, s"seed $i, read().filter: $p")
+      val cond = unpruned.filter(p).queryExecution.analyzed match {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition.sql
+      }
+      val sql = s"SELECT * FROM propcat.ns.t WHERE $cond"
+      assert(sorted(spark.sql(sql).collect()) === want, s"seed $i, SQL: $sql")
       if (mixed.filesFor(p).size < all) pruned += 1
     }
     // not vacuous: a fair share of the predicates did skip files
     assert(pruned >= 5, s"only $pruned of 30 predicates skipped any file")
+  }
+
+  test("driver FS calls per read().filter do not grow with the file count") {
+    spark.sparkContext.hadoopConfiguration.set("fs.counting.impl",
+      classOf[CountingLocalFs].getName)
+    def table(name: String, files: Int): ManifestTable = {
+      val mt = new ManifestTable(spark, "counting://" + scratch(name), statsCols = Seq("k"))
+      mt.write(spark.range(files * 4).select(col("id").as("k"), (col("id") % 3).as("v"))
+        .repartitionByRange(files, col("k")), "overwrite")
+      assert(mt.filesOf(0).size === files)
+      mt
+    }
+    def callsPerRead(mt: ManifestTable): Map[String, Long] = {
+      CountingLocalFs.reset()
+      val rows = mt.read().filter(col("k") === 2L).collect()
+      assert(rows.length === 1)
+      CountingLocalFs.driverCalls
+    }
+    val small = table("count5", 5)
+    val large = table("count500", 500)
+    callsPerRead(small) // the first read of a session warms its caches
+    val (s, l) = (callsPerRead(small), callsPerRead(large))
+    assert(s === l, s"5 files: $s, 500 files: $l")
+    assert(l.getOrElse("listStatus", 0L) >= 1, s"the log listing was not counted: $l")
+  }
+}
+
+/** The local file system under the `counting` scheme, counting the
+  * `getFileStatus` and `listStatus` calls made outside Spark's task
+  * threads — the driver's.
+  */
+class CountingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("counting:///")
+  private def count(kind: String): Unit =
+    if (!Thread.currentThread().getName.startsWith("Executor task launch worker"))
+      CountingLocalFs.calls.merge(kind, 1L, (a: Long, b: Long) => a + b): Unit
+  override def getFileStatus(p: Path): org.apache.hadoop.fs.FileStatus = {
+    count("getFileStatus"); super.getFileStatus(p)
+  }
+  override def listStatus(p: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    count("listStatus"); super.listStatus(p)
+  }
+}
+
+object CountingLocalFs {
+  private val calls = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+  def reset(): Unit = calls.clear()
+  def driverCalls: Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    calls.asScala.toMap
   }
 }

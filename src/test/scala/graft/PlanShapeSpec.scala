@@ -384,4 +384,59 @@ class PlanShapeSpec extends SparkTestBase {
       byK.optimizeByZ(Seq("a", "b"), 4)) === Seq(1))
     assert(byK.read().collect().toSet === before)
   }
+
+  /** Executed plans of every SQL execution `op` runs (hit-set
+    * checkpoints, data and sidecar writes, counting jobs). */
+  private def executedPlans(op: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      op
+      org.apache.spark.graft.ListenerDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
+  }
+
+  test("row-level scans read row ids and DV keys as file constants: no join " +
+      "against a row-id base relation") {
+    import graft.lake.{ManifestTable, MergeInsertClause, MergeUpdateClause}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    val mt = new ManifestTable(spark,
+      s"${sys.props("java.io.tmpdir")}/graft_plan_rid_${System.nanoTime()}")
+    mt.write(spark.range(100).select(col("id"), (col("id") % 5).as("k")), "overwrite")
+    mt.delete(col("id") % 7 === 0L) // a deletion vector: scans anti-join positions
+    val read = mt.readWithRowId()
+    read.collect()
+    val ops = Seq(
+      "readWithRowId" -> Seq(read.queryExecution.executedPlan),
+      "updateWhere" -> executedPlans(
+        mt.updateWhere(col("id") < 10L, Map("k" -> lit(9L)))),
+      "mergeInto" -> executedPlans(mt.mergeInto(
+        spark.range(95, 105).select(col("id").as("src")), col("id") === col("src"),
+        matched = Seq(MergeUpdateClause(None, Map("k" -> lit(8L)))),
+        notMatched = Seq(MergeInsertClause(None,
+          Map("id" -> col("src"), "k" -> lit(0L)))))))
+    ops.foreach { case (op, plans) =>
+      val scans = plans.flatMap(p => helper.collect(p) {
+        case s: FileSourceScanExec
+            if s.relation.location.getClass.getSimpleName == "ManifestFileIndex" => s
+      })
+      assert(scans.nonEmpty, s"$op: no manifest scan in ${plans.size} plans")
+      // a relation of (file, row-id base) pairs is local: a join with one
+      val baseJoins = plans.flatMap(p => helper.collect(p) {
+        case j: BaseJoinExec if j.children.exists(c =>
+          helper.collect(c) { case l: LocalTableScanExec => l }.nonEmpty) => j
+      })
+      assert(baseJoins.isEmpty, s"$op joins a local relation:\n${baseJoins.mkString("\n")}")
+    }
+  }
 }

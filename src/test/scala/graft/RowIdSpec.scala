@@ -29,6 +29,123 @@ class RowIdSpec extends SparkTestBase {
     mt.readWithRowId().select(col("id"), col(ManifestTable.RowIdCol))
       .as[(Long, Long)].collect().toMap
 
+  /** A version's entries, `(rel, stat key -> (min, max))`, folded from
+    * the log files themselves: the newest checkpoint manifest at or
+    * below the latest version, then each delta after it.
+    */
+  private def logEntries(root: String): Seq[(String, Map[String, (String, String)])] = {
+    import org.apache.hadoop.fs.Path
+    val log = new Path(root, "_graft_log")
+    val fs = log.getFileSystem(spark.sessionState.newHadoopConf())
+    val names = fs.listStatus(log).map(_.getPath.getName).toSet
+    val Version = "v(\\d+)\\.(manifest|delta)".r
+    val latest = names.collect { case Version(n, _) => n.toInt }.max
+    def lines(name: String): Seq[String] = {
+      val in = fs.open(new Path(log, name))
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+        .filter(l => l.nonEmpty && !l.startsWith("#")).toList
+      finally in.close()
+    }
+    def dec(x: String) = java.net.URLDecoder.decode(x, "UTF-8")
+    def parse(line: String) = {
+      val fields = line.split('\t')
+      fields.head -> fields.tail.map { f =>
+        val Array(c, rest) = f.split('=')
+        val Array(mn, mx, _) = rest.split(':')
+        dec(c) -> (dec(mn), dec(mx))
+      }.toMap
+    }
+    val cp = (latest to 0 by -1).find(v => names(f"v$v%05d.manifest")).get
+    val acc = scala.collection.mutable.LinkedHashMap.from(
+      lines(f"v$cp%05d.manifest").map(parse))
+    (cp + 1 to latest).foreach(v => lines(f"v$v%05d.delta").foreach { l =>
+      if (l.startsWith("-\t")) acc.remove(l.drop(2))
+      else { val (rel, st) = parse(l.drop(2)); acc.remove(rel); acc.put(rel, st) }
+    })
+    acc.toSeq
+  }
+
+  /** The scan as it was built before the manifest file index, kept as
+    * the reference: files read by path per (data dir, layout) with
+    * mergeSchema, the DV key split from `_metadata.file_path`, the
+    * row-id base joined in from a broadcast relation of (file name,
+    * base), and the DV positions anti-joined out.
+    */
+  private def referenceScan(root: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.hadoop.fs.Path
+    val entries = logEntries(root)
+    val raw = entries.map(e => new Path(root, e._1).toString).groupBy { f =>
+      val bp = f.substring(0, f.lastIndexOf("/data/") + "/data".length)
+      (bp, f.substring(bp.length + 1).split("/").dropRight(1)
+        .filter(_.contains('=')).map(_.takeWhile(_ != '=')).mkString("/"))
+    }.toSeq.sortBy(_._1).map { case ((bp, _), paths) =>
+      spark.read.option("basePath", bp).option("mergeSchema", "true").parquet(paths: _*)
+        .withColumn("_graft_dv_file", element_at(split(col("_metadata.file_path"), "/"), -1))
+        .withColumn("_graft_dv_pos", col("_metadata.row_index"))
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    val bases = entries.map(e => (new Path(e._1).getName, e._2.get("#rid").map(_._1.toLong)))
+      .toDF("_graft_dv_file", "_graft_rid_base")
+    val phys = if (raw.columns.contains("_graft_rid")) col("_graft_rid") else lit(null).cast("long")
+    val withId = raw.join(broadcast(bases), Seq("_graft_dv_file"), "left")
+      .withColumn(ManifestTable.RowIdCol, coalesce(phys, col("_graft_rid_base") + col("_graft_dv_pos")))
+      .drop("_graft_rid_base", "_graft_rid")
+    val dvs = entries.flatMap(_._2.get("#dv").map(d => new Path(root, d._1).toString)).distinct
+    if (dvs.isEmpty) withId
+    else withId.join(spark.read.schema("_graft_dv_file STRING, _graft_dv_pos BIGINT")
+      .parquet(dvs: _*), Seq("_graft_dv_file", "_graft_dv_pos"), "left_anti")
+  }
+
+  test("the engine's scan equals the path-read construction: rows, row ids, DV keys") {
+    import graft.lake.{MergeDeleteClause, MergeInsertClause, MergeUpdateClause}
+    // partition values with a space, '%', '=' and non-ASCII characters
+    val parts = Seq("a b", "50%", "k=v", "日本語")
+    def batch(lo: Long, hi: Long) = spark.range(lo, hi).select(col("id"),
+      element_at(array(parts.map(lit): _*), (col("id") % parts.size + 1).cast("int")).as("p"),
+      concat(lit("v"), col("id")).as("s"))
+    def sorted(df: org.apache.spark.sql.DataFrame, cols: Seq[String]) =
+      df.select(cols.map(c => col(s"`$c`")): _*).collect().map(_.toString).sorted.toSeq
+    def check(t: ManifestTable, root: String, stage: String): Unit = {
+      val want = referenceScan(root)
+      val got = t.scanWithPositions()
+      val cols = want.columns.toSeq
+      assert(cols.filterNot(got.columns.contains).isEmpty, s"$stage: ${got.columns.toSeq}")
+      assert(sorted(got, cols) === sorted(want, cols), stage)
+      // the read surface: the same rows and ids, identity from the ids
+      val visible = cols.filterNot(c => c.startsWith("_graft_") || c.startsWith("__graft"))
+      val withId = t.readWithRowId()
+      assert(sorted(withId, visible) === sorted(want, visible), s"$stage: readWithRowId")
+      if (withId.columns.contains("row_no"))
+        assert(withId.filter(col("row_no") =!= col(ManifestTable.RowIdCol) + 1L).isEmpty,
+          s"$stage: identity")
+    }
+    val root = scratch("equiv")
+    val mt0 = new ManifestTable(spark, root, partitionCols = Seq("p"), statsCols = Seq("id"))
+    mt0.write(batch(0, 200).repartition(2), "overwrite")
+    mt0.addIdentityColumn("row_no")
+    mt0.write(batch(200, 260), "append")
+    mt0.delete(col("id") % 9 === 0L)
+    mt0.updateWhere(col("id") % 11 === 0L, Map("s" -> lit("u")))
+    mt0.mergeInto(spark.range(250, 290).select(col("id").as("src_id")),
+      col("id") === col("src_id"),
+      matched = Seq(MergeUpdateClause(Some(col("id") % 2 === 0L), Map("s" -> lit("m"))),
+        MergeDeleteClause(None)),
+      notMatched = Seq(MergeInsertClause(None,
+        Map("id" -> col("src_id"), "p" -> lit("日本語"), "s" -> lit("new")))))
+    check(mt0, root, "delete, updateWhere and mergeInto DVs")
+    mt0.compact(2) // every id materialized
+    mt0.delete(col("id") % 5 === 0L)
+    check(mt0, root, "compacted")
+    val mt = mt0.setPartitionSpec(Seq("p"), Seq("bucket(2,id)")) // lazy: mixed layout
+    mt.write(batch(300, 340), "append")
+    mt.updateWhere(col("id") % 3 === 0L, Map("s" -> lit("w")))
+    check(mt, root, "mixed layout")
+    val cloneRoot = scratch("equiv_clone")
+    val clone = mt.shallowClone(cloneRoot) // spans two roots once it appends
+    clone.write(batch(400, 430), "append")
+    clone.delete(col("id") % 7 === 1L)
+    check(clone, cloneRoot, "clone")
+  }
+
   test("ids are unique, non-null, and stable across an append") {
     val mt = freshTable("uniq")
     val first = ids(mt)

@@ -66,7 +66,7 @@ class WriteStatsSpec extends SparkTestBase {
   /** The reference stats of `files`: one aggregate grouped by file over
     * the files read back (partition columns from their dirs), each row
     * exploded into its bloom positions; `#n` of a file with no rows
-    * from its parquet footer.
+    * from its parquet footer; `#b` from the file system.
     */
   private def reference(root: String, files: Seq[String], statsCols: Seq[String],
       bloomCol: Option[String], bits: Int, hashes: Int): Map[String, Stats] = {
@@ -110,14 +110,18 @@ class WriteStatsSpec extends SparkTestBase {
             s"$b#bloom" -> ((r.getAs[String]("_bloom"), s"$bits,$hashes", "B"))))
       }.toMap
     files.map { f =>
-      val name = new org.apache.hadoop.fs.Path(f).getName
-      name -> grouped.getOrElse(name, {
+      val path = new org.apache.hadoop.fs.Path(f)
+      val name = path.getName
+      // `#b` is the file's real length: readers seek to its footer by it
+      val len = path.getFileSystem(spark.sessionState.newHadoopConf())
+        .getFileStatus(path).getLen.toString
+      name -> (grouped.getOrElse(name, {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(f), spark.sessionState.newHadoopConf())
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         val n = try r.getRecordCount.toString finally r.close()
         Map("#n" -> ((n, n, "C")))
-      })
+      }) + ("#b" -> ((len, len, "L"))))
     }.toMap
   }
 
@@ -188,12 +192,12 @@ class WriteStatsSpec extends SparkTestBase {
         bloomCol = Some("x"), bloomBits = 1 << 12, bloomHashes = 3),
         rows(21, 50).coalesce(1).withColumn("x",
           when(col("i") % 2 === 0, lit(-0.0)).otherwise(lit(0.0))), "x")
-      // an empty write: one zero-row file, `#n` = 0 and nothing else
+      // an empty write: one zero-row file, `#n` = 0 and its length
       val empty = scratch("empty")
       check(empty, new ManifestTable(spark, empty, statsCols = statsCols,
         bloomCol = Some("s"), bloomBits = 1 << 12, bloomHashes = 3),
         rows(1, 0), "s")
-      assert(recorded(empty, 0).values.map(_ - "#rid").toSeq ===
+      assert(recorded(empty, 0).values.map(_ - "#rid" - "#b").toSeq ===
         Seq(Map("#n" -> (("0", "0", "C")))))
     } finally spark.conf.set("spark.sql.session.timeZone", tz)
   }
