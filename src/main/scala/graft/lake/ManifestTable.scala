@@ -358,8 +358,8 @@ object ManifestTable {
     */
   private[lake] val CdcNoChanges = "none"
 
-  /** Tag value for a whole-file replacement commit (overwrite,
-    * partition overwrite, restore): the change feed derives
+  /** Tag value for a whole-file replacement commit (overwrite, a
+    * whole-file [[delete]], restore): the change feed derives
     * the commit's changes keylessly FROM THE FILE DELTA — removed
     * files' live rows as deletes, added files' rows as inserts (the
     * Delta INSERT-OVERWRITE CDF representation). Exact in effect
@@ -444,8 +444,8 @@ class ManifestTable(spark: SparkSession, root: String,
   /** All hive partition columns, outermost first: the legacy single
     * `partitionCol` plus any additional `partitionCols` (identity),
     * then the transform-derived hidden columns — real tables
-    * partition by (date, region)/(date, tenant), and merge scoping,
-    * partition overwrite, and compaction must treat the partition as
+    * partition by (date, region)/(date, tenant), and merge scoping
+    * and compaction must treat the partition as
     * the full tuple.
     */
   private val identityPartCols: Seq[String] =
@@ -467,17 +467,6 @@ class ManifestTable(spark: SparkSession, root: String,
     transforms.foldLeft(df) { (d, t) =>
       if (d.columns.contains(t.name)) d
       else d.withColumn(t.name, t.derive(col(t.src), d.schema(t.src).dataType))
-    }
-
-  /** Partition-tuple value expression over a frame that carries SOURCE
-    * columns (derived columns may be absent — partition overwrite
-    * takes raw user frames).
-    */
-  private def partValueExpr(df: DataFrame, c: String): Column =
-    transforms.find(_.name == c) match {
-      case Some(t) if !df.columns.contains(c) =>
-        t.derive(col(t.src), df.schema(t.src).dataType)
-      case _ => col(c)
     }
 
   /** All zone-map columns: the legacy single `statsCol` plus any
@@ -773,13 +762,6 @@ class ManifestTable(spark: SparkSession, root: String,
     */
   def versionAtOrBefore(tsMillis: Long): Option[Int] =
     versions.filter(commitTimeOf(_) <= tsMillis).lastOption
-
-  /** [[metadataRowCount]] at the [[versionAtOrBefore]] snapshot; None
-    * when no such version exists — the caller's scan then raises the
-    * real error.
-    */
-  def metadataRowCountAsOf(tsMillis: Long): Option[Long] =
-    versionAtOrBefore(tsMillis).flatMap(v => metadataRowCount(Some(v)))
 
   /** L22b: bucket-partitioned read that REPORTS its partitioning —
     * the storage-partitioned-join surface. A table declared with a
@@ -1196,8 +1178,8 @@ class ManifestTable(spark: SparkSession, root: String,
     * identity values kept, no change rows) in one commit that any
     * concurrent commit conflicts with rather than losing rows, then
     * records the new layout — so the table is never in a mixed-layout
-    * state and every partition-scoped op (tuple merge, partition
-    * overwrite, DV scoping) stays exact. O(table) — the honest cost of
+    * state and every partition-scoped op (tuple merge, whole-file
+    * delete, DV scoping) stays exact. O(table) — the honest cost of
     * a layout change here; [[setPartitionSpec]] is the lazy variant.
     * History is preserved: earlier versions time-travel with their old
     * layout (readers key on paths, not config). Returns a NEW instance
@@ -1233,9 +1215,10 @@ class ManifestTable(spark: SparkSession, root: String,
     *    [[compactSmall]], [[reorgPurge]], [[optimizeByZ]],
     *    [[backfillRowIds]]) — so the table migrates
     *    progressively, paying O(touched) per op, never O(table);
-    *  - path-exact ops that cannot scope a foreign layout
-    *    ([[overwritePartitionValues]], [[readBucketed]]) refuse the
-    *    mixed state with migration guidance instead of guessing.
+    *  - a delete whose predicate holds on a foreign layout as a data
+    *    filter marks rows instead of dropping files ([[delete]]), and
+    *    [[readBucketed]] refuses the mixed state with migration
+    *    guidance instead of guessing.
     *
     * [[evolvePartitionSpec]] is the eager alternative (one O(table)
     * maintenance rewrite, never a mixed state); this is the form that
@@ -1749,12 +1732,14 @@ class ManifestTable(spark: SparkSession, root: String,
     val (v, md) = snapshot(version)
     val entries = entriesOf(v)
     val named = entries.map(e => dataPath(e).toString -> new Path(root, e.rel).toString).toMap
-    scannedFiles(readAll(entries, md).filter(where)).map(named)
+    scannedFiles(readAll(entries, md).filter(where).queryExecution.sparkPlan)
+      .map(named)
   }
 
-  /** The data files the planned scans of `df` select, qualified. */
-  private def scannedFiles(df: DataFrame): Seq[String] =
-    df.queryExecution.sparkPlan.collect {
+  /** The data files the manifest scans of a planned query select,
+    * qualified. */
+  private def scannedFiles(plan: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
+    plan.collect {
       case s: org.apache.spark.sql.execution.FileSourceScanExec
           if s.relation.location.isInstanceOf[ManifestFileIndex] =>
         s.selectedPartitions.filePartitionIterator.flatMap(_.files)
@@ -2102,87 +2087,6 @@ class ManifestTable(spark: SparkSession, root: String,
     require(fs.exists(branchFile(name)), s"no branch $name at $root")
     fs.delete(branchFile(name), false): Unit
   }
-
-  /** L2: replace exactly one partition (dynamic partition overwrite).
-    * `value = null` replaces the hive default (null) partition — the
-    * filter must be null-aware or zero new files would be written
-    * while the old null-partition files are dropped (silent data loss).
-    */
-  def overwritePartition(df: DataFrame, value: String): Int = {
-    if (partCols.isEmpty)
-      throw new IllegalStateException("table is not partitioned")
-    require(partCols.size == 1,
-      s"table partitions on (${partCols.mkString(", ")}); " +
-        "use overwritePartitionValues with the full tuple")
-    overwritePartitionValues(df, Seq(value))
-  }
-
-  /** Multi-column form of [[overwritePartition]]: replace exactly one
-    * (c1=v1, c2=v2, …) sub-partition. `values` align with the table's
-    * partition columns outermost-first; nulls address the hive default
-    * partition on that level.
-    */
-  def overwritePartitionValues(df: DataFrame, values: Seq[String]): Int = {
-    if (partCols.isEmpty)
-      throw new IllegalStateException("table is not partitioned")
-    require(values.size == partCols.size,
-      s"expected ${partCols.size} partition values (${partCols.mkString(", ")}), " +
-        s"got ${values.size}")
-    // transformed tables address sub-partitions by the DERIVED value
-    // (e.g. '2024-01-02' for days(ts)); the slice filter derives it
-    // from the source column, so user frames need no hidden columns
-    val md = metadata
-    val slice = df.filter(partCols.zip(values).map { case (c, v) =>
-      val pv = partValueExpr(df, c)
-      if (v == null) pv.isNull else pv.cast("string") === lit(v)
-    }.reduce(_ && _))
-    val base = latestVersion.map(entriesOf).getOrElse(Seq.empty)
-    // path-exact contract (checked BEFORE any data write): every live
-    // file must carry the CURRENT layout's segments, or the target
-    // tuple cannot be matched against it. After a lazy
-    // setPartitionSpec, files of the old spec refuse loudly (a silent
-    // carry-forward would leave their rows of the replaced tuple
-    // alive — duplication on the very next read)
-    val foreign = base.filter(e =>
-      ManifestTable.layoutColsOf(e.rel) != partCols)
-    require(foreign.isEmpty,
-      s"overwritePartitionValues: ${foreign.size} file(s) predate the " +
-        s"current partition spec (e.g. ${foreign.headOption.map(_.rel).getOrElse("")}); " +
-        "compact() or evolvePartitionSpec to migrate the layout first, " +
-        "or use merge/delete which scope per-spec")
-    val newFiles = writeDataFiles(enforced(slice, md), md, "overwritePartition")
-    def inPart(e: Entry): Boolean =
-      partCols.zip(values).forall { case (c, v) => inPartition(e.rel, c, v) }
-    // partition-scoped delta: concurrent commits to OTHER partitions
-    // rebase cleanly; a concurrent touch of THIS partition conflicts
-    stampCdcFileDiff(commitDelta(base,
-      base.filter(inPart).map(_.rel).toSet,
-      newFiles, conflictsWith = inPart), md)
-  }
-
-  /** Hive-style partition directory segment for a value — Spark escapes
-    * special chars (space, ':', '%', …) via `escapePathName` when
-    * writing `col=value/` dirs, so file matching must escape the same
-    * way or non-URL-safe values silently miss their files. A NULL
-    * partition value lands in the hive default-partition directory.
-    */
-  private def partSegment(c: String, value: String): String = {
-    val esc =
-      if (value == null)
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .DEFAULT_PARTITION_NAME
-      else
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .escapePathName(value)
-    s"$c=$esc"
-  }
-
-  /** True when relative file path `f` lives in partition `c=value`. Path
-    * segment equality, not substring — `date=2024-06-1` must not match
-    * `date=2024-06-10/`.
-    */
-  private def inPartition(f: String, c: String, value: String): Boolean =
-    f.split("/").contains(partSegment(c, value))
 
   /** L1: keyed MERGE — upsert, source wins, idempotent, with optional
     * delete tombstones (`deleteCol`: a boolean column present in
@@ -2693,7 +2597,7 @@ class ManifestTable(spark: SparkSession, root: String,
   def constraints: Map[String, String] = metadata.constraints
 
   /** L17: ADD CONSTRAINT — registers a CHECK expression that every
-    * subsequent data-adding commit (write, merge, partition overwrite,
+    * subsequent data-adding commit (write, merge, delete's append,
     * updateWhere) enforces INSIDE the write job itself
     * ([[enforced]]): the same evaluation that produces the written
     * rows checks them, so a nondeterministic input can never pass a
@@ -2771,7 +2675,7 @@ class ManifestTable(spark: SparkSession, root: String,
     * column, non-null count, approximate NDV (HLL++, ±~2%), and
     * min/max — persisted as a stats sidecar in the log dir, pinned to
     * the analyzed version. This is the cost-based-planning input: a
-    * 1000-executor join planner (and [[readForJoin]] here) consults
+    * 1000-executor join planner consults
     * O(1) metadata instead of scanning 100 TB to learn a dimension
     * table is 40 MB. `columns` restricts the pass; default = every
     * atomic column. Returns the analyzed version.
@@ -2857,30 +2761,6 @@ class ManifestTable(spark: SparkSession, root: String,
     finally in.close()
   }
 
-  /** Read with a stats-driven broadcast decision: when the CURRENT
-    * version's total data bytes fall under `broadcastThreshold`, the
-    * result carries a broadcast hint — so `fact.join(dim.readForJoin(),
-    * keys)` picks BroadcastHashJoin without the caller hand-placing
-    * hints or Spark's size estimator seeing through the scan. File
-    * sizes come from commit metadata (O(files) driver-side, no scan),
-    * so the decision is always CURRENT — unlike [[tableStats]], which
-    * is pinned to its analyze version. Same compressed-bytes threshold
-    * semantics as Delta/Spark `autoBroadcastJoinThreshold`.
-    */
-  def readForJoin(broadcastThreshold: Long = 10L << 20): DataFrame = {
-    val small = latestVersion.exists { v =>
-      var total = 0L
-      val it = entriesOf(v).iterator
-      var under = true
-      while (it.hasNext && under) {
-        total += sizeOf(it.next())
-        under = total <= broadcastThreshold
-      }
-      under
-    }
-    if (small) broadcast(read()) else read()
-  }
-
   /** Stream-source surface: rows of the files ADDED between two
     * versions, read DV-aware as of `vTo` — what a table-as-stream
     * micro-batch emits. With `failOnChange`, any non-append difference
@@ -2961,46 +2841,94 @@ class ManifestTable(spark: SparkSession, root: String,
       .orderBy(col("version").asc)
   }
 
-  /** L15: row-level DELETE via deletion vectors (merge-on-read — the
-    * Delta DV / Iceberg v2 position-delete model). Matching rows are
-    * recorded as (file-basename, row_index) positions in a sidecar
-    * parquet under `_graft_dv/`; the touched files' manifest entries
-    * re-point at the sidecar and NO data file is rewritten. Cost is
-    * O(matching rows + one manifest commit) — at 100 TB a point delete
-    * (GDPR erasure, bad-batch retraction) touches a handful of files'
-    * entries instead of rewriting partitions. Readers anti-join the
-    * positions out ([[liveRows]]); the next compaction/merge of a
-    * file materializes its deletes and drops the DV. A new sidecar for
-    * a file absorbs the file's previous positions, so each entry
-    * references exactly ONE sidecar (bounded read fan-in), while stale
-    * shared sidecars stay harmless (positions are permanent row ids).
-    * Zone maps/blooms of DV-carrying files stay valid — they describe
-    * a superset, which can only under-prune, never lose rows. Returns
-    * the committed version, or the current one when nothing matched.
+  /** L15: row-level DELETE, optionally followed by an append, as ONE
+    * optimistic commit: a reader, or a crash at any point, sees the old
+    * state or the new one, never the delete without the append —
+    * `delete(col("day") === d, thenAppend = Seq(newDay))` replaces a
+    * partition atomically. `thenAppend` frames are written as they
+    * are: a caller replacing a partition filters its frame itself.
+    * The kernel ([[deleteThenAppend]]) takes one of two paths:
+    *
+    *  - Whole-file. When every planned scan holds the predicate only
+    *    as partition filters, every row of each selected file matches,
+    *    so the files go BY REFERENCE (Delta's metadata-only DELETE,
+    *    Iceberg's `OverwriteFiles`): no scan job, no sidecar. Partition
+    *    typing, null handling, hive escaping and column mapping are
+    *    Spark's own partition pruning. A file concurrently added under
+    *    a dir this commit removes a file from is a conflict.
+    *  - Deletion vector (merge-on-read, the Delta DV / Iceberg v2
+    *    position-delete model), for a data-column or non-deterministic
+    *    predicate or a mixed partition layout. Matching rows are
+    *    recorded as (file name, row index) positions in a sidecar under
+    *    `_graft_dv/`; the touched entries re-point at it and NO data
+    *    file is rewritten. Cost is O(matching rows + one manifest
+    *    commit): a point delete (GDPR erasure, bad-batch retraction)
+    *    touches a handful of entries instead of rewriting partitions.
+    *    Readers anti-join the positions out ([[liveRows]]); the next
+    *    rewrite of a file materializes its deletes and drops the DV. A
+    *    new sidecar for a file absorbs its previous positions, so each
+    *    entry references exactly ONE sidecar, while stale shared
+    *    sidecars stay harmless (positions are permanent row ids). Zone
+    *    maps and blooms of DV-carrying files stay valid: they describe
+    *    a superset. Concurrent disjoint commits rebase.
+    *
+    * Returns the committed version, or the current one when nothing
+    * matched and nothing is appended.
     */
-  def delete(predicate: Column): Int = {
+  def delete(predicate: Column, thenAppend: Seq[DataFrame] = Seq.empty): Int = {
     val (v0, md) = snapshot(None)
     val entries = entriesOf(v0)
-    if (entries.isEmpty) return v0
-    deleteMatching(v0, entries,
-      liveWithPos(entries, md, withRid = false).filter(predicate), md)
+    val hits =
+      if (entries.isEmpty) Nil
+      else Seq(liveWithPos(entries, md, withRid = false).filter(predicate))
+    deleteThenAppend("delete", v0, md, entries, hits, thenAppend)
   }
 
   /** Batch point delete — one commit for a SET of keys (the GDPR
     * erasure-queue shape: requests arrive in batches, each batch is
-    * one DV commit, not one per key). Keys match in the string domain
+    * one commit, not one per key). Keys match in the string domain
     * (`c` rendered as a string); only files the kernel keeps for the
-    * key set are scanned for positions.
+    * key set are scanned.
     */
-  def deleteKeys(c: String, values: Seq[String]): Int = {
-    val (v0, md) = snapshot(None)
-    // NULL keys are dropped explicitly (they cannot equal any stored
-    // value; inside an IN literal they'd vanish silently instead)
-    val vals = values.filter(_ != null).distinct
+  def deleteKeys(c: String, values: Seq[String]): Int =
+    deleteKeysAndAppend(Seq(c -> values), Seq.empty)
+
+  /** Atomic multi-key delete + append — the vector-index refresh
+    * commit ([[graft.operators.PqIndex]]/[[graft.operators.NswIndex]]
+    * `refreshFrom`): remove every row matching ANY `(column, keys)`
+    * batch AND append `adds`, as ONE optimistic commit
+    * ([[deleteThenAppend]]). Each batch scans only the files the
+    * kernel keeps for its keys, like [[deleteKeys]]; NULL keys match
+    * nothing.
+    *
+    * `strict = true` additionally makes ANY concurrently-added file a
+    * conflict: single-writer maintenance like an index refresh must
+    * observe a racing refresh's commit as a
+    * ConcurrentModificationException, never interleave with it — two
+    * refreshes deriving the same delta from the same cursor would
+    * otherwise both append and duplicate rows.
+    *
+    * `version` pins the snapshot the caller DERIVED its delta from
+    * (the optimistic-concurrency base): rows are matched against that
+    * snapshot's files, and any commit that landed since is rebased
+    * over or conflicts per [[commitDelta]]. Left unset, the latest
+    * version at call time is the base.
+    */
+  def deleteKeysAndAppend(deletes: Seq[(String, Seq[String])],
+      adds: Seq[DataFrame], strict: Boolean = false,
+      version: Option[Int] = None): Int = {
+    val (v0, md) = snapshot(version)
     val entries = entriesOf(v0)
-    if (vals.isEmpty || entries.isEmpty) return v0
-    keyHits(entries, liveWithPos(entries, md, withRid = false).schema, md, c, vals)
-      .fold(v0)(deleteMatching(v0, entries, _, md))
+    // the snapshot's schema types every batch's file skipping
+    lazy val schema = liveWithPos(entries, md, withRid = false).schema
+    val hits = deletes.flatMap { case (c, values) =>
+      // dropped explicitly: inside an IN literal a NULL would vanish
+      val vals = values.filter(_ != null).distinct
+      if (vals.isEmpty || entries.isEmpty) None
+      else keyHits(entries, schema, md, c, vals)
+    }
+    deleteThenAppend("deleteKeysAndAppend", v0, md, entries, hits, adds,
+      strict)
   }
 
   /** The live rows, with positions, whose `c` renders as one of `vals`
@@ -3035,42 +2963,89 @@ class ManifestTable(spark: SparkSession, root: String,
         col(c).cast("string") === col("_graft_erase_key"), "left_semi")
     }
 
-  /** Position-mark `matches` (live rows of `all`, with positions: a
-    * filter for predicate deletes, a semi-join for large key sets) and
-    * commit as a delta against the full snapshot. Returns `v0` with no
-    * job run when its planned scans select no data file.
+  /** The delete-then-append kernel behind [[delete]], [[deleteKeys]]
+    * and [[deleteKeysAndAppend]]: remove the rows of `hits` (frames of
+    * [[liveWithPos]] rows of snapshot `v0`) and append `adds`, as one
+    * optimistic commit against `entries`. Returns `v0` when the hits'
+    * planned scans select no file and nothing is appended.
+    *
+    *  - Whole-file path, when every hit frame's plan keeps every row of
+    *    the files it selects ([[keepsWholeFiles]]), or selects none:
+    *    those files are removed by reference with one [[commitDelta]].
+    *    A file concurrently added under a dir the commit removes a file
+    *    from conflicts, and the version is stamped
+    *    [[ManifestTable.CdcFileDiff]] (it re-points nothing).
+    *  - DV path otherwise: the hit rows are materialized once (eager
+    *    checkpoint; several frames deduplicated by position), so the
+    *    marks, the recorded totals and the change rows come from the
+    *    same rows even under a non-deterministic predicate, and are
+    *    marked through [[commitDv]], which rebases over concurrent
+    *    adds. With CDC the hit rows are recorded as deletes and the
+    *    adds (checkpointed too) as inserts.
+    *
+    * `strict` makes any concurrently added file a conflict on either
+    * path.
     */
-  private def deleteMatching(v0: Int, all: Seq[Entry], matches: DataFrame,
-      md: TableMetadata): Int = {
-    if (!md.cdcEnabled) {
-      // materialize the hit set exactly once (eager checkpoint): the
-      // marksUnique fast path records totals by driver arithmetic, so
-      // the mark rows must be recompute-proof — a nondeterministic
-      // predicate re-evaluated under cache eviction could otherwise
-      // diverge the recorded counts from the written sidecar (r18
-      // ADVICE; the CDC branch below already had this discipline)
-      val marks = matches.select(col(DvFileCol), col(DvPosCol))
-      if (scannedFiles(marks).isEmpty) return v0
-      val hits = marks.localCheckpoint(true)
-      try return commitDv("delete", v0, all, hits, Seq.empty, md,
-        marksUnique = true)
-      finally graft.functions.CheckpointOps.release(hits)
+  private def deleteThenAppend(op: String, v0: Int, md: TableMetadata,
+      entries: Seq[Entry], hits: Seq[DataFrame], adds0: Seq[DataFrame],
+      strict: Boolean = false): Int = {
+    adds0.foreach(requireNoReservedCols(_, op, md))
+    val adds = adds0.map(enforced(_, md))
+    val cdcOn = md.cdcEnabled
+    def marksOf(df: DataFrame) = df.select(col(DvFileCol), col(DvPosCol))
+    // without CDC only the positions are kept
+    val kept = hits.map(h => if (cdcOn) h else marksOf(h))
+    val plans = kept.map(_.queryExecution.sparkPlan)
+    val selected = plans.flatMap(scannedFiles).distinct
+    if (selected.isEmpty && adds.isEmpty) return v0
+    if (selected.isEmpty || plans.forall(keepsWholeFiles)) {
+      val relOf = entries.map(e => dataPath(e).toString -> e.rel).toMap
+      val removed = selected.map(relOf).toSet
+      val dirs = removed.map(new Path(_).getParent)
+      val added = adds.flatMap(writeDataFiles(_, md, op))
+      if (removed.isEmpty && added.isEmpty) return v0
+      return stampCdcFileDiff(commitDelta(entries, removed, added,
+        if (strict) _ => true else e => dirs(new Path(e.rel).getParent)), md)
     }
-    // T15: the matched rows ARE the commit's change rows. Materialize
-    // the hit set exactly once so the DV marks and the recorded
-    // deletes cannot diverge under a nondeterministic predicate —
-    // the same discipline updateWhere applies.
-    if (scannedFiles(matches).isEmpty) return v0
-    val hits = matches.localCheckpoint(true)
+    val union = kept.reduce(_.unionByName(_, allowMissingColumns = true))
+    val hitsC = (if (kept.size > 1) union.dropDuplicates(DvFileCol, DvPosCol)
+      else union).localCheckpoint(true)
+    val addsC = if (cdcOn) adds.map(_.localCheckpoint(true)) else adds
     try {
-      val dataCols = hits.columns
-        .filterNot(Set(DvFileCol, DvPosCol, ManifestTable.RowIdCol)).toSeq
-      commitDv("delete", v0, all, hits.select(col(DvFileCol), col(DvPosCol)),
-        Seq.empty,
-        md, cdc = Some(hits.select(dataCols.map(col): _*)
-          .withColumn(ManifestTable.ChangeTypeCol, lit("delete"))),
-        marksUnique = true)
-    } finally graft.functions.CheckpointOps.release(hits)
+      val ct = ManifestTable.ChangeTypeCol
+      val cdc = if (!cdcOn) None else Some(
+        (hitsC.drop(DvFileCol, DvPosCol).withColumn(ct, lit("delete")) +:
+          addsC.map(a => withDeclared(a, md).withColumn(ct, lit("insert"))))
+          .reduce(_.unionByName(_, allowMissingColumns = true)))
+      commitDv(op, v0, entries, marksOf(hitsC), addsC, md,
+        if (strict) _ => true else _ => false,
+        appendWithoutMarks = true, cdc = cdc)
+    } finally (hitsC +: (if (cdcOn) addsC else Nil))
+      .foreach(graft.functions.CheckpointOps.release)
+  }
+
+  /** True when `plan` outputs every live row of each file its manifest
+    * scans select: no scan keeps a data filter, and only projections,
+    * unions and the deletion-vector anti-join sit above one. A
+    * predicate pushed down whole as partition filters leaves exactly
+    * that; a data-column or non-deterministic predicate leaves a
+    * `Filter`, a large key set a semi-join.
+    */
+  private def keepsWholeFiles(plan: org.apache.spark.sql.execution.SparkPlan): Boolean = {
+    import org.apache.spark.sql.execution._
+    plan match {
+      case s: FileSourceScanExec =>
+        s.relation.location.isInstanceOf[ManifestFileIndex] && s.dataFilters.isEmpty
+      case _: ProjectExec | _: UnionExec => plan.children.forall(keepsWholeFiles)
+      case j: joins.BaseJoinExec =>
+        j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti &&
+          j.right.collectLeaves().forall {
+            case s: FileSourceScanExec =>
+              s.relation.location.rootPaths.forall(_.getParent.getName == dvDir.getName)
+            case _ => false
+          } && keepsWholeFiles(j.left)
+      case _ => false
+    }
   }
 
   /** The LIVE rows of `entries` with their permanent (file, pos) row
@@ -3176,7 +3151,7 @@ class ManifestTable(spark: SparkSession, root: String,
               allowMissingColumns = true))
         commitDv("updateWhere", v0, entries,
           hits.select(col(DvFileCol), col(DvPosCol)), Seq(enforced(updated, md)),
-          md, cdc = cdc, marksUnique = true)
+          md, cdc = cdc)
       } finally if (cdcOn) graft.functions.CheckpointOps.release(updated)
     } finally graft.functions.CheckpointOps.release(hits) // RDD-level: Dataset.unpersist no-ops on checkpoints
   }
@@ -3424,7 +3399,7 @@ class ManifestTable(spark: SparkSession, root: String,
       // inserts were decided against v0 alone (the Delta MERGE rule)
       commitDv(op, v0, entries, marks, adds, md,
         conflictsWith = if (haveInserts) _ => true else _ => false,
-        appendWithoutMarks = true, cdc = cdc, marksUnique = true)
+        appendWithoutMarks = true, cdc = cdc)
     } finally (allCheckpoints ++ copyCheckpoints)
       .foreach(graft.functions.CheckpointOps.release)
   }
@@ -3444,18 +3419,17 @@ class ManifestTable(spark: SparkSession, root: String,
       marks: DataFrame, adds: Seq[DataFrame], md: TableMetadata,
       conflictsWith: Entry => Boolean = _ => false,
       appendWithoutMarks: Boolean = false,
-      cdc: Option[DataFrame] = None,
-      marksUnique: Boolean = false): Int = {
-    // The fast-path totals below are DRIVER ARITHMETIC over the mark
-    // counts, so the counting job and the sidecar-writing job must
-    // agree on the mark rows. CONTRACT (r18 ADVICE): every
-    // marksUnique caller passes marks derived from an eagerly
-    // CHECKPOINTED hit set (updateWhere/mergeInto hits, and
-    // deleteMatching checkpoints both branches), so even a cache
-    // eviction recomputes the same rows from stored blocks — a
-    // nondeterministic predicate can no longer diverge the recorded
-    // totals from the written sidecar. The cache here only avoids
-    // re-reading those blocks across the jobs.
+      cdc: Option[DataFrame] = None): Int = {
+    // The totals below are DRIVER ARITHMETIC over the mark counts, so
+    // the counting job and the sidecar-writing job must agree on the
+    // mark rows. CONTRACT: every caller passes UNIQUE marks (each
+    // live position at most once) derived from an eagerly
+    // CHECKPOINTED hit set (updateWhere/mergeInto hits, the
+    // delete kernel's deduplicated hits), so even a cache eviction
+    // recomputes the same rows from stored blocks — a
+    // nondeterministic predicate cannot diverge the recorded totals
+    // from the written sidecar. The cache here only avoids re-reading
+    // those blocks across the jobs.
     val cached = marks.cache()
     try {
       // §2.6 (overlap independent jobs): the CDC sidecar write and
@@ -3511,33 +3485,20 @@ class ManifestTable(spark: SparkSession, root: String,
           .select(col(DvFileCol), col(DvPosCol))
           .filter(col(DvFileCol)
             .isin(touched.map(e => new Path(e.rel).getName): _*)))
-      // `marksUnique` fast path: single-hit-set callers (predicate
-      // deletes, UPDATE copies, cardinality-checked MERGE arms) mark
-      // each live position at most once, and live reads anti-join the
-      // existing DV out, so new marks are disjoint from prior ones —
-      // the distinct shuffle is a no-op and the per-file totals are
-      // newPerFile + each entry's prior count (already in its DV stat).
-      // Falls back to distinct + sidecar recount when the caller may
-      // emit overlapping marks (multi-batch key deletes) or a prior
-      // count is unparseable.
-      val priorPerFile: Option[Map[String, Long]] =
-        if (!marksUnique) None
-        else {
-          val parsed = touched.map { e =>
-            e.stats.get(DvKey) match {
-              case None => Some(new Path(e.rel).getName -> 0L)
-              case Some(s) =>
-                s.mx.toLongOption.map(new Path(e.rel).getName -> _)
-            }
-          }
-          if (parsed.contains(None)) None else Some(parsed.flatten.toMap)
+      // unique marks of live rows (live reads anti-join the existing
+      // DV out) are disjoint from the prior ones, so the union needs
+      // no distinct and each per-file total is newPerFile + the
+      // entry's prior count (already in its DV stat); a sidecar
+      // recount only when a prior count is unparseable
+      val parsed = touched.map { e =>
+        e.stats.get(DvKey) match {
+          case None => Some(new Path(e.rel).getName -> 0L)
+          case Some(s) => s.mx.toLongOption.map(new Path(e.rel).getName -> _)
         }
-      val allMarks = priorPerFile match {
-        case Some(_) => oldForTouched.fold(cached: DataFrame)(o =>
-          cached.unionByName(o))
-        case None => oldForTouched.fold(cached.distinct())(o =>
-          cached.unionByName(o).distinct())
       }
+      val priorPerFile =
+        if (parsed.contains(None)) None else Some(parsed.flatten.toMap)
+      val allMarks = oldForTouched.fold(cached: DataFrame)(cached.unionByName(_))
       // size the sidecar from the (driver-known) mark count: the
       // default shuffle parallelism would mint up to 32 files for a
       // typically-tiny position set — sidecar-level small-file bloat
@@ -3553,8 +3514,8 @@ class ManifestTable(spark: SparkSession, root: String,
       allMarks.coalesce(sidecarFiles)
         .write.options(ManifestTable.InternalWriteOptions)
         .parquet(new Path(root, dvRel).toString)
-      // totals: driver arithmetic on the unique-marks path; otherwise
-      // re-read from the written sidecar (≤ one row per file)
+      // totals: driver arithmetic; otherwise re-read from the written
+      // sidecar (≤ one row per file)
       val totalPerFile = priorPerFile match {
         case Some(prior) => newPerFile.map { case (f, n) =>
           f -> (n + prior.getOrElse(f, 0L))
@@ -3573,79 +3534,6 @@ class ManifestTable(spark: SparkSession, root: String,
       stamped(commitDelta(entries, touched.map(_.rel).toSet, added,
         conflictsWith))
     } finally cached.unpersist()
-  }
-
-  /** Atomic multi-key DV-delete + append — the vector-index refresh
-    * commit ([[graft.operators.PqIndex]]/[[graft.operators.NswIndex]]
-    * `refreshFrom`): mark every row matching ANY `(column, keys)`
-    * batch dead AND append `adds`, as ONE optimistic commit. A reader
-    * — or a crash at any point — sees either the full old state or
-    * the full new state; there is no window where the deletes are
-    * visible without the re-append (the two-commit form silently lost
-    * the deleted rows when a replay re-derived its delta from the
-    * half-applied table). Each batch scans only the files the kernel
-    * keeps for its keys, like [[deleteKeys]]; all marks ride one DV
-    * sidecar.
-    *
-    * `strict = true` additionally makes ANY concurrently-added file a
-    * conflict (not just overlapping rewrites): single-writer
-    * maintenance like an index refresh must observe a racing refresh's
-    * commit as a ConcurrentModificationException, never interleave
-    * with it — two refreshes deriving the same delta from the same
-    * cursor would otherwise both append and duplicate rows.
-    *
-    * `version` pins the snapshot the caller DERIVED its delta from
-    * (the optimistic-concurrency base): marks are computed against
-    * that snapshot's files, and any commit that landed since is
-    * rebased over or conflicts per [[commitDelta]]. Left unset, the
-    * latest version at call time is the base — correct only when the
-    * delta was derived in the same breath.
-    */
-  def deleteKeysAndAppend(deletes: Seq[(String, Seq[String])],
-      adds: Seq[DataFrame], strict: Boolean = false,
-      version: Option[Int] = None): Int = {
-    val (v0, md) = snapshot(version)
-    val entries = entriesOf(v0)
-    val conflictsWith: Entry => Boolean = if (strict) _ => true else _ => false
-    val cdcOn = md.cdcEnabled
-    // T15 (CDC mode): full hit rows are both the DV marks and the
-    // recorded deletes, and the adds are both the written data files
-    // and the recorded inserts — checkpoint EACH once so the sidecar
-    // and the commit cannot diverge (adds may derive from a
-    // concurrently-changing source, e.g. an index refresh delta)
-    val hitCheckpoints = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val addsC = if (!cdcOn) adds else adds.map(_.localCheckpoint(true))
-    // the snapshot's schema types every batch's file skipping
-    lazy val schema = liveWithPos(entries, md, withRid = false).schema
-    try {
-      val hitDfs = deletes.flatMap { case (c, values0) =>
-        val vals = values0.filter(_ != null).distinct
-        // the same file skipping + key matching as deleteKeys
-        if (vals.isEmpty || entries.isEmpty) None
-        else keyHits(entries, schema, md, c, vals).map { hits =>
-          if (!cdcOn) hits
-          else { val h = hits.localCheckpoint(true); hitCheckpoints += h; h }
-        }
-      }
-      val marks = hitDfs.map(_.select(col(DvFileCol), col(DvPosCol)))
-        .reduceOption(_.unionByName(_)).getOrElse(
-        // empty stand-in so commitDv's count job is trivially empty
-        spark.range(0).select(lit("").as(DvFileCol), lit(0L).as(DvPosCol)))
-      if (hitDfs.isEmpty && addsC.isEmpty) return v0
-      val ct = ManifestTable.ChangeTypeCol
-      val cdc: Option[DataFrame] = if (!cdcOn) None else
-        (hitDfs.map(h => h.select(h.columns
-            .filterNot(Set(DvFileCol, DvPosCol)).toSeq.map(col): _*)
-            .withColumn(ct, lit("delete"))) ++
-          addsC.map(a => withDeclared(a, md).withColumn(ct, lit("insert"))))
-          .reduceOption(_ unionByName _)
-      commitDv("deleteKeysAndAppend", v0, entries, marks, addsC, md,
-        conflictsWith,
-        appendWithoutMarks = true, cdc = cdc)
-    } finally {
-      hitCheckpoints.foreach(graft.functions.CheckpointOps.release)
-      if (cdcOn) addsC.foreach(graft.functions.CheckpointOps.release)
-    }
   }
 
   /** Entries of a snapshot whose partition tuple satisfies `pred` —
@@ -3804,8 +3692,9 @@ class ManifestTable(spark: SparkSession, root: String,
     * the anti-join per DV'd file forever — once a file is mostly
     * dead, rewriting it is cheaper than carrying the vector.
     *
-    * Cost is O(DV'd files): candidate row counts come from parquet
-    * footers only (no data scan), the rewrite reads just the chosen
+    * Cost is O(DV'd files): candidate row counts come from the
+    * entries' `#n` stats (a parquet footer only for an entry written
+    * before the stat; no Spark job), the rewrite reads just the chosen
     * files DV-applied, and the commit is an O(delta) entry. Untouched
     * files carry forward by reference; dead rows stay dead and live
     * rows move verbatim, so the change feed sees nothing.
@@ -3816,25 +3705,22 @@ class ManifestTable(spark: SparkSession, root: String,
     val dvd = inScope.filter(_.stats.contains(DvKey))
     val chosen =
       if (minDeletedFraction <= 0.0 || dvd.isEmpty) dvd
-      else {
-        // per-file row counts in ONE job, grouped by input_file_name
-        // and keyed by basename (uuid-named files): a count() per
-        // candidate file in a driver loop would be O(DV'd files)
-        // sequential Spark jobs
-        val counts = spark.read
-          .parquet(dvd.map(e => new Path(root, e.rel).toString): _*)
-          .groupBy(input_file_name().as("_f"))
-          .agg(count(lit(1)).as("_n"))
-          .collect() // bounded: one row per DV'd candidate file
-          .map(r => new Path(r.getString(0)).getName -> r.getLong(1))
-          .toMap
-        dvd.filter { e =>
-          val marks = e.stats(DvKey).mx.toLong
-          val rows = counts.getOrElse(new Path(root, e.rel).getName, 0L)
-          rows > 0 && marks.toDouble / rows >= minDeletedFraction
-        }
+      else dvd.filter { e =>
+        val marks = e.stats(DvKey).mx.toLong
+        val rows = e.stats.get(ManifestTable.CountKey)
+          .flatMap(_.mn.toLongOption).getOrElse(footerRows(e))
+        rows > 0 && marks.toDouble / rows >= minDeletedFraction
       }
     rewriteFiles("reorgPurge", v0, entries, chosen, md, chosen.size)
+  }
+
+  /** A data file's row count from its parquet footer, for an entry
+    * written before the `#n` stat. */
+  private def footerRows(e: Entry): Long = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(dataPath(e),
+        spark.sessionState.newHadoopConf()))
+    try reader.getRecordCount finally reader.close()
   }
 
   /** T16 follow-up: adopt row tracking on a legacy table — one
@@ -4221,7 +4107,7 @@ class ManifestTable(spark: SparkSession, root: String,
     * sidecar (added files ARE the inserts). The cost: DML materializes
     * its matched rows once more to write them — O(changed rows), the
     * price Delta pays for its change files. Whole-file-replacement
-    * commits (`write(_, "overwrite")`, partition overwrite,
+    * commits (`write(_, "overwrite")`, a whole-file [[delete]],
     * `restore`) don't write a sidecar: they stamp
     * [[ManifestTable.CdcFileDiff]] and the feed derives their changes
     * from the file delta (removed rows → delete, added rows → insert
@@ -4270,7 +4156,7 @@ class ManifestTable(spark: SparkSession, root: String,
   }
 
   /** Stamp a freshly committed whole-file-replacement version
-    * (overwrite / partition overwrite / restore) as keylessly
+    * (overwrite / whole-file delete / restore) as keylessly
     * derivable from its file delta — see [[ManifestTable.CdcFileDiff]].
     * Valid ONLY when no shared file was re-pointed by the commit
     * (fresh-uuid rewrites guarantee it; restore checks explicitly).

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 /** ANALYZE TABLE statistics + the stats-driven broadcast decision:
   * counts exact, NDV within HLL tolerance, min/max right, stats
-  * pinned to their analyzed version (and DV-aware), readForJoin
+  * pinned to their analyzed version (and DV-aware), read()
   * broadcasts small tables and leaves big ones alone, and the SQL
   * procedures expose the same numbers.
   */
@@ -157,30 +157,33 @@ class AnalyzeStatsSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(!t.columnStats().collect().map(_.getString(0)).contains("vec"))
   }
 
-  test("readForJoin: small dim broadcasts, big threshold-0 does not") {
+  test("read(): a small dim broadcasts under the default threshold, none at -1") {
     import spark.implicits._
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
     val root = scratch("join")
     val dim = new ManifestTable(spark, root)
     dim.write((1 to 50).map(i => (i.toLong, s"d$i")).toDF("k", "label"), "overwrite")
     val fact = (1 to 5000).map(i => ((i % 50 + 1).toLong, i.toLong)).toDF("k", "x")
-
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val small = fact.join(dim.readForJoin(), Seq("k"))
-      small.count()
-      val planSmall = small.queryExecution.executedPlan
-      assert(collectWithSubqueries(planSmall) {
-        case b: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => b
-      }.nonEmpty, s"expected broadcast join:\n$planSmall")
-
-      val big = fact.join(dim.readForJoin(broadcastThreshold = 0L), Seq("k"))
-      big.count()
-      val planBig = big.queryExecution.executedPlan
-      assert(collectWithSubqueries(planBig) {
-        case b: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => b
-      }.isEmpty, s"expected no broadcast join:\n$planBig")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    // the scan's size is the manifest's file lengths (`#b`), the
+    // compressed bytes autoBroadcastJoinThreshold compares against
+    def dimBroadcasts(threshold: String): Boolean = {
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, threshold)
+      try {
+        val joined = fact.join(dim.read(), Seq("k"))
+        assert(joined.count() === 5000)
+        collectWithSubqueries(joined.queryExecution.executedPlan) {
+          case b: BroadcastHashJoinExec =>
+            collect(if (b.buildSide == BuildRight) b.right else b.left) {
+              case s: FileSourceScanExec => s }.nonEmpty
+        }.contains(true)
+      } finally spark.conf.set(key, prev)
+    }
+    assert(dimBroadcasts("10485760"), "the small dim must be the broadcast side")
+    assert(!dimBroadcasts("-1"), "no broadcast with the threshold off")
   }
 
   test("SQL surface: CALL graft.analyze / describe_stats report the same numbers") {

@@ -505,4 +505,124 @@ class DeletionVectorSpec extends SparkTestBase {
       orders.filter(col("o_orderkey") % 4 =!= 1 &&
         col("o_orderkey") % 4 =!= 2).count())
   }
+
+  /** 96 rows over partition values needing hive escaping and a null
+    * one: `a` in (x, y, "a:1 z", null), `b` in (p, q). */
+  private def kernelBase: DataFrame = {
+    import spark.implicits._
+    (0 until 96).map { i =>
+      (i.toLong, Seq("x", "y", "a:1 z", null)(i % 4), Seq("p", "q")(i / 4 % 2), i * 1.5)
+    }.toDF("id", "a", "b", "v")
+  }
+
+  /** Rows as sorted strings, columns in name order. */
+  private def rowSet(df: DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(col).toIndexedSeq: _*).collect().map(_.toString)
+      .toSeq.sorted
+
+  private def sidecarCount(root: String): Int = {
+    val p = new org.apache.hadoop.fs.Path(root, "_graft_dv")
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(p)) fs.listStatus(p).length else 0
+  }
+
+  /** An always-true, non-deterministic conjunct: it leaves a Filter
+    * above the scan, which forces a delete onto the DV path (the
+    * reference the whole-file path is checked against). */
+  private val dvForcing = udf(() => true).asNondeterministic()
+
+  test("delete kernel property: whole-file and DV paths leave the same rows, " +
+      "row ids and change rows") {
+    val rnd = new scala.util.Random(20261020L)
+    val vals = Seq("x", "y", "a:1 z")
+    def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
+    for (partCols <- Seq(Seq("a"), Seq("a", "b")); cdc <- Seq(false, true)) {
+      val tag = s"${partCols.mkString}_${if (cdc) "cdc" else "plain"}"
+      val kRoot = scratch(s"kernel_$tag")
+      val rRoot = scratch(s"kernel_ref_$tag")
+      val k = new ManifestTable(spark, kRoot, partitionCols = partCols)
+      val r = new ManifestTable(spark, rRoot, partitionCols = partCols)
+      Seq(k, r).foreach { t =>
+        t.write(kernelBase, "overwrite")
+        if (cdc) t.enableCdc()
+        // covered files already carrying a DV: their dead rows must
+        // not reappear as deletes
+        t.delete(col("id") % 5 === 0)
+        t.write(kernelBase.withColumn("id", col("id") + 100L), "append")
+      }
+      val partitionOnly: Seq[() => org.apache.spark.sql.Column] = Seq(
+        () => col("a") === pick(vals),
+        () => col("a").isNull,
+        () => col("a").isin(pick(vals), pick(vals)),
+        () => !(col("a") === pick(vals))) ++
+        (if (partCols.size == 2) Seq(
+          () => col("a") === pick(vals) && col("b") === pick(Seq("p", "q")),
+          () => col("b") === pick(Seq("p", "q")))
+        else Nil)
+      val dataOnly: Seq[() => org.apache.spark.sql.Column] = Seq(
+        () => col("id") % (rnd.nextInt(5) + 2) === 1,
+        () => col("v") > rnd.nextInt(150).toDouble)
+      val mixed: Seq[() => org.apache.spark.sql.Column] = Seq(
+        () => col("a") === pick(vals) && col("id") % 3 === 1,
+        () => col("a").isNull || col("id") % 7 === 2)
+      for ((kind, step) <- rnd.shuffle(Seq("partition", "data", "mixed",
+          "partition")).zipWithIndex) {
+        val pred = pick(kind match {
+          case "partition" => partitionOnly
+          case "data" => dataOnly
+          case _ => mixed
+        })()
+        val append =
+          if (rnd.nextBoolean()) Seq.empty[DataFrame]
+          else Seq(kernelBase.filter(col("id") % 8 === step)
+            .withColumn("id", col("id") + 1000L * (step + 1)))
+        val what = s"$tag step $step: $pred, append ${append.nonEmpty}"
+        val hits = r.read().filter(pred).count()
+        val (kDv, rDv) = (sidecarCount(kRoot), sidecarCount(rRoot))
+        val kv = k.delete(pred, thenAppend = append)
+        val rv = r.delete(pred && dvForcing(), thenAppend = append)
+        assert(kv === rv, what)
+        if (kind == "partition")
+          assert(sidecarCount(kRoot) === kDv, s"$what: whole-file path wrote a sidecar")
+        if (hits > 0)
+          assert(sidecarCount(rRoot) === rDv + 1, s"$what: reference missed the DV path")
+        assert(rowSet(k.readWithRowId()) === rowSet(r.readWithRowId()), what)
+        assert(rowSet(k.changesAt(kv, None)) === rowSet(r.changesAt(rv, None)), what)
+      }
+    }
+  }
+
+  test("a partition-covering delete drops files whole: no Spark job, no sidecar") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = scratch("whole_file")
+    val mt = new ManifestTable(spark, root, partitionCol = Some("a"))
+    mt.write(kernelBase, "overwrite")
+    val refRoot = scratch("whole_file_ref")
+    val ref = new ManifestTable(spark, refRoot, partitionCol = Some("a"))
+    ref.write(kernelBase, "overwrite")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.graft.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    val v = try {
+      val v = mt.delete(col("a") === "a:1 z")
+      org.apache.spark.graft.ListenerDrain(sc)
+      v
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get === 0, "a whole-file delete must run no Spark job")
+    assert(v === 1)
+    assert(sidecarCount(root) === 0)
+    ref.delete(col("a") === "a:1 z" && dvForcing())
+    assert(sidecarCount(refRoot) === 1)
+    assert(rowSet(mt.readWithRowId()) === rowSet(ref.readWithRowId()))
+    assert(mt.read().count() === 72L)
+    // a non-deterministic predicate on the partition column marks rows
+    mt.delete(col("a") === "y" && rand(7) < 0.5)
+    assert(sidecarCount(root) === 1)
+    val ys = mt.read().filter(col("a") === "y").count()
+    assert(ys > 0 && ys < 24)
+  }
 }

@@ -245,4 +245,68 @@ class LakeConcurrencySpec extends SparkTestBase {
     val ids = mt.read().select("id").as[Int].collect().toSet
     assert(ids === Set(1, 3, 4, 6), s"wrong final state: $ids")
   }
+
+  /** Run `mt.delete(pred, thenAppend = Seq(replacement))` with
+    * `between` landing after the delete read its snapshot and before
+    * it commits: the replacement's rows pass a filter that waits for
+    * `between` to finish. Returns the delete's failure, if any.
+    */
+  private def deleteAround(mt: ManifestTable, pred: org.apache.spark.sql.Column,
+      replacement: DataFrame)(between: => Unit): Option[Throwable] = {
+    HeldAppend.reset()
+    val hold = udf { (_: Int) =>
+      HeldAppend.started.countDown()
+      HeldAppend.release.await(120, TimeUnit.SECONDS)
+    }.asNondeterministic()
+    val pool = Executors.newSingleThreadExecutor()
+    try {
+      val outcome = pool.submit(new java.util.concurrent.Callable[Option[Throwable]] {
+        def call(): Option[Throwable] =
+          try { mt.delete(pred, thenAppend = Seq(replacement.filter(hold(col("id"))))); None }
+          catch { case e: Throwable => Some(e) }
+      })
+      assert(HeldAppend.started.await(120, TimeUnit.SECONDS),
+        "the delete never reached its append")
+      try between finally HeldAppend.release.countDown()
+      outcome.get(120, TimeUnit.SECONDS)
+    } finally pool.shutdown()
+  }
+
+  test("delete(pred, thenAppend) racing an append into the partition it drops conflicts") {
+    val mt = new ManifestTable(spark, scratch("conc_replace_same"),
+      partitionCol = Some("part"))
+    mt.write(baseDf, "overwrite") // v0
+    val outcome = deleteAround(mt, col("part") === "p1",
+      Seq((9, "p1", 90.0)).toDF("id", "part", "amt")) {
+      mt.write(Seq((5, "p1", 50.0)).toDF("id", "part", "amt"), "append")
+    }
+    assert(outcome.exists(_.isInstanceOf[ConcurrentModificationException]),
+      s"the replace must conflict: $outcome")
+    // the append stands, the replace committed nothing
+    assert(mt.read().select("id").as[Int].collect().toSet === Set(1, 2, 3, 4, 5))
+  }
+
+  test("delete(pred, thenAppend) racing an append into another partition: both commit") {
+    val mt = new ManifestTable(spark, scratch("conc_replace_other"),
+      partitionCol = Some("part"))
+    mt.write(baseDf, "overwrite") // v0
+    val outcome = deleteAround(mt, col("part") === "p1",
+      Seq((9, "p1", 90.0)).toDF("id", "part", "amt")) {
+      mt.write(Seq((6, "p2", 60.0)).toDF("id", "part", "amt"), "append")
+    }
+    assert(outcome.isEmpty, s"a disjoint writer failed: $outcome")
+    assert(mt.read().select("id").as[Int].collect().toSet === Set(3, 4, 6, 9))
+  }
+}
+
+/** Latches holding a delete's append open while a concurrent writer
+  * commits ([[LakeConcurrencySpec]]); shared with the filter that
+  * waits on them, which may run in a task thread. */
+object HeldAppend {
+  @volatile var started = new CountDownLatch(1)
+  @volatile var release = new CountDownLatch(1)
+  def reset(): Unit = {
+    started = new CountDownLatch(1)
+    release = new CountDownLatch(1)
+  }
 }

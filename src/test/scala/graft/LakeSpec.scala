@@ -118,7 +118,7 @@ class LakeSpec extends SparkTestBase {
     val twoDays = RawIngest.readCsvInferred(spark, s"$fixtures/orders_2024-06-0[67].csv")
     mt.write(twoDays, "overwrite")
     val day6 = twoDays.filter(col("date") === "2024-06-06").limit(100)
-    mt.overwritePartition(day6, "2024-06-06")
+    mt.delete(col("date") === "2024-06-06", thenAppend = Seq(day6))
     val after = mt.read()
     assert(after.filter(col("date") === "2024-06-06").count() === 100)
     assert(after.filter(col("date") === "2024-06-07").count() === 2222)
@@ -200,7 +200,8 @@ class LakeSpec extends SparkTestBase {
     val base = Seq((1L, "a:1 x"), (2L, "a:1 x"), (3L, "b:2 y"))
       .toDF("id", "tag")
     mt.write(base, "overwrite")
-    mt.overwritePartition(Seq((9L, "a:1 x")).toDF("id", "tag"), "a:1 x")
+    mt.delete(col("tag") === "a:1 x",
+      thenAppend = Seq(Seq((9L, "a:1 x")).toDF("id", "tag")))
     val after = mt.read()
     assert(after.filter(col("tag") === "a:1 x").count() === 1)
     assert(after.filter(col("tag") === "b:2 y").count() === 1)
@@ -422,14 +423,14 @@ class LakeSpec extends SparkTestBase {
       s"null-partition merge lost or stranded rows: $got")
   }
 
-  test("L2: overwritePartition(null) replaces the null partition, not deletes it") {
+  test("L2: delete(isNull, thenAppend) replaces the null partition, not deletes it") {
     import spark.implicits._
     val root = scratch("nullow")
     val mt = new ManifestTable(spark, root, partitionCol = Some("p"))
     mt.write(Seq((1L, "a", 10), (2L, null.asInstanceOf[String], 20))
       .toDF("k", "p", "v"), "overwrite")
-    mt.overwritePartition(
-      Seq((3L, null.asInstanceOf[String], 30)).toDF("k", "p", "v"), null)
+    mt.delete(col("p").isNull,
+      thenAppend = Seq(Seq((3L, null.asInstanceOf[String], 30)).toDF("k", "p", "v")))
     val got = mt.read().select(col("k"), col("v")).as[(Long, Int)].collect().toSet
     assert(got === Set((1L, 10), (3L, 30)),
       s"null partition should hold exactly the replacement row: $got")
@@ -722,8 +723,9 @@ class LakeSpec extends SparkTestBase {
     mt.reorgPurge()
     assert(mt.metadataRowCount() === Some(9L))
     // asOf far future = latest; before the first commit = None
-    assert(mt.metadataRowCountAsOf(System.currentTimeMillis() + 1000000L)
-      === Some(9L))
-    assert(mt.metadataRowCountAsOf(0L) === None)
+    def countAsOf(ts: Long): Option[Long] =
+      mt.versionAtOrBefore(ts).flatMap(v => mt.metadataRowCount(Some(v)))
+    assert(countAsOf(System.currentTimeMillis() + 1000000L) === Some(9L))
+    assert(countAsOf(0L) === None)
   }
 }

@@ -5,8 +5,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multi-column hive partitioning — (date, region)-style tables:
-  * partitioned merge touches only the changed tuples, partition
-  * overwrite addresses a full tuple, DV deletes scope to one
+  * partitioned merge touches only the changed tuples, a delete
+  * covering a full tuple drops its files (and may append their
+  * replacement in the same commit), DV deletes scope to one
   * sub-partition without rewriting files, and untouched partitions
   * always carry forward by reference.
   */
@@ -91,12 +92,20 @@ class MultiPartitionSpec extends SparkTestBase {
     assert(mt.read().count() === df.count())
   }
 
-  test("overwritePartitionValues replaces exactly one tuple; single-value API refuses") {
+  test("delete(tuple, thenAppend) replaces exactly one tuple") {
     val (mt, df) = mk("ovw")
     val replacement = df
       .filter(col("ds") === "2024-06-02" && col("region") === "apac")
       .limit(2).withColumn("amt", lit(java.math.BigDecimal.ZERO).cast(df.schema("amt").dataType))
-    mt.overwritePartitionValues(replacement, Seq("2024-06-02", "apac"))
+    val files0 = mt.filesOf(mt.latestVersion.get).toSet
+    mt.delete(col("ds") === "2024-06-02" && col("region") === "apac",
+      thenAppend = Seq(replacement))
+    val files1 = mt.filesOf(mt.latestVersion.get).toSet
+    // the tuple's files go by reference: no deletion vector, and every
+    // other tuple's files carry forward untouched
+    assert(mt.describeDetail().first().getAs[Long]("num_dv_files") === 0L)
+    assert((files0 -- files1).nonEmpty &&
+      (files0 -- files1).forall(_.contains("/ds=2024-06-02/region=apac/")))
     val now = mt.read()
     assert(now.filter(col("ds") === "2024-06-02" && col("region") === "apac")
       .count() === 2)
@@ -104,14 +113,6 @@ class MultiPartitionSpec extends SparkTestBase {
     val others = df.filter(!(col("ds") === "2024-06-02" && col("region") === "apac"))
     assert(now.filter(!(col("ds") === "2024-06-02" && col("region") === "apac"))
       .exceptAll(others).count() === 0)
-    // the ambiguous single-value form must refuse on a 2-col table
-    intercept[IllegalArgumentException] {
-      mt.overwritePartition(df, "2024-06-01")
-    }
-    // wrong arity refuses too
-    intercept[IllegalArgumentException] {
-      mt.overwritePartitionValues(df, Seq("2024-06-01"))
-    }
   }
 
   test("DV delete inside one sub-partition rewrites nothing") {
@@ -150,8 +151,8 @@ class MultiPartitionSpec extends SparkTestBase {
     mt.write(base, "overwrite")
     assert(mt.filesOf(0).forall(f =>
       f.contains("/ds=") && !f.contains("/region=")))
-    mt.overwritePartition(
-      base.filter(col("ds") === "2024-06-01").limit(3), "2024-06-01")
+    mt.delete(col("ds") === "2024-06-01",
+      thenAppend = Seq(base.filter(col("ds") === "2024-06-01").limit(3)))
     assert(mt.read().filter(col("ds") === "2024-06-01").count() === 3)
   }
 }

@@ -296,7 +296,7 @@ class PartitionTransformSpec extends SparkTestBase {
     assert(want.exceptAll(t1.read()).count() === 0)
   }
 
-  test("compaction migrates a mixed-layout table to the current spec; path-exact ops refuse until then") {
+  test("a replace across mixed layouts is exact; compaction migrates it") {
     val root = scratch("lazycompact")
     val old = eventsDf.filter(col("ts") < lit("2024-01-03 00:00:00").cast("timestamp"))
     val fresh = eventsDf.filter(col("ts") >= lit("2024-01-03 00:00:00").cast("timestamp"))
@@ -305,11 +305,17 @@ class PartitionTransformSpec extends SparkTestBase {
     val t1 = t0.setPartitionSpec(Nil, Seq("hours(ts)"))
     t1.write(fresh, "append")
 
-    // path-exact partition overwrite refuses the mixed state loudly
-    val err = intercept[IllegalArgumentException] {
-      t1.overwritePartitionValues(fresh, Seq("2024-01-03-02"))
-    }
-    assert(err.getMessage.contains("predate the current partition spec"))
+    // a delete-then-append spanning both layouts (old daily files and
+    // new hourly ones) replaces exactly the matching rows
+    val span = col("ts") >= ts("2024-01-02 12:00:00") &&
+      col("ts") < ts("2024-01-03 03:00:00")
+    t1.delete(span, thenAppend = Seq(
+      eventsDf.filter(span).withColumn("payload", lit("MIXED"))))
+    val want = eventsDf.withColumn("payload",
+      when(span, lit("MIXED")).otherwise(col("payload")))
+    assert(eventsDf.filter(span).count() > 0)
+    assert(t1.read().exceptAll(want).count() === 0)
+    assert(want.exceptAll(t1.read()).count() === 0)
 
     // compact() rewrites everything under the current spec
     t1.compact(targetFiles = 4)
@@ -317,18 +323,18 @@ class PartitionTransformSpec extends SparkTestBase {
     assert(files.forall(_.contains("_graft_p_hours_ts=")),
       s"unmigrated files: ${files.filterNot(_.contains("_graft_p_hours_ts=")).mkString(", ")}")
     assert(t1.read().count() === 300)
-    assert(t1.read().exceptAll(eventsDf).count() === 0)
+    assert(t1.read().exceptAll(want).count() === 0)
     // homogeneous again: hourly pruning applies to every file
     val hour = t1.filesFor(col("ts") === ts("2024-01-01 06:15:00"))
     assert(hour.nonEmpty &&
       hour.forall(_.contains("_graft_p_hours_ts=2024-01-01-06")))
-    // and the path-exact overwrite works again
-    t1.overwritePartitionValues(
-      eventsDf.filter(col("ts") === lit("2024-01-03 02:15:00").cast("timestamp"))
-        .withColumn("payload", lit("REPLACED")),
-      Seq("2024-01-03-02"))
+    // and a one-hour replace works on the migrated layout
+    val oneHour = col("ts") === ts("2024-01-03 02:15:00")
+    t1.delete(oneHour, thenAppend = Seq(
+      eventsDf.filter(oneHour).withColumn("payload", lit("REPLACED"))))
     assert(t1.read().filter(col("payload") === "REPLACED").count() ===
-      eventsDf.filter(col("ts") === lit("2024-01-03 02:15:00").cast("timestamp")).count())
+      eventsDf.filter(oneHour).count())
+    assert(t1.read().count() === 300)
   }
 
   test("insert-only merge into a fresh partition removes nothing and keeps the schema") {
